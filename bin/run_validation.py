@@ -38,7 +38,12 @@ def main() -> int:
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--partition-col", default="warc_day")
     ap.add_argument("--id-col", default="url")
-    ap.add_argument("--max-partitions", type=int, default=None)
+    ap.add_argument(
+        "--max-partitions", type=int, default=None,
+        help="validate at most this many pending partitions in this "
+             "invocation; they are validated in one pass, so this bounds "
+             "both what the call's Spark jobs read and the slice it "
+             "caches. Re-run with the same --results to resume")
     ap.add_argument("--master", default=None, help="override spark master (else spark-submit's)")
     ap.add_argument(
         "--dim", action="append", default=[], metavar="NAME=PARQUET_PATH",

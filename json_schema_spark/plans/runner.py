@@ -2,20 +2,21 @@
 
 The reference's reusable ``context`` ("mutable, build up state as they
 go", README.rst:144; make-context src/reference.lisp:103-119) becomes:
-compile the spec ONCE, then validate partition after partition,
-recording a verdict/metrics/lineage row per (partition, check) in a
-results table. A run interrupted after K partitions resumes by
-skipping the partitions already in the manifest — no duplicated
-results, identical final verdicts.
+compile the spec ONCE, then validate every pending partition in one
+pass over a cached slice — a fixed handful of Spark jobs per call, not
+per partition — recording a verdict/metrics/lineage row per
+(partition, check) in a results table. A run interrupted after K
+partitions resumes by skipping the partitions already in the manifest
+— no duplicated results, identical final verdicts.
 
 Storage layout (Iceberg-compatible partitioned Parquet + a JSON
 manifest standing in for Iceberg snapshot state; a real Iceberg
 catalog would replace ``_Manifest`` with MERGE semantics behind the
 same ``TableIO`` seam):
 
-    <results_dir>/violations/part=<P>/*.parquet
+    <results_dir>/violations/part=<P>/*.parquet   (P escaped as partitionBy does)
     <results_dir>/verdicts/part=<P>/*.parquet
-    <results_dir>/manifest.json       {run_id, completed: {P: metrics}}
+    <results_dir>/manifest.json       {completed: {P: metrics}, violations_schema}
 
 Verdict row schema (FIXTURES.md §5):
     run_id, partition, check, pass, n_rows, n_violations,
@@ -49,11 +50,6 @@ class _Manifest:
                 return json.load(f)
         return {"completed": {}}
 
-    def mark(self, partition: str, info: dict) -> None:
-        state = self.load()
-        state["completed"][partition] = info
-        self.save(state)
-
     def save(self, state: dict) -> None:
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
@@ -86,9 +82,9 @@ class ValidationRunner:
         self._verdict_table = None
         if self.use_icetable:
             # verdict rows land in an Iceberg-style snapshot table: one
-            # dynamic-partition-overwrite commit per validated partition,
-            # so a redo after interruption replaces (never duplicates)
-            # that partition's rows and the snapshot log IS the lineage
+            # dynamic-partition-overwrite commit per run() call, so a
+            # redo after interruption replaces (never duplicates) its
+            # partitions' rows and the snapshot log IS the lineage
             # history (north-rule "results written to an Iceberg table").
             from json_schema_spark.sources.icetable import IceTable
 
@@ -123,150 +119,73 @@ class ValidationRunner:
         return [v for v in self.partition_values(df, partition_col)
                 if v not in done]
 
-    # -- the per-partition pass --------------------------------------------
+    # -- the partition pass -----------------------------------------------
     def run(
         self,
         df: DataFrame,
         partition_col: str = "warc_day",
         max_partitions: int | None = None,
         slice_factory=None,
-        batch_size: int = 1,
-        batch_slice_factory=None,
     ) -> list[str]:
-        """Validate pending partitions; returns the partitions processed.
+        """Validate the pending partitions in one pass; returns the
+        partitions processed.
 
-        ``max_partitions`` exists for tests (simulated interruption)
-        and for budgeted incremental runs. ``slice_factory(part)``,
-        when given, supplies each partition's DataFrame instead of
-        ``df.where(...)`` — the snapshot-incremental path uses it to
-        validate a re-touched partition's FULL current content through
-        a manifest-pruned read while the pending set still comes from
-        the (smaller) diff.
+        The pending set is read once and cached: one grouped aggregate
+        gives every partition's verdicts and one write lands every
+        violation row, so a call runs the same few Spark jobs whether
+        it validates one partition or a thousand. The manifest is still
+        marked per partition: an interrupted call is redone on resume,
+        idempotently, and completed partitions are skipped.
 
-        ``batch_size`` > 1 processes K pending partitions per Spark
-        job (VERDICT r2 item 5): the verdict aggregation groups by
-        partition and violations land in ONE dynamic-partition-
-        overwrite write, so end-to-end latency is O(P / K) sequential
-        jobs instead of O(P) — while the manifest stays per-partition
-        (the checkpoint/resume granularity is unchanged; a crash mid-
-        chunk redoes only that chunk, idempotently). A caller whose
-        slices need a custom read (the snapshot-incremental path's
-        pruned source scans) supplies ``batch_slice_factory(parts) ->
-        DataFrame`` as the chunk-level twin of ``slice_factory``."""
+        ``max_partitions`` bounds one call (tests use it to simulate an
+        interruption): the job count stays the same, but the cached
+        slice and the call's output grow with the partitions it takes.
+        ``slice_factory(parts)``, when given, supplies the DataFrame of
+        those partitions instead of ``df.where(...)`` — the snapshot-
+        incremental path uses it to validate re-touched partitions'
+        FULL current content through a manifest-pruned read while the
+        pending set still comes from the (smaller) diff."""
         compiled = self._compile(df)
         pending = self.pending_partitions(df, partition_col)
         if max_partitions is not None:
             pending = pending[:max_partitions]
-
-        if batch_size > 1 and slice_factory is not None \
-                and batch_slice_factory is None:
-            # ADVICE r3: silently falling back to the serial loop gave
-            # a batching caller O(P) jobs with no signal
-            raise ValueError(
-                "batch_size > 1 with slice_factory requires a "
-                "batch_slice_factory (chunk-level slice reader); "
-                "pass one or drop batch_size to run serially")
-        if batch_size > 1 and (slice_factory is None
-                               or batch_slice_factory is not None):
-            for i in range(0, len(pending), batch_size):
-                self._run_chunk(df, compiled, partition_col,
-                                pending[i:i + batch_size],
-                                batch_slice_factory)
+        if not pending:
             return pending
 
-        for part in pending:
-            t0 = time.monotonic()
-            if slice_factory is not None:
-                slice_df = slice_factory(part)
-            else:
-                slice_df = df.where(F.col(partition_col).cast("string") == part)
-            # two actions read the slice (violation rows + verdict agg):
-            # cache it — but project input_file_name() FIRST, because it
-            # returns '' once rows come from the InMemoryRelation
-            slice_df = slice_df.withColumn("__file", F.input_file_name()).cache()
-
-            # unpersist in finally: a mid-partition failure (commit
-            # conflict, write error) must not leak the cached slice —
-            # retries would otherwise accumulate cached DataFrames in
-            # executor memory for the rest of the session
-            try:
-                viol = violations_df(
-                    slice_df, compiled, id_cols=list(self.id_cols),
-                    partition_col=F.lit(part), run_id=self.run_id,
-                )
-                viol_path = os.path.join(self.results_dir, "violations", f"part={part}")
-                viol.write.mode("overwrite").parquet(viol_path)  # idempotent redo
-
-                # single-pass verdict agg + lineage over the SAME slice.
-                # input_file_name() is nondeterministic — project it to a
-                # column BEFORE aggregating (aggregates reject it inline).
-                aggs = [
-                    F.sum((~c.predicate).cast("long")).alias(f"v{i}")
-                    for i, c in enumerate(compiled.checks)
-                ] + [
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.collect_set(F.col("__file")).alias("files"),
-                ]
-                row = (
-                    slice_df
-                    .agg(*aggs).collect()[0]
-                )
-                wall_ms = int((time.monotonic() - t0) * 1000)
-
-                verdicts = [
-                    (
-                        self.run_id, part, f"{c.column}/{c.keyword}",
-                        row[f"v{i}"] == 0, row["n_rows"], row[f"v{i}"],
-                        {"violation_rate": (row[f"v{i}"] / row["n_rows"]) if row["n_rows"] else 0.0},
-                        [f for f in row["files"] if f],
-                        wall_ms,
-                    )
-                    for i, c in enumerate(compiled.checks)
-                ]
-                vdf = self.spark.createDataFrame(verdicts, self._VERDICT_DDL)
-                if self._verdict_table is not None:
-                    self._verdict_table.overwrite_partitions(vdf.coalesce(1))
-                else:
-                    vpath = os.path.join(self.results_dir, "verdicts", f"part={part}")
-                    vdf.coalesce(1).write.mode("overwrite").parquet(vpath)
-
-                self.manifest.mark(part, {
-                    "run_id": self.run_id, "n_rows": row["n_rows"], "wall_ms": wall_ms,
-                })
-            finally:
-                slice_df.unpersist()
-        return pending
-
-    def _run_chunk(self, df: DataFrame, compiled: CompiledSpec,
-                   partition_col: str, chunk: list[str],
-                   batch_slice_factory=None) -> None:
-        """One Spark job for K partitions: grouped verdict agg + one
-        dynamic-partition-overwrite violations write. Produces the
-        exact same files/rows the serial path writes per partition."""
         t0 = time.monotonic()
-        base = (batch_slice_factory(list(chunk))
-                if batch_slice_factory is not None
-                else df.where(
-                    F.col(partition_col).cast("string").isin(list(chunk))))
+        base = (slice_factory(pending) if slice_factory is not None
+                else df.where(F.col(partition_col).cast("string").isin(pending)))
+        # two actions read the slice (violation rows + verdict agg):
+        # cache it — but project input_file_name() FIRST, because it
+        # returns '' once rows come from the InMemoryRelation
         slice_df = (
             base
             .withColumn("__file", F.input_file_name())
             .withColumn("__part", F.col(partition_col).cast("string"))
             .cache()
         )
+        # unpersist in finally: a failure (commit conflict, write error)
+        # must not leak the cached slice — retries would otherwise
+        # accumulate cached DataFrames in executor memory for the rest
+        # of the session
         try:
             viol = violations_df(
                 slice_df, compiled, id_cols=list(self.id_cols),
                 partition_col=F.col("__part"), run_id=self.run_id,
             )
-            # same part=<P> dir layout the serial path writes, via ONE
-            # dynamic overwrite (only the chunk's partitions replaced)
+            # a redo replaces the pending partitions' violation rows,
+            # including those of a partition that is now clean (a
+            # dynamic overwrite would keep its stale rows): drop their
+            # dirs, then append
+            self._drop_violation_dirs(pending)
             (viol.withColumn("part", F.col("partition"))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
+             .write.mode("append")
              .partitionBy("part")
              .parquet(os.path.join(self.results_dir, "violations")))
 
+            # single-pass verdict agg + lineage over the SAME slice.
+            # input_file_name() is nondeterministic — project it to a
+            # column BEFORE aggregating (aggregates reject it inline).
             aggs = [
                 F.sum((~c.predicate).cast("long")).alias(f"v{i}")
                 for i, c in enumerate(compiled.checks)
@@ -278,29 +197,12 @@ class ValidationRunner:
                     for r in slice_df.groupBy("__part").agg(*aggs).collect()}
             wall_ms = int((time.monotonic() - t0) * 1000)
 
-            # ADVICE r3 (medium): dynamic overwrite replaces only the
-            # partitions PRESENT in viol — a chunk partition with zero
-            # violation rows keeps its stale part=<P> files from a
-            # prior pass (the serial path overwrites every dir
-            # unconditionally, and violations() does no run_id filter).
-            # Explicitly overwrite those dirs with an empty frame so
-            # batched output == serial output row-for-row. Zero-viol
-            # partitions are read off the already-collected verdict
-            # aggregate — no extra scan of viol.
-            empty_viol = self.spark.createDataFrame([], viol.schema)
-            for part in chunk:
-                row = rows.get(part)
-                if row is None or all(
-                        (row[f"v{i}"] or 0) == 0
-                        for i in range(len(compiled.checks))):
-                    empty_viol.write.mode("overwrite").parquet(
-                        os.path.join(self.results_dir, "violations",
-                                     f"part={part}"))
-
-            verdicts = []
-            for part in chunk:
+            verdicts, completed = [], {}
+            for part in pending:
                 row = rows.get(part)
                 n = row["n_rows"] if row else 0
+                completed[part] = {"run_id": self.run_id, "n_rows": n,
+                                   "wall_ms": wall_ms}
                 files = [f for f in (row["files"] if row else []) if f]
                 for i, c in enumerate(compiled.checks):
                     nv = row[f"v{i}"] if row else 0
@@ -320,15 +222,28 @@ class ValidationRunner:
                  .partitionBy("part")
                  .parquet(os.path.join(self.results_dir, "verdicts")))
 
-            for part in chunk:
-                row = rows.get(part)
-                self.manifest.mark(part, {
-                    "run_id": self.run_id,
-                    "n_rows": row["n_rows"] if row else 0,
-                    "wall_ms": wall_ms,
-                })
+            state = self.manifest.load()
+            state["completed"].update(completed)
+            # a clean partition leaves no violation file behind:
+            # violations() reads with this schema, not by inference
+            state["violations_schema"] = viol.schema.toDDL()
+            self.manifest.save(state)
         finally:
             slice_df.unpersist()
+        return pending
+
+    def _drop_violation_dirs(self, parts: list[str]) -> None:
+        """Delete the violations/part=<P> dirs of ``parts``, named by
+        Spark's own path escaping (partitionBy writes ``h:1`` to
+        ``part=h%3A1``)."""
+        jvm = self.spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(
+            os.path.join(self.results_dir, "violations"))
+        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        for part in parts:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(
+                root, escape.getPartitionPathString("part", part)), True)
 
     # -- snapshot-incremental pass (source is an IceTable) ------------------
     def run_snapshot_increment(
@@ -336,7 +251,6 @@ class ValidationRunner:
         source,  # IceTable
         partition_col: str = "warc_day",
         max_partitions: int | None = None,
-        batch_size: int = 1,
     ) -> dict:
         """Continuous validation against an IceTable source: validate
         ONLY the rows in data files added since the last validated
@@ -398,11 +312,8 @@ class ValidationRunner:
             processed = self.run(
                 df, partition_col=partition_col,
                 max_partitions=max_partitions,
-                slice_factory=lambda p: source.scan(
-                    [(partition_col, "=", p)], snapshot_id=cur),
-                batch_size=batch_size,
-                batch_slice_factory=lambda parts: source.scan(
-                    [(partition_col, "in", list(parts))], snapshot_id=cur),
+                slice_factory=lambda parts: source.scan(
+                    [(partition_col, "in", parts)], snapshot_id=cur),
             )
             drained = not self.pending_partitions(df, partition_col)
         finally:
@@ -719,4 +630,6 @@ class ValidationRunner:
         return self.spark.read.parquet(os.path.join(self.results_dir, "verdicts"))
 
     def violations(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.results_dir, "violations"))
+        schema = self.manifest.load().get("violations_schema")
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.results_dir, "violations"))

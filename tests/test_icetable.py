@@ -131,10 +131,7 @@ def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
     # force a redo of an already-committed partition on resume
     state = r1.manifest.load()
     del state["completed"][first[1]]
-    r1.manifest.mark(first[0], state["completed"][first[0]])
-    import json as _json, os as _os
-    with open(r1.manifest.path, "w") as f:
-        _json.dump(state, f)
+    r1.manifest.save(state)
 
     r1b = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1",
                            use_icetable=True)
@@ -153,9 +150,10 @@ def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
          for x in r2.verdicts().collect()}
     assert a == b
 
-    # snapshot log: one commit per processed partition (incl. the redo)
+    # snapshot log: one commit per run() call (the interrupted call,
+    # then the resume of the redo + remaining 6)
     snaps = r1b._verdict_table.snapshots()
-    assert len(snaps) == tb.N_DAYS + 1  # 2 + redo + remaining 6
+    assert len(snaps) == 2
     assert all(s["operation"] == "overwrite" for s in snaps)
 
 
@@ -466,6 +464,7 @@ def test_runner_snapshot_increment(spark, webpages, tmp_path):
     out1 = r.run_snapshot_increment(src)
     assert len(out1["partitions"]) > 0
     n1 = {x["partition"]: x["n_rows"] for x in r.verdicts().collect()}
+    pre_late_snap = r._verdict_table.snapshots()[-1]["id"]
 
     # idempotent no-op when nothing new arrived
     assert r.run_snapshot_increment(src)["partitions"] == []
@@ -488,7 +487,6 @@ def test_runner_snapshot_increment(spark, webpages, tmp_path):
         assert n2[day] == full_counts[day]
     # prior full verdicts preserved via the verdict table's history
     vt = r._verdict_table
-    pre_late_snap = vt.snapshots()[len(out1["partitions"]) - 1]["id"]
     hist = {x["partition"]: x["n_rows"]
             for x in vt.scan(snapshot_id=pre_late_snap).collect()}
     assert all(hist[p] == n1[p] for p in hist)
@@ -719,19 +717,30 @@ def test_bloom_sidecar_lifecycle(spark, tmp_path):
         assert os.path.exists(p) == (data in live)
 
 
-def test_runner_snapshot_increment_batched(spark, webpages, tmp_path):
-    """Batched snapshot-incremental: batch_size=K reads each chunk's
-    FULL current partition content through ONE pruned multi-partition
-    source scan ('in' filter) and must produce verdicts identical to
-    the serial incremental path — including re-validated late-arrival
-    partitions."""
+def test_runner_snapshot_increment_chunked_identical_to_one_at_a_time(
+        spark, webpages, tmp_path):
+    """Snapshot-incremental: one call reads its pending partitions'
+    FULL current content through ONE pruned multi-partition source scan
+    ('in' filter) and must produce verdicts identical to draining the
+    same diffs one partition per call — including re-validated
+    late-arrival partitions."""
     from json_schema_spark.plans.runner import ValidationRunner
     from tests.test_compiler import WEB_SPEC
 
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                     for f in webpages.schema.fields)
+
+    def drain(r, src, budget):
+        done = []
+        for _ in range(20):
+            out = r.run_snapshot_increment(src, max_partitions=budget)
+            done += out["partitions"]
+            if out["snapshot"] == src.snapshots()[-1]["id"]:
+                return done
+        raise AssertionError("the diff did not drain")
+
     results = {}
-    for mode, bs in (("serial", 1), ("batched", 3)):
+    for mode, budget in (("single", 1), ("chunked", None)):
         src = IceTable.create(spark, str(tmp_path / f"src_{mode}"), ddl,
                               ["warc_day"])
         first = webpages.limit(1500)
@@ -739,15 +748,14 @@ def test_runner_snapshot_increment_batched(spark, webpages, tmp_path):
         r = ValidationRunner(spark, WEB_SPEC,
                              str(tmp_path / f"res_{mode}"), run_id="inc",
                              use_icetable=True)
-        r.run_snapshot_increment(src, batch_size=bs)
+        drain(r, src, budget)
         src.append(webpages.limit(1800).subtract(first))  # late arrivals
-        out = r.run_snapshot_increment(src, batch_size=bs)
-        assert len(out["partitions"]) > 0
+        assert len(drain(r, src, budget)) > 0
         results[mode] = {
             (x["partition"], x["check"]):
                 (x["pass"], x["n_rows"], x["n_violations"])
             for x in r.verdicts().collect()}
-    assert results["serial"] == results["batched"]
+    assert results["single"] == results["chunked"]
 
 
 def test_manifest_list_reuse(spark, tmp_path, docs):

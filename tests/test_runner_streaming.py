@@ -10,9 +10,9 @@ from json_schema_spark.sources import tables as tb
 from tests.test_compiler import WEB_SPEC
 
 
-@pytest.fixture()
-def pages_parquet(spark, webpages, tmp_path):
-    path = str(tmp_path / "pages")
+@pytest.fixture(scope="module")
+def pages_parquet(spark, webpages, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("runner") / "pages")
     webpages.write.partitionBy("warc_day").mode("overwrite").parquet(path)
     return path
 
@@ -208,42 +208,45 @@ def test_stream_to_icetable_exactly_once(spark, webpages, tmp_path):
 
 
 def test_run_failure_does_not_leak_cached_slice(spark, pages_parquet, tmp_path):
-    """ADVICE r2: a mid-partition failure must unpersist the cached
-    slice (try/finally) — otherwise every retry leaks a cached
-    DataFrame into executor memory for the rest of the session."""
+    """ADVICE r2: a failure mid-call must unpersist the cached slice
+    (try/finally) — otherwise every retry leaks a cached DataFrame
+    into executor memory for the rest of the session."""
     df = spark.read.parquet(pages_parquet)
     r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="rf")
 
-    def poison_slice(part):
+    def poison_slice(parts):
         # valid plan, fails at action time
-        return (df.where(F.col("warc_day").cast("string") == part)
+        return (df.where(F.col("warc_day").cast("string").isin(parts))
                   .withColumn("url", F.when(F.length("url") >= 0,
                                             F.raise_error("boom"))
                                       .otherwise(F.col("url"))))
 
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
     with pytest.raises(Exception, match="boom"):
-        r.run(df, max_partitions=1, slice_factory=poison_slice)
+        r.run(df, max_partitions=2, slice_factory=poison_slice)
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
     assert after == before
+    assert r.manifest.completed() == set()
 
 
-def test_batched_run_identical_to_serial(spark, pages_parquet, tmp_path):
-    """VERDICT r2 item 5: batch_size=K processes K partitions per
-    Spark job (grouped verdict agg + one dynamic-partition-overwrite
-    violations write) and must produce byte-identical results to the
-    serial loop — with the manifest still per-partition, so resume
-    composes with batching."""
+def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
+    """One call validates its whole pending set in one pass (grouped
+    verdict agg + one violations write) and must produce the same
+    verdicts, lineage and violation rows as validating one partition
+    per call — with the manifest still per-partition, so an
+    interrupted multi-partition call resumes cleanly."""
     df = spark.read.parquet(pages_parquet)
 
-    rs = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "serial"), run_id="r")
-    rs.run(df)
-    rb = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "batched"), run_id="r")
-    # interruption after the first chunk, then a batched resume
-    first = rb.run(df, max_partitions=3, batch_size=3)
-    assert len(first) == 3 and rb.manifest.completed() == set(first)
-    rb2 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "batched"), run_id="r")
-    second = rb2.run(df, batch_size=4)
+    rs = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "single"), run_id="r")
+    singles = [rs.run(df, max_partitions=1) for _ in range(tb.N_DAYS + 1)]
+    assert [len(x) for x in singles] == [1] * tb.N_DAYS + [0]
+
+    rc = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "chunked"), run_id="r")
+    # interruption after a 3-partition call, then a resume of the rest
+    first = rc.run(df, max_partitions=3)
+    assert len(first) == 3 and rc.manifest.completed() == set(first)
+    rc2 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "chunked"), run_id="r")
+    second = rc2.run(df)
     assert set(first).isdisjoint(second)
     assert len(first) + len(second) == tb.N_DAYS
 
@@ -255,11 +258,66 @@ def test_batched_run_identical_to_serial(spark, pages_parquet, tmp_path):
          for x in rs.verdicts().collect()}
     b = {vkey(x): (x["pass"], x["n_rows"], x["n_violations"],
                    sorted(x["input_files"]))
-         for x in rb2.verdicts().collect()}
+         for x in rc2.verdicts().collect()}
     assert a == b
     va = sorted(repr(r) for r in rs.violations().drop("part").collect())
-    vb = sorted(repr(r) for r in rb2.violations().drop("part").collect())
+    vb = sorted(repr(r) for r in rc2.violations().drop("part").collect())
     assert va == vb and len(va) > 0
+
+
+def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path):
+    """The pass runs a fixed set of Spark jobs per call: validating
+    three pending partitions costs no more jobs than validating one."""
+    df = spark.read.parquet(pages_parquet)
+    sc = spark.sparkContext
+
+    def jobs(n_parts: int) -> int:
+        r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / f"p{n_parts}"),
+                             run_id="j")
+        group = f"runner-jobs-{n_parts}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            assert len(r.run(df, max_partitions=n_parts)) == n_parts
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, three = jobs(1), jobs(3)
+    assert one > 0
+    assert three == one
+
+
+def test_revalidated_clean_partition_drops_stale_violations(spark, tmp_path):
+    """A partition value that Spark escapes in paths (``h:1`` is written
+    to ``part=h%3A1``) is read back, and once its data is fixed its
+    re-validation clears the stale violation rows, so violations()
+    agrees with the verdict."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    spec = {"columns": {"n": {"type": "integer", "minimum": 0}}}
+    ddl = "url string, host string, n int"
+    src = IceTable.create(spark, str(tmp_path / "src"), ddl, ["host"])
+    src.append(spark.createDataFrame(
+        [("u1", "h:1", -1), ("u2", "h:1", 3), ("u3", "h2", 5)], ddl))
+    r = ValidationRunner(spark, spec, str(tmp_path / "res"), run_id="c",
+                         use_icetable=True)
+    assert sorted(r.run_snapshot_increment(src, partition_col="host")
+                  ["partitions"]) == ["h2", "h:1"]
+    assert [(x["url"], x["partition"]) for x in r.violations().collect()] \
+        == [("u1", "h:1")]
+
+    # the bad row is fixed: the partition's content is replaced
+    src.overwrite_partitions(spark.createDataFrame(
+        [("u1", "h:1", 1), ("u2", "h:1", 3)], ddl))
+    out = r.run_snapshot_increment(src, partition_col="host")
+    assert out["partitions"] == ["h:1"]
+    vd = {(x["partition"], x["check"]): x for x in r.verdicts().collect()}
+    assert vd[("h:1", "n/minimum")]["pass"]
+    assert vd[("h:1", "n/minimum")]["n_violations"] == 0
+    # no violation file is left at all: read with the recorded schema
+    assert r.violations().count() == 0
 
 
 def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):
