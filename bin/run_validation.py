@@ -6,14 +6,18 @@ Deployment shape (north rule):
     spark-submit --py-files jss.zip bin/run_validation.py \
         --input  s3://bucket/crawl/documents/ \
         --spec   constraints.json \
-        --results s3://bucket/validation/run-42/ \
+        --results /mnt/validation/run-42/ \
         --run-id run-42 \
         --partition-col warc_day \
         --id-col url
 
-The same invocation works on local[*] for smoke runs. Re-running with
-the same --results resumes from the manifest (completed partitions are
-skipped). Exit code 0 iff every check passed on every partition
+--input may be any URI Spark reads; --results (and --input with
+--input-icetable) must be a local or mounted POSIX path that the
+driver and the executors share, because the results IceTables list and
+commit their files through the local filesystem. A URI there is
+rejected. The same invocation works on local[*] for smoke runs.
+Re-running with the same --results resumes from the manifest
+(completed partitions are skipped). Exit code 0 iff every check passed on every partition
 processed in THIS invocation ("valid iff errors nil",
 /root/reference/src/json-schema.lisp:33-38).
 """
@@ -34,7 +38,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="parquet path of the documents table")
     ap.add_argument("--spec", required=True, help="constraint-spec JSON file")
-    ap.add_argument("--results", required=True, help="results directory (manifest + verdicts + violations)")
+    ap.add_argument("--results", required=True, help="results directory, a local or mounted POSIX path (manifest + verdicts and violations IceTables)")
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--partition-col", default="warc_day")
     ap.add_argument("--id-col", default="url")
@@ -52,15 +56,10 @@ def main() -> int:
         "--skip-dataset-checks", action="store_true",
         help="per-partition pass only; skip the spec's table-level block")
     ap.add_argument(
-        "--icetable", action="store_true",
-        help="land verdict rows in an Iceberg-style snapshot table "
-             "(atomic commits, time travel; sources/icetable.py) "
-             "instead of plain partitioned parquet")
-    ap.add_argument(
         "--input-icetable", action="store_true",
         help="treat --input as an IceTable root and validate only the "
              "files added since the last validated snapshot "
-             "(continuous-validation mode; implies --icetable results)")
+             "(continuous-validation mode)")
     args = ap.parse_args()
 
     from json_schema_spark.plans.runner import ValidationRunner
@@ -72,9 +71,7 @@ def main() -> int:
         spec = ConstraintSpec(json.load(f))
 
     runner = ValidationRunner(
-        spark, spec, args.results, run_id=args.run_id, id_cols=(args.id_col,),
-        use_icetable=args.icetable or args.input_icetable,
-    )
+        spark, spec, args.results, run_id=args.run_id, id_cols=(args.id_col,))
     if args.input_icetable:
         from json_schema_spark.sources.icetable import IceTable
 

@@ -55,15 +55,6 @@ def _ngrams_of(toks: Column, n: int) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Word n-gram array via slice/transform — stays in codegen.
-
-    NOTE: convenience form for ad-hoc use; hot paths should go through
-    :func:`shingle_grams`, which materializes the token array first
-    (see _ngrams_of for why)."""
-    return _ngrams_of(_tokens(col), n)
-
-
 def shingle_grams(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
     with_size: bool = False,
@@ -118,22 +109,6 @@ def fingerprint_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFra
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def minhash_signature(shingles: Column, k: int = 64) -> Column:
-    """k-component minhash signature of a (pre-materialized) shingle
-    array column: sig[i] = min over shingles s of xxhash64(s, i).
-
-    IMPORTANT: pass a plain column reference, not an inline shingling
-    expression — each of the k lambda bodies embeds its input subtree,
-    so an inline expression would be recomputed k times per row
-    (measured ~70 ms/row vs ~0.3 ms/row). The explode+aggregate path in
-    :func:`minhash_signatures` is the preferred scale shape.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
 
 def _gram_hash(gram: Column, i: int, how: str) -> Column:
     """Seeded 64-bit gram hash. 'xxhash64' is the fast path; 'md5'

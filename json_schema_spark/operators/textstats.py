@@ -43,13 +43,6 @@ def regex_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(TOKEN_RE))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    toks = ws_tokens(F.lower(col))
-    profile = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(profile, t)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def punct_ratio(col: Column) -> Column:
     n = F.char_length(col)
     stripped = F.char_length(F.regexp_replace(col, r"[\p{L}\p{N}\s]", ""))

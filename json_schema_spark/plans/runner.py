@@ -9,14 +9,18 @@ per partition — recording a verdict/metrics/lineage row per
 partitions resumes by skipping the partitions already in the manifest
 — no duplicated results, identical final verdicts.
 
-Storage layout (Iceberg-compatible partitioned Parquet + a JSON
-manifest standing in for Iceberg snapshot state; a real Iceberg
-catalog would replace ``_Manifest`` with MERGE semantics behind the
-same ``TableIO`` seam):
+Storage layout: two IceTables (``sources/icetable.py``), both
+partitioned by ``partition``, and a JSON checkpoint. Each ``run()``
+call replaces exactly its pending partitions in one commit per table,
+so a redo never duplicates rows, a partition that is now clean loses
+its old violation rows, and earlier results stay readable by time
+travel:
 
-    <results_dir>/violations/part=<P>/*.parquet   (P escaped as partitionBy does)
-    <results_dir>/verdicts/part=<P>/*.parquet
-    <results_dir>/manifest.json       {completed: {P: metrics}, violations_schema}
+    <results_dir>/verdicts_ice/     IceTable of verdict rows
+    <results_dir>/violations_ice/   IceTable of violation rows (created
+                                    on the first run() from their schema)
+    <results_dir>/manifest.json     {completed: {P: metrics},
+                                     __snapshot_watermark, __diff_id}
 
 Verdict row schema (FIXTURES.md §5):
     run_id, partition, check, pass, n_rows, n_violations,
@@ -34,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_schema_spark.compiler import CompiledSpec, compile_spec, violations_df
+from json_schema_spark.sources.icetable import IceTable, require_local_path
 from json_schema_spark.spec import ConstraintSpec
 
 
@@ -68,7 +73,9 @@ class ValidationRunner:
     run_id: str = "run-0"
     id_cols: tuple[str, ...] = ("url",)
     compiled: CompiledSpec | None = field(default=None)
-    use_icetable: bool = False
+    # results always land in IceTables; the field is kept only so that
+    # existing callers passing use_icetable=True keep working
+    use_icetable: bool = True
 
     _VERDICT_DDL = (
         "run_id string, partition string, check string, pass boolean, "
@@ -77,23 +84,32 @@ class ValidationRunner:
     )
 
     def __post_init__(self):
+        if not self.use_icetable:
+            raise ValueError("ValidationRunner results always land in "
+                             "IceTables; use_icetable=False is not supported")
+        require_local_path(self.results_dir)
         os.makedirs(self.results_dir, exist_ok=True)
         self.manifest = _Manifest(os.path.join(self.results_dir, "manifest.json"))
-        self._verdict_table = None
-        if self.use_icetable:
-            # verdict rows land in an Iceberg-style snapshot table: one
-            # dynamic-partition-overwrite commit per run() call, so a
-            # redo after interruption replaces (never duplicates) its
-            # partitions' rows and the snapshot log IS the lineage
-            # history (north-rule "results written to an Iceberg table").
-            from json_schema_spark.sources.icetable import IceTable
+        # the older layout kept results as plain parquet under verdicts/
+        # and violations/; resuming from its manifest would skip those
+        # partitions while their results stay out of view
+        legacy = [d for d in ("verdicts", "violations")
+                  if os.path.isdir(os.path.join(self.results_dir, d))]
+        if legacy or (self.manifest.completed() and not os.path.isdir(
+                os.path.join(self.results_dir, "violations_ice"))):
+            raise ValueError(
+                f"{self.results_dir!r} holds results in the older plain-"
+                f"parquet layout ({', '.join(legacy) or 'manifest.json'}); "
+                "start a fresh results directory")
+        self._verdict_table = self._table("verdicts_ice", self._VERDICT_DDL)
 
-            vroot = os.path.join(self.results_dir, "verdicts_ice")
-            if os.path.exists(os.path.join(vroot, "metadata", "version-hint.text")):
-                self._verdict_table = IceTable(self.spark, vroot)
-            else:
-                self._verdict_table = IceTable.create(
-                    self.spark, vroot, self._VERDICT_DDL, ["partition"])
+    def _table(self, name: str, ddl: str) -> IceTable:
+        """Open the results IceTable ``name``, creating it from ``ddl``
+        on first use."""
+        root = os.path.join(self.results_dir, name)
+        if os.path.exists(os.path.join(root, "metadata", "version-hint.text")):
+            return IceTable(self.spark, root)
+        return IceTable.create(self.spark, root, ddl, ["partition"])
 
     # -- helpers ----------------------------------------------------------
     def _compile(self, df: DataFrame) -> CompiledSpec:
@@ -131,8 +147,8 @@ class ValidationRunner:
         partitions processed.
 
         The pending set is read once and cached: one grouped aggregate
-        gives every partition's verdicts and one write lands every
-        violation row, so a call runs the same few Spark jobs whether
+        gives every partition's verdicts and one IceTable commit lands
+        every violation row, so a call runs the same few Spark jobs whether
         it validates one partition or a thousand. The manifest is still
         marked per partition: an interrupted call is redone on resume,
         idempotently, and completed partitions are skipped.
@@ -173,15 +189,10 @@ class ValidationRunner:
                 slice_df, compiled, id_cols=list(self.id_cols),
                 partition_col=F.col("__part"), run_id=self.run_id,
             )
-            # a redo replaces the pending partitions' violation rows,
-            # including those of a partition that is now clean (a
-            # dynamic overwrite would keep its stale rows): drop their
-            # dirs, then append
-            self._drop_violation_dirs(pending)
-            (viol.withColumn("part", F.col("partition"))
-             .write.mode("append")
-             .partitionBy("part")
-             .parquet(os.path.join(self.results_dir, "violations")))
+            # naming the pending set replaces its partitions' rows,
+            # including those of a partition that is now clean
+            self._table("violations_ice", viol.schema.toDDL()) \
+                .overwrite_partitions(viol, pending)
 
             # single-pass verdict agg + lineage over the SAME slice.
             # input_file_name() is nondeterministic — project it to a
@@ -213,37 +224,14 @@ class ValidationRunner:
                         files, wall_ms,
                     ))
             vdf = self.spark.createDataFrame(verdicts, self._VERDICT_DDL)
-            if self._verdict_table is not None:
-                self._verdict_table.overwrite_partitions(vdf.coalesce(1))
-            else:
-                (vdf.withColumn("part", F.col("partition"))
-                 .coalesce(1).write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("part")
-                 .parquet(os.path.join(self.results_dir, "verdicts")))
+            self._verdict_table.overwrite_partitions(vdf.coalesce(1), pending)
 
             state = self.manifest.load()
             state["completed"].update(completed)
-            # a clean partition leaves no violation file behind:
-            # violations() reads with this schema, not by inference
-            state["violations_schema"] = viol.schema.toDDL()
             self.manifest.save(state)
         finally:
             slice_df.unpersist()
         return pending
-
-    def _drop_violation_dirs(self, parts: list[str]) -> None:
-        """Delete the violations/part=<P> dirs of ``parts``, named by
-        Spark's own path escaping (partitionBy writes ``h:1`` to
-        ``part=h%3A1``)."""
-        jvm = self.spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(self.results_dir, "violations"))
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        for part in parts:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                root, escape.getPartitionPathString("part", part)), True)
 
     # -- snapshot-incremental pass (source is an IceTable) ------------------
     def run_snapshot_increment(
@@ -263,10 +251,10 @@ class ValidationRunner:
         validate and advance just re-validates the same diff
         (idempotent: verdicts overwrite per partition).
 
-        Verdict semantics: a re-validated partition's verdict row
-        reflects the LATEST increment's rows; with ``use_icetable``
-        the previous verdicts remain readable via the verdict table's
-        snapshot history (time travel), so nothing is lost.
+        Result semantics: a re-validated partition's verdict and
+        violation rows reflect the LATEST increment's rows; the
+        previous ones remain readable via the results tables' snapshot
+        history (time travel), so nothing is lost.
 
         ``max_partitions`` budgets one invocation; the watermark only
         advances once the WHOLE diff is drained, so budgeted runs
@@ -465,7 +453,6 @@ class ValidationRunner:
                     create_dedup_ledger,
                     incremental_dedup_snapshot,
                 )
-                from json_schema_spark.sources.icetable import IceTable
 
                 root = d["ledger"]
                 snap = int(d["snapshot"])
@@ -625,11 +612,8 @@ class ValidationRunner:
 
     # -- results ------------------------------------------------------------
     def verdicts(self) -> DataFrame:
-        if self._verdict_table is not None:
-            return self._verdict_table.scan()
-        return self.spark.read.parquet(os.path.join(self.results_dir, "verdicts"))
+        return self._verdict_table.scan()
 
     def violations(self) -> DataFrame:
-        schema = self.manifest.load().get("violations_schema")
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(os.path.join(self.results_dir, "violations"))
+        return IceTable(self.spark, os.path.join(self.results_dir,
+                                                 "violations_ice")).scan()

@@ -54,6 +54,7 @@ import glob
 import json
 import math
 import os
+import re
 import uuid
 from dataclasses import dataclass
 from datetime import date, datetime, timezone
@@ -303,12 +304,29 @@ def _cmp(op: str, mn: Any, mx: Any, lit: Any) -> bool:
     raise ValueError(f"unsupported pruning op {op!r}")
 
 
+def require_local_path(path: str) -> str:
+    """Reject a URI (``s3://...``, ``hdfs://...``, ``file:///...``).
+
+    Table metadata is read and written with ``open`` and a commit
+    lists its staged data files with ``glob``, so a root must be a
+    local or mounted POSIX path: under a URI, Spark would write the
+    files remotely and the commit would record none of them."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:/", path):
+        raise ValueError(f"{path!r} is a URI; IceTable roots must be local "
+                         "or mounted POSIX paths")
+    return path
+
+
 @dataclass
 class IceTable:
-    """Handle to one snapshot table rooted at ``root``."""
+    """Handle to one snapshot table rooted at ``root`` (a local or
+    mounted POSIX path, see :func:`require_local_path`)."""
 
     spark: SparkSession
     root: str
+
+    def __post_init__(self):
+        require_local_path(self.root)
 
     # -- metadata plumbing --------------------------------------------------
     @property
@@ -553,17 +571,26 @@ class IceTable:
             new_entries=new,
         )
 
-    def overwrite_partitions(self, df: DataFrame) -> int:
+    def overwrite_partitions(self, df: DataFrame,
+                             partitions: Iterable = ()) -> int:
         """Dynamic-partition overwrite: replace exactly the partitions
-        present in ``df`` (the MERGE-ish idempotent-redo primitive the
-        runner's checkpoint resume needs)."""
+        present in ``df`` plus those named in ``partitions`` (the
+        MERGE-ish idempotent-redo primitive the runner's checkpoint
+        resume needs). A named partition with no rows in ``df`` is
+        dropped. Naming partitions needs a table with one partition
+        column; values compare as the strings the Hive paths hold."""
         meta = self._read_meta()
-        if not meta["partition_by"]:
+        pcols = meta["partition_by"]
+        if not pcols:
             raise ValueError("overwrite_partitions requires a partitioned table")
+        partitions = list(partitions)
+        if partitions and len(pcols) != 1:
+            raise ValueError("naming partitions to overwrite needs exactly "
+                             f"one partition column, not {pcols}")
         self._check_columns(df, meta)
-        new = self._stage(df, meta["partition_by"],
-                          meta.get("bloom_cols"))
-        touched = {tuple(sorted(e["partition"].items())) for e in new}
+        named = {((pcols[0], str(p)),) for p in partitions}
+        new = self._stage(df, pcols, meta.get("bloom_cols"))
+        touched = named | {tuple(sorted(e["partition"].items())) for e in new}
         # only parent manifests CONTAINING a touched partition get
         # rewritten (filtered); the rest are reused by name
         return self._commit(

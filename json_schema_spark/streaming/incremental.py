@@ -102,21 +102,17 @@ def run_incremental(
     q.awaitTermination()
 
 
-def stream_to_icetable(
-    viol_stream: DataFrame,
-    table,
-    checkpoint_dir: str,
-) -> None:
-    """Sink a (violation) stream into an Iceberg-style snapshot table
-    with exactly-once batch commits.
+def _sink_exactly_once(stream: DataFrame, table, checkpoint_dir: str,
+                       to_rows=lambda batch_df: batch_df) -> None:
+    """Run ``stream`` to completion (availableNow), appending
+    ``to_rows(batch)`` to ``table`` as one snapshot per micro-batch.
 
     Structured Streaming replays the in-flight micro-batch after a
-    crash between sink write and checkpoint commit; a plain parquet
-    sink tolerates that only because files are keyed by batch. Here the
-    commit itself is made idempotent the Iceberg way: each snapshot
-    records its ``stream_batch_id`` in the summary, and a replayed
-    batch id is skipped before any data is staged — the snapshot log
-    doubles as the sink's transaction log.
+    crash between sink write and checkpoint commit. The commit is made
+    idempotent the Iceberg way: each snapshot records its
+    ``stream_batch_id`` in the summary, and a replayed batch id is
+    skipped before any data is staged — the snapshot log doubles as
+    the sink's transaction log.
 
     Batch ids are namespaced by the streaming QUERY id (read from the
     checkpoint's metadata file, where Structured Streaming persists
@@ -140,15 +136,27 @@ def stream_to_icetable(
                 for s in table.snapshots()}
         if key in seen:
             return  # replay of a committed batch: exactly-once no-op
-        table.append(batch_df, summary={"stream_batch_id": key})
+        table.append(to_rows(batch_df), summary={"stream_batch_id": key})
 
     q = (
-        viol_stream.writeStream.foreachBatch(commit_batch)
+        stream.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+
+
+def stream_to_icetable(
+    viol_stream: DataFrame,
+    table,
+    checkpoint_dir: str,
+) -> None:
+    """Sink a (violation) stream into an Iceberg-style snapshot table
+    with exactly-once batch commits (see :func:`_sink_exactly_once`).
+    A plain parquet sink tolerates a replayed micro-batch only because
+    its files are keyed by batch; here the snapshot log is the guard."""
+    _sink_exactly_once(viol_stream, table, checkpoint_dir)
 
 
 def stream_digests_to_icetable(
@@ -169,32 +177,11 @@ def stream_digests_to_icetable(
     exact regime (compression >= 8n), tested in
     tests/test_runner_streaming.py.
 
-    Same exactly-once discipline as :func:`stream_to_icetable`: batch
-    ids namespaced by the streaming query id recorded in the snapshot
-    summary; a replayed batch is skipped before any staging."""
-    import json as _json
-    import os as _os
-
+    Same exactly-once commit as :func:`stream_to_icetable`: a replayed
+    batch is skipped before any digest is computed or staged."""
     from json_schema_spark.operators.tdigest import digest_by_partition
 
-    def _query_id() -> str:
-        with open(_os.path.join(checkpoint_dir, "metadata")) as f:
-            return _json.load(f)["id"]
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        key = f"{_query_id()}/{batch_id}"
-        seen = {s["summary"].get("stream_batch_id")
-                for s in table.snapshots()}
-        if key in seen:
-            return
-        digests = digest_by_partition(
-            batch_df, value_col, partition_col, compression=compression)
-        table.append(digests, summary={"stream_batch_id": key})
-
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _sink_exactly_once(
+        stream, table, checkpoint_dir,
+        lambda batch_df: digest_by_partition(
+            batch_df, value_col, partition_col, compression=compression))

@@ -98,6 +98,25 @@ def test_overwrite_partitions_idempotent_redo(spark, tmp_path, docs):
     assert t.snapshots()[-1]["operation"] == "overwrite"
 
 
+def test_overwrite_partitions_drops_named_partition_without_rows(spark, tmp_path, docs):
+    """A partition named in the overwrite set but absent from ``df`` is
+    dropped (a redo can empty a partition); unnamed partitions keep
+    their files."""
+    t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, ["lang"])
+    t.append(docs)
+    fr_files = {e["path"] for e in t.plan_files() if e["partition"]["lang"] == "fr"}
+    t.overwrite_partitions(docs.where("lang = 'en'"), ["en", "de"])
+    files = t.plan_files()
+    assert {e["partition"]["lang"] for e in files} == {"en", "fr"}
+    assert {e["path"] for e in files if e["partition"]["lang"] == "fr"} == fr_files
+    got = t.scan()
+    assert got.count() == 67 and got.where("lang = 'de'").count() == 0
+    assert t.snapshots()[-1]["summary"]["replaced_partitions"] == 2
+    t2 = IceTable.create(spark, str(tmp_path / "t2"), SCHEMA, ["lang", "url"])
+    with pytest.raises(ValueError, match="one partition column"):
+        t2.overwrite_partitions(docs, ["en"])
+
+
 def test_commit_conflict_one_winner(spark, tmp_path, docs):
     t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, [])
     t.append(docs.where("doc_id < 10"))
@@ -115,7 +134,7 @@ def test_commit_conflict_one_winner(spark, tmp_path, docs):
 def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
     """Resume with IceTable results: the snapshot log is the lineage
     history, a redone partition is REPLACED (overwrite) not duplicated,
-    and final verdicts equal the plain-parquet mode's."""
+    and final verdicts equal an uninterrupted run's."""
     from json_schema_spark.plans.runner import ValidationRunner
     from json_schema_spark.sources import tables as tb
     from tests.test_compiler import WEB_SPEC
@@ -124,8 +143,7 @@ def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
     webpages.write.partitionBy("warc_day").mode("overwrite").parquet(pages)
     df = spark.read.parquet(pages)
 
-    r1 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1",
-                          use_icetable=True)
+    r1 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1")
     first = r1.run(df, max_partitions=2)
     # interrupted mid-run: wipe the checkpoint mark of partition 1 to
     # force a redo of an already-committed partition on resume
@@ -133,16 +151,15 @@ def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
     del state["completed"][first[1]]
     r1.manifest.save(state)
 
-    r1b = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1",
-                           use_icetable=True)
+    r1b = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1")
     r1b.run(df)
     got = r1b.verdicts()
     # redo replaced, never duplicated: one verdict row per (partition, check)
     assert got.groupBy("partition", "check").count().where("count > 1").count() == 0
     assert got.select("partition").distinct().count() == tb.N_DAYS
 
-    # identical to plain-parquet mode
-    r2 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "plain"), run_id="r1")
+    # identical to an uninterrupted run
+    r2 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "whole"), run_id="r1")
     r2.run(df)
     a = {(x["partition"], x["check"]): (x["pass"], x["n_rows"], x["n_violations"])
          for x in got.collect()}
@@ -459,8 +476,7 @@ def test_runner_snapshot_increment(spark, webpages, tmp_path):
     first = webpages.limit(1500)
     src.append(first)
 
-    r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="inc",
-                         use_icetable=True)
+    r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="inc")
     out1 = r.run_snapshot_increment(src)
     assert len(out1["partitions"]) > 0
     n1 = {x["partition"]: x["n_rows"] for x in r.verdicts().collect()}
@@ -506,8 +522,7 @@ def test_snapshot_increment_budgeted_and_expired_watermark(spark, webpages, tmp_
         ["warc_day"])
     src.append(webpages.limit(1500))
 
-    r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="b",
-                         use_icetable=True)
+    r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="b")
     out1 = r.run_snapshot_increment(src, max_partitions=2)
     assert len(out1["partitions"]) == 2
     assert out1["snapshot"] is None  # diff not drained: watermark held
@@ -746,8 +761,7 @@ def test_runner_snapshot_increment_chunked_identical_to_one_at_a_time(
         first = webpages.limit(1500)
         src.append(first)
         r = ValidationRunner(spark, WEB_SPEC,
-                             str(tmp_path / f"res_{mode}"), run_id="inc",
-                             use_icetable=True)
+                             str(tmp_path / f"res_{mode}"), run_id="inc")
         drain(r, src, budget)
         src.append(webpages.limit(1800).subtract(first))  # late arrivals
         assert len(drain(r, src, budget)) > 0

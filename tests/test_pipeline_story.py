@@ -46,7 +46,7 @@ def test_north_star_pipeline(spark, webpages, tmp_path):
     digests = IceTable.create(spark, str(tmp_path / "dig"),
                               td.DIGEST_SCHEMA, ["partition"])
     runner = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"),
-                              run_id="story", use_icetable=True)
+                              run_id="story")
 
     # ---- daily loop: audit-ingest, incremental-validate, sketch ----
     total_in = total_quar = 0

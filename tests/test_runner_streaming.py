@@ -231,7 +231,7 @@ def test_run_failure_does_not_leak_cached_slice(spark, pages_parquet, tmp_path):
 
 def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
     """One call validates its whole pending set in one pass (grouped
-    verdict agg + one violations write) and must produce the same
+    verdict agg + one violations commit) and must produce the same
     verdicts, lineage and violation rows as validating one partition
     per call — with the manifest still per-partition, so an
     interrupted multi-partition call resumes cleanly."""
@@ -260,8 +260,8 @@ def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
                    sorted(x["input_files"]))
          for x in rc2.verdicts().collect()}
     assert a == b
-    va = sorted(repr(r) for r in rs.violations().drop("part").collect())
-    vb = sorted(repr(r) for r in rc2.violations().drop("part").collect())
+    va = sorted(repr(r) for r in rs.violations().collect())
+    vb = sorted(repr(r) for r in rc2.violations().collect())
     assert va == vb and len(va) > 0
 
 
@@ -291,7 +291,7 @@ def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path)
 
 def test_revalidated_clean_partition_drops_stale_violations(spark, tmp_path):
     """A partition value that Spark escapes in paths (``h:1`` is written
-    to ``part=h%3A1``) is read back, and once its data is fixed its
+    to ``partition=h%3A1``) is read back, and once its data is fixed its
     re-validation clears the stale violation rows, so violations()
     agrees with the verdict."""
     from json_schema_spark.sources.icetable import IceTable
@@ -301,8 +301,7 @@ def test_revalidated_clean_partition_drops_stale_violations(spark, tmp_path):
     src = IceTable.create(spark, str(tmp_path / "src"), ddl, ["host"])
     src.append(spark.createDataFrame(
         [("u1", "h:1", -1), ("u2", "h:1", 3), ("u3", "h2", 5)], ddl))
-    r = ValidationRunner(spark, spec, str(tmp_path / "res"), run_id="c",
-                         use_icetable=True)
+    r = ValidationRunner(spark, spec, str(tmp_path / "res"), run_id="c")
     assert sorted(r.run_snapshot_increment(src, partition_col="host")
                   ["partitions"]) == ["h2", "h:1"]
     assert [(x["url"], x["partition"]) for x in r.violations().collect()] \
@@ -316,8 +315,73 @@ def test_revalidated_clean_partition_drops_stale_violations(spark, tmp_path):
     vd = {(x["partition"], x["check"]): x for x in r.verdicts().collect()}
     assert vd[("h:1", "n/minimum")]["pass"]
     assert vd[("h:1", "n/minimum")]["n_violations"] == 0
-    # no violation file is left at all: read with the recorded schema
+    # the now-clean partition was dropped from the violations table
     assert r.violations().count() == 0
+
+
+def test_revalidated_partition_keeps_violation_history(spark, tmp_path):
+    """Re-validating a partition whose violation rows changed replaces
+    them in violations(), while the violations table scanned at its
+    previous snapshot still holds the old rows."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    spec = {"columns": {"n": {"type": "integer", "minimum": 0}}}
+    ddl = "url string, host string, n int"
+    src = IceTable.create(spark, str(tmp_path / "src"), ddl, ["host"])
+    src.append(spark.createDataFrame(
+        [("u1", "h1", -1), ("u2", "h1", 3), ("u3", "h2", -5)], ddl))
+    r = ValidationRunner(spark, spec, str(tmp_path / "res"), run_id="h")
+    r.run_snapshot_increment(src, partition_col="host")
+    table = IceTable(spark, str(tmp_path / "res" / "violations_ice"))
+    before = table.snapshots()[-1]["id"]
+
+    src.overwrite_partitions(spark.createDataFrame(
+        [("u1", "h1", 1), ("u2", "h1", -3)], ddl))
+    assert r.run_snapshot_increment(src, partition_col="host")["partitions"] == ["h1"]
+
+    def rows(df):
+        return sorted((x["url"], x["partition"]) for x in df.collect())
+
+    assert rows(r.violations()) == [("u2", "h1"), ("u3", "h2")]
+    assert rows(table.scan(snapshot_id=before)) == [("u1", "h1"), ("u3", "h2")]
+
+
+def test_use_icetable_false_rejected(spark, tmp_path):
+    """Results always land in IceTables: the old plain-parquet switch
+    is refused."""
+    with pytest.raises(ValueError, match="use_icetable"):
+        ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), use_icetable=False)
+
+
+def test_uri_results_dir_rejected(spark, tmp_path):
+    """The results IceTables commit what a local glob finds, so a URI
+    results dir (or table root) is refused instead of committing
+    empty snapshots and passing every check."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    uri = (tmp_path / "res").as_uri()  # file:///...
+    with pytest.raises(ValueError, match="URI"):
+        ValidationRunner(spark, WEB_SPEC, uri)
+    with pytest.raises(ValueError, match="URI"):
+        IceTable(spark, "s3://bucket/table")
+    with pytest.raises(ValueError, match="URI"):
+        IceTable.create(spark, uri, "a long")
+    assert not (tmp_path / "res").exists()
+
+
+@pytest.mark.parametrize("legacy", ["verdicts", "violations", "manifest"])
+def test_legacy_results_dir_rejected(spark, tmp_path, legacy):
+    """A results dir of the older plain-parquet layout is refused:
+    resuming from its manifest would skip partitions whose results
+    no longer show in verdicts()/violations()."""
+    res = tmp_path / "res"
+    res.mkdir()
+    if legacy == "manifest":
+        (res / "manifest.json").write_text('{"completed": {"d0": {}}}')
+    else:
+        (res / legacy / "part=d0").mkdir(parents=True)
+    with pytest.raises(ValueError, match="fresh results directory"):
+        ValidationRunner(spark, WEB_SPEC, str(res))
 
 
 def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):

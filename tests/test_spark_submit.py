@@ -76,5 +76,6 @@ def test_spark_submit_py_files_end_to_end(spark, webpages, tmp_path):
     assert payload["run_id"] == "submit-test"
     assert payload["failed_checks"] >= 1
     # verdict rows landed where a cluster run would leave them
-    verdicts = spark.read.parquet(os.path.join(results, "verdicts"))
+    from json_schema_spark.sources.icetable import IceTable
+    verdicts = IceTable(spark, os.path.join(results, "verdicts_ice")).scan()
     assert verdicts.count() > 0
