@@ -40,7 +40,10 @@ def main() -> int:
     ap.add_argument("--spec", required=True, help="constraint-spec JSON file")
     ap.add_argument("--results", required=True, help="results directory, a local or mounted POSIX path (manifest + verdicts and violations IceTables)")
     ap.add_argument("--run-id", default="run-0")
-    ap.add_argument("--partition-col", default="warc_day")
+    ap.add_argument(
+        "--partition-col", default="warc_day",
+        help="column whose values are the checkpoint unit; with "
+             "--input-icetable it must be a partition column of the table")
     ap.add_argument("--id-col", default="url")
     ap.add_argument(
         "--max-partitions", type=int, default=None,

@@ -9,6 +9,13 @@ per partition — recording a verdict/metrics/lineage row per
 partitions resumes by skipping the partitions already in the manifest
 — no duplicated results, identical final verdicts.
 
+Two entry points share that pass (``_validate``): ``run()`` takes a
+plain DataFrame and finds its pending partitions with a ``distinct``
+over it; ``run_snapshot_increment()`` takes an IceTable source and reads
+the partitions touched since its watermark snapshot from the source's
+manifests, so a call runs only the violations write, the verdict
+aggregate and the verdict write.
+
 Storage layout: two IceTables (``sources/icetable.py``), both
 partitioned by ``partition``, and a JSON checkpoint. Each ``run()``
 call replaces exactly its pending partitions in one commit per table,
@@ -38,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_schema_spark.compiler import CompiledSpec, compile_spec, violations_df
+from json_schema_spark.session import local_frame
 from json_schema_spark.sources.icetable import IceTable, require_local_path
 from json_schema_spark.spec import ConstraintSpec
 
@@ -117,23 +125,16 @@ class ValidationRunner:
             self.compiled = compile_spec(self.spec, df)
         return self.compiled
 
-    @staticmethod
-    def partition_values(df: DataFrame, partition_col: str) -> list[str]:
-        """Distinct non-null partition values as strings (the shared
-        normalization every partition-set computation uses)."""
-        return sorted(
-            str(r[0])
-            for r in df.select(partition_col).distinct().collect()
-            if r[0] is not None
-        )
-
     def pending_partitions(self, df: DataFrame, partition_col: str) -> list[str]:
-        """All partition values minus completed ones. The distinct() is
-        partition-metadata-sized; on a partitioned source Catalyst
-        answers it from file listing, not a scan."""
+        """All non-null partition values of ``df`` as strings (Spark's
+        ``cast(string)``), minus completed ones. The distinct() runs
+        Spark jobs that scan ``df``, even a partitioned parquet source
+        (``spark.sql.optimizer.metadataOnly`` is off by default)."""
         done = self.manifest.completed()
-        return [v for v in self.partition_values(df, partition_col)
-                if v not in done]
+        return sorted(
+            r[0] for r in
+            df.select(F.col(partition_col).cast("string")).distinct().collect()
+            if r[0] is not None and r[0] not in done)
 
     # -- the partition pass -----------------------------------------------
     def run(
@@ -141,41 +142,41 @@ class ValidationRunner:
         df: DataFrame,
         partition_col: str = "warc_day",
         max_partitions: int | None = None,
-        slice_factory=None,
     ) -> list[str]:
-        """Validate the pending partitions in one pass; returns the
-        partitions processed.
+        """Validate the pending partitions of ``df`` in one pass;
+        returns the partitions processed.
 
-        The pending set is read once and cached: one grouped aggregate
-        gives every partition's verdicts and one IceTable commit lands
-        every violation row, so a call runs the same few Spark jobs whether
-        it validates one partition or a thousand. The manifest is still
+        The pending set is every partition value of ``df`` not yet in
+        the manifest (a ``distinct`` over ``df``), cut to ``max_partitions``
+        (tests use it to simulate an interruption). The manifest is
         marked per partition: an interrupted call is redone on resume,
-        idempotently, and completed partitions are skipped.
-
-        ``max_partitions`` bounds one call (tests use it to simulate an
-        interruption): the job count stays the same, but the cached
-        slice and the call's output grow with the partitions it takes.
-        ``slice_factory(parts)``, when given, supplies the DataFrame of
-        those partitions instead of ``df.where(...)`` — the snapshot-
-        incremental path uses it to validate re-touched partitions'
-        FULL current content through a manifest-pruned read while the
-        pending set still comes from the (smaller) diff."""
-        compiled = self._compile(df)
+        idempotently, and completed partitions are skipped."""
         pending = self.pending_partitions(df, partition_col)
         if max_partitions is not None:
             pending = pending[:max_partitions]
-        if not pending:
-            return pending
+        if pending:
+            self._validate(
+                df.where(F.col(partition_col).cast("string").isin(pending)),
+                partition_col, pending)
+        return pending
 
+    def _validate(self, slice_df: DataFrame, partition_col: str,
+                  pending: list[str]) -> None:
+        """Validate ``slice_df``, the rows of the ``pending`` partitions,
+        and record their results.
+
+        The slice is cached: one grouped aggregate gives every
+        partition's verdicts and one IceTable commit per results table
+        lands every violation and verdict row, so a call runs the same
+        few Spark jobs whether it validates one partition or a
+        thousand. The cached slice grows with the partitions taken."""
+        compiled = self._compile(slice_df)
         t0 = time.monotonic()
-        base = (slice_factory(pending) if slice_factory is not None
-                else df.where(F.col(partition_col).cast("string").isin(pending)))
         # two actions read the slice (violation rows + verdict agg):
         # cache it — but project input_file_name() FIRST, because it
         # returns '' once rows come from the InMemoryRelation
         slice_df = (
-            base
+            slice_df
             .withColumn("__file", F.input_file_name())
             .withColumn("__part", F.col(partition_col).cast("string"))
             .cache()
@@ -223,7 +224,7 @@ class ValidationRunner:
                         {"violation_rate": (nv / n) if n else 0.0},
                         files, wall_ms,
                     ))
-            vdf = self.spark.createDataFrame(verdicts, self._VERDICT_DDL)
+            vdf = local_frame(self.spark, verdicts, self._VERDICT_DDL)
             self._verdict_table.overwrite_partitions(vdf.coalesce(1), pending)
 
             state = self.manifest.load()
@@ -231,91 +232,98 @@ class ValidationRunner:
             self.manifest.save(state)
         finally:
             slice_df.unpersist()
-        return pending
 
     # -- snapshot-incremental pass (source is an IceTable) ------------------
     def run_snapshot_increment(
         self,
-        source,  # IceTable
+        source: IceTable,
         partition_col: str = "warc_day",
         max_partitions: int | None = None,
     ) -> dict:
         """Continuous validation against an IceTable source: validate
-        ONLY the rows in data files added since the last validated
-        snapshot (scan_added_since), then advance the watermark.
+        the partitions touched by data files added since the last
+        validated snapshot, then advance the watermark.
+
+        The touched set comes from the source's manifests, not from a
+        scan: the current snapshot's file entries minus the watermark
+        snapshot's (:meth:`IceTable.files_added_since`), each entry's
+        value of ``partition_col``. ``partition_col`` must therefore be
+        one of the source's partition columns (else ValueError), and
+        the values are the strings the Hive paths hold — Spark's
+        ``cast(string)`` of the column; the null partition is skipped.
+        A touched partition is validated over its FULL current content
+        (one manifest-pruned read of the pending partitions): diff-only
+        validation would overwrite its verdict and violations with
+        late-rows-only results, silently flipping a failing partition
+        to pass.
 
         Complements :meth:`run`'s partition-manifest resume — which
         skips completed partitions and would therefore miss LATE
         files landing in them. The watermark lives in the same results
         manifest (key ``__snapshot_watermark``), so a crash between
         validate and advance just re-validates the same diff
-        (idempotent: verdicts overwrite per partition).
-
-        Result semantics: a re-validated partition's verdict and
-        violation rows reflect the LATEST increment's rows; the
-        previous ones remain readable via the results tables' snapshot
-        history (time travel), so nothing is lost.
+        (idempotent: verdicts overwrite per partition). The previous
+        verdict and violation rows of a re-validated partition stay
+        readable through the results tables' snapshot history.
 
         ``max_partitions`` budgets one invocation; the watermark only
         advances once the WHOLE diff is drained, so budgeted runs
         continue the same diff. An expired watermark snapshot (source
-        history truncated past it) falls back to a full re-validation
-        rather than failing every subsequent run.
+        history truncated past it) re-validates every current
+        partition rather than failing every subsequent run.
         Returns {"snapshot": <new watermark>, "partitions": [...]}.
         """
+        meta = source._read_meta()  # pins the snapshot, files and schema
+        if partition_col not in meta["partition_by"]:
+            raise ValueError(
+                f"partition_col {partition_col!r} is not a partition column "
+                f"of the source (partitioned by {meta['partition_by']})")
         state = self.manifest.load()
         last = state.get("__snapshot_watermark")
-        cur = source._read_meta()["current_snapshot_id"]
+        cur = meta["current_snapshot_id"]
         if cur is None or cur == last:
             return {"snapshot": last, "partitions": []}
-        if last is not None:
-            try:
-                df = source.scan_added_since(last)
-            except FileNotFoundError:
-                # the watermark snapshot was expired from the source's
-                # history: the diff is unrecoverable — fall back to a
-                # full re-validation instead of wedging every run
-                last = None
-                df = source.scan()
-        else:
-            df = source.scan()
-        df = df.cache()  # distinct-partitions probe + run() both read it
         try:
-            # the diff may re-touch completed partitions: clear their
-            # completion marks so run() re-validates them over the diff
-            # — but NOT when continuing the identical diff (a budgeted
-            # previous invocation): its marks ARE this diff's progress
-            diff_id = f"{last}->{cur}"
-            if state.get("__diff_id") != diff_id:
-                for p in self.partition_values(df, partition_col):
-                    state["completed"].pop(p, None)
-                state["__diff_id"] = diff_id
-            state["__snapshot_watermark"] = last
-            self.manifest.save(state)
+            added = source.files_added_since(last, _meta=meta)
+        except FileNotFoundError:
+            # the watermark snapshot was expired from the source's
+            # history: the diff is unrecoverable — re-validate every
+            # current partition instead of wedging every run
+            last = None
+            added = source.files_added_since(None, _meta=meta)
+        touched = sorted({e["partition"].get(partition_col) for e in added}
+                         - {None, "__HIVE_DEFAULT_PARTITION__"})
 
-            # a re-touched partition is validated over its FULL current
-            # content (manifest-pruned read) — diff-only validation
-            # would overwrite its verdict/violations with late-rows-only
-            # results, silently flipping a failing partition to pass
-            processed = self.run(
-                df, partition_col=partition_col,
-                max_partitions=max_partitions,
-                slice_factory=lambda parts: source.scan(
-                    [(partition_col, "in", parts)], snapshot_id=cur),
-            )
-            drained = not self.pending_partitions(df, partition_col)
-        finally:
-            df.unpersist()
-        state = self.manifest.load()
+        # the diff may re-touch completed partitions: clear their
+        # completion marks so they are re-validated — but NOT when
+        # continuing the identical diff (a budgeted previous
+        # invocation): its marks ARE this diff's progress
+        diff_id = f"{last}->{cur}"
+        if state.get("__diff_id") != diff_id:
+            for p in touched:
+                state["completed"].pop(p, None)
+            state["__diff_id"] = diff_id
+        state["__snapshot_watermark"] = last
+        self.manifest.save(state)
+
+        pending = [p for p in touched if p not in state["completed"]]
+        todo = pending if max_partitions is None else pending[:max_partitions]
+        if todo:
+            self._validate(
+                source.scan([(partition_col, "in", todo)], snapshot_id=cur),
+                partition_col, todo)
+
         # advance only once the whole diff is validated: a budgeted
         # (max_partitions) run leaves the watermark so the next
         # invocation continues the SAME diff from its partition marks
+        drained = len(todo) == len(pending)
+        state = self.manifest.load()
         new_mark = cur if drained else last
         state["__snapshot_watermark"] = new_mark
         if drained:
             state.pop("__diff_id", None)
         self.manifest.save(state)
-        return {"snapshot": new_mark, "partitions": processed}
+        return {"snapshot": new_mark, "partitions": todo}
 
     # -- dataset-level checks (spec "dataset" block, FIXTURES.md §3) -------
     def run_dataset_checks(
@@ -508,8 +516,8 @@ class ValidationRunner:
                         f"blocklist table {b['table']!r} not provided")
                 src = b["table"]
             else:
-                blocked = self.spark.createDataFrame(
-                    [(x,) for x in b["domains"]], "domain string")
+                blocked = local_frame(
+                    self.spark, [(x,) for x in b["domains"]], "domain string")
                 ds = sorted(b["domains"])
                 src = ",".join(ds[:2]) + ("…" if len(ds) > 2 else "")
             agg = (
@@ -606,8 +614,9 @@ class ValidationRunner:
             results.append((f"normalized_{form}({col})", frac <= cap,
                             int(agg["n_changed"]), float(frac)))
 
-        return self.spark.createDataFrame(
-            results, "check string, pass boolean, n_violations long, metric double",
+        return local_frame(
+            self.spark, results,
+            "check string, pass boolean, n_violations long, metric double",
         )
 
     # -- results ------------------------------------------------------------

@@ -10,8 +10,9 @@ rely on AQE coalescing from a high initial value).
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -41,3 +42,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                ddl: str) -> DataFrame:
+    """A driver-side list of row tuples as a DataFrame of schema ``ddl``.
+
+    The rows go in as a ``pyarrow.Table``, which Spark turns into a
+    local relation whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says: reading it starts no Python worker, and an empty list gives a
+    relation with no partitions. ``createDataFrame(list, ddl)``
+    instead parallelizes the rows through a PythonRDD, whose tasks a
+    later ``coalesce(1)`` runs one after another."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)

@@ -63,6 +63,8 @@ from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from json_schema_spark.session import local_frame
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same version first (optimistic
@@ -494,13 +496,23 @@ class IceTable:
     def _check_columns(self, df: DataFrame, meta: dict) -> None:
         from pyspark.sql import types as T
 
-        declared = {f.name for f in
+        declared = {f.name: f.dataType.simpleString() for f in
                     T._parse_datatype_string(meta["schema"]).fields}
-        extra = set(df.columns) - declared
+        extra = set(df.columns) - set(declared)
         if extra:
             raise ValueError(
                 f"columns {sorted(extra)} not in table schema — run "
                 "evolve_schema() first (additive evolution)")
+        # scans read every file under the declared types, so a file
+        # written with another type could not be decoded
+        retyped = sorted(
+            f"{f.name} {f.dataType.simpleString()} (table: {declared[f.name]})"
+            for f in df.schema.fields
+            if f.dataType.simpleString() != declared[f.name])
+        if retyped:
+            raise ValueError(
+                f"columns {retyped} do not match the table schema types — "
+                "cast them to the declared types first")
 
     def _stage(self, df: DataFrame, partition_by: list[str],
                bloom_cols: list[str] | None = None) -> list[dict]:
@@ -604,8 +616,9 @@ class IceTable:
     def evolve_schema(self, new_schema_ddl: str) -> int:
         """Additive schema evolution: commit a snapshot with the same
         files but a widened schema. Columns may only be ADDED (old data
-        files read back with NULLs for new columns via mergeSchema);
-        drops/renames are the catalog's job and are rejected here."""
+        files read back with NULLs for new columns under the declared-
+        schema read); drops/renames are the catalog's job and are
+        rejected here."""
         meta = self._read_meta()
         from pyspark.sql import types as T
 
@@ -732,28 +745,33 @@ class IceTable:
                     pass
         return {"expired": len(expired), "deleted_files": len(doomed)}
 
+    def files_added_since(self, snapshot_id: int | None,
+                          filters: list[tuple[str, str, Any]] | None = None,
+                          _meta: dict | None = None) -> list[dict]:
+        """The current snapshot's file entries (pruned by ``filters``)
+        that ``snapshot_id`` does not hold; ``None`` means every
+        current entry. Files are immutable, so the diff of manifests
+        IS the diff of rows for append-only history; overwrites
+        replace files, whose rows then (correctly) reappear in the
+        diff. Pure metadata, like :meth:`plan_files`. Raises
+        FileNotFoundError when ``snapshot_id`` was expired."""
+        meta = _meta if _meta is not None else self._read_meta()
+        old: set[str] = set()
+        if snapshot_id is not None:
+            old = {e["path"] for e in self._read_manifest(snapshot_id, meta)}
+        return [e for e in self.plan_files(filters, _meta=meta)
+                if e["path"] not in old]
+
     def scan_added_since(self, snapshot_id: int,
                          filters: list[tuple[str, str, Any]] | None = None,
                          ) -> DataFrame:
         """Incremental read: only the rows in data files added AFTER
-        ``snapshot_id`` (the Iceberg incremental-scan contract). This
-        is what makes continuous validation O(new data): each run
-        validates scan_added_since(last_validated_snapshot) and
-        records the new snapshot id — history is never rescanned.
-        Files are immutable, so the diff of manifests IS the diff of
-        rows for append-only history; overwrites replace files, whose
-        rows then (correctly) reappear in the diff."""
+        ``snapshot_id`` (the Iceberg incremental-scan contract, over
+        :meth:`files_added_since`). This is what makes continuous
+        validation O(new data): history is never rescanned."""
         meta = self._read_meta()
-        cur = meta["current_snapshot_id"]
-        old = {e["path"] for e in self._read_manifest(snapshot_id, meta)}
-        entries = [e for e in self.plan_files(filters, cur, _meta=meta)
-                   if e["path"] not in old]
-        declared = meta["schema"]
-        if not entries:
-            return self.spark.createDataFrame([], declared)
-        # delegate projection/partition recovery to scan-on-a-subset:
-        # reuse the same read path with a pinned entry list
-        return self._read_entries(entries, meta, declared, filters)
+        entries = self.files_added_since(snapshot_id, filters, _meta=meta)
+        return self._read_entries(entries, meta, meta["schema"], filters)
 
     def remove_orphan_files(self, older_than_s: float = 3600.0) -> dict:
         """Delete data files and manifests referenced by NO snapshot in
@@ -824,8 +842,6 @@ class IceTable:
         """Read the (pruned) snapshot as a DataFrame. The residual
         filter is re-applied exactly so pruning is a pure optimization:
         scan(filters) ≡ scan().filter(filters) row-for-row."""
-        from pyspark.sql import functions as F
-
         meta = self._read_meta()  # ONE read pins file list + schema
         entries = self.plan_files(filters, snapshot_id, _meta=meta)
 
@@ -838,25 +854,30 @@ class IceTable:
                 (s.get("schema") or meta["schema"]
                  for s in meta["snapshots"] if s["id"] == snapshot_id),
                 meta["schema"])
-        if not entries:
-            return self.spark.createDataFrame([], schema_ddl)
         return self._read_entries(entries, meta, schema_ddl, filters)
 
     def _read_entries(self, entries: list[dict], meta: dict,
                       schema_ddl: str,
                       filters: list[tuple[str, str, Any]] | None) -> DataFrame:
-        """Read a pinned file-entry list under ``schema_ddl``: merge-
+        """Read a pinned file-entry list under ``schema_ddl``: declared-
         schema parquet read, partition-column recovery, projection to
-        the declared order, residual filters."""
+        the declared order, residual filters. No entries give an empty
+        frame with no partitions."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
+        if not entries:
+            return local_frame(self.spark, [], schema_ddl)
         declared = T._parse_datatype_string(schema_ddl)
         declared_types = {f.name: f.dataType for f in declared.fields}
-        # mergeSchema: files written before an additive evolution lack
-        # the new columns; the union-schema read NULL-fills them
-        reader = self.spark.read.option("mergeSchema", "true")
-        df = reader.parquet(*[e["path"] for e in entries])
+        # the declared schema, not an inferred one: no schema-inference
+        # job, and files written before an additive evolution read the
+        # columns they lack as NULL (append/overwrite_partitions keep
+        # every file's types equal to the declared ones)
+        data_schema = T.StructType([f for f in declared.fields
+                                    if f.name not in meta["partition_by"]])
+        df = self.spark.read.schema(data_schema).parquet(
+            *[e["path"] for e in entries])
         if meta["partition_by"]:
             # Hive-style dirs under differing commit roots: recover the
             # partition columns from the path (basePath varies per
@@ -879,14 +900,8 @@ class IceTable:
                     rf"(?:^|/){_re.escape(pcol)}=([^/]+)", 1)))
                 df = df.withColumn(
                     pcol, raw.cast(declared_types.get(pcol, T.StringType())))
-        # project to the era's schema: stable column set/order, NULLs
-        # for columns newer than a given data file
-        present = set(df.columns)
-        df = df.select(*[
-            F.col(f.name) if f.name in present
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in declared.fields
-        ])
+        # project to the era's schema: stable column order
+        df = df.select(*[f.name for f in declared.fields])
         for col, op, lit in (filters or []):
             c = F.col(col)
             df = df.filter({"=": c == lit, "<": c < lit, "<=": c <= lit,

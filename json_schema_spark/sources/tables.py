@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from json_schema_spark.session import local_frame
+
 TPCH_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -249,7 +251,7 @@ def synth_skewed_webpages(
 def lang_dim(spark: SparkSession) -> DataFrame:
     """ISO-639-1-ish allow-list dimension (~broadcast anti-join path,
     FIXTURES.md §2)."""
-    return spark.createDataFrame([(c,) for c in ALLOWED_LANGS], ["lang_code"])
+    return local_frame(spark, [(c,) for c in ALLOWED_LANGS], "lang_code string")
 
 
 def write_bucketed(

@@ -237,6 +237,38 @@ def test_schema_evolution_additive(spark, tmp_path):
     assert ops == ["append", "evolve-schema", "append"]
 
 
+def test_append_rejects_column_type_mismatch(spark, tmp_path, docs):
+    """Scans read every file under the declared types, so a frame whose
+    column type differs from the table schema is refused before it
+    writes a file that no scan could decode."""
+    t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, ["lang"])
+    bad = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
+    with pytest.raises(ValueError, match="doc_id string"):
+        t.append(bad)
+    with pytest.raises(ValueError, match="doc_id string"):
+        t.overwrite_partitions(bad)
+    assert t.snapshots() == []
+    assert not (tmp_path / "t" / "data").exists()
+
+
+def test_files_before_evolution_read_new_column_as_null(spark, tmp_path, docs):
+    """A data file written before evolve_schema lacks the new column;
+    the declared-schema read gives it NULL there, also when every file
+    of the scan predates the evolution."""
+    t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, ["lang"])
+    t.append(docs.where("doc_id < 50"))
+    t.evolve_schema(SCHEMA + ", score double")
+    s2 = t.append(docs.where("doc_id >= 50").withColumn(
+        "score", F.col("doc_id").cast("double")))
+
+    got = {r["doc_id"]: r["score"] for r in t.scan().collect()}
+    assert got == {i: (float(i) if i >= 50 else None) for i in range(100)}
+    # a pruned read of pre-evolution files only
+    old = [r["score"] for r in t.scan([("doc_id", "<", 50)]).collect()]
+    assert len(old) == 50 and set(old) == {None}
+    assert dict(t.scan_added_since(s2).dtypes)["score"] == "double"
+
+
 def test_write_audit_publish(spark, webpages, tmp_path):
     """audited_append: spec-passing rows publish, planted-defect rows
     quarantine as explainable violation rows; nothing lost."""

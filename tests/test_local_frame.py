@@ -1,0 +1,32 @@
+"""``session.local_frame``: driver-side rows as an Arrow-built local
+relation."""
+
+from datetime import date
+
+from json_schema_spark.session import local_frame
+
+DDL = "m map<string,double>, xs array<string>, b boolean, d date, s string"
+ROWS = [
+    ({"a": 0.5, "b": None}, ["x", None], True, date(2024, 3, 1), "s"),
+    ({}, [], False, date(1970, 1, 1), None),
+    (None, None, None, None, None),
+]
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """Maps, arrays, booleans, dates and nulls come back exactly as
+    ``createDataFrame(list, ddl)`` gives them, from a local relation
+    (no PythonRDD, so no Python worker reads it)."""
+    got = local_frame(spark, ROWS, DDL)
+    ref = spark.createDataFrame(ROWS, DDL)
+    assert got.schema == ref.schema
+    assert got.collect() == ref.collect()
+    plan = got._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def test_local_frame_empty_has_no_partitions(spark):
+    empty = local_frame(spark, [], DDL)
+    assert empty.schema == spark.createDataFrame([], DDL).schema
+    assert empty._jdf.rdd().getNumPartitions() == 0
+    assert empty.collect() == []

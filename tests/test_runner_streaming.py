@@ -211,19 +211,16 @@ def test_run_failure_does_not_leak_cached_slice(spark, pages_parquet, tmp_path):
     """ADVICE r2: a failure mid-call must unpersist the cached slice
     (try/finally) — otherwise every retry leaks a cached DataFrame
     into executor memory for the rest of the session."""
-    df = spark.read.parquet(pages_parquet)
+    # valid plan, fails at action time — but only once the url column
+    # is read, so the pending-partition probe still succeeds
+    df = (spark.read.parquet(pages_parquet)
+          .withColumn("url", F.when(F.length("url") >= 0, F.raise_error("boom"))
+                              .otherwise(F.col("url"))))
     r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="rf")
-
-    def poison_slice(parts):
-        # valid plan, fails at action time
-        return (df.where(F.col("warc_day").cast("string").isin(parts))
-                  .withColumn("url", F.when(F.length("url") >= 0,
-                                            F.raise_error("boom"))
-                                      .otherwise(F.col("url"))))
 
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
     with pytest.raises(Exception, match="boom"):
-        r.run(df, max_partitions=2, slice_factory=poison_slice)
+        r.run(df, max_partitions=2)
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
     assert after == before
     assert r.manifest.completed() == set()
@@ -265,28 +262,77 @@ def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
     assert va == vb and len(va) > 0
 
 
+def _count_jobs(spark, group: str, fn, *args, **kwargs):
+    """Run ``fn(*args, **kwargs)`` under a fresh job group; returns the
+    number of Spark jobs it started and its result."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path):
     """The pass runs a fixed set of Spark jobs per call: validating
     three pending partitions costs no more jobs than validating one."""
     df = spark.read.parquet(pages_parquet)
-    sc = spark.sparkContext
 
     def jobs(n_parts: int) -> int:
         r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / f"p{n_parts}"),
                              run_id="j")
-        group = f"runner-jobs-{n_parts}"
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            assert len(r.run(df, max_partitions=n_parts)) == n_parts
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        # the status store is fed asynchronously by the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        n_jobs, done = _count_jobs(spark, f"runner-jobs-{n_parts}",
+                                   r.run, df, max_partitions=n_parts)
+        assert len(done) == n_parts
+        return n_jobs
 
     one, three = jobs(1), jobs(3)
     assert one > 0
     assert three == one
+
+
+def test_snapshot_increment_job_count_independent_of_partitions(
+        spark, pages_parquet, tmp_path):
+    """A snapshot-incremental call answers its partition set from the
+    source's manifests and reads under the declared schema, so it runs
+    only its real work — the violations write, the verdict aggregate
+    and the verdict write — for one partition or for three."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    df = spark.read.parquet(pages_parquet)
+    src = IceTable.create(spark, str(tmp_path / "src"), ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields),
+        ["warc_day"])
+    src.append(df)
+
+    def jobs(n_parts: int) -> int:
+        r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / f"p{n_parts}"),
+                             run_id="j")
+        n_jobs, out = _count_jobs(spark, f"snapshot-jobs-{n_parts}",
+                                  r.run_snapshot_increment, src,
+                                  max_partitions=n_parts)
+        assert len(out["partitions"]) == n_parts
+        return n_jobs
+
+    one, three = jobs(1), jobs(3)
+    assert 0 < one <= 4
+    assert three == one
+
+
+def test_snapshot_increment_rejects_non_partition_column(spark, tmp_path):
+    """The partition set comes from the source's manifests, so the
+    partition column must be one of the source's partition columns."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    spec = {"columns": {"n": {"type": "integer", "minimum": 0}}}
+    src = IceTable.create(spark, str(tmp_path / "src"),
+                          "url string, host string, n int", ["host"])
+    r = ValidationRunner(spark, spec, str(tmp_path / "res"), run_id="p")
+    with pytest.raises(ValueError, match="not a partition column"):
+        r.run_snapshot_increment(src, partition_col="url")
 
 
 def test_revalidated_clean_partition_drops_stale_violations(spark, tmp_path):
