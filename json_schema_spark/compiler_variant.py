@@ -7,88 +7,72 @@ reference semantics on any shape, but Python-side):
 
     dynamic-shape JSON, validated entirely inside the JVM.
 
-``parse_json`` turns a JSON string column into an open-schema VARIANT;
-every keyword of the reference's vocabulary (validator dispatch,
-/root/reference/src/validators.lisp:79-138) is compiled ONCE on the
-driver into expressions over that variant — ``schema_of_variant`` for
-type gates, ``try_variant_get`` casts for value extraction,
-``map<string,variant>`` / ``array<variant>`` casts plus higher-order
-functions for object/array applicators. Recursion over subschemas
-happens at compile time (the schema is driver-side data), so arbitrary
-nesting costs zero executor Python.
+``parse_json`` turns a JSON string column into an open-schema VARIANT.
+The keyword rules are ``compiler.py``'s — one table for both paths;
+this module supplies :class:`VariantAccess`, the value accessor they
+run against: ``schema_of_variant`` and strict container casts for type
+gates, ``try_variant_get`` casts for value extraction,
+``map<string,variant>`` / ``array<variant>`` casts for the higher-order
+functions of the applicators, and canonical deep equality. Recursion
+over subschemas happens at compile time (the schema is driver-side
+data), so arbitrary nesting costs zero executor Python.
 
 Reference-parity semantics preserved (SURVEY.md §2):
 
 * **Type-gating** (require-type, src/validators.lisp:35-37): every
   keyword passes vacuously on data outside its type. Casts on VARIANT
-  are lenient (a BIGINT casts to "1", a BOOLEAN to 1.0), so gates are
-  built from ``schema_of_variant``, never from cast success.
+  are lenient (a BIGINT casts to "1", a BOOLEAN to 1.0), so scalar
+  gates are built from ``schema_of_variant``, never from cast success.
 * **JSON null vs absent** — unlike the typed-column path (SURVEY.md
   §1.1 caveat), VARIANT keeps them distinct: an absent property is a
   NULL variant, a present ``null`` is a non-NULL variant with
   ``is_variant_null`` true. ``required`` + ``type: "null"`` therefore
   carry full reference semantics here (utils:object-get second return
   value, src/utils.lisp:57-62).
-* **Deep equality** (json-equal-p, src/utils.lisp:69-96): numbers
-  compare numerically across int/float (decimal-exact where the
-  variant is decimal-representable), booleans only equal booleans,
-  objects by key-set + recursive values, arrays element-wise.
-* **Unknown keywords are skipped** (:132-135), per-draft dispatch
-  membership imported from ``compiler.DRAFT_KEYWORDS``.
+* **Exact numbers** (json-equal-p, src/utils.lisp:69-96): equality and
+  the min/max bounds compare exactly — decimal(38,15), then
+  decimal(38,0) for integral bignums, double beyond that; booleans only
+  equal booleans, objects by key-set + recursive values, arrays
+  element-wise.
+* ``propertyNames`` compiles its key schema with the typed accessor
+  over ``StringType``: object keys are plain strings.
 
 Schemas outside the JVM-expressible subset (untranslatable PCRE
-patterns, ``$ref`` cycles nesting past the compile-time unroll, cyclic
-``$ref`` under strict-unevaluated tracking) raise
+patterns, cyclic ``$ref`` under strict-unevaluated tracking) raise
 :class:`VariantUnsupported` at compile time; callers fall back to
-``pyvalidator.validate_json_udf`` — never silently approximate.
-2019-09 ``unevaluated*`` compiles on this path too (r5): reference-
-partial by default, full annotation tracking behind the same
-``strict_unevaluated`` opt-in as the other two paths.
+``pyvalidator.validate_json_udf`` — never silently approximate. A
+cyclic ``$ref`` is unrolled 3 levels at compile time; data nesting
+deeper than that refuses loudly at runtime.
 
-Known limits vs the interpreter (documented, conformance-gated):
-* ``uniqueItems`` deep equality is reference-exact (recursively
-  key-sorted object canonicalization — ``{"a":1,"b":2}`` equals
-  ``{"b":2,"a":1}``; numbers numerically normalized so ``[1, 1.0]``
-  has a duplicate while ``["1", 1]`` does not) for containers nested
-  up to ``_UNIQ_DEPTH`` levels inside an element.  Deeper containers
-  RAISE at runtime (``raise_error`` names the pandas-UDF fallback) —
-  loud refusal, never a silent approximation.
-* Numbers beyond decimal(38,15) fall back to double comparisons.
+Known limit vs the interpreter (documented, conformance-gated):
+``uniqueItems`` deep equality is reference-exact (recursively
+key-sorted object canonicalization — ``{"a":1,"b":2}`` equals
+``{"b":2,"a":1}``; numbers numerically normalized so ``[1, 1.0]`` has a
+duplicate while ``["1", 1]`` does not) for containers nested up to
+``_UNIQ_DEPTH`` levels inside an element. Deeper containers RAISE at
+runtime (``raise_error`` names the pandas-UDF fallback) — loud refusal,
+never a silent approximation.
 """
 
 from __future__ import annotations
 
 import decimal
-import urllib.parse
-from typing import Any, Callable
+import operator
+from dataclasses import dataclass
+from typing import Any, Callable, ClassVar
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from json_schema_spark.compiler import (
-    DRAFT_KEYWORDS, _PCRE_FALLBACK, CompiledSpec, KeywordCheck, _message,
+    _MAX_DEPTH, _PCRE_FALLBACK, _REF_UNROLL, Access, CompiledSpec, KeywordCheck,
+    TypedAccess, _compile_keyword, _compile_schema, _message, _or,
     translate_regex,
 )
-from json_schema_spark.functions.formats import format_check
-from json_schema_spark.spec import SpecError, SpecRegistry, _id_key
+from json_schema_spark.spec import SpecError, SpecRegistry
 
 VPred = Callable[[Column], Column]  # variant Column -> TRUE-pass boolean
-
-_MAX_DEPTH = 32
-
-# compile-time unroll budget for CYCLIC $ref targets (each cycle
-# occurrence inlines the target once; data nesting deeper than the
-# unroll refuses loudly at runtime — see the $ref branch). Plan size
-# grows ~(ref-sites-per-cycle)^_REF_UNROLL, so keep it small.
-_REF_UNROLL = 3
-
-# annotations / keywords handled inside another keyword's branch
-_NOOP = frozenset({
-    "$anchor", "$comment", "$defs", "$id", "$schema", "$vocabulary",
-    "default", "definitions", "description", "title", "examples",
-    "then", "else", "contentMediaType", "contentEncoding", "deprecated",
-    "minContains", "maxContains", "readOnly", "writeOnly", "id", "draft",
-})
 
 
 class VariantUnsupported(SpecError):
@@ -183,48 +167,35 @@ def _is_integer(v: Column) -> Column:
     )
 
 
-def _type_one(name: str, v: Column) -> Column:
-    if name == "string":
-        return _is_string(v)
-    if name == "number":
-        return _is_number(v)
-    if name == "integer":
-        return _is_integer(v)
-    if name == "boolean":
-        return _is_bool(v)
-    if name == "null":
-        return F.is_variant_null(v)
-    if name == "object":
-        return _is_object(v)
-    if name == "array":
-        return _is_array(v)
-    if name == "any":  # draft3 relic; accepted by the reference's table
-        return F.lit(True)
-    raise VariantUnsupported(f"unknown type name {name!r}")
-
-
 # ---------------------------------------------------------------------------
 # deep equality (json-equal-p, src/utils.lisp:69-96)
 # ---------------------------------------------------------------------------
 
-def _num_lit_eq(v: Column, val: Any) -> Column:
-    """Numeric equality with the reference's `=` semantics: exact in
-    decimal when the data fits decimal(38,15), double otherwise."""
+def _dec_lit(val: Any) -> decimal.Decimal | None:
+    """``val`` as an exact decimal(38,15) literal, or None."""
     try:
         d = decimal.Decimal(str(val))
-        dec_ok = abs(d.as_tuple().exponent) <= 15 and len(d.as_tuple().digits) <= 38
     except decimal.InvalidOperation:
-        dec_ok = False
-    dbl_eq = _dbl(v) == F.lit(float(val))
-    if not dec_ok:
-        return dbl_eq
+        return None
+    t = d.as_tuple()
+    return d if abs(t.exponent) <= 15 and len(t.digits) <= 38 else None
+
+
+def _num_cmp(v: Column, op: Callable, val: Any) -> Column:
+    """``v <op> val`` with the reference's exact rational semantics:
+    in decimal when the data fits decimal(38,15), integer-exact for
+    bignums, double otherwise."""
+    d = _dec_lit(val)
+    dbl = op(_dbl(v), F.lit(float(val)))
+    if d is None:
+        return dbl
     dec = _dec(v)
-    out = F.when(dec.isNotNull(), dec == F.lit(d))
+    out = F.when(dec.isNotNull(), op(dec, F.lit(d)))
     if d == d.to_integral_value():
         d0 = d.quantize(decimal.Decimal(1))
         out = out.when(_dec0(v).isNotNull() & _is_integer(v),
-                       _dec0(v) == F.lit(d0))
-    return out.otherwise(dbl_eq)
+                       op(_dec0(v), F.lit(d0)))
+    return out.otherwise(dbl)
 
 
 def _deep_eq(v: Column, val: Any, depth: int = 0) -> Column:
@@ -235,7 +206,7 @@ def _deep_eq(v: Column, val: Any, depth: int = 0) -> Column:
     if isinstance(val, bool):  # bools only equal bools (utils.lisp:79-82)
         return _is_bool(v) & (F.try_variant_get(v, "$", "boolean") == F.lit(val))
     if isinstance(val, (int, float)):
-        return _is_number(v) & _num_lit_eq(v, val)
+        return _is_number(v) & _num_cmp(v, operator.eq, val)
     if isinstance(val, str):
         return _is_string(v) & (_str(v) == F.lit(val))
     if isinstance(val, list):
@@ -337,327 +308,92 @@ def _elem_norm(x: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# string-schema predicate for propertyNames (keys are plain strings)
+# the VARIANT value accessor
 # ---------------------------------------------------------------------------
 
-def _string_schema_pred(schema: Any, draft: str, registry: SpecRegistry | None,
-                        depth: int) -> Callable[[Column], Column]:
-    if schema is True or schema == {}:
-        return lambda s: F.lit(True)
-    if schema is False:
-        return lambda s: F.lit(False)
-    if not isinstance(schema, dict):
-        raise VariantUnsupported("propertyNames schema must be bool/object")
-    preds: list[Callable[[Column], Column]] = []
-    table = DRAFT_KEYWORDS.get(draft, DRAFT_KEYWORDS["draft7"])
-    for kw, val in schema.items():
-        if kw not in table and kw not in _NOOP:
-            continue  # unknown keyword: skipped (validators.lisp:132-135)
-        if kw == "type":
-            names = val if isinstance(val, list) else [val]
-            ok = "string" in names or "any" in names
-            preds.append(lambda s, _ok=ok: F.lit(_ok))
-        elif kw == "enum":
-            strs = [x for x in val if isinstance(x, str)]
-            preds.append(lambda s, _v=strs: s.isin(_v) if _v else F.lit(False))
-        elif kw == "const":
-            if isinstance(val, str):
-                preds.append(lambda s, _v=val: s == F.lit(_v))
-            else:
-                preds.append(lambda s: F.lit(False))
-        elif kw == "pattern":
-            rx = _java_rx(val)
-            preds.append(lambda s, _rx=rx: s.rlike(_rx))
-        elif kw == "minLength":
-            preds.append(lambda s, _n=int(val): F.char_length(s) >= _n)
-        elif kw == "maxLength":
-            preds.append(lambda s, _n=int(val): F.char_length(s) <= _n)
-        elif kw == "format":
-            preds.append(lambda s, _f=val: format_check(_f, s, draft))
-        elif kw in ("allOf", "anyOf", "oneOf", "not"):
-            subs = val if isinstance(val, list) else [val]
-            inner = [_string_schema_pred(x, draft, registry, depth + 1)
-                     for x in subs]
-            if kw == "allOf":
-                preds.append(lambda s, _i=inner: _and(p(s) for p in _i))
-            elif kw == "anyOf":
-                preds.append(lambda s, _i=inner: _or(p(s) for p in _i))
-            elif kw == "oneOf":
-                preds.append(lambda s, _i=inner: _sum_one(p(s) for p in _i))
-            else:
-                preds.append(lambda s, _i=inner: ~_i[0](s))
-        # other keywords are non-string-applicable -> vacuous on a key
-    return lambda s: _and(p(s) for p in preds)
+@dataclass(frozen=True, kw_only=True)
+class VariantAccess(Access):
+    """A VARIANT value: gates are Columns, so every keyword compiles to
+    the branch-free ``~gate | pred``; a NULL variant is an absent value
+    and JSON null a present one."""
 
+    error: type = VariantUnsupported
 
-# ---------------------------------------------------------------------------
-# combinator folds
-# ---------------------------------------------------------------------------
+    null_is_absent: ClassVar[bool] = False
 
-def _and(cols) -> Column:
-    out = None
-    for c in cols:
-        out = c if out is None else out & c
-    return F.lit(True) if out is None else out
+    def gate(self, kind: str) -> VPred:
+        return {"string": _is_string, "sized": _is_string, "number": _is_number,
+                "array": _is_array, "object": _is_object, "map": _is_object}[kind]
 
+    def type_is(self, name: str, v: Column) -> Column:
+        if name == "any":  # draft3 relic; accepted by the reference's table
+            return F.lit(True)
+        test = {"string": _is_string, "number": _is_number, "integer": _is_integer,
+                "boolean": _is_bool, "null": F.is_variant_null,
+                "object": _is_object, "array": _is_array}.get(name)
+        if test is None:
+            raise VariantUnsupported(f"unknown type name {name!r}")
+        return test(v)
 
-def _or(cols) -> Column:
-    out = None
-    for c in cols:
-        out = c if out is None else out | c
-    return F.lit(False) if out is None else out
+    def equals_any(self, members: list) -> VPred:
+        return lambda v: _or([_deep_eq(v, m, self.depth) for m in members])
 
+    def string(self, v: Column) -> Column:
+        return _str(v)
 
-def _sum_one(cols) -> Column:
-    out = None
-    for c in cols:
-        i = c.cast("int")
-        out = i if out is None else out + i
-    return F.lit(False) if out is None else out == F.lit(1)
+    def length(self, v: Column) -> Column:
+        return F.char_length(_str(v))
 
+    def regex(self, pattern: str) -> str:
+        return _java_rx(pattern)
 
-# ---------------------------------------------------------------------------
-# keyword compilers — (val, schema, draft, registry, depth) -> VPred
-# ---------------------------------------------------------------------------
-
-def _compile_keyword(kw: str, val: Any, schema: dict, draft: str,
-                     registry: SpecRegistry | None, depth: int,
-                     stack: tuple = (), base: str = "",
-                     strict: bool = False) -> VPred | None:
-    sub = lambda s: compile_variant(s, draft, registry, depth + 1,  # noqa: E731
-                                    stack, base, strict)
-
-    if kw == "type":
-        names = val if isinstance(val, list) else [val]
-        return lambda v: _or(_type_one(n, v) for n in names)
-
-    if kw == "enum":
-        return lambda v: _or(_deep_eq(v, m, depth) for m in val)
-
-    if kw == "const":
-        return lambda v: _deep_eq(v, val, depth)
-
-    # ---- string keywords (vacuous off-type) -----------------------------
-    if kw == "pattern":
+    def search(self, pattern: str) -> VPred:
         # PCRE-only constructs raise: rlike would silently mismatch —
         # the typed/UDF paths route those through the Arrow PCRE UDF.
-        rx = _java_rx(val)
-        return lambda v: ~_is_string(v) | _str(v).rlike(rx)
+        rx = _java_rx(pattern)
+        return lambda v: _str(v).rlike(rx)
 
-    if kw == "minLength":
-        return lambda v: ~_is_string(v) | (F.char_length(_str(v)) >= int(val))
+    def compare(self, op: Callable, val: Any) -> VPred:
+        # Rounding to double keeps order, so a strict difference in
+        # double is already the exact answer: only rows that tie in
+        # double pay for the decimal casts.
+        def bound(v: Column) -> Column:
+            d, b = _dbl(v), F.lit(float(val))
+            if _dec_lit(val) is None:
+                return op(d, b)
+            return F.when(d != b, op(d, b)).otherwise(_num_cmp(v, op, val))
 
-    if kw == "maxLength":
-        return lambda v: ~_is_string(v) | (F.char_length(_str(v)) <= int(val))
+        return bound
 
-    if kw == "format":
-        return lambda v: ~_is_string(v) | format_check(val, _str(v), draft)
-
-    # ---- numeric keywords ------------------------------------------------
-    if kw in ("minimum", "maximum"):
-        if draft == "draft4":
-            # boolean-modifier form (src/validators.lisp:419-429,457-467;
-            # reference bug at :460 fixed, see compiler.py)
-            excl = bool(schema.get(
-                "exclusiveMinimum" if kw == "minimum" else "exclusiveMaximum",
-                False))
-        else:
-            excl = False
-        lo = kw == "minimum"
-        bound = float(val)
-
-        def bound_pred(v: Column, _lo=lo, _x=excl, _b=bound) -> Column:
-            d = _dbl(v)
-            if _lo:
-                cmp = (d > _b) if _x else (d >= _b)
-            else:
-                cmp = (d < _b) if _x else (d <= _b)
-            return ~_is_number(v) | cmp
-
-        return bound_pred
-
-    if kw == "exclusiveMinimum":
-        if draft == "draft4" or isinstance(val, bool):
-            return None  # handled inside minimum
-        return lambda v: ~_is_number(v) | (_dbl(v) > float(val))
-
-    if kw == "exclusiveMaximum":
-        if draft == "draft4" or isinstance(val, bool):
-            return None
-        return lambda v: ~_is_number(v) | (_dbl(v) < float(val))
-
-    if kw == "multipleOf":
+    def multiple_of(self, val: Any) -> VPred:
         # reference: int divisor on int data via mod, else exact
         # rational check (validators.lisp:501-516 / pyvalidator's
         # Fraction twin) — decimal pmod is the JVM-exact equivalent,
         # double pmod the fallback beyond decimal range.
         d = decimal.Decimal(str(val))
 
-        def mult(v: Column, _d=d) -> Column:
+        def mult(v: Column) -> Column:
             dec = _dec(v)
-            exact = F.pmod(dec, F.lit(_d)) == F.lit(decimal.Decimal(0))
-            approx = F.pmod(_dbl(v), F.lit(float(_d))) == F.lit(0.0)
-            out = F.when(dec.isNotNull(), exact)
-            if _d == _d.to_integral_value():
+            out = F.when(dec.isNotNull(),
+                         F.pmod(dec, F.lit(d)) == F.lit(decimal.Decimal(0)))
+            if d == d.to_integral_value():
                 # bignum data with an int divisor: reference computes
                 # int mod exactly (validators.lisp:501-516)
-                d0 = _d.quantize(decimal.Decimal(1))
+                d0 = d.quantize(decimal.Decimal(1))
                 out = out.when(
                     _dec0(v).isNotNull() & _is_integer(v),
                     F.pmod(_dec0(v), F.lit(d0)) == F.lit(decimal.Decimal(0)))
-            return ~_is_number(v) | out.otherwise(approx)
+            return out.otherwise(F.pmod(_dbl(v), F.lit(float(d))) == F.lit(0.0))
 
         return mult
 
-    # ---- object keywords -------------------------------------------------
-    if kw == "required":
-        if draft == "draft3" or isinstance(val, bool):
-            raise VariantUnsupported("draft3 boolean `required`")
-        return lambda v: ~_is_object(v) | _and(
-            F.try_element_at(_obj(v), F.lit(k)).isNotNull() for k in val)
+    def array(self, v: Column) -> Column:
+        return _arr(v)
 
-    if kw == "properties":
-        inner = {k: sub(s) for k, s in val.items()}
+    def element(self, in_lambda: bool = True) -> "VariantAccess":
+        return self
 
-        def props(v: Column, _i=inner) -> Column:
-            m = _obj(v)
-            checks = []
-            for k, p in _i.items():
-                fv = F.try_element_at(m, F.lit(k))
-                # presence-gated recursion (validators.lisp:569-571);
-                # branch-free (| not when) so CSE reaches the subtree
-                checks.append(fv.isNull() | p(fv))
-            return ~_is_object(v) | _and(checks)
-
-        return props
-
-    if kw == "patternProperties":
-        inner = [(_java_rx(rx), sub(s)) for rx, s in val.items()]
-
-        def _key_match(rx: str):
-            # exact 2-arity lambda: PySpark introspects HOF signatures
-            return lambda k, _v: k.rlike(rx)
-
-        def pat_props(v: Column, _i=inner) -> Column:
-            m = _obj(v)
-            checks = []
-            for rx, p in _i:
-                vals = F.map_values(F.map_filter(m, _key_match(rx)))
-                checks.append(F.forall(vals, p))
-            return ~_is_object(v) | _and(checks)
-
-        return pat_props
-
-    if kw == "additionalProperties":
-        names = list(schema.get("properties", {}) or {})
-        pats = [_java_rx(r)
-                for r in (schema.get("patternProperties", {}) or {})]
-
-        def extra_map(v: Column) -> Column:
-            def is_extra(k: Column, _val: Column) -> Column:
-                cond = F.lit(True)
-                if names:
-                    cond = cond & ~k.isin(names)
-                for rx in pats:
-                    cond = cond & ~k.rlike(rx)
-                return cond
-            return F.map_filter(_obj(v), is_extra)
-
-        if val is False:
-            return lambda v: ~_is_object(v) | (F.size(extra_map(v)) == 0)
-        p = sub(val)
-        return lambda v: ~_is_object(v) | F.forall(F.map_values(extra_map(v)), p)
-
-    if kw == "propertyNames":
-        sp = _string_schema_pred(val, draft, registry, depth + 1)
-        return lambda v: ~_is_object(v) | F.forall(F.map_keys(_obj(v)), sp)
-
-    if kw == "minProperties":
-        return lambda v: ~_is_object(v) | (F.size(_obj(v)) >= int(val))
-
-    if kw == "maxProperties":
-        return lambda v: ~_is_object(v) | (F.size(_obj(v)) <= int(val))
-
-    if kw in ("dependencies", "dependentRequired", "dependentSchemas"):
-        items = []
-        for k, dep in val.items():
-            if isinstance(dep, list):
-                items.append(("req", k, dep))
-            else:
-                items.append(("schema", k, sub(dep)))
-
-        def deps(v: Column, _items=items) -> Column:
-            m = _obj(v)
-            checks = []
-            for kind, k, dep in _items:
-                present = F.try_element_at(m, F.lit(k)).isNotNull()
-                if kind == "req":
-                    need = _and(F.try_element_at(m, F.lit(r)).isNotNull() for r in dep)
-                else:
-                    need = dep(v)
-                checks.append(~present | need)
-            return ~_is_object(v) | _and(checks)
-
-        return deps
-
-    # ---- array keywords --------------------------------------------------
-    if kw == "items":
-        if isinstance(val, list):  # tuple form (validators.lisp:383-397)
-            inner = [sub(s) for s in val]
-
-            def tuple_items(v: Column, _i=inner) -> Column:
-                arr = _arr(v)
-                checks = []
-                for idx, p in enumerate(_i):
-                    e = F.try_element_at(arr, F.lit(idx + 1))
-                    # branch-free: try_element_at yields NULL past the
-                    # end, p(NULL) never errors (all extraction is try_)
-                    checks.append((F.size(arr) <= idx) | p(e))
-                return ~_is_array(v) | _and(checks)
-
-            return tuple_items
-        p = sub(val)
-        return lambda v: ~_is_array(v) | F.forall(_arr(v), p)
-
-    if kw == "additionalItems":
-        items_v = schema.get("items")
-        if not isinstance(items_v, list):
-            return None  # only meaningful after tuple-form items
-        n = len(items_v)
-        if val is False:
-            return lambda v: ~_is_array(v) | (F.size(_arr(v)) <= n)
-        p = sub(val)
-        return lambda v: ~_is_array(v) | F.forall(
-            F.slice(_arr(v), n + 1,
-                    F.greatest(F.size(_arr(v)) - n, F.lit(0))), p)
-
-    if kw == "contains":
-        p = sub(val)
-        if draft == "draft2019-09" and (
-                "minContains" in schema or "maxContains" in schema):
-            lo = int(schema.get("minContains", 1))
-            hi = schema.get("maxContains")
-
-            def counted(v: Column, _p=p, _lo=lo, _hi=hi) -> Column:
-                cnt = F.size(F.filter(_arr(v), _p))
-                ok = cnt >= F.lit(_lo)
-                if _hi is not None:
-                    ok = ok & (cnt <= F.lit(int(_hi)))
-                return ~_is_array(v) | ok
-
-            return counted
-        return lambda v: ~_is_array(v) | F.exists(_arr(v), p)
-
-    if kw == "minItems":
-        return lambda v: ~_is_array(v) | (F.size(_arr(v)) >= int(val))
-
-    if kw == "maxItems":
-        return lambda v: ~_is_array(v) | (F.size(_arr(v)) <= int(val))
-
-    if kw == "uniqueItems":
-        if val is not True:
-            return None
-
+    def unique(self) -> VPred:
         def unique(v: Column) -> Column:
             norms = F.transform(_arr(v), _elem_norm)
             # sentinel norm = container nested past _UNIQ_DEPTH:
@@ -665,7 +401,7 @@ def _compile_keyword(kw: str, val: Any, schema: dict, draft: str,
             too_deep = F.exists(norms,
                                 lambda s: s.rlike(_DEEP_SENTINEL_RX))
             ok = F.size(F.array_distinct(norms)) == F.size(_arr(v))
-            return ~_is_array(v) | F.when(
+            return F.when(
                 too_deep,
                 F.raise_error(F.lit(
                     "variant uniqueItems: element container nesting "
@@ -675,267 +411,37 @@ def _compile_keyword(kw: str, val: Any, schema: dict, draft: str,
 
         return unique
 
-    # ---- combinators -----------------------------------------------------
-    if kw == "allOf":
-        inner = [sub(s) for s in val]
-        return lambda v: _and(p(v) for p in inner)
+    def member(self, key: str) -> tuple[VPred, "VariantAccess"]:
+        return (lambda v: F.try_element_at(_obj(v), F.lit(key))), self
 
-    if kw == "anyOf":
-        inner = [sub(s) for s in val]
-        return lambda v: _or(p(v) for p in inner)
+    def has(self, v: Column, key: str) -> Column:
+        return F.try_element_at(_obj(v), F.lit(key)).isNotNull()
 
-    if kw == "oneOf":
-        inner = [sub(s) for s in val]
-        return lambda v: _sum_one(p(v) for p in inner)
+    def as_map(self, v: Column) -> Column:
+        return _obj(v)
 
-    if kw == "not":
-        p = sub(val)
-        return lambda v: ~p(v)
+    def values(self) -> "VariantAccess":
+        return self
 
-    if kw == "if":
-        cond = sub(val)
-        then_p = sub(schema["then"]) if "then" in schema else None
-        else_p = sub(schema["else"]) if "else" in schema else None
+    def keys(self) -> TypedAccess:
+        return TypedAccess(dt=T.StringType(), in_lambda=True, **self.context())
 
-        def ite(v: Column, _c=cond, _t=then_p, _e=else_p) -> Column:
-            t = _t(v) if _t is not None else F.lit(True)
-            e = _e(v) if _e is not None else F.lit(True)
-            return F.when(_c(v), t).otherwise(e)
+    def prop_count(self, v: Column) -> Column:
+        return F.size(_obj(v))
 
-        return ite
+    def ref_key(self, target: Any) -> int:
+        return id(target)
 
-    if kw == "$ref":
-        if registry is None:
-            raise VariantUnsupported("$ref without a registry")
-        # base-URI-aware resolution (r5): relative refs and anchors
-        # resolve against the nearest enclosing $id, exactly as the
-        # interpreter's _base_stack does (pyvalidator._resolve_ref) —
-        # embedded-$id documents and $anchor targets now compile
-        # JVM-side instead of declining.
-        target = registry.resolve(val, base=base)
-        # reference parity: siblings conjoin with the target
-        # (validators.lisp:524-530). Recursion is unrolled at compile
-        # time (r5): a CYCLIC target is inlined _REF_UNROLL times, and
-        # the cut leaf refuses LOUDLY at runtime if actual data ever
-        # reaches it — shallower data never consults the leaf (its
+    def ref_cut(self, ref: str) -> VPred:
+        # Data shallower than the unroll never consults this leaf (its
         # input variant is NULL past the data's own depth), so finite
         # instances of a self-referential schema validate entirely
-        # JVM-side. The reference itself errors past its own depth cap
-        # (src/reference.lisp:35-36,59-66 — *max-depth* 100); ours
-        # raises at unroll-cap depth instead of silently approximating.
-        if stack.count(id(target)) >= _REF_UNROLL:
-            msg = (f"variant $ref {val!r}: data nests deeper than the "
-                   f"{_REF_UNROLL}-level compile-time unroll; "
-                   "revalidate with pyvalidator.validate_json_udf")
-            return lambda v: F.when(v.isNull(), F.lit(True)) \
-                              .otherwise(F.raise_error(F.lit(msg)))
-        p = compile_variant(target, draft, registry, depth + 1,
-                            stack + (id(target),), base, strict)
-        return lambda v: p(v)
-
-    if kw == "unevaluatedProperties":
-        # Default = reference PARTIAL behavior: only diff against
-        # direct `properties` (src/validators.lisp:606-629; suite
-        # skipped t/draft2019-09.lisp:83-87). With the engine's
-        # spec-level `"strict_unevaluated": true` opt-in (r5: now on
-        # ALL THREE paths), the evaluated-key set uses full in-place
-        # applicator annotation tracking, still pure Column exprs.
-        if val is True:
-            return None
-        if strict:
-            ev = _v_evaluated_keys(schema, draft, registry, depth,
-                                   stack, base, strict)
-
-            def unev_strict(v: Column, _ev=ev) -> Column:
-                m = _obj(v)
-                ks = F.array_except(F.map_keys(m), _ev(v))
-                if val is False:
-                    return ~_is_object(v) | (F.size(ks) == F.lit(0))
-                p = sub(val)
-                return ~_is_object(v) | F.forall(
-                    ks, lambda k: p(F.try_element_at(m, k)))
-
-            return unev_strict
-
-        known = list(schema.get("properties", {}) or {})
-
-        def unev_partial(v: Column) -> Column:
-            m = _obj(v)
-            ks = F.array_except(
-                F.map_keys(m), F.array(*[F.lit(k) for k in known]))
-            if val is False:
-                return ~_is_object(v) | (F.size(ks) == F.lit(0))
-            p = sub(val)
-            return ~_is_object(v) | F.forall(
-                ks, lambda k: p(F.try_element_at(m, k)))
-
-        return unev_partial
-
-    if kw == "unevaluatedItems":
-        # reference SKIPS the keyword (t/draft2019-09.lisp:83-87) —
-        # parity default is a no-op; strict opt-in applies `val` past
-        # the evaluated prefix (twin of compiler._evaluated_item_
-        # prefix_fn / pyvalidator._k_unevaluated_items).
-        if not strict or val is True:
-            return None
-        prefix = _v_evaluated_prefix(schema, draft, registry, depth,
-                                     stack, base, strict)
-        if val is False:
-            return lambda v: ~_is_array(v) | (F.size(_arr(v)) <= prefix(v))
-        p = sub(val)
-        return lambda v: ~_is_array(v) | F.forall(
-            F.slice(_arr(v), prefix(v) + F.lit(1),
-                    F.greatest(F.size(_arr(v)) - prefix(v), F.lit(0))), p)
-
-    raise VariantUnsupported(f"keyword {kw!r}")
-
-
-# ---------------------------------------------------------------------------
-# strict-mode 2019-09 annotation tracking (engine extension; variant
-# twins of compiler._evaluated_keys_fn / _evaluated_item_prefix_fn)
-# ---------------------------------------------------------------------------
-
-def _rebase(schema: Any, draft: str, base: str) -> str:
-    """Advance the base URI across an embedded $id, exactly as
-    compile_variant's prologue does."""
-    if isinstance(schema, dict):
-        sid = _id_key(schema, draft)
-        if isinstance(sid, str) and sid:
-            return urllib.parse.urldefrag(
-                urllib.parse.urljoin(base, sid))[0]
-    return base
-
-
-def _empty_str_arr() -> Column:
-    return F.array().cast("array<string>")
-
-
-def _v_evaluated_keys(schema: Any, draft: str,
-                      registry: SpecRegistry | None, depth: int,
-                      stack: tuple, base: str, strict: bool) -> VPred:
-    """array<string> Column of keys 'evaluated' per 2019-09 annotation
-    semantics on a VARIANT object: direct properties /
-    patternProperties / additionalProperties plus keys evaluated by
-    SUCCESSFUL in-place applicator branches (allOf always, anyOf/oneOf
-    where the branch validates for THIS row, if/then/else as applied,
-    dependentSchemas for present keys, $ref targets). Branch success
-    is itself a compiled variant predicate, so the set stays one
-    codegen'd expression."""
-    if depth > _MAX_DEPTH or not isinstance(schema, dict):
-        return lambda v: _empty_str_arr()
-    base = _rebase(schema, draft, base)
-    sub_ok = lambda s: compile_variant(  # noqa: E731
-        s, draft, registry, depth + 1, stack, base, strict)
-    recur = lambda s: _v_evaluated_keys(  # noqa: E731
-        s, draft, registry, depth + 1, stack, base, strict)
-    parts: list[VPred] = []
-    statics = list(schema.get("properties", {}) or {})
-    if statics:
-        parts.append(lambda v: F.array(*[F.lit(k) for k in statics]))
-    for pat in (schema.get("patternProperties", {}) or {}):
-        jrx = _java_rx(pat)
-        parts.append(lambda v, _rx=jrx: F.filter(
-            F.map_keys(_obj(v)), lambda k: k.rlike(_rx)))
-    if "additionalProperties" in schema:
-        parts.append(lambda v: F.map_keys(_obj(v)))
-    for s in schema.get("allOf", []):
-        parts.append(recur(s))
-    for comb in ("anyOf", "oneOf"):
-        for s in schema.get(comb, []):
-            ok, ek = sub_ok(s), recur(s)
-            parts.append(lambda v, _ok=ok, _ek=ek: F.when(
-                _ok(v), _ek(v)).otherwise(_empty_str_arr()))
-    if "if" in schema:
-        ip, ik = sub_ok(schema["if"]), recur(schema["if"])
-        tk = recur(schema["then"]) if "then" in schema else None
-        ek = recur(schema["else"]) if "else" in schema else None
-
-        def ite_keys(v: Column, _ip=ip, _ik=ik, _tk=tk, _ek=ek) -> Column:
-            then_arr = (F.concat(_ik(v), _tk(v))
-                        if _tk is not None else _ik(v))
-            else_arr = _ek(v) if _ek is not None else _empty_str_arr()
-            return F.when(_ip(v), then_arr).otherwise(else_arr)
-
-        parts.append(ite_keys)
-    for k, s in (schema.get("dependentSchemas", {}) or {}).items():
-        ek = recur(s)
-        parts.append(lambda v, _k=k, _ek=ek: F.when(
-            F.try_element_at(_obj(v), F.lit(_k)).isNotNull(), _ek(v)
-        ).otherwise(_empty_str_arr()))
-    if "$ref" in schema:
-        if registry is None:
-            raise VariantUnsupported("$ref without a registry")
-        target = registry.resolve(schema["$ref"], base=base)
-        if stack.count(id(target)) >= _REF_UNROLL:
-            # cyclic $ref under strict-unevaluated tracking: decline
-            # loudly rather than silently truncating the key set
-            # (fall-back-or-agree, never approximate)
-            raise VariantUnsupported(
-                "cyclic $ref under strict unevaluated tracking")
-        parts.append(_v_evaluated_keys(target, draft, registry, depth + 1,
-                                       stack + (id(target),), base, strict))
-    if not parts:
-        return lambda v: _empty_str_arr()
-    if len(parts) == 1:
-        return parts[0]
-    return lambda v: F.concat(*[p(v) for p in parts])
-
-
-def _v_evaluated_prefix(schema: Any, draft: str,
-                        registry: SpecRegistry | None, depth: int,
-                        stack: tuple, base: str, strict: bool) -> VPred:
-    """int Column: largest evaluated array prefix (uniform `items`
-    evaluates everything, tuple `items` its length — everything when
-    `additionalItems` is present), merged as max across successful
-    in-place applicator branches. `contains` does NOT evaluate items
-    in 2019-09 (that arrived in 2020-12)."""
-    if depth > _MAX_DEPTH or not isinstance(schema, dict):
-        return lambda v: F.lit(0)
-    base = _rebase(schema, draft, base)
-    sub_ok = lambda s: compile_variant(  # noqa: E731
-        s, draft, registry, depth + 1, stack, base, strict)
-    recur = lambda s: _v_evaluated_prefix(  # noqa: E731
-        s, draft, registry, depth + 1, stack, base, strict)
-    parts: list[VPred] = []
-    if "items" in schema:
-        items = schema["items"]
-        if isinstance(items, list) and "additionalItems" not in schema:
-            parts.append(lambda v, _n=len(items): F.least(
-                F.lit(_n), F.size(_arr(v))))
-        else:
-            parts.append(lambda v: F.size(_arr(v)))
-    for s in schema.get("allOf", []):
-        parts.append(recur(s))
-    for comb in ("anyOf", "oneOf"):
-        for s in schema.get(comb, []):
-            ok, pf = sub_ok(s), recur(s)
-            parts.append(lambda v, _ok=ok, _pf=pf: F.when(
-                _ok(v), _pf(v)).otherwise(F.lit(0)))
-    if "if" in schema:
-        ip, i_pf = sub_ok(schema["if"]), recur(schema["if"])
-        t_pf = recur(schema["then"]) if "then" in schema else None
-        e_pf = recur(schema["else"]) if "else" in schema else None
-
-        def ite_prefix(v: Column, _ip=ip, _i=i_pf, _t=t_pf, _e=e_pf) -> Column:
-            then_n = F.greatest(_i(v), _t(v)) if _t is not None else _i(v)
-            else_n = _e(v) if _e is not None else F.lit(0)
-            return F.when(_ip(v), then_n).otherwise(else_n)
-
-        parts.append(ite_prefix)
-    if "$ref" in schema:
-        if registry is None:
-            raise VariantUnsupported("$ref without a registry")
-        target = registry.resolve(schema["$ref"], base=base)
-        if stack.count(id(target)) >= _REF_UNROLL:
-            raise VariantUnsupported(
-                "cyclic $ref under strict unevaluated tracking")
-        parts.append(_v_evaluated_prefix(target, draft, registry, depth + 1,
-                                         stack + (id(target),), base, strict))
-    if not parts:
-        return lambda v: F.lit(0)
-    if len(parts) == 1:
-        return parts[0]
-    return lambda v: F.greatest(*[p(v) for p in parts])
+        # JVM-side; deeper data refuses loudly at runtime.
+        msg = (f"variant $ref {ref!r}: data nests deeper than the "
+               f"{_REF_UNROLL}-level compile-time unroll; "
+               "revalidate with pyvalidator.validate_json_udf")
+        return lambda v: F.when(v.isNull(), F.lit(True)) \
+                          .otherwise(F.raise_error(F.lit(msg)))
 
 
 # ---------------------------------------------------------------------------
@@ -944,44 +450,18 @@ def _v_evaluated_prefix(schema: Any, draft: str,
 
 def compile_variant(schema: Any, draft: str = "draft7",
                     registry: SpecRegistry | None = None,
-                    depth: int = 0, stack: tuple = (),
-                    base: str = "", strict: bool = False) -> VPred:
+                    strict: bool = False) -> VPred:
     """Compile a JSON-Schema dict into ``variant Column -> boolean
     Column`` (TRUE = valid). Raises :class:`VariantUnsupported` when
-    any reachable keyword cannot be expressed JVM-side. ``stack``
-    carries the ids of in-flight $ref targets for cycle unrolling;
-    ``base`` is the enclosing-$id base URI for $ref/$anchor resolution
-    (the compile-time analogue of pyvalidator's _base_stack).
-    ``strict`` enables full 2019-09 unevaluated* annotation tracking —
-    the engine's documented extension, same opt-in flag as the other
-    two paths (spec-level ``{"strict_unevaluated": true}`` on the root
-    schema, or ``strict=True`` here)."""
-    if depth > _MAX_DEPTH:
-        raise VariantUnsupported("$ref recursion / nesting depth cap")
-    if isinstance(schema, dict):
-        strict = strict or bool(schema.get("strict_unevaluated"))
-        sid = _id_key(schema, draft)
-        if isinstance(sid, str) and sid:
-            base = urllib.parse.urldefrag(
-                urllib.parse.urljoin(base, sid))[0]
-    if schema is True or schema == {}:
-        return lambda v: F.lit(True)  # validators.lisp:86-94
-    if schema is False:
-        return lambda v: F.lit(False)
-    if not isinstance(schema, dict):
-        raise VariantUnsupported("schema must be bool or object")
-    table = DRAFT_KEYWORDS.get(draft, DRAFT_KEYWORDS["draft7"])
-    preds: list[VPred] = []
-    for kw, val in schema.items():
-        if kw in _NOOP:
-            continue
-        if kw not in table:
-            continue  # unknown keyword: warn+skip (validators.lisp:132-135)
-        p = _compile_keyword(kw, val, schema, draft, registry, depth,
-                             stack, base, strict)
-        if p is not None:
-            preds.append(p)
-    return lambda v: _and(p(v) for p in preds)
+    any reachable keyword cannot be expressed JVM-side. ``strict``
+    enables full 2019-09 unevaluated* annotation tracking — the
+    engine's documented extension, same opt-in flag as the other two
+    paths (``{"strict_unevaluated": true}`` on the root schema, or
+    ``strict=True`` here)."""
+    strict = strict or (isinstance(schema, dict)
+                        and bool(schema.get("strict_unevaluated")))
+    return _compile_schema(schema, VariantAccess(draft=draft, registry=registry,
+                                                 strict=strict))
 
 
 def validate_variant_column(json_col: Column, schema: Any,
@@ -1014,15 +494,9 @@ def variant_checks(schema: dict, draft: str = "draft7",
     """Per-top-level-keyword predicates for error accumulation
     (validators.lisp:105-108): every keyword verdict surfaces
     independently, mirroring ``compiler.CompiledSpec.checks``."""
-    table = DRAFT_KEYWORDS.get(draft, DRAFT_KEYWORDS["draft7"])
-    out: list[tuple[str, VPred]] = []
-    for kw, val in schema.items():
-        if kw in _NOOP or kw not in table:
-            continue
-        p = _compile_keyword(kw, val, schema, draft, registry, 0)
-        if p is not None:
-            out.append((kw, p))
-    return out
+    a = VariantAccess(draft=draft, registry=registry)
+    return [(kw, p) for kw, val in schema.items()
+            if (p := _compile_keyword(kw, val, schema, a)) is not None]
 
 
 # ---------------------------------------------------------------------------

@@ -1,123 +1,39 @@
-"""Storable frequency sketches: HyperLogLog (distinct counts) and
-Misra-Gries (heavy hitters), completing the mergeable-sketch family
-started by :mod:`json_schema_spark.operators.tdigest` (quantiles).
+"""Storable Misra-Gries heavy-hitter summaries, a mergeable sketch
+beside :mod:`json_schema_spark.operators.tdigest` (quantiles).
 
-`operators/stats.py` already answers both questions exactly
-(`cardinality_profile`, `heavy_hitters`) and approximately inside one
-aggregation (`approx_count_distinct`); what neither gives you is a
-sketch you can KEEP. These two are plain arrays/maps, so per-partition
-sketches persist to the results
-:class:`~json_schema_spark.sources.icetable.IceTable` and merge across
-runs: "distinct urls over the last 90 days" or "top domains this
-quarter" costs one scan of the NEW partition plus a metadata-sized
-merge of stored sketches — never a rescan of history.
+`operators/stats.py` already answers the question exactly
+(`heavy_hitters`); what it does not give you is a sketch you can KEEP.
+A summary is plain arrays, so per-partition summaries persist to the
+results :class:`~json_schema_spark.sources.icetable.IceTable` and merge
+across runs: "top domains this quarter" costs one scan of the NEW
+partition plus a metadata-sized merge of stored summaries — never a
+rescan of history. Distinct counts need no Python sketch: Spark's
+storable HLL (``hll_sketch_agg`` / ``hll_union_agg``) covers them.
 
-Shared plan shape (the same as tdigest):
+Plan shape (the same as tdigest, :mod:`.sketch_base`):
 
-* hashing/value prep JVM-side (``xxhash64`` / column ops — no Python
-  over raw values);
-* stage 1 ``mapInPandas``: each Arrow batch folds to one sketch per
-  partition-value it contains (numpy register math, vectorized);
-* stage 2 ``groupBy(partition).applyInPandas``: sketch merge. The
-  shuffle carries sketches (4096 bytes HLL / m counter pairs MG), not
-  rows.
+* value prep JVM-side (column ops — no Python over raw values);
+* stage 1 ``mapInPandas``: each Arrow batch folds to one summary per
+  partition-value it contains;
+* stage 2 ``groupBy(partition).applyInPandas``: summary merge. The
+  shuffle carries m counter pairs per summary, not rows.
 
-Guarantees (pytest-pinned):
-
-* HLL: standard error ~1.04/sqrt(2^p) (p=12 -> ~1.6%); merge is an
-  elementwise register max, so merge(parts) is BIT-IDENTICAL to the
-  whole-input sketch (associative, order-free).
-* Misra-Gries with m counters: estimates undercount by at most the
-  summary's tracked ``offset`` <= n/(m+1); any value with true
-  frequency > n/(m+1) is guaranteed present (the classic frequent-
-  items bound), and merging preserves it (offsets add).
+Guarantee (pytest-pinned): with m counters, estimates undercount by at
+most the summary's tracked ``offset`` <= n/(m+1); any value with true
+frequency > n/(m+1) is guaranteed present (the classic frequent-items
+bound), and merging preserves it (offsets add).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from json_schema_spark.operators.sketch_base import two_stage_sketch
 
-HLL_P = 12  # 2^12 registers; ~1.6% standard error, 4 KiB per sketch
-
-HLL_SCHEMA = "partition string, registers array<int>, n_rows long"
 MG_SCHEMA = ("partition string, items array<string>, counts array<long>, "
              "offset long, n_rows long")
-
-
-# ---------------------------------------------------------------------------
-# HyperLogLog core (numpy; registers are the sketch)
-# ---------------------------------------------------------------------------
-
-def hll_from_hashes(hashes: np.ndarray, p: int = HLL_P) -> np.ndarray:
-    """Fold signed-64-bit hash values into a 2^p register array."""
-    h = hashes.astype(np.uint64)
-    regs = np.zeros(1 << p, dtype=np.int32)
-    idx = (h >> np.uint64(64 - p)).astype(np.int64)
-    rem = (h << np.uint64(p)) | np.uint64((1 << p) - 1)  # pad tail with 1s
-    # rank = leading zeros of the remaining 64-p bits, + 1
-    # vectorized clz via bit-length: clz = 64 - bit_length(rem)
-    bl = np.zeros_like(rem, dtype=np.int64)
-    nz = rem != 0
-    # bit_length via log2 is unsafe at 64 bits; use a float-free loop
-    # over the 64 bit positions (64 vector ops, still branch-free)
-    r = rem.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        big = r >= (np.uint64(1) << np.uint64(shift))
-        bl[big] += shift
-        r[big] >>= np.uint64(shift)
-    bl[nz] += 1
-    rank = (64 - bl + 1).astype(np.int32)
-    np.maximum.at(regs, idx, rank)
-    return regs
-
-
-def hll_merge(registers: list[np.ndarray]) -> np.ndarray:
-    out = registers[0].copy()
-    for r in registers[1:]:
-        np.maximum(out, r, out=out)
-    return out
-
-
-def hll_estimate(regs: np.ndarray) -> float:
-    """Classic HLL estimator with the small-range linear-counting
-    correction (Flajolet et al. 2007)."""
-    m = float(regs.size)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    est = alpha * m * m / np.sum(np.exp2(-regs.astype(float)))
-    zeros = float(np.count_nonzero(regs == 0))
-    if est <= 2.5 * m and zeros > 0:
-        return m * np.log(m / zeros)  # linear counting
-    return float(est)
-
-
-def hll_by_partition(
-    df: DataFrame, value: str | Column, by: str | Column, p: int = HLL_P,
-) -> DataFrame:
-    """One HLL sketch row per partition value (HLL_SCHEMA)."""
-    val = F.col(value) if isinstance(value, str) else value
-    part = F.col(by) if isinstance(by, str) else by
-    base = (
-        df.where(val.isNotNull() & part.isNotNull())
-        .select(part.cast("string").alias("partition"),
-                F.xxhash64(val).alias("h"))  # hash JVM-side
-    )
-
-    def fold(pv: str, grp: pd.DataFrame) -> tuple:
-        regs = hll_from_hashes(grp["h"].to_numpy(np.int64), p)
-        return (pv, regs.tolist(), len(grp))
-
-    def merge_rows(pdf: pd.DataFrame) -> tuple:
-        regs = hll_merge([np.asarray(r, dtype=np.int32) for r in pdf["registers"]])
-        return (pdf["partition"].iloc[0], regs.tolist(), int(pdf["n_rows"].sum()))
-
-    return two_stage_sketch(base, HLL_SCHEMA,
-                            ["partition", "registers", "n_rows"],
-                            fold, merge_rows)
 
 
 # ---------------------------------------------------------------------------

@@ -1,40 +1,10 @@
-"""HLL + Misra-Gries storable sketches: accuracy vs exact, bit-exact /
-bounded merge properties, Spark two-stage path, incremental store."""
+"""Misra-Gries storable summaries: error bound, bounded merge, Spark
+two-stage path."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from json_schema_spark.operators import sketches as sk
-
-
-# ---------------------------------------------------------------- HLL core
-
-def _hashes(n, seed=1):
-    rng = np.random.RandomState(seed)
-    return rng.randint(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
-
-
-def test_hll_accuracy():
-    for true_n in (50, 1_000, 100_000):
-        h = np.unique(_hashes(true_n, seed=true_n))
-        est = sk.hll_estimate(sk.hll_from_hashes(h))
-        assert abs(est - len(h)) / len(h) < 0.05, true_n
-
-
-def test_hll_duplicates_dont_count():
-    h = _hashes(1_000)
-    dup = np.concatenate([h] * 20)  # 20x duplicated stream
-    a = sk.hll_from_hashes(h)
-    b = sk.hll_from_hashes(dup)
-    assert np.array_equal(a, b)
-
-
-def test_hll_merge_bit_identical_to_whole():
-    h = _hashes(30_000)
-    whole = sk.hll_from_hashes(h)
-    parts = [sk.hll_from_hashes(c) for c in np.array_split(h, 7)]
-    assert np.array_equal(sk.hll_merge(parts), whole)
 
 
 # ---------------------------------------------------------- Misra-Gries core
@@ -78,31 +48,6 @@ def test_mg_merge_preserves_heavy_hitters():
 
 # ------------------------------------------------------------- Spark paths
 
-@pytest.fixture()
-def valued(spark):
-    """8 partitions; partition p has exactly 1000*(p+1) distinct urls,
-    with every url appearing twice (dup-heavy stream)."""
-    df = spark.range(0, 72_000).select(
-        (F.col("id") % 8).alias("p"),
-        (F.col("id") % 36_000).alias("u"),
-    )
-    # distincts per partition p: urls are u = p + 8k -> 4500 distinct
-    # per partition; rows 9000 each. Simpler: assert vs computed exact.
-    return df.select(F.col("p").cast("string").alias("p"),
-                     F.concat(F.lit("url-"), F.col("u")).alias("u"))
-
-
-def test_hll_by_partition_vs_exact(spark, valued):
-    rows = sk.hll_by_partition(valued, "u", "p").collect()
-    exact = {r["p"]: r["d"] for r in valued.groupBy("p")
-             .agg(F.countDistinct("u").alias("d")).collect()}
-    assert len(rows) == 8
-    for r in rows:
-        est = sk.hll_estimate(np.asarray(r["registers"], dtype=np.int32))
-        assert abs(est - exact[r["partition"]]) / exact[r["partition"]] < 0.05
-        assert r["n_rows"] == 9000
-
-
 def test_mg_by_partition_vs_exact_topk(spark):
     # skewed stream: per partition, 'dom0'..'dom4' hot, 200 cold singles
     df = spark.range(0, 40_000).select(
@@ -125,23 +70,3 @@ def test_mg_by_partition_vs_exact_topk(spark):
         for v in top5:
             assert (r["partition"], v) in exact_top
         assert len(r["items"]) <= 32
-
-
-def test_incremental_union_from_stored_hll(spark, valued, tmp_path):
-    """Distinct-over-all-history from stored sketches: bit-identical to
-    sketching the whole table at once — no history rescan."""
-    from json_schema_spark.sources.icetable import IceTable
-
-    store = IceTable.create(spark, str(tmp_path / "hll"), sk.HLL_SCHEMA,
-                            ["partition"])
-    for p in range(8):
-        store.append(sk.hll_by_partition(
-            valued.where(F.col("p") == str(p)), "u", "p"))
-    merged = sk.hll_merge([np.asarray(r["registers"], dtype=np.int32)
-                           for r in store.scan().collect()])
-    whole_rows = sk.hll_by_partition(
-        valued.withColumn("p", F.lit("all")), "u", "p").collect()
-    assert np.array_equal(merged, np.asarray(whole_rows[0]["registers"],
-                                             dtype=np.int32))
-    exact_total = valued.select("u").distinct().count()
-    assert abs(sk.hll_estimate(merged) - exact_total) / exact_total < 0.05
