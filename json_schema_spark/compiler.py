@@ -138,6 +138,18 @@ def _lit_value(value: Any, dt: T.DataType) -> Column:
     return F.lit(value)
 
 
+def _fits_long(n: int) -> bool:
+    return -(2 ** 63) <= n < 2 ** 63
+
+
+def _num_lit(val: Any) -> Column:
+    """A numeric keyword's literal. F.lit of a Python int raises for
+    |v| >= 2^63, so such ints become decimal(38,0) literals."""
+    if isinstance(val, int) and not isinstance(val, bool) and not _fits_long(val):
+        return F.lit(str(val)).cast(T.DecimalType(38, 0))
+    return F.lit(val)
+
+
 # ---------------------------------------------------------------------------
 # value access: one keyword table, two accessors
 # ---------------------------------------------------------------------------
@@ -271,20 +283,14 @@ class TypedAccess(Access):
         return lambda c: c.rlike(java_pattern)  # unanchored search, :586-591
 
     def compare(self, op: Callable, val: Any) -> PredFn:
-        return lambda c: op(c, F.lit(val))
+        lit_val = _num_lit(val)
+        return lambda c: op(c, lit_val)
 
     def multiple_of(self, val: Any) -> PredFn:
         """src/validators.lisp:501-516."""
         dt = self.dt
-
-        def _fits_long(n: int) -> bool:
-            return -(2 ** 63) <= n < 2 ** 63
-
         if isinstance(val, int) and not isinstance(val, bool):
-            # F.lit of an unbounded Python int raises for |v| >= 2^63;
-            # route huge divisors through a decimal literal.
-            lit_val = (F.lit(val) if _fits_long(val)
-                       else F.lit(str(val)).cast(T.DecimalType(38, 0)))
+            lit_val = _num_lit(val)
             if isinstance(dt, (*_INTEGRAL_TYPES, T.DecimalType)):
                 return lambda c: F.pmod(c, lit_val) == F.lit(0)
             # double data, int divisor: exact via decimal cast while the
@@ -935,16 +941,15 @@ def _flatten_ref_items(schema: dict, spec: "ConstraintSpec", depth: int = 0):
     siblings in draft<=7)."""
     if depth > 32:
         raise SpecError("$ref expansion depth cap exceeded")
+    if schema is False:
+        # false schema: no value can satisfy it
+        yield "false-schema", False, {}
+        return
+    if schema is True:
+        return
     for kw, val in schema.items():
         if kw == "$ref":
-            target = spec.registry.resolve(val)
-            if target is True or target == {}:
-                continue
-            if target is False:
-                # false schema: no value can satisfy it
-                yield "false-schema", False, schema
-                continue
-            yield from _flatten_ref_items(target, spec, depth + 1)
+            yield from _flatten_ref_items(spec.registry.resolve(val), spec, depth + 1)
         else:
             yield kw, val, schema
 
@@ -964,22 +969,19 @@ def compile_spec(spec: ConstraintSpec | dict, df: DataFrame) -> CompiledSpec:
     for colname, schema in spec.columns.items():
         if colname not in dtypes:
             raise SpecError(f"spec references unknown column {colname!r}")
-        dt = dtypes[colname]
-        if schema is True:
-            continue
-        if schema is False:
-            out.checks.append(KeywordCheck(
-                colname, "false-schema", F.col(colname).isNull(),
-                f"{colname}: schema is false",
-            ))
-            continue
         # A top-level {"$ref": ..., <siblings>} keeps its siblings — the
         # ref target's keywords are flattened into individual checks
         # alongside them, matching pyvalidator._k_ref (reference parity:
         # siblings not suppressed, src/validators.lisp:524-530) while
         # preserving per-keyword error granularity.
-        a = _typed_access(spec, dt, spec.draft, colname)
+        a = _typed_access(spec, dtypes[colname], spec.draft, colname)
         for kw, val, parent in _flatten_ref_items(schema, spec):
+            if kw == "false-schema":  # the column schema or a $ref target
+                out.checks.append(KeywordCheck(
+                    colname, kw, F.col(colname).isNull(),
+                    f"{colname}: schema is false",
+                ))
+                continue
             fn = _compile_keyword(kw, val, parent, a)
             if fn is None:
                 continue
@@ -1019,6 +1021,64 @@ def _message(column: str, keyword: str, val: Any) -> str:
 # violation / verdict materialization (error model, SURVEY.md §2.7)
 # ---------------------------------------------------------------------------
 
+def _flag(i: int) -> str:
+    """Reserved name of check ``i``'s failure flag in :func:`_failed`."""
+    return f"\x00f{i}"
+
+
+def _failed(df: DataFrame, compiled: CompiledSpec, keep: list[Column]) -> DataFrame:
+    """``keep`` plus one boolean column per check, TRUE where the row
+    fails it (NULL where its predicate is NULL, which is no failure).
+
+    Every predicate sits in this one projection, so Spark evaluates
+    them in generated code with subexpression elimination: inside a
+    whole-stage-codegen stage, or, when a predicate holds a
+    higher-order function, as a generated unsafe projection. Inside a
+    ``filter(array(...), x -> ...)`` lambda they would run interpreted,
+    each one on its own. Consumers read only the flags:
+    :func:`violations_df` explodes them, the runner sums them.
+    """
+    return df.select(*keep, *[(~c.predicate).alias(_flag(i))
+                              for i, c in enumerate(compiled.checks)])
+
+
+def _violation_rows(flags: DataFrame, compiled: CompiledSpec, keep: list[str],
+                    run_id: str) -> DataFrame:
+    """Explode a :func:`_failed` frame into violation rows: the
+    ``keep`` columns of ``flags``, then the failed checks' fields in
+    check order."""
+    entries = [
+        F.when(F.col(f"`{_flag(i)}`"), F.struct(
+            F.lit(c.keyword).alias("keyword"),
+            F.lit(c.column).alias("column"),
+            F.lit(c.path).alias("path"),
+            F.lit(c.message).alias("message"),
+        ))
+        for i, c in enumerate(compiled.checks)
+    ]
+    # a lambda-free array, so the Generate joins the codegen stage;
+    # typed when empty (a spec with no checks has no violations)
+    arr = F.array(*entries) if entries else F.array().cast(
+        "array<struct<keyword:string,column:string,path:string,message:string>>")
+    out = (flags.select(*[F.col(f"`{k}`") for k in keep], F.explode(arr).alias("v"))
+           .where(F.col("v").isNotNull()))
+    # sub_errors (FIXTURES.md §5): compiled Column checks are keyword-
+    # granular (combinator internals fuse), so the column path emits an
+    # empty nest; the dynamic-JSON path (pyvalidator UDF) fills it.
+    sub_errors = F.lit([]).cast(
+        "array<struct<keyword:string,path:string,message:string>>"
+    )
+    return out.select(
+        *[F.col(f"`{k}`") for k in keep],
+        F.col("v.keyword").alias("keyword"),
+        F.col("v.column").alias("column"),
+        F.col("v.path").alias("path"),
+        F.col("v.message").alias("message"),
+        sub_errors.alias("sub_errors"),
+        F.lit(run_id).alias("run_id"),
+    )
+
+
 def violations_df(
     df: DataFrame,
     compiled: CompiledSpec,
@@ -1030,47 +1090,18 @@ def violations_df(
 
     Schema mirrors FIXTURES.md §5 / the reference's error objects
     (src/validators.lisp:15-22): identity + keyword + column + path +
-    message. Implemented as an array of violation structs collected in
-    a single projection (error ACCUMULATION: all keywords evaluated,
-    src/validators.lisp:105-108) then exploded — one narrow stage, no
-    shuffle, fully codegen'd.
+    message. Every check's predicate is evaluated once per row, in one
+    projection of failure flags (error ACCUMULATION: all keywords
+    evaluated, src/validators.lisp:105-108); each flag selects its
+    check's literal violation struct in a lambda-free array, which is
+    exploded. One narrow stage, no shuffle, and no predicate inside a
+    higher-order function's lambda.
     """
-    struct_type = (
-        "struct<keyword:string,column:string,path:string,message:string>"
-    )
-    entries = [
-        F.when(
-            ~c.predicate,
-            F.struct(
-                F.lit(c.keyword).alias("keyword"),
-                F.lit(c.column).alias("column"),
-                F.lit(c.path).alias("path"),
-                F.lit(c.message).alias("message"),
-            ),
-        ).otherwise(F.lit(None).cast(struct_type))
-        for c in compiled.checks
-    ]
-    arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
     keep = [F.col(k) for k in id_cols]
     if partition_col is not None:
         keep.append(partition_col.alias("partition"))
-    out = df.select(*keep, F.explode(arr).alias("v"))
-    # sub_errors (FIXTURES.md §5): compiled Column checks are keyword-
-    # granular (combinator internals fuse), so the column path emits an
-    # empty nest; the dynamic-JSON path (pyvalidator UDF) fills it.
-    sub_errors = F.lit([]).cast(
-        "array<struct<keyword:string,path:string,message:string>>"
-    )
-    return out.select(
-        *[F.col(k) for k in id_cols],
-        *([F.col("partition")] if partition_col is not None else []),
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.column").alias("column"),
-        F.col("v.path").alias("path"),
-        F.col("v.message").alias("message"),
-        sub_errors.alias("sub_errors"),
-        F.lit(run_id).alias("run_id"),
-    )
+    flags = _failed(df, compiled, keep)
+    return _violation_rows(flags, compiled, flags.columns[:len(keep)], run_id)
 
 
 def verdict_df(

@@ -3,11 +3,12 @@
 The reference's reusable ``context`` ("mutable, build up state as they
 go", README.rst:144; make-context src/reference.lisp:103-119) becomes:
 compile the spec ONCE, then validate every pending partition in one
-pass over a cached slice — a fixed handful of Spark jobs per call, not
-per partition — recording a verdict/metrics/lineage row per
-(partition, check) in a results table. A run interrupted after K
-partitions resumes by skipping the partitions already in the manifest
-— no duplicated results, identical final verdicts.
+pass over a cached projection of its failure flags — a fixed handful
+of Spark jobs per call, not per partition — recording a
+verdict/metrics/lineage row per (partition, check) in a results
+table. A run interrupted after K partitions resumes by skipping the
+partitions already in the manifest — no duplicated results, identical
+final verdicts.
 
 Two entry points share that pass (``_validate``): ``run()`` takes a
 plain DataFrame and finds its pending partitions with a ``distinct``
@@ -44,7 +45,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from json_schema_spark.compiler import CompiledSpec, compile_spec, violations_df
+from json_schema_spark.compiler import (
+    CompiledSpec,
+    _failed,
+    _flag,
+    _violation_rows,
+    compile_spec,
+)
 from json_schema_spark.session import local_frame
 from json_schema_spark.sources.icetable import IceTable, require_local_path
 from json_schema_spark.spec import ConstraintSpec
@@ -165,48 +172,50 @@ class ValidationRunner:
         """Validate ``slice_df``, the rows of the ``pending`` partitions,
         and record their results.
 
-        The slice is cached: one grouped aggregate gives every
-        partition's verdicts and one IceTable commit per results table
-        lands every violation and verdict row, so a call runs the same
-        few Spark jobs whether it validates one partition or a
-        thousand. The cached slice grows with the partitions taken."""
+        Every check's predicate runs once per row, in one projection
+        of the id columns and failure flags (``compiler._failed``),
+        which is cached: the violations write explodes it, one grouped
+        aggregate sums its flags into every partition's verdicts, and
+        one IceTable commit per results table lands every violation and
+        verdict row. A call thus runs the same few Spark jobs whether it
+        validates one partition or a thousand. The cache grows with the
+        partitions taken, by the id columns and one boolean per check
+        per row."""
         compiled = self._compile(slice_df)
         t0 = time.monotonic()
         # two actions read the slice (violation rows + verdict agg):
-        # cache it — but project input_file_name() FIRST, because it
-        # returns '' once rows come from the InMemoryRelation
-        slice_df = (
-            slice_df
-            .withColumn("__file", F.input_file_name())
-            .withColumn("__part", F.col(partition_col).cast("string"))
-            .cache()
-        )
+        # cache only the ids and every check's failure flag, so each
+        # predicate runs once per row and wide columns (html, text)
+        # stay out of memory. input_file_name() is projected here,
+        # before the cache: it returns '' once rows come from the
+        # InMemoryRelation, and aggregates reject it inline.
+        keep = [*self.id_cols, "partition"]
+        flags = _failed(slice_df, compiled, [
+            *[F.col(k) for k in self.id_cols],
+            F.col(partition_col).cast("string").alias("partition"),
+            F.input_file_name().alias("\x00file"),
+        ]).cache()
         # unpersist in finally: a failure (commit conflict, write error)
-        # must not leak the cached slice — retries would otherwise
+        # must not leak the cached flags — retries would otherwise
         # accumulate cached DataFrames in executor memory for the rest
         # of the session
         try:
-            viol = violations_df(
-                slice_df, compiled, id_cols=list(self.id_cols),
-                partition_col=F.col("__part"), run_id=self.run_id,
-            )
+            viol = _violation_rows(flags, compiled, keep, self.run_id)
             # naming the pending set replaces its partitions' rows,
             # including those of a partition that is now clean
             self._table("violations_ice", viol.schema.toDDL()) \
                 .overwrite_partitions(viol, pending)
 
-            # single-pass verdict agg + lineage over the SAME slice.
-            # input_file_name() is nondeterministic — project it to a
-            # column BEFORE aggregating (aggregates reject it inline).
+            # single-pass verdict agg + lineage over the SAME flags
             aggs = [
-                F.sum((~c.predicate).cast("long")).alias(f"v{i}")
-                for i, c in enumerate(compiled.checks)
+                F.sum(F.col(f"`{_flag(i)}`").cast("long")).alias(f"v{i}")
+                for i in range(len(compiled.checks))
             ] + [
                 F.count(F.lit(1)).alias("n_rows"),
-                F.collect_set(F.col("__file")).alias("files"),
+                F.collect_set(F.col("`\x00file`")).alias("files"),
             ]
-            rows = {r["__part"]: r
-                    for r in slice_df.groupBy("__part").agg(*aggs).collect()}
+            rows = {r["partition"]: r
+                    for r in flags.groupBy("partition").agg(*aggs).collect()}
             wall_ms = int((time.monotonic() - t0) * 1000)
 
             verdicts, completed = [], {}
@@ -231,7 +240,7 @@ class ValidationRunner:
             state["completed"].update(completed)
             self.manifest.save(state)
         finally:
-            slice_df.unpersist()
+            flags.unpersist()
 
     # -- snapshot-incremental pass (source is an IceTable) ------------------
     def run_snapshot_increment(

@@ -146,6 +146,50 @@ def test_ref_duplicate_keyword_checks_resolve(spark):
     assert kws == [("minimum", 1), ("minimum", 2)]
 
 
+def test_ref_to_false_schema_fails_every_present_value(spark):
+    """A column whose $ref target is the false schema gets the same
+    check as a column schema of false: every non-NULL row violates."""
+    from json_schema_spark.session import local_frame
+
+    df = local_frame(spark, [("a",), (None,), ("",)], "s string")
+    spec = {"$defs": {"never": False},
+            "columns": {"s": {"$ref": "#/$defs/never"}}}
+    compiled = compile_spec(spec, df)
+    assert compiled.check_names() == [("s", "false-schema")]
+    assert compiled.check_names() == compile_spec(
+        {"columns": {"s": False}}, df).check_names()
+    viol = violations_df(df, compiled, id_cols=["s"]).collect()
+    assert sorted((r["s"], r["keyword"]) for r in viol) == [
+        ("", "false-schema"), ("a", "false-schema")]
+
+
+def test_violations_with_no_checks_is_empty(spark):
+    """A spec that compiles to no check has no violation rows, in the
+    same schema as any other violation frame."""
+    from json_schema_spark.session import local_frame
+
+    df = local_frame(spark, [("a",)], "s string")
+    none = violations_df(df, compile_spec({"columns": {"s": True}}, df), ["s"])
+    some = violations_df(df, compile_spec({"columns": {"s": False}}, df), ["s"])
+    assert none.collect() == []
+    assert none.schema.simpleString() == some.schema.simpleString()
+
+
+def test_typed_required_map_null_value_vs_struct_null_field(spark):
+    """Typed NULL = absent has one exception: a map can tell a key that
+    holds NULL from a missing key, a struct cannot tell a NULL field
+    from an absent one. So `required` passes on the map {"a": null}
+    and fails on the struct {a: null}."""
+    from json_schema_spark.session import local_frame
+
+    df = local_frame(spark, [({"a": None}, {"a": None})],
+                     "m map<string,bigint>, s struct<a:bigint>")
+    spec = {"columns": {"m": {"required": ["a"]}, "s": {"required": ["a"]}}}
+    compiled = compile_spec(spec, df)
+    got = df.select(*[c.predicate.alias(c.column) for c in compiled.checks]).first()
+    assert got.asDict() == {"m": True, "s": False}
+
+
 def test_multiple_of_decimal_column_fraction_exact(spark):
     """Review r2: multipleOf with a real divisor on a DECIMAL column
     must not round the fraction away (0.25 is NOT a multiple of 0.5)."""

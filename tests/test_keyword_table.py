@@ -25,8 +25,8 @@ _SHORT_KEYS = {"definitions": {"short": {"maxLength": 2}},
                "propertyNames": {"$ref": "#/definitions/short"}}
 
 # (draft, schema, data, typed column DDL or None). Typed runs where the
-# literal and the data fit a column: a typed bound literal beyond a
-# long does not compile on that path.
+# data fits a column; a bound literal beyond a long compiles to a
+# decimal(38,0) literal there.
 CASES = [
     pytest.param("draft7", {"type": "any"}, "a", "string", id="type-any"),
     pytest.param("draft7", {"maximum": 2**53}, 2**53 + 1, "bigint", id="maximum-2^53"),
@@ -37,8 +37,14 @@ CASES = [
                  id="exclusiveMaximum-tie"),
     pytest.param("draft4", {"minimum": 2**53, "exclusiveMinimum": True}, 2**53 + 1,
                  "bigint", id="draft4-exclusive-minimum-2^53"),
-    pytest.param("draft7", {"minimum": 10**25 + 1}, 10**25, None, id="minimum-bignum"),
-    pytest.param("draft7", {"maximum": 10**25}, 10**25 + 1, None, id="maximum-bignum"),
+    pytest.param("draft7", {"minimum": 10**25 + 1}, 10**25, "decimal(38,0)",
+                 id="minimum-bignum"),
+    pytest.param("draft7", {"maximum": 10**25}, 10**25 + 1, "decimal(38,0)",
+                 id="maximum-bignum"),
+    pytest.param("draft7", {"exclusiveMinimum": 10**25 + 1}, 10**25 + 1, "decimal(38,0)",
+                 id="exclusiveMinimum-bignum"),
+    pytest.param("draft7", {"exclusiveMaximum": 10**25}, 10**25 - 1, "decimal(38,0)",
+                 id="exclusiveMaximum-bignum"),
     pytest.param("draft7", _SHORT_KEYS, {"abc": 1}, _MAP, id="propertyNames-ref"),
     pytest.param("draft7", {"propertyNames": {"if": {"minLength": 2},
                                               "then": {"maxLength": 2}}},
