@@ -25,6 +25,7 @@ from json_schema_spark.operators.drift import chi2_by_partition, ks_by_partition
 from json_schema_spark.operators.referential import referential_violations
 from json_schema_spark.operators.stats import column_stats
 from json_schema_spark.operators.unique import duplicate_keys
+from json_schema_spark.session import local_frame
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -247,31 +248,29 @@ def q_drift_ks_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tdigest_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-digest in its exact regime: the k1 merge rule joins two
-    clusters only while their combined weight FRACTION is <=
-    ~pi/compression, so with compression >= 8 * n_rows even two
-    singleton clusters (fraction 2/n) can never merge — the digest is
-    exactly the per-value count table at ANY scale factor (compression
-    scales with the input, not the value domain). Exploding it and
-    summing weights per value (identical-value clusters from separate
-    Arrow batches may stay unmerged) is then a full DuckDB value check
-    of the build/merge arithmetic. The approximate regime (cluster
-    spans, CDF interpolation) is pytest-pinned in tests/test_tdigest.py."""
-    from json_schema_spark.operators.tdigest import digest_by_partition
+    """KLL sketches in their exact regime: a sketch of size k keeps
+    every value while it has seen at most k, so k = the row count
+    makes each per-source sketch exact (Spark accepts k <= 65535;
+    sf0.1 holds 5,000 documents). Each sketch then answers, at each
+    n_chars value present in that source, the inclusive rank count
+    (rows with n_chars <= v) — a full DuckDB value check of the sketch
+    build, the merge and the rank lookup on the value grid. The
+    compacting regime is pytest-pinned in tests/test_tdigest.py."""
+    from json_schema_spark.operators.tdigest import (
+        DEFAULT_K,
+        cdf_on_grid,
+        digest_by_partition,
+    )
 
     docs = _docs(spark, sf_dir)
-    compression = max(200_000.0, 8.0 * docs.count())
-    d = digest_by_partition(docs, "n_chars", "source",
-                            compression=compression)
-    return (
-        d.select(F.col("partition").alias("part"),
-                 F.explode(F.arrays_zip("means", "weights")).alias("z"))
-        # identical-value clusters from different Arrow batches may
-        # stay separate (their combined weight exceeds the merge
-        # threshold) — summing per value is part of the exact regime
-        .groupBy("part", F.col("z.means").alias("n_chars"))
-        .agg(F.sum("z.weights").alias("cnt"))
-    )
+    k = max(DEFAULT_K, docs.count())
+    grid, parts = cdf_on_grid(
+        digest_by_partition(docs, "n_chars", "source", k=k), k=k)
+    # a value is present in a source where its CDF steps
+    rows = [(p, v, round(f * n))
+            for p, n, cdf in parts
+            for v, f, prev in zip(grid, cdf, [0.0] + cdf) if f > prev]
+    return local_frame(spark, rows, "part string, n_chars double, cnt_le long")
 
 
 def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,12 +389,12 @@ def q_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_drift_ks_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KS from STORABLE t-digest sketches (operators/tdigest.py):
-    rows never shuffle (batch digests -> per-partition merge), digests
-    are plain arrays persistable to the IceTable results seam for
-    incremental cross-run drift. Rows-only: the sketch CDF has no
-    DuckDB twin; pytest pins accuracy vs the exact ks_by_partition
-    (<0.05) and the incremental stored-digest path."""
+    """KS from STORABLE KLL sketches (operators/tdigest.py): rows fold
+    into per-source sketches before the shuffle, and the sketches are
+    binary values persistable to the IceTable results seam for
+    incremental cross-run drift. Rows-only: outside the exact regime
+    the sketch CDF has no DuckDB twin; pytest pins accuracy vs the
+    exact ks_by_partition and the incremental stored-sketch path."""
     from json_schema_spark.operators.tdigest import (
         digest_by_partition,
         ks_by_partition_tdigest,
@@ -403,88 +402,73 @@ def q_drift_ks_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     digests = digest_by_partition(_docs(spark, sf_dir), "n_chars", "source")
     rows = ks_by_partition_tdigest(digests)
-    return spark.createDataFrame(
-        [(p, float(n), round(ks, 6)) for p, n, ks in rows],
+    return local_frame(
+        spark, [(p, float(n), round(ks, 6)) for p, n, ks in rows],
         "part string, n_rows double, ks_est double",
     )
 
 
 def q_drift_incremental_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-RUN incremental drift, end to end through STORAGE: write
-    per-source t-digests to an IceTable ("history" run), append the
-    digest of a newly-arrived partition (src0) in a second commit —
+    per-source KLL sketches to an IceTable ("history" run), append the
+    sketch of a newly-arrived partition (src0) in a second commit —
     O(new partition) compute, history is never rescanned — then compute
-    the exact two-sample KS of new-vs-history purely from the STORED
-    digests. Runs in the exact regime (compression >= 8 * n_rows: the
-    k1 merge rule can never join two clusters, so each digest IS its
-    partition's value->count table), which makes the whole
-    rows -> digest -> commit -> read-back -> KS path a full DuckDB
-    value check. The windowed CDF below runs over the value GRID
-    (distinct n_chars), aggregate-sized by construction, so the
-    single-partition window sort is metadata work."""
+    the two-sample KS of new-vs-history purely from the STORED
+    sketches. Runs in the exact regime (k = n_rows: each sketch holds
+    every value of its partition), which makes the whole
+    rows -> sketch -> commit -> read-back -> KS path a full DuckDB
+    value check."""
     import atexit
     import shutil
     import tempfile
 
-    from json_schema_spark.operators.tdigest import DIGEST_SCHEMA, digest_by_partition
+    from json_schema_spark.operators.tdigest import (
+        DEFAULT_K,
+        DIGEST_SCHEMA,
+        digest_by_partition,
+    )
     from json_schema_spark.sources.icetable import IceTable
 
-    docs = _docs(spark, sf_dir).where(
-        F.col("n_chars").isNotNull() & F.col("source").isNotNull())
-    compression = max(200_000.0, 8.0 * docs.count())
-
+    docs = _docs(spark, sf_dir)
+    k = max(DEFAULT_K, docs.count())
     root = tempfile.mkdtemp(prefix="tdig_store_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     t = IceTable.create(spark, root, DIGEST_SCHEMA, ["partition"])
-    # run 1: digest + store every historical partition
+    # run 1: sketch + store every historical partition
     t.append(digest_by_partition(docs.where(F.col("source") != "src0"),
-                                 "n_chars", "source", compression=compression))
+                                 "n_chars", "source", k=k))
     # run 2 (the incremental step): only the new day is scanned
     t.append(digest_by_partition(docs.where(F.col("source") == "src0"),
-                                 "n_chars", "source", compression=compression))
+                                 "n_chars", "source", k=k))
 
-    return _ks_from_stored_digests(t)
+    return _ks_from_stored_digests(t, k)
 
 
-def _ks_from_stored_digests(t) -> DataFrame:
-    """Exact two-sample KS (src0 = "new" vs rest = "hist") computed
-    purely from STORED digest rows — digests are mergeable, so any
-    number of rows per partition (one per batch run, one per streaming
-    micro-batch) sum to the same per-value count table in the exact
-    regime. The pivot/window below runs over the value GRID (distinct
-    values), aggregate-sized by construction."""
+def _ks_from_stored_digests(t, k: int) -> DataFrame:
+    """Two-sample KS (src0 = "new" vs rest = "hist") computed purely
+    from STORED sketch rows — sketches are mergeable, so any number of
+    rows per partition (one per batch run, one per streaming
+    micro-batch) merge to the same value multiset in the exact
+    regime (at most k rows in all), where the KS is exact."""
+    from json_schema_spark.operators.tdigest import ks_by_partition_tdigest
+
     stored = t.scan()
-    cells = (
-        stored.select(
-            F.when(F.col("partition") == "src0", F.lit("new"))
-             .otherwise(F.lit("hist")).alias("side"),
-            F.explode(F.arrays_zip("means", "weights")).alias("z"))
-        .groupBy("side", F.col("z.means").alias("v"))
-        .agg(F.sum("z.weights").alias("cnt"))
-    )
-    pv = (cells.groupBy("v").pivot("side", ["new", "hist"])
-          .agg(F.first("cnt")).na.fill(0.0))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cdf = pv.select(
-        F.sum("new").over(w).alias("cum_new"),
-        F.sum("hist").over(w).alias("cum_hist"))
-    tot = cdf.agg(F.max("cum_new").alias("nn"), F.max("cum_hist").alias("nh"))
-    return (
-        cdf.crossJoin(F.broadcast(tot))
-        .agg(F.max(F.col("nn").cast("long")).alias("n_new"),
-             F.max(F.col("nh").cast("long")).alias("n_hist"),
-             F.round(F.max(F.abs(F.col("cum_new") / F.col("nn")
-                                 - F.col("cum_hist") / F.col("nh"))), 6).alias("ks"))
-    )
+    sides = stored.withColumn(
+        "partition", F.when(F.col("partition") == "src0", F.lit("new"))
+        .otherwise(F.lit("hist")))
+    got = {p: (n, ks) for p, n, ks in ks_by_partition_tdigest(sides, k)}
+    (n_new, ks), (n_hist, _) = got["new"], got["hist"]
+    return local_frame(stored.sparkSession, [(n_new, n_hist, round(ks, 6))],
+                       "n_new long, n_hist long, ks double")
 
 
 def q_stream_drift_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming -> IceTable -> incremental drift, ONE path (VERDICT r3
     item 8): documents arrive as a file stream in micro-batches, each
-    batch folds to per-source t-digests committed exactly-once as
+    batch folds to per-source KLL sketches committed exactly-once as
     IceTable snapshots (O(batch) compute — history is never rescanned),
-    and the SAME stored-digest KS used by drift_incremental_tdigest
-    runs over the accumulated table. Exact regime (compression >= 8n),
+    and the SAME stored-sketch KS used by drift_incremental_tdigest
+    runs over the accumulated table. Exact regime (k = n rows),
     so the streaming result equals the batch rebuild bit-for-bit
     (pytest-pinned in tests/test_runner_streaming.py); rows-only here
     because the streaming sink side has no SQL twin."""
@@ -492,7 +476,7 @@ def q_stream_drift_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from json_schema_spark.operators.tdigest import DIGEST_SCHEMA
+    from json_schema_spark.operators.tdigest import DEFAULT_K, DIGEST_SCHEMA
     from json_schema_spark.sources.icetable import IceTable
     from json_schema_spark.streaming.incremental import (
         stream_digests_to_icetable,
@@ -500,7 +484,7 @@ def q_stream_drift_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).where(
         F.col("n_chars").isNotNull() & F.col("source").isNotNull())
-    compression = max(200_000.0, 8.0 * docs.count())
+    k = max(DEFAULT_K, docs.count())
 
     base = tempfile.mkdtemp(prefix="stream_drift_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
@@ -509,8 +493,8 @@ def q_stream_drift_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # history arrives first across several files, the new day last —
     # with maxFilesPerTrigger=2 the stream sees multiple micro-batches.
     # r6: 2 history files (not 4) — still >=2 micro-batches with the
-    # new day strictly last, but one fewer digest+commit cycle; the
-    # stored digests MERGE to the same per-value count table in the
+    # new day strictly last, but one fewer sketch+commit cycle; the
+    # stored sketches MERGE to the same value multiset in the
     # exact regime, so the KS output is bit-identical (the
     # streaming==batch pin in tests/test_runner_streaming.py).
     feed.where(F.col("source") != "src0").repartition(2) \
@@ -523,9 +507,8 @@ def q_stream_drift_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (spark.readStream.schema(feed.schema)
               .option("maxFilesPerTrigger", 2).parquet(input_dir))
     stream_digests_to_icetable(stream, t, os.path.join(base, "ckpt"),
-                               "n_chars", "source",
-                               compression=compression)
-    return _ks_from_stored_digests(t)
+                               "n_chars", "source", k=k)
+    return _ks_from_stored_digests(t, k)
 
 
 def q_drift_psi_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,7 +523,7 @@ def q_drift_psi_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_drift_ks_by_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact KS of n_chars: EVERY source partition vs the rest of the
-    table, one job (single groupBy shuffle + aggregate-sized grid) —
+    table, one query (single groupBy shuffle + aggregate-sized grid) —
     replaces the round-1 per-partition driver loop."""
     df = _docs(spark, sf_dir)
     return ks_by_partition(df, "n_chars", "source").select(
@@ -4501,7 +4484,8 @@ def oracle_sql() -> dict[str, str]:
         "tdigest_exact": """
             SELECT source AS part,
                    CAST(n_chars AS DOUBLE) AS n_chars,
-                   CAST(count(*) AS DOUBLE) AS cnt
+                   CAST(sum(count(*)) OVER (PARTITION BY source ORDER BY n_chars)
+                        AS BIGINT) AS cnt_le
             FROM documents
             WHERE n_chars IS NOT NULL AND source IS NOT NULL
             GROUP BY source, n_chars

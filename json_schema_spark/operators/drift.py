@@ -171,7 +171,7 @@ def ks_by_partition(
     n_bins: int | None = None,
 ) -> DataFrame:
     """Two-sample KS of EVERY partition against the rest of the table,
-    in ONE job (no per-partition driver loop).
+    in one query (no per-partition driver loop).
 
     Returns (partition, n_rows, ks).  Shape: one wide shuffle
     (groupBy(partition, value-or-bin)); the partition x value grid that

@@ -602,7 +602,7 @@ def embedding_outliers(
     aggregate that funnels all norms through one buffer, fine up to
     ~10^8 rows and required for the DuckDB oracle; at the 10^12
     posture pass ``exact=False`` for percentile_approx (or feed the
-    stored t-digest path, operators/tdigest.py) — signal-grade,
+    stored KLL-sketch path, operators/tdigest.py) — signal-grade,
     identical plan otherwise.
     """
     med_fn = (F.median if exact

@@ -1,5 +1,6 @@
 """Storable Misra-Gries heavy-hitter summaries, a mergeable sketch
-beside :mod:`json_schema_spark.operators.tdigest` (quantiles).
+beside the KLL quantile sketches of
+:mod:`json_schema_spark.operators.tdigest`.
 
 `operators/stats.py` already answers the question exactly
 (`heavy_hitters`); what it does not give you is a sketch you can KEEP.
@@ -7,10 +8,11 @@ A summary is plain arrays, so per-partition summaries persist to the
 results :class:`~json_schema_spark.sources.icetable.IceTable` and merge
 across runs: "top domains this quarter" costs one scan of the NEW
 partition plus a metadata-sized merge of stored summaries — never a
-rescan of history. Distinct counts need no Python sketch: Spark's
-storable HLL (``hll_sketch_agg`` / ``hll_union_agg``) covers them.
+rescan of history. Distinct counts and quantiles need no Python
+sketch: Spark's storable HLL (``hll_sketch_agg`` / ``hll_union_agg``)
+and KLL (``kll_sketch_agg_double``, see tdigest.py) cover them.
 
-Plan shape (the same as tdigest, :mod:`.sketch_base`):
+Plan shape (two stages):
 
 * value prep JVM-side (column ops — no Python over raw values);
 * stage 1 ``mapInPandas``: each Arrow batch folds to one summary per
@@ -26,11 +28,11 @@ bound), and merging preserves it (offsets add).
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from json_schema_spark.operators.sketch_base import two_stage_sketch
 
 MG_SCHEMA = ("partition string, items array<string>, counts array<long>, "
              "offset long, n_rows long")
@@ -80,22 +82,27 @@ def mg_topk_by_partition(
                 val.cast("string").alias("v"))
     )
 
-    def fold(pv: str, grp: pd.DataFrame) -> tuple:
-        red, off = mg_reduce(grp["v"].value_counts().to_dict(), m)
+    cols = ["partition", "items", "counts", "offset", "n_rows"]
+
+    def summary_row(pv: str, red: dict[str, int], off: int, n_rows: int) -> tuple:
         items = sorted(red)  # deterministic layout
-        return (pv, items, [int(red[i]) for i in items], int(off), len(grp))
+        return (pv, items, [int(red[i]) for i in items], int(off), n_rows)
 
-    def merge_rows(pdf: pd.DataFrame) -> tuple:
-        summs = [mg_row_to_summary(r) for _, r in pdf.iterrows()]
-        red, off = mg_merge(summs, m)
-        items = sorted(red)
-        return (pdf["partition"].iloc[0], items,
-                [int(red[i]) for i in items], int(off),
-                int(pdf["n_rows"].sum()))
+    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [summary_row(pv, *mg_reduce(grp["v"].value_counts().to_dict(), m),
+                                len(grp))
+                    for pv, grp in pdf.groupby("partition", sort=False)]
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
 
-    return two_stage_sketch(base, MG_SCHEMA,
-                            ["partition", "items", "counts", "offset", "n_rows"],
-                            fold, merge_rows)
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        red, off = mg_merge([mg_row_to_summary(r) for _, r in pdf.iterrows()], m)
+        return pd.DataFrame([summary_row(pdf["partition"].iloc[0], red, off,
+                                         int(pdf["n_rows"].sum()))], columns=cols)
+
+    return (base.mapInPandas(fold, MG_SCHEMA)
+            .groupBy("partition").applyInPandas(merge, MG_SCHEMA))
 
 
 def mg_row_to_summary(row) -> tuple[dict[str, int], int]:

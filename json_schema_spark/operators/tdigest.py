@@ -1,258 +1,135 @@
-"""t-digest: a mergeable, STORABLE quantile sketch (Dunning & Ertl,
-"Computing Extremely Accurate Quantiles Using t-Digests").
+"""Storable, mergeable quantile sketches per partition, on Spark's
+native KLL sketch (DataSketches ``KllDoublesSketch``: Karnin, Lang &
+Liberty, "Optimal Quantile Approximation in Streams").
 
 `ks_from_quantile_sketch` (drift.py) already estimates KS from Spark's
 built-in percentile_approx sketch, but that sketch lives only inside
-one aggregation — it cannot be persisted. The t-digest here is plain
-data (two double arrays + min/max/n), so per-partition digests can be
+one aggregation — it cannot be persisted. A KLL sketch is a binary
+value (``kll_sketch_agg_double``), so per-partition sketches can be
 written to the results :class:`~json_schema_spark.sources.icetable.IceTable`
-and **merged across runs**: when day D+1 arrives, drift of D+1 vs all
+as rows of :data:`DIGEST_SCHEMA` and **merged across runs**
+(``kll_merge_agg_double``): when day D+1 arrives, drift of D+1 vs all
 history costs one scan of D+1 plus a metadata-sized merge of stored
-digests — no rescan of history. At 10^12 docs that turns daily drift
-monitoring from O(table) into O(new partition).
+sketches — no rescan of history.
 
-Plan shape (the mergeable-sketch posture):
+Plan shape: one ``groupBy(partition)`` aggregate. The sketch is a
+partial aggregate, so each task folds its rows into one sketch per
+partition value before the shuffle, which carries sketches, never
+rows. Everything after that (merging, quantiles, ranks) runs on the
+P collected sketches in driver-local projections, which start no job.
 
-* stage 1 — ``mapInPandas`` over the raw rows: each Arrow batch folds
-  its values into one digest per partition-value it contains. No
-  shuffle; output is digest rows (~2·compression doubles each).
-* stage 2 — ``groupBy(partition).applyInPandas`` merges a partition's
-  batch-digests into one. The shuffle carries digests, never rows.
-* statistics (KS, quantiles) are computed FROM digests; a table with P
-  partitions yields P digests — aggregate-sized, so the driver-side
-  each-vs-rest loop in :func:`ks_by_partition_tdigest` touches only
-  metadata (the sanctioned collect, cf. VERDICT round-1 plan audit).
+Accuracy: a sketch of size ``k`` holds every value while it has seen
+at most ``k`` of them (the exact regime; Spark accepts k <= 65535).
+Beyond that its compaction is randomized: ranks carry an error of
+about 1.3% at the default k=200 and results are no longer identical
+run to run. In the exact regime they are exact and deterministic.
+Size k to the data there rather than to the maximum: each rank lookup
+re-reads the sketch at its full capacity k.
 
-Generalizes the reference's static distribution expectations
-(/root/reference/src/validators.lisp:339-341) the same way drift.py
-does, with the sketch as the transportable unit.
+The module keeps its historical name: the spec's ``tdigest`` drift
+test and its ``drift_tdigest(...)`` result rows run through it.
+Generalizes the reference's static distribution expectations the
+same way drift.py does, with the sketch as the transportable unit.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterable, Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DIGEST_SCHEMA = (
-    "partition string, means array<double>, weights array<double>, "
-    "n double, vmin double, vmax double"
-)
+from json_schema_spark.session import local_frame
 
+DIGEST_SCHEMA = "partition string, sketch binary, n long"
 
-# ---------------------------------------------------------------------------
-# core numpy digest (arrays in, arrays out — nothing to serialize but data)
-# ---------------------------------------------------------------------------
-
-def _k(q: np.ndarray | float, compression: float) -> np.ndarray | float:
-    """k1 scale function: fine clusters at the tails, coarse mid-CDF."""
-    return (compression / (2.0 * math.pi)) * np.arcsin(2.0 * np.clip(q, 0.0, 1.0) - 1.0)
-
-
-def compress(means: np.ndarray, weights: np.ndarray, compression: float) -> tuple[np.ndarray, np.ndarray]:
-    """Cluster sorted-by-mean points subject to the k1 size limit —
-    the CLUSTERING variant of the t-digest: each input lands in bucket
-    floor(k1(q_mid)), so any bucket's k-span is < 1 (the digest
-    invariant) and the whole pass is numpy-vectorized (argsort +
-    cumsum + two bincounts), no Python loop over clusters. Two points
-    whose q_mid gap exceeds pi/compression can never share a bucket,
-    which is what the exact-regime oracle query relies on
-    (compression >= 8n -> adjacent singletons always split)."""
-    # drop zero-weight centroids up front (a merged digest may carry
-    # them; they would land in a bucket as 0-weight mass and a bucket
-    # holding ONLY such centroids divides 0/0 -> NaN mean)
-    keep = np.asarray(weights, dtype=float) > 0
-    means, weights = np.asarray(means)[keep], np.asarray(weights)[keep]
-    if means.size == 0:
-        return means.astype(float), weights.astype(float)
-    order = np.argsort(means, kind="stable")
-    m = means[order].astype(float)
-    w = weights[order].astype(float)
-    n = float(w.sum())
-    qmid = (np.cumsum(w) - w / 2.0) / n
-    cid = np.floor(_k(qmid, compression)).astype(np.int64)
-    # densify bucket ids before counting: bincount allocates max(id)+1
-    # slots, which is O(compression) even for a tiny batch — fatal when
-    # compression is sized to the table (q_tdigest_exact uses 8n). After
-    # return_inverse the allocation is O(distinct clusters) and, since
-    # empty buckets were dropped anyway, the output is identical.
-    _, inv = np.unique(cid, return_inverse=True)
-    wsum = np.bincount(inv, weights=w)
-    msum = np.bincount(inv, weights=w * m)
-    return msum / wsum, wsum
-
-
-def build(values: np.ndarray, compression: float = 100.0) -> dict:
-    """Digest of a raw value array."""
-    v = np.asarray(values, dtype=float)
-    v = v[~np.isnan(v)]
-    if v.size == 0:
-        return {"means": np.empty(0), "weights": np.empty(0),
-                "n": 0.0, "vmin": math.nan, "vmax": math.nan}
-    # pre-aggregate duplicates: compress()'s greedy pass is a Python
-    # loop over clusters, so feed it distinct values + counts (bounded
-    # domains collapse from |rows| to |domain| iterations)
-    uniq, counts = np.unique(v, return_counts=True)
-    m, w = compress(uniq, counts.astype(float), compression)
-    return {"means": m, "weights": w, "n": float(v.size),
-            "vmin": float(v.min()), "vmax": float(v.max())}
-
-
-def merge(digests: Iterable[dict], compression: float = 100.0) -> dict:
-    """Merge any number of digests: concatenate clusters, re-compress.
-    Associative + order-insensitive up to sketch error (pytest-pinned)."""
-    ds = [d for d in digests if d["n"] > 0]
-    if not ds:
-        return {"means": np.empty(0), "weights": np.empty(0),
-                "n": 0.0, "vmin": math.nan, "vmax": math.nan}
-    m = np.concatenate([np.asarray(d["means"], dtype=float) for d in ds])
-    w = np.concatenate([np.asarray(d["weights"], dtype=float) for d in ds])
-    m, w = compress(m, w, compression)
-    return {"means": m, "weights": w, "n": float(sum(d["n"] for d in ds)),
-            "vmin": float(min(d["vmin"] for d in ds)),
-            "vmax": float(max(d["vmax"] for d in ds))}
-
-
-def cdf(digest: dict, xs: np.ndarray) -> np.ndarray:
-    """Piecewise-linear CDF through the centroid midpoints
-    (mean_i, (cumw_{i-1} + w_i/2) / n), clamped by (vmin,0)/(vmax,1)."""
-    m = np.asarray(digest["means"], dtype=float)
-    w = np.asarray(digest["weights"], dtype=float)
-    n = digest["n"]
-    xs = np.asarray(xs, dtype=float)
-    if m.size == 0:
-        return np.full(xs.shape, math.nan)
-    if digest["vmax"] == digest["vmin"]:  # constant column: step CDF
-        return (xs >= digest["vmin"]).astype(float)
-    mids = (np.cumsum(w) - w / 2.0) / n
-    xp = np.concatenate(([digest["vmin"]], m, [digest["vmax"]]))
-    fp = np.concatenate(([0.0], mids, [1.0]))
-    # collapse duplicate x support keeping the LAST (largest) fp per x:
-    # repeated cluster means carry real mass — keeping the first fp
-    # dropped it (cdf(build([0,0,0,1]), 0) read 0.0 instead of ~0.6).
-    # Point clusters follow the midpoint rule: half their mass shows AT
-    # the mean, all of it just past — the documented sketch bound.
-    xu = np.unique(xp)
-    last = np.searchsorted(xp, xu, side="right") - 1
-    res = np.interp(xs, xu, fp[last])
-    res[xs < xu[0]] = 0.0  # np.interp left-clamps to fp[0], which the
-    # dedup may have raised above 0 (mass at vmin)
-    return res
-
-
-def quantile(digest: dict, qs: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`cdf` (same piecewise-linear support)."""
-    m = np.asarray(digest["means"], dtype=float)
-    w = np.asarray(digest["weights"], dtype=float)
-    n = digest["n"]
-    qs = np.asarray(qs, dtype=float)
-    if m.size == 0:
-        return np.full(qs.shape, math.nan)
-    if digest["vmax"] == digest["vmin"]:  # constant column
-        return np.full(qs.shape, digest["vmin"])
-    mids = (np.cumsum(w) - w / 2.0) / n
-    xp = np.concatenate(([0.0], mids, [1.0]))
-    fp = np.concatenate(([digest["vmin"]], m, [digest["vmax"]]))
-    xp, idx = np.unique(xp, return_index=True)
-    return np.interp(qs, xp, fp[idx])
-
-
-def ks_between(a: dict, b: dict) -> float:
-    """max |F_a - F_b| evaluated on the union of both supports PLUS
-    the midpoints between adjacent support points — one CDF can be
-    mid-ramp where the other is flat (discrete-heavy data), and the
-    widest gap then sits strictly between support points."""
-    xs = np.unique(np.concatenate([
-        np.asarray(a["means"], dtype=float), np.asarray(b["means"], dtype=float),
-        np.asarray([a["vmin"], a["vmax"], b["vmin"], b["vmax"]], dtype=float),
-    ]))
-    xs = xs[~np.isnan(xs)]
-    if xs.size == 0:
-        return math.nan
-    if xs.size > 1:
-        xs = np.unique(np.concatenate([xs, (xs[1:] + xs[:-1]) / 2.0]))
-    return float(np.max(np.abs(cdf(a, xs) - cdf(b, xs))))
-
-
-# ---------------------------------------------------------------------------
-# Spark plumbing (two-stage: batch digests -> per-partition merge)
-# ---------------------------------------------------------------------------
-
-def _row_to_digest(row) -> dict:
-    return {"means": np.asarray(row["means"], dtype=float),
-            "weights": np.asarray(row["weights"], dtype=float),
-            "n": float(row["n"]), "vmin": row["vmin"], "vmax": row["vmax"]}
+DEFAULT_K = 200
+# outside the exact regime, CDFs are compared at this many pooled quantiles
+GRID = 1024
 
 
 def digest_by_partition(
-    df: DataFrame, value: str | Column, by: str | Column,
-    compression: float = 100.0,
+    df: DataFrame, value: str | Column, by: str | Column, k: int = DEFAULT_K,
 ) -> DataFrame:
-    """One t-digest row per partition value (schema DIGEST_SCHEMA).
-
-    Rows never shuffle: batches fold to digests in stage 1
-    (mapInPandas), stage 2 shuffles ~2·compression doubles per
-    (input-task, partition) pair and merges per partition.
-    """
-    val = F.col(value) if isinstance(value, str) else value
+    """One KLL sketch row per partition value (schema DIGEST_SCHEMA)."""
+    val = (F.col(value) if isinstance(value, str) else value).cast("double")
     part = F.col(by) if isinstance(by, str) else by
-    base = (
-        df.where(val.isNotNull() & part.isNotNull())
-        .select(part.cast("string").alias("partition"), val.cast("double").alias("v"))
+    return (
+        df.where(val.isNotNull() & ~F.isnan(val) & part.isNotNull())
+        .groupBy(part.cast("string").alias("partition"))
+        .agg(F.kll_sketch_agg_double(val, k).alias("sketch"),
+             F.count(F.lit(1)).alias("n"))
     )
 
-    from json_schema_spark.operators.sketch_base import two_stage_sketch
 
-    def fold(pv: str, grp: pd.DataFrame) -> tuple:
-        d = build(grp["v"].to_numpy(), compression)
-        return (pv, d["means"].tolist(), d["weights"].tolist(),
-                d["n"], d["vmin"], d["vmax"])
+def cdf_on_grid(
+    digests: DataFrame, k: int = DEFAULT_K,
+) -> tuple[list[float], list[tuple[str, int, list[float]]]]:
+    """Every partition's CDF at one value grid.
 
-    def merge_rows(pdf: pd.DataFrame) -> tuple:
-        d = merge((_row_to_digest(r) for _, r in pdf.iterrows()), compression)
-        return (pdf["partition"].iloc[0], d["means"].tolist(),
-                d["weights"].tolist(), d["n"], d["vmin"], d["vmax"])
+    ``digests`` has DIGEST_SCHEMA; a partition may have several rows
+    (one per stored run or micro-batch), which merge into a sketch of
+    size ``k`` first. Returns ``(grid, parts)``: the ascending grid
+    values and ``(partition, n, cdf)`` per partition, sorted by
+    partition. The grid is ``m`` evenly spaced quantiles of the pooled
+    sketch, ``m = min(N, max(k, GRID))`` for N rows in all; in the
+    exact regime (N <= k) that is every value, so the CDFs are exact
+    at every point where one can step.
 
-    return two_stage_sketch(base, DIGEST_SCHEMA,
-                            ["partition", "means", "weights", "n", "vmin", "vmax"],
-                            fold, merge_rows)
+    Spark takes only constant values and ranks in the quantile and rank
+    functions, so the grid goes back into the second projection as a
+    literal array.
+    """
+    rows = sorted(
+        digests.groupBy("partition")
+        .agg(F.kll_merge_agg_double("sketch", k).alias("sketch"),
+             F.sum("n").alias("n"))
+        .collect())
+    if not rows:
+        return [], []
+    spark = digests.sparkSession
+    m = min(sum(r["n"] for r in rows), max(k, GRID))
+    pooled = F.aggregate(F.slice("s", 2, len(rows) - 1), F.col("s")[0],
+                         lambda acc, x: F.kll_sketch_merge_double(acc, x))
+    [(qs,)] = local_frame(
+        spark, [([bytes(r["sketch"]) for r in rows],)], "s array<binary>",
+    ).select(F.kll_sketch_get_quantile_double(
+        pooled, _doubles([(i + 0.5) / m for i in range(m)]))).collect()
+    grid = sorted(set(qs))
+    ranked = local_frame(
+        spark, [(r["partition"], bytes(r["sketch"]), r["n"]) for r in rows],
+        DIGEST_SCHEMA,
+    ).select("partition", "n",
+             F.kll_sketch_get_rank_double("sketch", _doubles(grid))).collect()
+    return grid, [tuple(r) for r in ranked]
+
+
+def _doubles(xs: list[float]) -> Column:
+    """A constant array<double> from one string literal. ``F.lit(list)``
+    makes one literal expression per element, and a plan with thousands
+    of them takes seconds to analyze; the split and cast fold once."""
+    return F.split(F.lit(",".join(map(repr, xs))), ",").cast("array<double>")
 
 
 def ks_by_partition_tdigest(
-    digests: DataFrame | list[dict], compression: float = 100.0,
-) -> list[tuple[str, float, float]]:
-    """Each partition's KS vs the merged REST, purely from digests.
+    digests: DataFrame, k: int = DEFAULT_K,
+) -> list[tuple[str, int, float]]:
+    """Each partition's KS vs the rest of the table, purely from sketches.
 
-    Input is the output of :func:`digest_by_partition` (or a list of
-    already-collected digest dicts with a 'partition' key). Returns
-    [(partition, n_rows, ks)] sorted by partition. The collect is
-    aggregate-sized by construction: P digests of ~2·compression
-    doubles.
+    Input is the output of :func:`digest_by_partition` (or stored rows
+    of it). Returns [(partition, n_rows, ks)] sorted by partition; ks is
+    NaN for a lone partition, which has no rest. The rest's CDF comes
+    from the rank identity F_rest = (N·F_all − n_p·F_p)/(N − n_p) on
+    the grid of :func:`cdf_on_grid`, with N·F_all the sum of n_q·F_q
+    over all partitions, so no rest sketch is ever built.
     """
-    if isinstance(digests, DataFrame):
-        rows = digests.collect()
-        ds = [dict(_row_to_digest(r), partition=r["partition"]) for r in rows]
-    else:
-        ds = list(digests)
-    # rest_i = merge(prefix[i-1], suffix[i+1]): 2P merges total instead
-    # of the naive P re-merges of P-1 digests each (O(P^2) driver time
-    # at hundreds of partitions)
-    P = len(ds)
-    prefix: list[dict] = [None] * P
-    suffix: list[dict] = [None] * P
-    for i in range(P):
-        prefix[i] = ds[i] if i == 0 else merge([prefix[i - 1], ds[i]], compression)
-        j = P - 1 - i
-        suffix[j] = ds[j] if j == P - 1 else merge([suffix[j + 1], ds[j]], compression)
+    grid, parts = cdf_on_grid(digests, k)
+    n_all = sum(n for _, n, _ in parts)
+    n_cdf_all = [sum(n * cdf[i] for _, n, cdf in parts) for i in range(len(grid))]
     out = []
-    for i, d in enumerate(ds):
-        parts = ([prefix[i - 1]] if i > 0 else []) + \
-                ([suffix[i + 1]] if i < P - 1 else [])
-        rest = merge(parts, compression)
-        out.append((d["partition"], d["n"],
-                    ks_between(d, rest) if rest["n"] else math.nan))
-    return sorted(out)
+    for p, n, cdf in parts:
+        rest = n_all - n
+        ks = (max(abs(f - (nf - n * f) / rest) for f, nf in zip(cdf, n_cdf_all))
+              if rest else math.nan)
+        out.append((p, n, ks))
+    return out

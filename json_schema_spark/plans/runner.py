@@ -423,9 +423,9 @@ class ValidationRunner:
                 results.append((f"drift_chi2({col} by {by})", not drifted,
                                 int(drifted), float(worst["chi2"])))
             elif d.get("test") == "tdigest":
-                # sketch path: rows fold to digests before any shuffle;
-                # digests are storable for incremental cross-run drift
-                # (operators/tdigest.py)
+                # sketch path: rows fold into per-partition KLL sketches
+                # before the shuffle; sketches are storable for
+                # incremental cross-run drift (operators/tdigest.py)
                 from json_schema_spark.operators.tdigest import (
                     digest_by_partition,
                     ks_by_partition_tdigest,
@@ -438,7 +438,7 @@ class ValidationRunner:
                                default=0.0)  # ks==ks drops NaN (no rest)
                 results.append((f"drift_tdigest({col} by {by})", worst_ks < 0.2,
                                 int(worst_ks >= 0.2), float(worst_ks)))
-            else:  # ks: every partition vs rest in ONE job (no driver loop)
+            else:  # ks: every partition vs rest in one query (no driver loop)
                 tagged = df.withColumn("__by", by_col).withColumn("__v", col_expr)
                 rows = ks_by_partition(tagged, "__v", "__by", n_bins=256).collect()
                 worst_ks = max((r["ks"] or 0.0) for r in rows) if rows else 0.0

@@ -165,23 +165,22 @@ def stream_digests_to_icetable(
     checkpoint_dir: str,
     value_col: str,
     partition_col: str,
-    compression: float = 100.0,
+    k: int = 200,
 ) -> None:
-    """Per-micro-batch t-digest commits: each batch folds to one
-    digest row per partition value (O(batch) compute, history never
+    """Per-micro-batch KLL sketch commits: each batch folds to one
+    sketch row per partition value (O(batch) compute, history never
     rescanned) and lands as one exactly-once IceTable snapshot — the
-    streaming front half of the incremental-drift story. Digests are
+    streaming front half of the incremental-drift story. Sketches are
     MERGEABLE, so the stored table accumulates one row per
-    (batch, partition) and any later reader (KS, quantiles) merges by
-    summing cluster weights — bit-equal to a batch rebuild in the
-    exact regime (compression >= 8n), tested in
-    tests/test_runner_streaming.py.
+    (batch, partition) and any later reader (KS, quantiles) merges
+    them — bit-equal to a batch rebuild in the exact regime (at most
+    k rows in all), tested in tests/test_runner_streaming.py.
 
     Same exactly-once commit as :func:`stream_to_icetable`: a replayed
-    batch is skipped before any digest is computed or staged."""
+    batch is skipped before any sketch is computed or staged."""
     from json_schema_spark.operators.tdigest import digest_by_partition
 
     _sink_exactly_once(
         stream, table, checkpoint_dir,
         lambda batch_df: digest_by_partition(
-            batch_df, value_col, partition_col, compression=compression))
+            batch_df, value_col, partition_col, k=k))

@@ -6,8 +6,8 @@ real role:
   day 0..N   pages ──write-audit──▶ published IceTable  (bad rows ▶ quarantine)
                 │
                 └─ snapshot-incremental validation (verdicts IceTable)
-                └─ per-day t-digest stored (drift history, no rescans)
-  new day    drift check = new-day digest vs merged stored history
+                └─ per-day KLL sketch stored (drift history, no rescans)
+  new day    drift check = new-day sketch vs merged stored history
   maintenance: compact + expire keeps the table scannable
 
 Every stage here is individually pytest/oracle-verified elsewhere;
@@ -84,18 +84,15 @@ def test_north_star_pipeline(spark, webpages, tmp_path):
                .withColumn("text", F.concat("text", F.lit(" "), "text")))
     audited_append(published, quarantine, drifted, compiled,
                    run_id=f"ing-{last}")
-    new_digest_rows = td.digest_by_partition(
+    new_digest = td.digest_by_partition(
         published.scan().where((F.col("warc_day").cast("string") == last)
                                & F.col("text").isNotNull())
         .select(F.col("warc_day").cast("string").alias("d"),
                 F.length("text").cast("double").alias("len")),
-        "len", "d").collect()
-    hist = td.merge([td._row_to_digest(r) for r in digests.scan().collect()])
-    ks_new = td.ks_between(td._row_to_digest(new_digest_rows[0]), hist)
-    ctl_rows = digests.scan().collect()
-    ctl = td._row_to_digest(ctl_rows[0])
-    rest = td.merge([td._row_to_digest(r) for r in ctl_rows[1:]])
-    ks_ctl = td.ks_between(ctl, rest)
+        "len", "d")
+    ks_new = {p: ks for p, _, ks in td.ks_by_partition_tdigest(
+        digests.scan().unionByName(new_digest))}[last]
+    ks_ctl = td.ks_by_partition_tdigest(digests.scan())[0][2]
     assert ks_new > 5 * ks_ctl and ks_new > 0.2  # drift flagged from sketches
 
     # ---- maintenance: layout changes, answers don't ----

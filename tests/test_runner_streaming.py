@@ -431,13 +431,12 @@ def test_legacy_results_dir_rejected(spark, tmp_path, legacy):
 
 
 def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):
-    """VERDICT r3 item 8: per-micro-batch digest commits through the
-    exactly-once IceTable sink drive the SAME KS as one batch rebuild
-    over all rows — bit-for-bit in the exact regime (compression >=
-    8n), because exact-regime digests are lossless value->count tables
-    and mergeable across any batch split. Also checks replay safety:
-    a second availableNow run adds no snapshots and leaves KS
-    unchanged."""
+    """Per-micro-batch sketch commits through the exactly-once IceTable
+    sink drive the SAME KS as one batch rebuild over all rows —
+    bit-for-bit in the exact regime (k >= n), because exact-regime KLL
+    sketches hold every value and merge losslessly across any batch
+    split. Also checks replay safety: a second availableNow run adds no
+    snapshots and leaves KS unchanged."""
     from json_schema_spark.operators.tdigest import (
         DIGEST_SCHEMA,
         digest_by_partition,
@@ -451,7 +450,7 @@ def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):
     docs = webpages.limit(3000).select(
         F.col("warc_day").cast("string").alias("source"),
         F.length("text").alias("n_chars"))
-    compression = 8.0 * 3000
+    k = 3000  # >= the row count: the exact regime
     src = str(tmp_path / "digest_src")
     docs.repartition(6).write.mode("overwrite").parquet(src)
     batch_df = spark.read.parquet(src)
@@ -462,15 +461,14 @@ def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):
     stream = (spark.readStream.schema(batch_df.schema)
               .option("maxFilesPerTrigger", 2).parquet(src))
     stream_digests_to_icetable(stream, t_stream, str(tmp_path / "ck"),
-                               "n_chars", "source",
-                               compression=compression)
+                               "n_chars", "source", k=k)
     assert len(t_stream.snapshots()) == 3  # one commit per micro-batch
 
     # batch rebuild: one digest pass over everything
     t_batch = IceTable.create(spark, str(tmp_path / "digest_batch"),
                               DIGEST_SCHEMA, ["partition"])
     t_batch.append(digest_by_partition(batch_df, "n_chars", "source",
-                                       compression=compression))
+                                       k=k))
 
     def ks(t):
         # reuse the driver's stored-digest KS (src0 has no meaning on
@@ -485,7 +483,7 @@ def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):
             def scan(self):
                 return stored
 
-        return em._ks_from_stored_digests(_T()).collect()[0]
+        return em._ks_from_stored_digests(_T(), k).collect()[0]
 
     a, b = ks(t_stream), ks(t_batch)
     assert (a["n_new"], a["n_hist"]) == (b["n_new"], b["n_hist"])
@@ -495,7 +493,6 @@ def test_stream_digests_equal_batch_rebuild(spark, webpages, tmp_path):
     stream2 = (spark.readStream.schema(batch_df.schema)
                .option("maxFilesPerTrigger", 2).parquet(src))
     stream_digests_to_icetable(stream2, t_stream, str(tmp_path / "ck"),
-                               "n_chars", "source",
-                               compression=compression)
+                               "n_chars", "source", k=k)
     assert len(t_stream.snapshots()) == 3
     assert ks(t_stream)["ks"] == a["ks"]
