@@ -234,17 +234,25 @@ def q_drift_ks_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_drift_ks_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KS over MERGEABLE quantile sketches. Value-checked: at sf0.01
-    the GK sketch runs in its EXACT regime (accuracy >= n_rows), where
-    percentile_approx == DuckDB quantile_disc bit-for-bit, so the
-    whole grid-CDF estimator has a DuckDB twin; the approximate regime
-    is additionally pytest-pinned within 0.08 of the exact
-    ks_by_partition."""
-    from json_schema_spark.operators.drift import ks_from_quantile_sketch
+    """Each source's KS vs the rest from mergeable KLL sketches
+    (operators/tdigest.py), sized to the exact regime (k = the row
+    count, as q_tdigest_exact does): every sketch holds every value, so
+    the sketch KS is the exact KS and DuckDB value-checks it with the
+    drift_ks_by_partition SQL. The compacting regime is pytest-pinned
+    against the exact ks_by_partition in tests/test_tdigest.py."""
+    from json_schema_spark.operators.tdigest import (
+        DEFAULT_K,
+        digest_by_partition,
+        ks_by_partition_tdigest,
+    )
 
-    return ks_from_quantile_sketch(
-        _docs(spark, sf_dir), "n_chars", "source").select(
-        F.col("partition").alias("part"), F.col("n_rows"), F.col("ks_est"))
+    docs = _docs(spark, sf_dir)
+    k = max(DEFAULT_K, docs.count())
+    rows = ks_by_partition_tdigest(
+        digest_by_partition(docs, "n_chars", "source", k=k), k=k)
+    return local_frame(
+        spark, [(p, n, round(ks, 6) if ks == ks else None) for p, n, ks in rows],
+        "part string, n_rows long, ks_est double")
 
 
 def q_tdigest_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,21 +282,17 @@ def q_tdigest_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Misra-Gries heavy-hitter summaries per source (operators/
-    sketches.py). With m=64 >= |lang domain| no counter is ever
-    evicted, so offset=0 and the sketch counts are EXACT — which lets
-    DuckDB value-check the whole two-stage fold/merge machinery; the
-    approximate (eviction) regime is pytest-pinned separately."""
-    from json_schema_spark.operators.sketches import mg_topk_by_partition
+    """Heavy-hitter summaries per source on Spark's native frequent-items
+    sketch (operators/sketches.py). With m=64 the sketch tracks every
+    value of the small lang domain, so its counts are EXACT, which lets
+    DuckDB value-check the build, the merge and the read; the eviction
+    regime is pytest-pinned in tests/test_sketches.py."""
+    from json_schema_spark.operators.sketches import mg_topk, mg_topk_by_partition
 
     summ = mg_topk_by_partition(_docs(spark, sf_dir), "lang", "source", m=64)
-    return (
-        summ.select(
-            F.col("partition").alias("part"),
-            F.explode(F.arrays_zip("items", "counts")).alias("z"))
-        .select("part", F.col("z.items").alias("lang"),
-                F.col("z.counts").alias("cnt"))
-    )
+    return mg_topk(summ, 64).select(
+        F.col("partition").alias("part"), F.col("item").alias("lang"),
+        F.col("count").alias("cnt"))
 
 
 def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,8 +527,8 @@ def q_drift_psi_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_drift_ks_by_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact KS of n_chars: EVERY source partition vs the rest of the
-    table, one query (single groupBy shuffle + aggregate-sized grid) —
-    replaces the round-1 per-partition driver loop."""
+    table, one query over the observed (source, n_chars) cells, with
+    no per-partition Python loop."""
     df = _docs(spark, sf_dir)
     return ks_by_partition(df, "n_chars", "source").select(
         F.col("partition").alias("part"),
@@ -4449,6 +4453,37 @@ _CLASSIFIER_SCORE_CTES = """toks AS (
               FROM wts GROUP BY doc_id)"""
 
 
+# Exact KS of n_chars, each source vs the rest, over the full
+# partition x value grid; {ks} names the statistic's column.
+_KS_BY_PARTITION_SQL = """
+            WITH cells AS (
+              SELECT source AS part, n_chars AS v, count(*) AS cnt
+              FROM documents
+              WHERE source IS NOT NULL AND n_chars IS NOT NULL
+              GROUP BY 1, 2),
+            pt AS (SELECT part, sum(cnt) AS n_part FROM cells GROUP BY 1),
+            vs AS (SELECT v, sum(cnt) AS n_v FROM cells GROUP BY 1),
+            g AS (SELECT sum(cnt) AS n_total FROM cells),
+            grid AS (
+              SELECT pt.part, vs.v, pt.n_part,
+                     COALESCE(cells.cnt, 0) AS cnt,
+                     vs.n_v - COALESCE(cells.cnt, 0) AS cnt_rest
+              FROM pt CROSS JOIN vs
+              LEFT JOIN cells ON cells.part = pt.part AND cells.v = vs.v),
+            cdf AS (
+              SELECT part, n_part,
+                     sum(cnt) OVER (PARTITION BY part ORDER BY v) AS cum_in,
+                     sum(cnt_rest) OVER (PARTITION BY part ORDER BY v) AS cum_rest
+              FROM grid CROSS JOIN g)
+            SELECT part,
+                   CAST(max(n_part) AS BIGINT) AS n_rows,
+                   round(max(abs(cum_in / n_part
+                                 - cum_rest / NULLIF((SELECT n_total FROM g) - n_part, 0))), 6) AS {ks}
+            FROM cdf
+            GROUP BY part
+        """
+
+
 def oracle_sql() -> dict[str, str]:
     return {
         "constraint_summary": _summary_sql(),
@@ -4631,72 +4666,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(max(n_part) AS BIGINT) AS n_rows
             FROM grid GROUP BY part
         """,
-        # drift_ks_sketch is value-checkable at sf0.01 because the GK
-        # sketch is in its EXACT regime there (accuracy=10000 >= n_all
-        # =500): percentile_approx returns true order statistics, and
-        # Spark's exact-regime rank rule matches DuckDB's quantile_disc
-        # bit-for-bit (stress-tested across sizes/domains/partition
-        # counts). The oracle mirrors the grid-CDF estimator verbatim:
-        # same 128-point grid, same union-of-grids evaluation points,
-        # same f_rest algebra — so doubles agree to the last bit before
-        # the shared round(...,6).
-        "drift_ks_sketch": f"""
-            WITH base AS (
-              SELECT source AS partition, n_chars AS v
-              FROM documents
-              WHERE n_chars IS NOT NULL AND source IS NOT NULL),
-            sk_part AS (
-              SELECT partition,
-                     quantile_disc(v, {[i / 127 for i in range(128)]}) AS grid,
-                     count(*) AS n_rows
-              FROM base GROUP BY 1),
-            sk_all AS (
-              SELECT quantile_disc(v, {[i / 127 for i in range(128)]}) AS grid_all,
-                     count(*) AS n_all
-              FROM base),
-            xs AS (
-              SELECT partition, n_rows, grid, grid_all, n_all,
-                     unnest(list_distinct(grid || grid_all)) AS x
-              FROM sk_part CROSS JOIN sk_all),
-            per_x AS (
-              SELECT partition, n_rows,
-                     len(list_filter(grid, g -> g <= x)) / 128.0 AS f_part,
-                     (len(list_filter(grid_all, g -> g <= x)) / 128.0 * n_all
-                      - len(list_filter(grid, g -> g <= x)) / 128.0 * n_rows)
-                     / NULLIF(n_all - n_rows, 0) AS f_rest
-              FROM xs)
-            SELECT partition AS part,
-                   CAST(max(n_rows) AS BIGINT) AS n_rows,
-                   round(max(abs(f_part - f_rest)), 6) AS ks_est
-            FROM per_x GROUP BY 1
-        """,
-        "drift_ks_by_partition": """
-            WITH cells AS (
-              SELECT source AS part, n_chars AS v, count(*) AS cnt
-              FROM documents
-              WHERE source IS NOT NULL AND n_chars IS NOT NULL
-              GROUP BY 1, 2),
-            pt AS (SELECT part, sum(cnt) AS n_part FROM cells GROUP BY 1),
-            vs AS (SELECT v, sum(cnt) AS n_v FROM cells GROUP BY 1),
-            g AS (SELECT sum(cnt) AS n_total FROM cells),
-            grid AS (
-              SELECT pt.part, vs.v, pt.n_part,
-                     COALESCE(cells.cnt, 0) AS cnt,
-                     vs.n_v - COALESCE(cells.cnt, 0) AS cnt_rest
-              FROM pt CROSS JOIN vs
-              LEFT JOIN cells ON cells.part = pt.part AND cells.v = vs.v),
-            cdf AS (
-              SELECT part, n_part,
-                     sum(cnt) OVER (PARTITION BY part ORDER BY v) AS cum_in,
-                     sum(cnt_rest) OVER (PARTITION BY part ORDER BY v) AS cum_rest
-              FROM grid CROSS JOIN g)
-            SELECT part,
-                   CAST(max(n_part) AS BIGINT) AS n_rows,
-                   round(max(abs(cum_in / n_part
-                                 - cum_rest / NULLIF((SELECT n_total FROM g) - n_part, 0))), 6) AS ks
-            FROM cdf
-            GROUP BY part
-        """,
+        # the sketch KS runs its KLL sketches in the exact regime
+        "drift_ks_sketch": _KS_BY_PARTITION_SQL.format(ks="ks_est"),
+        "drift_ks_by_partition": _KS_BY_PARTITION_SQL.format(ks="ks"),
         "drift_incremental_tdigest": """
             WITH t AS (
               SELECT n_chars AS v,

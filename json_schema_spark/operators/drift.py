@@ -1,26 +1,23 @@
 """Distribution-drift detection across partitions (SURVEY.md §2.4).
 
-Generalizes ``enum``/``type`` distribution expectations
-(/root/reference/src/validators.lisp:339-341,402-408) over time: does
+Generalizes ``enum``/``type`` distribution expectations (the reference
+validator's ``src/validators.lisp:339-341,402-408``) over time: does
 partition P's distribution of a column differ from the rest of the
 table?
 
-Two tests, both expressed in pure DataFrame ops (no UDF, no driver
-loop):
+Three statistics, all in pure DataFrame ops (no UDF, no Python loop):
 
 * **chi-square** for categoricals (e.g. ``lang``): contingency counts
   via ONE ``groupBy(partition, category)`` pass, expected counts from
-  the pooled marginals via two small joins (both sides are
-  aggregate-sized — broadcast), statistic = sum((obs-exp)^2/exp).
+  the pooled marginals by window, statistic = sum((obs-exp)^2/exp).
 * **KS** for numerics (e.g. ``char_length(text)``): exact two-sample
-  Kolmogorov-Smirnov computed on the *distinct-value CDF*:
-  ``groupBy(value)`` counts per group, window cumsum in value order,
-  max |F_a - F_b|. For bounded discrete domains (lengths, scores) this
-  is exact AND scalable: the window runs over distinct values, not
-  rows. For unbounded continuous columns use ``ks_stat_binned`` which
-  first buckets values (histogram CDF — the t-digest/KLL-style sketch
-  path; cf. PAPERS.md quantile-sketch surveys) so the final window
-  stays tiny.
+  Kolmogorov-Smirnov of every partition vs the rest over the observed
+  ``(partition, value)`` cells (:func:`ks_by_partition`);
+  :func:`ks_stat` is its two-group case. The windows run over
+  aggregated cells, never over rows. For continuous/unbounded columns
+  pass ``n_bins`` to bucket first (histogram CDF). The storable,
+  mergeable sketch path is KLL, in :mod:`.tdigest`.
+* **PSI** for categoricals, partition vs rest.
 """
 
 from __future__ import annotations
@@ -30,51 +27,12 @@ from pyspark.sql import functions as F
 
 
 def _bin(value: Column, lo: Column, hi: Column, n_bins: int) -> Column:
-    """Fixed-width bucket id in [0, n_bins): the ONE binning rule every
-    histogram-CDF path shares (the +1e-12 keeps a degenerate hi == lo
-    range from dividing by zero; least() folds the hi boundary into the
-    last bucket)."""
+    """Fixed-width bucket id in [0, n_bins) (the +1e-12 keeps a
+    degenerate hi == lo range from dividing by zero; least() folds the
+    hi boundary into the last bucket)."""
     return F.least(
         F.lit(n_bins - 1),
         F.floor((value - lo) / ((hi - lo) / n_bins + 1e-12)),
-    )
-
-
-def _partition_vs_rest_grid(
-    df: DataFrame, value: Column, partition: Column,
-) -> DataFrame:
-    """Shared scaffolding for every partition-vs-rest statistic
-    (KS, PSI): ONE groupBy(partition, value) shuffle over the table,
-    then the full partition x value grid materialized from the two
-    aggregate-sized marginals, zero-obs cells included.
-
-    Columns: partition, v, n_part, n_total, n_rest, cnt, cnt_rest.
-    n_rest is 0 for a single-partition table — consumers must guard
-    their divisions (nullif), which is why it is precomputed here.
-    """
-    cells = (
-        df.where(value.isNotNull() & partition.isNotNull())
-        .groupBy(partition.alias("partition"), value.alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        # lazy reuse barrier (r6, guide §7.2): cells has FOUR consumers
-        # (three marginals + the grid join) — without it the corpus
-        # groupBy scan executes once per consumer. partition x value
-        # rows, aggregate-sized by construction.
-        .localCheckpoint(eager=False)
-    )
-    parts = cells.groupBy("partition").agg(F.sum("cnt").alias("n_part"))
-    vals = cells.groupBy("v").agg(F.sum("cnt").alias("n_v"))
-    tot = cells.agg(F.sum("cnt").alias("n_total"))
-    return (
-        parts.crossJoin(F.broadcast(vals))
-        .join(cells, ["partition", "v"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "partition", "v", "n_part", "n_total",
-            (F.col("n_total") - F.col("n_part")).alias("n_rest"),
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-            (F.col("n_v") - F.coalesce(F.col("cnt"), F.lit(0))).alias("cnt_rest"),
-        )
     )
 
 
@@ -127,127 +85,80 @@ def chi2_by_partition(df: DataFrame, category: str, partition: str | Column) -> 
     )
 
 
-def ks_stat(
-    df: DataFrame, value: str | Column, group: str | Column,
-    group_a, group_b,
-) -> DataFrame:
-    """Exact two-sample KS statistic between groups a and b.
-
-    Returns a single row (n_a, n_b, ks). The cumulative window is
-    ordered over DISTINCT values (post-aggregation), so its single-task
-    sort touches |domain| rows, not |table| rows — fine for discrete
-    domains; use :func:`ks_stat_binned` for continuous ones.
-    """
-    val = F.col(value) if isinstance(value, str) else value
-    grp = F.col(group) if isinstance(group, str) else group
-    tagged = (
-        df.where(grp.isin([group_a, group_b]) & val.isNotNull())
-        .select(val.alias("v"), (grp == group_a).cast("int").alias("is_a"))
-    )
-    per_value = tagged.groupBy("v").agg(
-        F.sum("is_a").alias("cnt_a"),
-        F.sum(1 - F.col("is_a")).alias("cnt_b"),
-    # lazy reuse barrier (r6, guide §7.2): the CDF feeds both the
-    # totals aggregate and the final max — without it the corpus scan
-    # + groupBy executes twice. |domain| rows, aggregate-sized.
-    ).localCheckpoint(eager=False)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cdf = per_value.select(
-        (F.sum("cnt_a").over(w)).alias("cum_a"),
-        (F.sum("cnt_b").over(w)).alias("cum_b"),
-    )
-    totals = cdf.agg(F.max("cum_a").alias("na"), F.max("cum_b").alias("nb"))
-    return cdf.crossJoin(F.broadcast(totals)).agg(
-        F.max("na").alias("n_a"),
-        F.max("nb").alias("n_b"),
-        F.round(
-            F.max(F.abs(F.col("cum_a") / F.col("na") - F.col("cum_b") / F.col("nb"))), 6
-        ).alias("ks"),
-    )
-
-
 def ks_by_partition(
     df: DataFrame, value: str | Column, partition: str | Column,
     n_bins: int | None = None,
 ) -> DataFrame:
     """Two-sample KS of EVERY partition against the rest of the table,
-    in one query (no per-partition driver loop).
+    in one query (no per-partition Python loop).
 
-    Returns (partition, n_rows, ks).  Shape: one wide shuffle
-    (groupBy(partition, value-or-bin)); the partition x value grid that
-    materializes missing cells is built from aggregate-sized marginals
-    (|partitions| x |domain or n_bins| rows), so the cumulative windows
-    never touch table-sized data.  Pass ``n_bins`` to bucket first for
-    continuous/unbounded domains (histogram-CDF sketch path, error
-    bounded by 1/n_bins); leave None for exact KS on discrete domains.
+    Returns (partition, n_rows, ks); ks is NULL for a lone partition,
+    which has no rest. Pass ``n_bins`` to bucket values first for
+    continuous/unbounded domains (histogram CDF, error bounded by
+    1/n_bins); leave None for exact KS.
+
+    Shape: ONE groupBy(partition, value) over the table gives the
+    observed cells; no partition x value grid is built. A running sum
+    per partition gives the partition's count ``cum_in`` at each of its
+    values; a running sum over the per-value marginal (|distinct
+    values| rows, joined back on the value) gives the pooled count
+    ``cum_all``. The rest's count is ``cum_all - cum_in`` at v and
+    ``cum_all - n_v - (cum_in - cnt)`` at the pooled value just before
+    v. Both CDFs step only at pooled values, and between two values of
+    the partition its CDF is flat while the rest's rises, so the sup
+    over those two points per cell is the sup over every pooled value.
     """
     val = F.col(value) if isinstance(value, str) else value
     part = F.col(partition) if isinstance(partition, str) else partition
     base = df.where(val.isNotNull() & part.isNotNull()).select(
-        part.alias("partition"), val.alias("raw_v"))
+        part.alias("partition"), val.alias("v"))
     if n_bins is not None:
-        bounds = base.agg(F.min("raw_v").alias("lo"), F.max("raw_v").alias("hi"))
+        bounds = base.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
         base = base.crossJoin(F.broadcast(bounds)).select(
-            "partition",
-            _bin(F.col("raw_v"), F.col("lo"), F.col("hi"), n_bins).alias("v"),
-        )
-    else:
-        base = base.select("partition", F.col("raw_v").alias("v"))
+            "partition", _bin(F.col("v"), F.col("lo"), F.col("hi"), n_bins).alias("v"))
+    cells = base.groupBy("partition", "v").agg(F.count(F.lit(1)).alias("cnt"))
 
-    grid = _partition_vs_rest_grid(base, F.col("v"), F.col("partition"))
-    w = Window.partitionBy("partition").orderBy("v") \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cdf = grid.select(
-        "partition", "n_part", "n_rest",
-        F.sum("cnt").over(w).alias("cum_in"),
-        F.sum("cnt_rest").over(w).alias("cum_rest"),
+    running = Window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    pooled = cells.groupBy("v").agg(F.sum("cnt").alias("n_v")).select(
+        "v", "n_v",
+        F.sum("n_v").over(running.orderBy("v")).alias("cum_all"),
+        F.sum("n_v").over(Window.partitionBy()).alias("n_total"),
     )
-    return (
-        cdf.groupBy("partition")
-        .agg(
-            F.max("n_part").alias("n_rows"),
-            F.round(
-                F.max(F.abs(
-                    F.col("cum_in") / F.col("n_part")
-                    - F.col("cum_rest") / F.nullif(F.col("n_rest"), F.lit(0))
-                )), 6,
-            ).alias("ks"),
-        )
+    cdf = cells.join(pooled, "v").select(
+        "partition", "cnt", "n_v", "cum_all", "n_total",
+        F.sum("cnt").over(running.partitionBy("partition").orderBy("v")).alias("cum_in"),
+        F.sum("cnt").over(Window.partitionBy("partition")).alias("n_part"),
+    )
+    cnt, n_v, cum_all, cum_in, n_part = (
+        F.col(c) for c in ("cnt", "n_v", "cum_all", "cum_in", "n_part"))
+    n_rest = F.nullif(F.col("n_total") - n_part, F.lit(0))
+    gap_at = F.abs(cum_in / n_part - (cum_all - cum_in) / n_rest)
+    gap_before = F.abs((cum_in - cnt) / n_part
+                       - (cum_all - n_v - (cum_in - cnt)) / n_rest)
+    return cdf.groupBy("partition").agg(
+        F.max(n_part).alias("n_rows"),
+        F.round(F.max(F.greatest(gap_at, gap_before)), 6).alias("ks"),
     )
 
 
-def ks_stat_binned(
+def ks_stat(
     df: DataFrame, value: str | Column, group: str | Column,
-    group_a, group_b, n_bins: int = 256,
+    group_a, group_b,
 ) -> DataFrame:
-    """Histogram-CDF KS for continuous/unbounded columns: bucket first
-    (sketch path — bounded error 1/n_bins on the CDF), then the same
-    tiny cumulative window. Scales to any row count: one groupBy over
-    at most n_bins x 2 cells."""
+    """Exact two-sample KS statistic between groups a and b: the
+    two-partition case of :func:`ks_by_partition`, where a's rest is b.
+
+    Returns a single row (n_a, n_b, ks); a group with no rows has a
+    NULL count, and then ks is NULL.
+    """
     val = F.col(value) if isinstance(value, str) else value
     grp = F.col(group) if isinstance(group, str) else group
-    base = df.where(grp.isin([group_a, group_b]) & val.isNotNull())
-    bounds = base.agg(F.min(val).alias("lo"), F.max(val).alias("hi"))
-    binned = base.crossJoin(F.broadcast(bounds)).select(
-        _bin(val, F.col("lo"), F.col("hi"), n_bins).alias("v"),
-        (grp == group_a).cast("int").alias("is_a"),
-    )
-    per_bin = binned.groupBy("v").agg(
-        F.sum("is_a").alias("cnt_a"), F.sum(1 - F.col("is_a")).alias("cnt_b")
-    # lazy reuse barrier (r6, guide §7.2): the CDF below is consumed
-    # twice (crossJoin with its own totals) — without it the bounds +
-    # bin + groupBy chain over the corpus executes twice. n_bins rows.
-    ).localCheckpoint(eager=False)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cdf = per_bin.select(
-        F.sum("cnt_a").over(w).alias("cum_a"), F.sum("cnt_b").over(w).alias("cum_b")
-    )
-    return cdf.crossJoin(
-        cdf.agg(F.max("cum_a").alias("na"), F.max("cum_b").alias("nb"))
-    ).agg(
-        F.max("na").alias("n_a"),
-        F.max("nb").alias("n_b"),
-        F.round(F.max(F.abs(F.col("cum_a") / F.col("na") - F.col("cum_b") / F.col("nb"))), 6).alias("ks"),
+    two = df.where(grp.isin([group_a, group_b])).select(
+        val.alias("v"), (grp == group_a).alias("is_a"))
+    return ks_by_partition(two, "v", "is_a").agg(
+        F.max(F.when(F.col("partition"), F.col("n_rows"))).alias("n_a"),
+        F.max(F.when(~F.col("partition"), F.col("n_rows"))).alias("n_b"),
+        F.max("ks").alias("ks"),
     )
 
 
@@ -262,94 +173,43 @@ def psi_by_partition(
     term (the production-standard drift score; >0.2 is the usual
     "significant shift" rule of thumb).
 
-    Same shape as chi2_by_partition: ONE groupBy(partition, category)
-    shuffle, marginals by window over the aggregate-sized cells, and
-    the zero-obs remainder in closed form — for a zero cell
-    p_part = eps, so its term is (eps - p_rest)*ln(eps/p_rest);
-    summing those directly needs the grid, but rest-side proportions
-    are derivable per observed cell, so we materialize only the
-    missing-cell terms via the pooled-minus-observed trick on BOTH
-    sides of the product.  For clarity (and because the grid is
-    aggregate-sized anyway) this implementation builds the full
-    partition x category grid from the two marginals.
+    One groupBy(partition, category) shuffle, then the full
+    partition x category grid from the two aggregate-sized marginals:
+    unlike chi-square and KS, every pooled category absent from a
+    partition adds its own (eps - p_rest) * ln(eps / p_rest) term.
     """
     part = F.col(partition) if isinstance(partition, str) else partition
-    grid = _partition_vs_rest_grid(df, F.col(category), part)
+    cells = (
+        df.where(F.col(category).isNotNull() & part.isNotNull())
+        .groupBy(part.alias("partition"), F.col(category).alias("cat"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        # lazy reuse barrier: cells has FOUR consumers (three marginals
+        # + the grid join); without it the source groupBy executes once
+        # per consumer. partition x category rows, aggregate-sized.
+        .localCheckpoint(eager=False)
+    )
+    parts = cells.groupBy("partition").agg(F.sum("cnt").alias("n_part"))
+    cats = cells.groupBy("cat").agg(F.sum("cnt").alias("n_cat"))
+    tot = cells.agg(F.sum("cnt").alias("n_total"))
+    grid = (
+        parts.crossJoin(F.broadcast(cats))
+        .join(cells, ["partition", "cat"], "left")
+        .crossJoin(F.broadcast(tot))
+        .select("partition", "n_part",
+                (F.col("n_total") - F.col("n_part")).alias("n_rest"),
+                F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"), "n_cat")
+    )
     p_in = F.greatest(F.col("cnt") / F.col("n_part"), F.lit(epsilon))
     # n_rest = 0 (single-partition table): there IS no rest — PSI must
     # be NULL, not the epsilon-smoothed ~13+ that greatest() over the
     # null division produced (greatest skips NULLs)
     p_out = F.when(
         F.col("n_rest") > 0,
-        F.greatest(F.col("cnt_rest") / F.col("n_rest"), F.lit(epsilon)))
+        F.greatest((F.col("n_cat") - F.col("cnt")) / F.col("n_rest"), F.lit(epsilon)))
     return (
         grid.groupBy("partition")
         .agg(
             F.round(F.sum((p_in - p_out) * F.log(p_in / p_out)), 6).alias("psi"),
             F.max("n_part").alias("n_rows"),
         )
-    )
-
-
-def ks_from_quantile_sketch(
-    df: DataFrame, value: str | Column, partition: str | Column,
-    n_quantiles: int = 128, accuracy: int = 10000,
-) -> DataFrame:
-    """Per-partition KS estimated from MERGEABLE quantile sketches
-    (north-star wording: "KS over t-digest sketches compared across
-    partitions") — Spark's built-in `percentile_approx` aggregate is a
-    Greenwald-Khanna-family sketch: partial sketches merge map-side, so
-    the shuffle carries one sketch per partition, NOT the rows.
-
-    Each partition's sketch yields an n_quantiles-point inverse CDF;
-    the rest-of-table CDF is evaluated AT those points from its own
-    sketch grid; KS ≈ max gap between the two step functions.  Error is
-    bounded by sketch accuracy + 1/n_quantiles — the trade for never
-    materializing a per-value grid (use :func:`ks_by_partition` when
-    the domain is small enough for exactness).
-    """
-    val = F.col(value) if isinstance(value, str) else value
-    part = F.col(partition) if isinstance(partition, str) else partition
-    qs = [i / (n_quantiles - 1) for i in range(n_quantiles)]
-    base = df.where(val.isNotNull() & part.isNotNull()).select(
-        part.alias("partition"), val.alias("v"))
-    sk_part = base.groupBy("partition").agg(
-        F.percentile_approx("v", qs, accuracy).alias("grid"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    sk_all = base.agg(
-        F.percentile_approx("v", qs, accuracy).alias("grid_all"),
-        F.count(F.lit(1)).alias("n_all"),
-    )
-    # rest-CDF at x = (F_all(x)*n_all - F_part(x)*n_part) / n_rest.
-    # Evaluate both step-CDFs at the UNION of the two grids: for a
-    # sorted quantile grid g with levels q, F(x) ~= q[j] where j = last
-    # index with g[j] <= x — expressible per element with filter+size.
-    joined = sk_part.crossJoin(F.broadcast(sk_all))
-
-    def cdf_at(grid_col: str, x: Column) -> Column:
-        # fraction of the grid at or below x = empirical CDF estimate
-        return (
-            F.size(F.filter(F.col(grid_col), lambda g: g <= x))
-            / F.lit(float(n_quantiles))
-        )
-
-    both = joined.select(
-        "partition", "n_rows",
-        F.array_distinct(F.concat(F.col("grid"), F.col("grid_all"))).alias("xs"),
-        "grid", "grid_all", "n_all",
-    )
-    per_x = both.select(
-        "partition", "n_rows", "grid", "grid_all", "n_all",
-        F.explode("xs").alias("x"),
-    ).select(
-        "partition", "n_rows",
-        cdf_at("grid", F.col("x")).alias("f_part"),
-        ((cdf_at("grid_all", F.col("x")) * F.col("n_all")
-          - cdf_at("grid", F.col("x")) * F.col("n_rows"))
-         / F.nullif(F.col("n_all") - F.col("n_rows"), F.lit(0))).alias("f_rest"),
-    )
-    return per_x.groupBy("partition").agg(
-        F.max("n_rows").alias("n_rows"),
-        F.round(F.max(F.abs(F.col("f_part") - F.col("f_rest"))), 6).alias("ks_est"),
     )

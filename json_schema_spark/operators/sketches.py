@@ -1,110 +1,64 @@
-"""Storable Misra-Gries heavy-hitter summaries, a mergeable sketch
-beside the KLL quantile sketches of
+"""Storable heavy-hitter summaries per partition, on Spark's native
+frequent-items sketch (DataSketches ``ItemsSketch``, a Misra-Gries
+variant), beside the KLL quantile sketches of
 :mod:`json_schema_spark.operators.tdigest`.
 
 `operators/stats.py` already answers the question exactly
 (`heavy_hitters`); what it does not give you is a sketch you can KEEP.
-A summary is plain arrays, so per-partition summaries persist to the
-results :class:`~json_schema_spark.sources.icetable.IceTable` and merge
-across runs: "top domains this quarter" costs one scan of the NEW
-partition plus a metadata-sized merge of stored summaries — never a
-rescan of history. Distinct counts and quantiles need no Python
-sketch: Spark's storable HLL (``hll_sketch_agg`` / ``hll_union_agg``)
-and KLL (``kll_sketch_agg_double``, see tdigest.py) cover them.
+``approx_top_k_accumulate`` yields a struct holding the sketch binary,
+so per-partition summaries persist to the results
+:class:`~json_schema_spark.sources.icetable.IceTable` as rows of
+:data:`MG_SCHEMA` and merge across runs (``approx_top_k_combine``):
+"top domains this quarter" costs one scan of the NEW partition plus a
+metadata-sized merge of stored summaries — never a rescan of history.
+Distinct counts use Spark's storable HLL (``hll_sketch_agg`` /
+``hll_union_agg``) the same way.
 
-Plan shape (two stages):
+Plan shape: one ``groupBy(partition)`` aggregate. The sketch is a
+partial aggregate, so each task folds its rows into one sketch per
+partition value before the shuffle, which carries at most m counters
+per sketch, never rows. No Python runs over the values.
 
-* value prep JVM-side (column ops — no Python over raw values);
-* stage 1 ``mapInPandas``: each Arrow batch folds to one summary per
-  partition-value it contains;
-* stage 2 ``groupBy(partition).applyInPandas``: summary merge. The
-  shuffle carries m counter pairs per summary, not rows.
-
-Guarantee (pytest-pinned): with m counters, estimates undercount by at
-most the summary's tracked ``offset`` <= n/(m+1); any value with true
-frequency > n/(m+1) is guaranteed present (the classic frequent-items
-bound), and merging preserves it (offsets add).
+Accuracy: a sketch tracking m items counts exactly while its partition
+holds at most m distinct values (the exact regime). Beyond that it
+evicts the smallest counters: any item more frequent than about n/m
+survives with an estimate within about n/m of its true count, and
+items below that error are not reported.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MG_SCHEMA = ("partition string, items array<string>, counts array<long>, "
-             "offset long, n_rows long")
-
-
-# ---------------------------------------------------------------------------
-# Misra-Gries heavy-hitter summary
-# ---------------------------------------------------------------------------
-
-def mg_reduce(counts: dict[str, int], m: int) -> tuple[dict[str, int], int]:
-    """Reduce an exact count dict to <= m counters, returning the
-    decrement offset applied (the classic frequent-items step:
-    subtract the (m+1)-largest count from everyone, drop <= 0)."""
-    if len(counts) <= m:
-        return dict(counts), 0
-    srt = sorted(counts.values(), reverse=True)
-    off = srt[m]
-    return {k: v - off for k, v in counts.items() if v > off}, off
-
-
-def mg_merge(
-    summaries: list[tuple[dict[str, int], int]], m: int,
-) -> tuple[dict[str, int], int]:
-    """Merge summaries: counts add, then one more reduce; offsets add
-    (Agarwal et al., 'Mergeable Summaries')."""
-    total: dict[str, int] = {}
-    off_sum = 0
-    for counts, off in summaries:
-        off_sum += off
-        for k, v in counts.items():
-            total[k] = total.get(k, 0) + v
-    reduced, off = mg_reduce(total, m)
-    return reduced, off_sum + off
+MG_SCHEMA = ("partition string, sketch struct<sketch:binary,maxItemsTracked:int,"
+             "itemDataType:string,itemDataTypeDDL:string>, n_rows long")
 
 
 def mg_topk_by_partition(
     df: DataFrame, value: str | Column, by: str | Column, m: int = 64,
 ) -> DataFrame:
-    """One Misra-Gries summary row per partition (MG_SCHEMA): up to m
-    (item, adjusted-count) pairs plus the error ``offset``; true count
-    of any surviving item is within [count, count + offset]."""
+    """One frequent-items sketch row per partition (MG_SCHEMA) tracking
+    up to m items of ``value`` (compared as strings)."""
     val = F.col(value) if isinstance(value, str) else value
     part = F.col(by) if isinstance(by, str) else by
-    base = (
+    return (
         df.where(val.isNotNull() & part.isNotNull())
-        .select(part.cast("string").alias("partition"),
-                val.cast("string").alias("v"))
+        .groupBy(part.cast("string").alias("partition"))
+        .agg(F.call_function("approx_top_k_accumulate", val.cast("string"), F.lit(m))
+             .alias("sketch"),
+             F.count(F.lit(1)).alias("n_rows"))
     )
 
-    cols = ["partition", "items", "counts", "offset", "n_rows"]
 
-    def summary_row(pv: str, red: dict[str, int], off: int, n_rows: int) -> tuple:
-        items = sorted(red)  # deterministic layout
-        return (pv, items, [int(red[i]) for i in items], int(off), n_rows)
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [summary_row(pv, *mg_reduce(grp["v"].value_counts().to_dict(), m),
-                                len(grp))
-                    for pv, grp in pdf.groupby("partition", sort=False)]
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        red, off = mg_merge([mg_row_to_summary(r) for _, r in pdf.iterrows()], m)
-        return pd.DataFrame([summary_row(pdf["partition"].iloc[0], red, off,
-                                         int(pdf["n_rows"].sum()))], columns=cols)
-
-    return (base.mapInPandas(fold, MG_SCHEMA)
-            .groupBy("partition").applyInPandas(merge, MG_SCHEMA))
-
-
-def mg_row_to_summary(row) -> tuple[dict[str, int], int]:
-    return (dict(zip(row["items"], (int(c) for c in row["counts"]))),
-            int(row["offset"]))
+def mg_topk(summaries: DataFrame, k: int) -> DataFrame:
+    """The k most frequent items of each partition as (partition, item,
+    count), from rows of MG_SCHEMA; a partition's rows (one per stored
+    run) merge first."""
+    merged = summaries.groupBy("partition").agg(
+        F.call_function("approx_top_k_combine", F.col("sketch")).alias("sketch"))
+    return merged.select(
+        "partition",
+        F.explode(F.call_function("approx_top_k_estimate", F.col("sketch"), F.lit(k)))
+        .alias("top"),
+    ).select("partition", "top.item", "top.count")

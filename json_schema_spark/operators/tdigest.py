@@ -2,10 +2,8 @@
 native KLL sketch (DataSketches ``KllDoublesSketch``: Karnin, Lang &
 Liberty, "Optimal Quantile Approximation in Streams").
 
-`ks_from_quantile_sketch` (drift.py) already estimates KS from Spark's
-built-in percentile_approx sketch, but that sketch lives only inside
-one aggregation — it cannot be persisted. A KLL sketch is a binary
-value (``kll_sketch_agg_double``), so per-partition sketches can be
+This is the one quantile sketch of the engine. A KLL sketch is a
+binary value (``kll_sketch_agg_double``), so per-partition sketches can be
 written to the results :class:`~json_schema_spark.sources.icetable.IceTable`
 as rows of :data:`DIGEST_SCHEMA` and **merged across runs**
 (``kll_merge_agg_double``): when day D+1 arrives, drift of D+1 vs all

@@ -16,6 +16,26 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(group, fn, *args, **kwargs)`` runs ``fn`` under a
+    fresh job group; returns the number of Spark jobs it started and
+    its result."""
+    sc = spark.sparkContext
+
+    def count(group: str, fn, *args, **kwargs):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def webpages(spark):
     """Deterministic 5k-row synthetic webpage table (FIXTURES.md §1)."""

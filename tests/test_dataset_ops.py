@@ -3,15 +3,22 @@ uniqueness (salted), referential (anti-join), drift (chi2/KS), stats."""
 
 from __future__ import annotations
 
+from bisect import bisect_right
+from decimal import ROUND_HALF_UP, Decimal
+from math import floor
+
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from json_schema_spark.operators.drift import chi2_by_partition, ks_stat, ks_stat_binned
+from json_schema_spark.operators.drift import chi2_by_partition, ks_by_partition, ks_stat
 from json_schema_spark.operators.referential import (
     referential_verdict,
     referential_violations,
 )
 from json_schema_spark.operators.stats import column_stats, stats_long
 from json_schema_spark.operators.unique import duplicate_keys, uniqueness_verdict
+from json_schema_spark.session import local_frame
 from json_schema_spark.sources import tables as tb
 
 N = 5000
@@ -65,12 +72,83 @@ def test_chi2_flags_drift_day(webpages):
 
 def test_ks_exact_and_binned_agree(webpages):
     df = webpages.withColumn("tlen", F.char_length("text"))
-    exact = ks_stat(df, "tlen", "lang", "en", "de").collect()[0]
-    binned = ks_stat_binned(df, "tlen", "lang", "en", "de", n_bins=512).collect()[0]
-    assert exact["n_a"] == binned["n_a"]
-    assert abs(exact["ks"] - binned["ks"]) < 0.02
-    # same distribution generator for both langs -> small KS
-    assert exact["ks"] < 0.1
+    exact = {r["partition"]: r for r in ks_by_partition(df, "tlen", "lang").collect()}
+    binned = {r["partition"]: r for r in
+              ks_by_partition(df, "tlen", "lang", n_bins=512).collect()}
+    assert set(exact) == set(binned) and len(exact) > 2
+    for lang, r in exact.items():
+        assert r["n_rows"] == binned[lang]["n_rows"]
+        assert abs(r["ks"] - binned[lang]["ks"]) < 0.02, lang
+    # every lang draws its text from the same generator -> small KS
+    assert exact["en"]["ks"] < 0.1
+
+
+def _round6(x):
+    """Spark's round(x, 6) on a double: HALF_UP on its decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _ks(a: list[float], b: list[float]):
+    """Two-sample KS: the largest CDF gap over the pooled values."""
+    if not a or not b:
+        return None
+    a, b = sorted(a), sorted(b)
+    return _round6(max(abs(bisect_right(a, x) / len(a) - bisect_right(b, x) / len(b))
+                       for x in a + b))
+
+
+def _ks_by_partition_ref(rows, n_bins=None):
+    rows = [(p, v) for p, v in rows if p is not None and v is not None]
+    if n_bins is not None and rows:
+        lo, hi = min(v for _, v in rows), max(v for _, v in rows)
+        rows = [(p, min(n_bins - 1, floor((v - lo) / ((hi - lo) / n_bins + 1e-12))))
+                for p, v in rows]
+    parts = {p for p, _ in rows}
+    return {(p, sum(q == p for q, _ in rows),
+             _ks([v for q, v in rows if q == p], [v for q, v in rows if q != p]))
+            for p in parts}
+
+
+_value = st.one_of(st.none(), st.integers(0, 5), st.integers(-1000, 1000)).map(
+    lambda x: None if x is None else float(x))
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(rows=st.lists(st.tuples(st.sampled_from([None, "a", "b", "c"]), _value),
+                     max_size=40))
+@example(rows=[])
+@example(rows=[("a", 1.0), ("a", 1.0), ("a", 7.0), (None, 3.0)])  # lone partition
+def test_ks_matches_pure_python(spark, rows):
+    """ks_by_partition (exact and binned) and ks_stat equal a plain
+    sorted/bisect KS on frames with ties, NULLs and lone partitions."""
+    df = local_frame(spark, rows, "p string, v double")
+    for n_bins in (None, 4):
+        got = {tuple(r) for r in ks_by_partition(df, "v", "p", n_bins=n_bins).collect()}
+        assert got == _ks_by_partition_ref(rows, n_bins), n_bins
+    a = [v for p, v in rows if p == "a" and v is not None]
+    b = [v for p, v in rows if p == "b" and v is not None]
+    [stat] = ks_stat(df, "v", "p", "a", "b").collect()
+    assert tuple(stat) == (len(a) or None, len(b) or None, _ks(a, b))
+
+
+def _days(spark):
+    return spark.range(0, 20_000, numPartitions=4).select(
+        F.pmod(F.col("id"), F.lit(8)).cast("string").alias("day"),
+        F.pmod(F.abs(F.xxhash64("id")), F.lit(3000)).alias("v"))
+
+
+def test_ks_by_partition_job_budget(spark, count_jobs):
+    """Every partition's KS over the observed cells only: one aggregate
+    over the table, a per-partition running sum and a running sum over
+    the per-value marginal, with no partition x value grid."""
+    df = _days(spark)
+    binned, rows = count_jobs("ks-binned", lambda: ks_by_partition(
+        df, "v", "day", n_bins=256).collect())
+    assert len(rows) == 8
+    assert binned <= 7
+    exact, rows = count_jobs("ks-exact", lambda: ks_by_partition(df, "v", "day").collect())
+    assert len(rows) == 8
+    assert exact <= 5
 
 
 def test_single_pass_stats(webpages):
@@ -195,25 +273,6 @@ def test_range_join_no_nested_loop(spark):
     assert got == want and len(want) == 100 + 100 + 51 + 1
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan
-
-
-def test_ks_sketch_tracks_exact_ks(spark):
-    """Sketch-KS (mergeable percentile_approx grids) must track the
-    exact partition-vs-rest KS within the sketch error budget."""
-    from json_schema_spark.operators.drift import (
-        ks_by_partition,
-        ks_from_quantile_sketch,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    exact = {r["partition"]: r["ks"]
-             for r in ks_by_partition(docs, "n_chars", "source").collect()}
-    approx = {r["partition"]: r["ks_est"]
-              for r in ks_from_quantile_sketch(
-                  docs, "n_chars", "source", n_quantiles=128).collect()}
-    assert set(exact) == set(approx)
-    for p in exact:
-        assert abs(exact[p] - approx[p]) < 0.08, (p, exact[p], approx[p])
 
 
 def test_range_join_fractional_bounds_and_collision_guard(spark):

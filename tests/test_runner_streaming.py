@@ -262,21 +262,8 @@ def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
     assert va == vb and len(va) > 0
 
 
-def _count_jobs(spark, group: str, fn, *args, **kwargs):
-    """Run ``fn(*args, **kwargs)`` under a fresh job group; returns the
-    number of Spark jobs it started and its result."""
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn(*args, **kwargs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed asynchronously by the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
-def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path):
+def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path,
+                                                  count_jobs):
     """The pass runs a fixed set of Spark jobs per call: validating
     three pending partitions costs no more jobs than validating one."""
     df = spark.read.parquet(pages_parquet)
@@ -284,8 +271,8 @@ def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path)
     def jobs(n_parts: int) -> int:
         r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / f"p{n_parts}"),
                              run_id="j")
-        n_jobs, done = _count_jobs(spark, f"runner-jobs-{n_parts}",
-                                   r.run, df, max_partitions=n_parts)
+        n_jobs, done = count_jobs(f"runner-jobs-{n_parts}",
+                                  r.run, df, max_partitions=n_parts)
         assert len(done) == n_parts
         return n_jobs
 
@@ -295,7 +282,7 @@ def test_run_job_count_independent_of_partitions(spark, pages_parquet, tmp_path)
 
 
 def test_snapshot_increment_job_count_independent_of_partitions(
-        spark, pages_parquet, tmp_path):
+        spark, pages_parquet, tmp_path, count_jobs):
     """A snapshot-incremental call answers its partition set from the
     source's manifests and reads under the declared schema, so it runs
     only its real work — the violations write, the verdict aggregate
@@ -311,9 +298,9 @@ def test_snapshot_increment_job_count_independent_of_partitions(
     def jobs(n_parts: int) -> int:
         r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / f"p{n_parts}"),
                              run_id="j")
-        n_jobs, out = _count_jobs(spark, f"snapshot-jobs-{n_parts}",
-                                  r.run_snapshot_increment, src,
-                                  max_partitions=n_parts)
+        n_jobs, out = count_jobs(f"snapshot-jobs-{n_parts}",
+                                 r.run_snapshot_increment, src,
+                                 max_partitions=n_parts)
         assert len(out["partitions"]) == n_parts
         return n_jobs
 

@@ -1,72 +1,89 @@
-"""Misra-Gries storable summaries: error bound, bounded merge, Spark
-two-stage path."""
+"""Heavy-hitter summaries on Spark's native frequent-items sketch
+(operators/sketches.py): exact counts in the exact regime, the top
+items of a skewed stream, stored sketches merging across IceTable
+commits, and plans with no Python evaluation."""
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from json_schema_spark.operators import sketches as sk
 
-
-# ---------------------------------------------------------- Misra-Gries core
-
-def _zipf_counts():
-    # heavy head: item-i has count 2000/(i+1) for i<10, tail of 1s
-    counts = {f"hot{i}": 2000 // (i + 1) for i in range(10)}
-    counts.update({f"cold{i}": 1 for i in range(500)})
-    return counts
+PYTHON_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython")
 
 
-def test_mg_guarantee_and_error_bound():
-    counts = _zipf_counts()
-    n = sum(counts.values())
-    red, off = sk.mg_reduce(counts, m=64)
-    assert off <= n // (64 + 1)
-    # every item with true freq > n/(m+1) survives
-    for k, v in counts.items():
-        if v > n / 65:
-            assert k in red
-            assert red[k] <= v <= red[k] + off  # undercount bounded
+def _exact(df):
+    return {(r["p"], r["v"], r["cnt"]) for r in
+            df.groupBy("p", "v").agg(F.count(F.lit(1)).alias("cnt")).collect()}
 
 
-def test_mg_merge_preserves_heavy_hitters():
-    counts = _zipf_counts()
-    items = [k for k, v in counts.items() for _ in range(v)]
-    rng = np.random.RandomState(3)
-    rng.shuffle(items)
-    chunks = np.array_split(np.array(items), 9)
-    summs = []
-    for c in chunks:
-        vals, cnts = np.unique(c, return_counts=True)
-        summs.append(sk.mg_reduce(dict(zip(vals.tolist(), cnts.tolist())), 64))
-    merged, off = sk.mg_merge(summs, 64)
-    n = len(items)
-    assert off <= n // 65 * 9 + 9  # offsets add (per-chunk bound)
-    top5_true = sorted(counts, key=counts.get, reverse=True)[:5]
-    top5_mg = sorted(merged, key=merged.get, reverse=True)[:5]
-    assert top5_mg == top5_true
+def _counts(summaries, k):
+    return {tuple(r) for r in sk.mg_topk(summaries, k).collect()}
 
 
-# ------------------------------------------------------------- Spark paths
+def _small_domain(spark, lo=0, hi=12_000):
+    # 4 partitions x 40 distinct values, uneven counts, some NULLs
+    return spark.range(lo, hi).select(
+        (F.col("id") % 4).cast("string").alias("p"),
+        F.when(F.col("id") % 97 == 0, None)
+         .otherwise(F.concat(F.lit("v"), (F.col("id") * 7919 % 1601) % 40)).alias("v"))
 
-def test_mg_by_partition_vs_exact_topk(spark):
-    # skewed stream: per partition, 'dom0'..'dom4' hot, 200 cold singles
-    df = spark.range(0, 40_000).select(
+
+def _skewed(spark):
+    # per partition, 'dom0'..'dom4' hot, ~3,000 cold singles
+    return spark.range(0, 40_000).select(
         (F.col("id") % 4).cast("string").alias("p"),
         F.when(F.col("id") % 10 < 7,
                F.concat(F.lit("dom"), (F.col("id") % 5)))
          .otherwise(F.concat(F.lit("cold"), F.col("id"))).alias("v"),
     )
-    rows = sk.mg_topk_by_partition(df, "v", "p", m=32).collect()
-    from pyspark.sql import Window
-    w = Window.partitionBy("p").orderBy(F.desc("cnt"), "v")
-    exact_top = {
-        (r["p"], r["v"]) for r in
-        df.groupBy("p", "v").agg(F.count("*").alias("cnt"))
-        .withColumn("rk", F.row_number().over(w)).where("rk <= 5").collect()
-    }
-    for r in rows:
-        summ = dict(zip(r["items"], r["counts"]))
-        top5 = sorted(summ, key=summ.get, reverse=True)[:5]
-        for v in top5:
-            assert (r["partition"], v) in exact_top
-        assert len(r["items"]) <= 32
+
+
+def test_exact_regime_counts(spark):
+    df = _small_domain(spark)
+    summ = sk.mg_topk_by_partition(df, "v", "p", m=64)
+    n_rows = {r["partition"]: r["n_rows"] for r in summ.collect()}
+    assert n_rows == {r["p"]: r["n"] for r in
+                      df.where(F.col("v").isNotNull()).groupBy("p")
+                      .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert _counts(summ, 64) == _exact(df.where(F.col("v").isNotNull()))
+
+
+def test_top5_equals_exact_top5_on_skewed_stream(spark):
+    """With m=32 and ~3,000 distinct values per partition the sketch
+    evicts. Each partition of this stream has 3 or 4 hot items (2,000
+    rows each), so its exact top 5 ends in singles tied at count 1.
+    The sketch's top 5 is the hot items with their exact counts; it
+    reports no single, whose count is below its error."""
+    df = _skewed(spark)
+    exact = {(p, v): cnt for p, v, cnt in _exact(df)}
+    got = _counts(sk.mg_topk_by_partition(df, "v", "p", m=32), 5)
+    for part in "0123":
+        want = sorted(((v, c) for (p, v), c in exact.items() if p == part),
+                      key=lambda vc: -vc[1])[:5]
+        hot = {(v, c) for v, c in want if c > 1}
+        assert {c for _, c in hot} == {2000} and len(hot) >= 3 and want[-1][1] == 1
+        assert {(v, c) for p, v, c in got if p == part} == hot
+
+
+def test_stored_sketches_merge_to_exact_counts(spark, tmp_path):
+    """Two runs append their summaries to an IceTable; the stored rows
+    of each partition merge to the counts of both runs' data."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    store = IceTable.create(spark, str(tmp_path / "mg"), sk.MG_SCHEMA, ["partition"])
+    first, second = _small_domain(spark, 0, 5_000), _small_domain(spark, 5_000, 12_000)
+    for run in (first, second):
+        store.append(sk.mg_topk_by_partition(run, "v", "p", m=64))
+    assert len(store.snapshots()) == 2
+    assert store.scan().count() == 8
+    assert _counts(store.scan(), 64) == _exact(
+        first.unionByName(second).where(F.col("v").isNotNull()))
+
+
+def test_sketch_plans_have_no_python(spark):
+    summ = sk.mg_topk_by_partition(_skewed(spark), "v", "p", m=32)
+    top = sk.mg_topk(summ, 5)
+    for q in (summ, top):
+        q.collect()
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert "approx_top_k" in plan, plan
+        assert not [n for n in PYTHON_NODES if n in plan], plan
