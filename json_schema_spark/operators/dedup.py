@@ -82,28 +82,35 @@ def shingle_grams(
 # exact + fingerprint
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dup groups: (text_hash, n_dups, keep_id). keep_id = min id
-    (deterministic survivor). One hash-aggregation; hot hash values
-    are bounded by group size, partial agg handles them map-side."""
+def text_groups(
+    df: DataFrame, id_col: str, text_col: str, normalized: bool = False,
+) -> DataFrame:
+    """Every group of equal non-null texts, singletons included:
+    (text_hash, n_dups, keep_id), or (fp, n_dups, keep_id) on the
+    normalized-text fingerprint. keep_id = min id (deterministic
+    survivor). One hash-aggregation; hot hash values are bounded by
+    group size, partial agg handles them map-side."""
+    text = F.col(text_col)
+    key, hashed = ("fp", F.md5(_norm_text(text))) if normalized \
+        else ("text_hash", F.md5(text))
     return (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
-        .groupBy("text_hash")
+        df.where(text.isNotNull())
+        .select(hashed.alias(key), F.col(id_col))
+        .groupBy(key)
         .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n_dups") > 1)
     )
+
+
+def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact dup groups: (text_hash, n_dups, keep_id) with n_dups > 1."""
+    return text_groups(df, id_col, text_col).where(F.col("n_dups") > 1)
 
 
 def fingerprint_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Near-exact dup groups on the normalized-text fingerprint."""
-    return (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.md5(_norm_text(F.col(text_col))).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keep_id"))
+    """Near-exact dup groups on the normalized-text fingerprint:
+    (fp, n_dups, keep_id) with n_dups > 1."""
+    return text_groups(df, id_col, text_col, normalized=True) \
         .where(F.col("n_dups") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -98,7 +98,9 @@ def ks_by_partition(
     1/n_bins); leave None for exact KS.
 
     Shape: ONE groupBy(partition, value) over the table gives the
-    observed cells; no partition x value grid is built. A running sum
+    observed cells; no partition x value grid is built. With
+    ``n_bins`` the cells are binned, between the min and max over the
+    cells, and re-aggregated: the input is read once. A running sum
     per partition gives the partition's count ``cum_in`` at each of its
     values; a running sum over the per-value marginal (|distinct
     values| rows, joined back on the value) gives the pooled count
@@ -110,13 +112,16 @@ def ks_by_partition(
     """
     val = F.col(value) if isinstance(value, str) else value
     part = F.col(partition) if isinstance(partition, str) else partition
-    base = df.where(val.isNotNull() & part.isNotNull()).select(
-        part.alias("partition"), val.alias("v"))
+    cells = df.where(val.isNotNull() & part.isNotNull()).groupBy(
+        part.alias("partition"), val.alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
     if n_bins is not None:
-        bounds = base.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        base = base.crossJoin(F.broadcast(bounds)).select(
-            "partition", _bin(F.col("v"), F.col("lo"), F.col("hi"), n_bins).alias("v"))
-    cells = base.groupBy("partition", "v").agg(F.count(F.lit(1)).alias("cnt"))
+        # the bounds over the cells are those over the rows; one task
+        # reads every cell, as the pooled running sum below reads
+        # every pooled value
+        everything = Window.partitionBy()
+        lo, hi = F.min("v").over(everything), F.max("v").over(everything)
+        cells = cells.select("partition", _bin(F.col("v"), lo, hi, n_bins).alias("v"), "cnt") \
+            .groupBy("partition", "v").agg(F.sum("cnt").alias("cnt"))
 
     running = Window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     pooled = cells.groupBy("v").agg(F.sum("cnt").alias("n_v")).select(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_schema_spark.operators.unique import key_verdicts
+
 
 def referential_violations(
     df: DataFrame,
@@ -89,25 +91,7 @@ def fd_verdict(
 ) -> DataFrame:
     """One verdict row for the FD check: (check, pass, n_violations,
     violating_key_frac) with n_violations = violating keys and the
-    frac over all (non-null-determinant) keys."""
+    frac over all (non-null-determinant) keys; a projection of
+    :func:`~json_schema_spark.operators.unique.key_verdicts`."""
     dets = [determinant] if isinstance(determinant, str) else list(determinant)
-    nn = df
-    for c in dets:
-        nn = nn.where(F.col(c).isNotNull())
-    keys = nn.groupBy(*dets).agg(
-        (F.count_distinct(F.col(dependent))
-         + F.max(F.col(dependent).isNull().cast("int")))
-        .alias("n_dep_values"))
-    name = "+".join(dets)
-    return keys.agg(
-        F.lit(f"fd({name}->{dependent})").alias("check"),
-        (F.coalesce(F.sum((F.col("n_dep_values") > 1).cast("long")),
-                    F.lit(0)) == 0).alias("pass"),
-        F.coalesce(F.sum((F.col("n_dep_values") > 1).cast("long")),
-                   F.lit(0)).alias("n_violations"),
-        F.when(F.count(F.lit(1)) > 0,
-               F.round(F.coalesce(
-                   F.sum((F.col("n_dep_values") > 1).cast("long")),
-                   F.lit(0)) / F.count(F.lit(1)), 6))
-        .otherwise(F.lit(0.0)).alias("violating_key_frac"),
-    )
+    return key_verdicts(df, dets, [dependent]).select(F.inline("fd"))

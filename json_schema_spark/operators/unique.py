@@ -1,14 +1,21 @@
-"""Dataset-level uniqueness: salted two-stage aggregation (SURVEY.md §2.4).
+"""Dataset-level uniqueness and key verdicts (SURVEY.md §2.4).
 
 Generalizes per-row ``uniqueItems`` deep-distinct
 (/root/reference/src/validators.lisp:632-639) to a table-level key
 uniqueness check.
 
-Scale posture: a single ``groupBy(key).count()`` already does map-side
-partial aggregation, but when one key is pathologically hot (the
+Verdicts: :func:`key_verdicts` answers every ``unique`` check on a key
+and every functional dependency ``key -> dep`` from ONE
+``groupBy(key)`` and one global aggregate, so the key is scanned and
+shuffled once for all of them; :func:`uniqueness_verdict` and
+``referential.fd_verdict`` are its projections. A hot key costs no
+reducer more than one partial per map task: the groupBy aggregates
+map-side first.
+
+Listing the duplicate keys themselves (:func:`duplicate_keys`) is
+salted two-stage aggregation. When one key is pathologically hot (the
 north-rule skew axis: one domain/url holding a large fraction of rows)
-the single reducer owning that key still receives every partial. The
-two-stage salted form bounds any reducer's share of a hot key to
+the two-stage form bounds any reducer's share of a hot key to
 1/salt_width of its partials:
 
     stage 1: groupBy(key, salt) -> partial counts   (salt = hash % w)
@@ -23,6 +30,8 @@ task retry determinism).
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -96,14 +105,56 @@ def duplicate_keys(
     return stage2
 
 
-def uniqueness_verdict(df: DataFrame, key_cols: list[str], **kw) -> DataFrame:
-    """Aggregate verdict row: (check, pass, n_violating_keys,
-    n_violating_rows) — a partition passes iff zero duplicate keys
-    ("valid iff errors nil", src/json-schema.lisp:33-38)."""
-    dups = duplicate_keys(df, key_cols, **kw)
-    return dups.agg(
+def key_verdicts(
+    df: DataFrame, key_cols: list[str], dependents: list[str] | tuple = (),
+) -> DataFrame:
+    """The uniqueness verdict on ``key_cols`` and the functional-
+    dependency verdict ``key_cols -> dep`` for every ``dep`` in
+    ``dependents``, from ONE ``groupBy(key)`` and one global aggregate.
+
+    Returns one row: ``unique`` (struct of :func:`uniqueness_verdict`'s
+    columns) and ``fd`` (array of :func:`~json_schema_spark.operators.
+    referential.fd_verdict` structs, one per dependent, in order).
+
+    NULL rules are those of the unfused checks: for ``unique`` a NULL
+    key is a group like any other (as :func:`duplicate_keys` groups
+    it); for ``fd`` a key with a NULL component is excluded, and a NULL
+    dependent counts as one more distinct value (``count_distinct``
+    ignores NULLs, so presence is tracked explicitly).
+    """
+    keyed = reduce(operator.and_, [F.col(c).isNotNull() for c in key_cols])
+    groups = df.groupBy(*key_cols).agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[(F.count_distinct(F.col(d)) + F.max(F.col(d).isNull().cast("int")))
+          .alias(f"__d{i}") for i, d in enumerate(dependents)],
+    ).withColumn("__keyed", keyed)
+
+    dup = F.col("__n") > 1
+    n_dup_keys = F.coalesce(F.sum(dup.cast("long")), F.lit(0))
+    unique = F.struct(
         F.lit("unique(" + ",".join(key_cols) + ")").alias("check"),
-        (F.count(F.lit(1)) == 0).alias("pass"),
-        F.count(F.lit(1)).alias("n_violating_keys"),
-        F.coalesce(F.sum("dup_count"), F.lit(0)).alias("n_violating_rows"),
+        (n_dup_keys == 0).alias("pass"),
+        n_dup_keys.alias("n_violating_keys"),
+        F.coalesce(F.sum(F.when(dup, F.col("__n"))), F.lit(0))
+        .alias("n_violating_rows"),
     )
+    n_keys = F.sum(F.col("__keyed").cast("long"))
+    fds = []
+    for i, dep in enumerate(dependents):
+        bad = F.coalesce(F.sum(
+            (F.col("__keyed") & (F.col(f"__d{i}") > 1)).cast("long")), F.lit(0))
+        fds.append(F.struct(
+            F.lit(f"fd({'+'.join(key_cols)}->{dep})").alias("check"),
+            (bad == 0).alias("pass"),
+            bad.alias("n_violations"),
+            F.when(n_keys > 0, F.round(bad / n_keys, 6))
+            .otherwise(F.lit(0.0)).alias("violating_key_frac"),
+        ))
+    return groups.agg(unique.alias("unique"), F.array(*fds).alias("fd"))
+
+
+def uniqueness_verdict(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Aggregate verdict row: (check, pass, n_violating_keys,
+    n_violating_rows) — a table passes iff zero duplicate keys
+    ("valid iff errors nil", src/json-schema.lisp:33-38)."""
+    return key_verdicts(df, key_cols).select("unique.*")

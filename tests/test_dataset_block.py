@@ -270,3 +270,138 @@ def test_fd_spec_block_verdict_row(spark, tmp_path):
     assert strict.check == "fd(det->dep)" and not strict["pass"]
     assert strict.n_violations == 1 and strict.metric == 0.5
     assert tolerant["pass"]  # 0.5 <= 0.6 tolerated
+
+
+# ---------------------------------------------------------------------------
+# unique + fd from one key aggregate; the block as concurrent tasks
+# ---------------------------------------------------------------------------
+
+def test_key_verdicts_match_unfused_reference(spark):
+    """key_verdicts, uniqueness_verdict and fd_verdict against
+    duplicate_keys and fd_violations: duplicate and NULL urls, a
+    NULL-determinant row, a NULL dependent and a two-column key."""
+    from pyspark.sql import functions as F
+
+    from json_schema_spark.operators.referential import fd_verdict, fd_violations
+    from json_schema_spark.operators.unique import (
+        duplicate_keys,
+        key_verdicts,
+        uniqueness_verdict,
+    )
+
+    df = spark.createDataFrame([
+        ("a", "en", 1), ("a", "en", 1),      # duplicate, consistent
+        ("b", "en", 1), ("b", "de", 2),      # duplicate, two langs
+        (None, "en", 1), (None, "de", 1),    # NULL url: a unique group, no fd key
+        ("c", None, 1), ("c", "fr", 1),      # a value + NULL: two values
+        ("d", None, 2),                      # only NULL: one value
+        ("e", "en", None),                   # NULL in the second key column
+    ], "url string, lang string, k2 long")
+
+    def reference(key, deps):
+        dups = duplicate_keys(df, key).agg(
+            F.count(F.lit(1)).alias("k"),
+            F.coalesce(F.sum("dup_count"), F.lit(0)).alias("r")).collect()[0]
+        n_keys = df.dropna(subset=key).select(*key).distinct().count()
+        fds = []
+        for dep in deps:
+            bad = fd_violations(df, key, dep).count()
+            fds.append((f"fd({'+'.join(key)}->{dep})", bad == 0, bad,
+                        round(bad / n_keys, 6)))
+        return (f"unique({','.join(key)})", dups["k"] == 0, dups["k"], dups["r"]), fds
+
+    for key, deps, want in [
+        (["url"], ["lang", "k2"],
+         (("unique(url)", False, 4, 8),
+          [("fd(url->lang)", False, 2, 0.4), ("fd(url->k2)", False, 1, 0.2)])),
+        (["url", "k2"], ["lang"],
+         (("unique(url,k2)", False, 3, 6),
+          [("fd(url+k2->lang)", False, 1, 0.2)])),
+    ]:
+        assert reference(key, deps) == want
+        row = key_verdicts(df, key, deps).collect()[0]
+        assert (tuple(row["unique"]), [tuple(f) for f in row["fd"]]) == want
+        u = uniqueness_verdict(df, key)
+        assert u.columns == ["check", "pass", "n_violating_keys", "n_violating_rows"]
+        assert tuple(u.collect()[0]) == want[0]
+        for dep, fd_want in zip(deps, want[1]):
+            v = fd_verdict(df, key, dep)
+            assert v.columns == ["check", "pass", "n_violations", "violating_key_frac"]
+            assert tuple(v.collect()[0]) == fd_want
+
+
+def _ungrouped_jobs(spark) -> set[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_dataset_block_job_budget(spark, webpages, tmp_path, count_jobs):
+    """The benchmark's dataset block over parquet: the checks run as
+    concurrent tasks over shared scans, every job under the caller's
+    job group (28 jobs when the checks ran one after another)."""
+    from perfbench.corpora import DATASET_SPEC
+
+    webpages.write.partitionBy("warc_day").parquet(str(tmp_path / "web"))
+    df = spark.read.parquet(str(tmp_path / "web"))
+    runner = ValidationRunner(spark, DATASET_SPEC, str(tmp_path / "res"), run_id="jb")
+    dims = {"lang_dim": tb.lang_dim(spark)}
+    before = _ungrouped_jobs(spark)
+    n_jobs, rows = count_jobs(
+        "dataset-block", lambda: runner.run_dataset_checks(df, dims=dims).collect())
+    assert _ungrouped_jobs(spark) - before == set()
+    assert [r["check"] for r in rows] == [
+        "unique(url)", "ref(lang->lang_code)", "fd(url->lang)",
+        "drift_chi2(lang by warc_day)", "drift_ks(char_length(text) by warc_day)",
+        "drift_tdigest(char_length(text) by warc_day)", "dedup_exact(text)"]
+    assert n_jobs <= 19
+
+
+def test_dataset_block_raises_before_any_job(spark, webpages, tmp_path, count_jobs):
+    """A missing dims table and an unknown quality signal raise before
+    any check starts a job, even with checks ahead of them."""
+    bad_signal = {"draft": "draft7", "columns": {}, "dataset": {
+        "unique": ["url"],
+        "quality": [{"column": "text", "id": "url", "signal": "vibes"}]}}
+    for name, spec, dims, match in [
+        ("missing-dim", FULL_SPEC, {}, "lang_dim"),
+        ("bad-signal", bad_signal, None, "vibes"),
+    ]:
+        runner = ValidationRunner(spark, spec, str(tmp_path / name), run_id=name)
+
+        def attempt():
+            with pytest.raises(ValueError, match=match):
+                runner.run_dataset_checks(webpages, dims=dims)
+
+        before = _ungrouped_jobs(spark)
+        n_jobs, _ = count_jobs(name, attempt)
+        assert n_jobs == 0 and _ungrouped_jobs(spark) - before == set()
+
+
+def test_dataset_block_incremental_entries_run_in_order(spark, webpages, tmp_path):
+    """Two incremental entries on one ledger in one block (with a check
+    between them) give the rows and the ledger of two calls in order."""
+    from json_schema_spark.sources.icetable import IceTable
+
+    def entry(led, snap):
+        return {"column": "text", "id": "url", "method": "incremental",
+                "ledger": led, "snapshot": snap, "max_dup_frac": 0.001}
+
+    def spec(dedup):
+        return {"draft": "draft7", "columns": {}, "dataset": {"dedup": dedup}}
+
+    def run(name, dedup):
+        runner = ValidationRunner(spark, spec(dedup), str(tmp_path / name), run_id=name)
+        return [tuple(r) for r in runner.run_dataset_checks(webpages).collect()]
+
+    one = str(tmp_path / "one")
+    exact = {"column": "text", "id": "url", "method": "exact"}
+    block = run("block", [entry(one, 0), exact, entry(one, 1)])
+
+    two = str(tmp_path / "two")
+    calls = run("call0", [entry(two, 0)]) + run("call1", [entry(two, 1)])
+    assert [block[0], block[2]] == calls
+    assert calls[1][2] > 0  # snapshot 1 saw snapshot 0's texts as history
+    assert block[1][0] == "dedup_exact(text)"
+    assert sorted(map(tuple, IceTable(spark, one).scan().collect())) == \
+        sorted(map(tuple, IceTable(spark, two).scan().collect()))
