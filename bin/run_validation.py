@@ -16,8 +16,8 @@ Deployment shape (north rule):
 driver and the executors share, because the results IceTables list and
 commit their files through the local filesystem. A URI there is
 rejected. The same invocation works on local[*] for smoke runs.
-Re-running with the same --results resumes from the manifest
-(completed partitions are skipped). Exit code 0 iff every check passed on every partition
+Re-running with the same --results resumes from the verdict table
+(committed partitions are skipped). Exit code 0 iff every check passed on every partition
 processed in THIS invocation ("valid iff errors nil",
 /root/reference/src/json-schema.lisp:33-38).
 """
@@ -38,7 +38,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="parquet path of the documents table")
     ap.add_argument("--spec", required=True, help="constraint-spec JSON file")
-    ap.add_argument("--results", required=True, help="results directory, a local or mounted POSIX path (manifest + verdicts and violations IceTables)")
+    ap.add_argument("--results", required=True, help="results directory, a local or mounted POSIX path (the verdicts and violations IceTables; the verdict commits are the checkpoint)")
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument(
         "--partition-col", default="warc_day",

@@ -119,14 +119,15 @@ def key_verdicts(
     NULL rules are those of the unfused checks: for ``unique`` a NULL
     key is a group like any other (as :func:`duplicate_keys` groups
     it); for ``fd`` a key with a NULL component is excluded, and a NULL
-    dependent counts as one more distinct value (``count_distinct``
-    ignores NULLs, so presence is tracked explicitly).
+    dependent counts as one more value. ``min <> max`` plus a NULL flag
+    answers "more than one value" in the one shuffle on the key, where
+    ``count_distinct`` would first shuffle on ``(key, dep)``.
     """
     keyed = reduce(operator.and_, [F.col(c).isNotNull() for c in key_cols])
     groups = df.groupBy(*key_cols).agg(
         F.count(F.lit(1)).alias("__n"),
-        *[(F.count_distinct(F.col(d)) + F.max(F.col(d).isNull().cast("int")))
-          .alias(f"__d{i}") for i, d in enumerate(dependents)],
+        *[F.coalesce((F.min(d) != F.max(d)) | (F.max(F.col(d).isNull()) & (F.count(d) > 0)),
+                     F.lit(False)).alias(f"__d{i}") for i, d in enumerate(dependents)],
     ).withColumn("__keyed", keyed)
 
     dup = F.col("__n") > 1
@@ -142,7 +143,7 @@ def key_verdicts(
     fds = []
     for i, dep in enumerate(dependents):
         bad = F.coalesce(F.sum(
-            (F.col("__keyed") & (F.col(f"__d{i}") > 1)).cast("long")), F.lit(0))
+            (F.col("__keyed") & F.col(f"__d{i}")).cast("long")), F.lit(0))
         fds.append(F.struct(
             F.lit(f"fd({'+'.join(key_cols)}->{dep})").alias("check"),
             (bad == 0).alias("pass"),

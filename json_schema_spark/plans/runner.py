@@ -7,8 +7,8 @@ pass over a cached projection of its failure flags — a fixed handful
 of Spark jobs per call, not per partition — recording a
 verdict/metrics/lineage row per (partition, check) in a results
 table. A run interrupted after K partitions resumes by skipping the
-partitions already in the manifest — no duplicated results, identical
-final verdicts.
+partitions that already have verdicts — no duplicated results,
+identical final verdicts.
 
 Two entry points share that pass (``_validate``): ``run()`` takes a
 plain DataFrame and finds its pending partitions with a ``distinct``
@@ -26,17 +26,20 @@ missing dims table, an unknown dedup method or quality signal) raises
 before any job starts.
 
 Storage layout: two IceTables (``sources/icetable.py``), both
-partitioned by ``partition``, and a JSON checkpoint. Each ``run()``
-call replaces exactly its pending partitions in one commit per table,
-so a redo never duplicates rows, a partition that is now clean loses
-its old violation rows, and earlier results stay readable by time
-travel:
+partitioned by ``partition``, and nothing else. Each call replaces
+exactly its pending partitions in one commit per table, violations
+first, so a redo never duplicates rows, a partition that is now clean
+loses its old violation rows, and earlier results stay readable by
+time travel:
 
     <results_dir>/verdicts_ice/     IceTable of verdict rows
     <results_dir>/violations_ice/   IceTable of violation rows (created
                                     on the first run() from their schema)
-    <results_dir>/manifest.json     {completed: {P: metrics},
-                                     __snapshot_watermark, __diff_id}
+
+The verdict commit is the only checkpoint: it lands the partitions'
+verdicts (which mark them done) and, in its snapshot summary, the rest
+of the runner's state. A crash before it redoes the call, idempotently;
+a crash after it leaves nothing to redo.
 
 Verdict row schema (FIXTURES.md §5):
     run_id, partition, check, pass, n_rows, n_violations,
@@ -45,7 +48,6 @@ Verdict row schema (FIXTURES.md §5):
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass, field
@@ -66,27 +68,13 @@ from json_schema_spark.sources.icetable import IceTable, require_local_path
 from json_schema_spark.spec import ConstraintSpec
 
 
-class _Manifest:
-    """Atomic JSON manifest (write-tmp + rename). The checkpoint unit
-    is one partition value; idempotent re-marks are fine."""
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def load(self) -> dict:
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                return json.load(f)
-        return {"completed": {}}
-
-    def save(self, state: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1, default=str)
-        os.replace(tmp, self.path)  # atomic on POSIX
-
-    def completed(self) -> set[str]:
-        return set(self.load()["completed"].keys())
+# verdict snapshot-summary keys: run_snapshot_increment's watermark and
+# open budgeted diff with its done partitions; the partitions a spec
+# without per-row checks (so without verdict rows) completed
+_WATERMARK, _DIFF, _DIFF_DONE = "runner_watermark", "runner_diff", "runner_diff_done"
+_DONE = "runner_done"
+# the Hive path value Spark writes for a NULL or empty-string partition
+_HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -113,25 +101,21 @@ class ValidationRunner:
                              "IceTables; use_icetable=False is not supported")
         require_local_path(self.results_dir)
         os.makedirs(self.results_dir, exist_ok=True)
-        self.manifest = _Manifest(os.path.join(self.results_dir, "manifest.json"))
         # the older layout kept results as plain parquet under verdicts/
-        # and violations/; resuming from its manifest would skip those
-        # partitions while their results stay out of view
+        # and violations/, which verdicts()/violations() do not show
         legacy = [d for d in ("verdicts", "violations")
                   if os.path.isdir(os.path.join(self.results_dir, d))]
-        if legacy or (self.manifest.completed() and not os.path.isdir(
-                os.path.join(self.results_dir, "violations_ice"))):
+        if legacy:
             raise ValueError(
-                f"{self.results_dir!r} holds results in the older plain-"
-                f"parquet layout ({', '.join(legacy) or 'manifest.json'}); "
-                "start a fresh results directory")
+                f"{self.results_dir!r} holds results in the older plain-parquet "
+                f"layout ({', '.join(legacy)}); start a fresh results directory")
         self._verdict_table = self._table("verdicts_ice", self._VERDICT_DDL)
 
     def _table(self, name: str, ddl: str) -> IceTable:
         """Open the results IceTable ``name``, creating it from ``ddl``
         on first use."""
         root = os.path.join(self.results_dir, name)
-        if os.path.exists(os.path.join(root, "metadata", "version-hint.text")):
+        if os.path.exists(os.path.join(root, "metadata", "v0.metadata.json")):
             return IceTable(self.spark, root)
         return IceTable.create(self.spark, root, ddl, ["partition"])
 
@@ -141,12 +125,23 @@ class ValidationRunner:
             self.compiled = compile_spec(self.spec, df)
         return self.compiled
 
+    def completed(self) -> set[str]:
+        """The partitions the verdict table's current files hold, or a
+        verdict commit names (metadata only, no Spark job). Its
+        partitions are never NULL, so the Hive default is ``""``."""
+        meta = self._verdict_table._read_meta()
+        done = {e["partition"]["partition"]
+                for e in self._verdict_table.plan_files(_meta=meta)}
+        for snap in meta["snapshots"]:
+            done.update(snap["summary"].get(_DONE, ()))
+        return {"" if p == _HIVE_DEFAULT else p for p in done}
+
     def pending_partitions(self, df: DataFrame, partition_col: str) -> list[str]:
         """All non-null partition values of ``df`` as strings (Spark's
         ``cast(string)``), minus completed ones. The distinct() runs
         Spark jobs that scan ``df``, even a partitioned parquet source
         (``spark.sql.optimizer.metadataOnly`` is off by default)."""
-        done = self.manifest.completed()
+        done = self.completed()
         return sorted(
             r[0] for r in
             df.select(F.col(partition_col).cast("string")).distinct().collect()
@@ -162,11 +157,12 @@ class ValidationRunner:
         """Validate the pending partitions of ``df`` in one pass;
         returns the partitions processed.
 
-        The pending set is every partition value of ``df`` not yet in
-        the manifest (a ``distinct`` over ``df``), cut to ``max_partitions``
-        (tests use it to simulate an interruption). The manifest is
-        marked per partition: an interrupted call is redone on resume,
-        idempotently, and completed partitions are skipped."""
+        The pending set is every partition value of ``df`` without
+        verdicts yet (:meth:`completed`, minus a ``distinct`` over
+        ``df``), cut to ``max_partitions`` (tests use it to simulate an
+        interruption). The call's verdict commit is its checkpoint: a
+        call interrupted before it is redone on resume, idempotently,
+        and the partitions it landed are skipped."""
         pending = self.pending_partitions(df, partition_col)
         if max_partitions is not None:
             pending = pending[:max_partitions]
@@ -177,9 +173,11 @@ class ValidationRunner:
         return pending
 
     def _validate(self, slice_df: DataFrame, partition_col: str,
-                  pending: list[str]) -> None:
+                  pending: list[str], summary: dict | None = None) -> None:
         """Validate ``slice_df``, the rows of the ``pending`` partitions,
-        and record their results.
+        and record their results; ``summary`` goes into the verdict
+        commit's snapshot summary, and so does ``pending`` when the spec
+        has no per-row checks (:meth:`completed`).
 
         Every check's predicate runs once per row, in one projection
         of the id columns and failure flags (``compiler._failed``),
@@ -191,6 +189,8 @@ class ValidationRunner:
         partitions taken, by the id columns and one boolean per check
         per row."""
         compiled = self._compile(slice_df)
+        if not compiled.checks:
+            summary = {**(summary or {}), _DONE: pending}
         t0 = time.monotonic()
         # two actions read the slice (violation rows + verdict agg):
         # cache only the ids and every check's failure flag, so each
@@ -227,12 +227,10 @@ class ValidationRunner:
                     for r in flags.groupBy("partition").agg(*aggs).collect()}
             wall_ms = int((time.monotonic() - t0) * 1000)
 
-            verdicts, completed = [], {}
+            verdicts = []
             for part in pending:
                 row = rows.get(part)
                 n = row["n_rows"] if row else 0
-                completed[part] = {"run_id": self.run_id, "n_rows": n,
-                                   "wall_ms": wall_ms}
                 files = [f for f in (row["files"] if row else []) if f]
                 for i, c in enumerate(compiled.checks):
                     nv = row[f"v{i}"] if row else 0
@@ -243,11 +241,8 @@ class ValidationRunner:
                         files, wall_ms,
                     ))
             vdf = local_frame(self.spark, verdicts, self._VERDICT_DDL)
-            self._verdict_table.overwrite_partitions(vdf.coalesce(1), pending)
-
-            state = self.manifest.load()
-            state["completed"].update(completed)
-            self.manifest.save(state)
+            self._verdict_table.overwrite_partitions(vdf.coalesce(1), pending,
+                                                     summary=summary)
         finally:
             flags.unpersist()
 
@@ -275,20 +270,19 @@ class ValidationRunner:
         late-rows-only results, silently flipping a failing partition
         to pass.
 
-        Complements :meth:`run`'s partition-manifest resume — which
-        skips completed partitions and would therefore miss LATE
-        files landing in them. The watermark lives in the same results
-        manifest (key ``__snapshot_watermark``), so a crash between
-        validate and advance just re-validates the same diff
-        (idempotent: verdicts overwrite per partition). The previous
-        verdict and violation rows of a re-validated partition stay
+        Complements :meth:`run`'s resume, which skips partitions that
+        have verdicts and would therefore miss LATE files landing in
+        them. The previous rows of a re-validated partition stay
         readable through the results tables' snapshot history.
 
-        ``max_partitions`` budgets one invocation; the watermark only
-        advances once the WHOLE diff is drained, so budgeted runs
-        continue the same diff. An expired watermark snapshot (source
-        history truncated past it) re-validates every current
-        partition rather than failing every subsequent run.
+        The watermark rides in the summary of the verdict commit that
+        drains the diff (one of no files if the diff touches no
+        partition). ``max_partitions`` budgets one invocation: the
+        watermark stays until the WHOLE diff is drained, and each
+        budgeted verdict commit records the diff's done partitions. An
+        expired watermark snapshot (source history truncated past it)
+        re-validates every current partition rather than failing every
+        subsequent run.
         Returns {"snapshot": <new watermark>, "partitions": [...]}.
         """
         meta = source._read_meta()  # pins the snapshot, files and schema
@@ -296,8 +290,10 @@ class ValidationRunner:
             raise ValueError(
                 f"partition_col {partition_col!r} is not a partition column "
                 f"of the source (partitioned by {meta['partition_by']})")
-        state = self.manifest.load()
-        last = state.get("__snapshot_watermark")
+        # the progress recorded by the latest verdict commit carrying one
+        state = next((s["summary"] for s in reversed(self._verdict_table.snapshots())
+                      if _WATERMARK in s["summary"]), {})
+        last = state.get(_WATERMARK)
         cur = meta["current_snapshot_id"]
         if cur is None or cur == last:
             return {"snapshot": last, "partitions": []}
@@ -310,38 +306,27 @@ class ValidationRunner:
             last = None
             added = source.files_added_since(None, _meta=meta)
         touched = sorted({e["partition"].get(partition_col) for e in added}
-                         - {None, "__HIVE_DEFAULT_PARTITION__"})
+                         - {None, _HIVE_DEFAULT})
 
-        # the diff may re-touch completed partitions: clear their
-        # completion marks so they are re-validated — but NOT when
-        # continuing the identical diff (a budgeted previous
-        # invocation): its marks ARE this diff's progress
+        # every touched partition is pending, except those a budgeted
+        # previous call of this SAME diff validated
         diff_id = f"{last}->{cur}"
-        if state.get("__diff_id") != diff_id:
-            for p in touched:
-                state["completed"].pop(p, None)
-            state["__diff_id"] = diff_id
-        state["__snapshot_watermark"] = last
-        self.manifest.save(state)
-
-        pending = [p for p in touched if p not in state["completed"]]
+        done = state.get(_DIFF_DONE, []) if state.get(_DIFF) == diff_id else []
+        pending = [p for p in touched if p not in done]
         todo = pending if max_partitions is None else pending[:max_partitions]
+        # the verdict commit records this call's progress
+        if len(todo) == len(pending):
+            summary = {_WATERMARK: cur}
+        else:
+            summary = {_WATERMARK: last, _DIFF: diff_id, _DIFF_DONE: done + todo}
         if todo:
             self._validate(
                 source.scan([(partition_col, "in", todo)], snapshot_id=cur),
-                partition_col, todo)
-
-        # advance only once the whole diff is validated: a budgeted
-        # (max_partitions) run leaves the watermark so the next
-        # invocation continues the SAME diff from its partition marks
-        drained = len(todo) == len(pending)
-        state = self.manifest.load()
-        new_mark = cur if drained else last
-        state["__snapshot_watermark"] = new_mark
-        if drained:
-            state.pop("__diff_id", None)
-        self.manifest.save(state)
-        return {"snapshot": new_mark, "partitions": todo}
+                partition_col, todo, summary)
+        elif not pending:
+            table = self._verdict_table
+            table._commit(table._read_meta(), "overwrite", summary)
+        return {"snapshot": summary[_WATERMARK], "partitions": todo}
 
     # -- dataset-level checks (spec "dataset" block, FIXTURES.md §3) -------
     def run_dataset_checks(

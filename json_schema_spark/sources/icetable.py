@@ -17,16 +17,18 @@ that a real Iceberg catalog drops in behind the same four calls
                                                      of these, reused
                                                      across commits
     <root>/metadata/v<N>.metadata.json               schema, partition spec,
-                                                     snapshot log, current id
-    <root>/metadata/version-hint.text                current version pointer
+                                                     snapshot log, current id;
+                                                     the highest N is current
 
 Correctness properties (all pytest-pinned in tests/test_icetable.py):
 
-* **Atomic, optimistic commits** — a commit is the ``O_EXCL`` creation
-  of ``v<N+1>.metadata.json``; two writers racing on the same parent
-  version get exactly one winner, the loser raises
+* **Atomic, optimistic commits** — a commit writes the whole next
+  metadata to a temp file and hard-links it to ``v<N+1>.metadata.json``;
+  the link fails if that name exists, so two writers racing on the same
+  parent version get exactly one winner, the loser raises
   :class:`CommitConflict` (retryable: restage nothing, just re-resolve
-  the parent — data files are immutable and commit-scoped).
+  the parent — data files are immutable and commit-scoped). A reader
+  never sees a half-written version; no file is renamed onto another.
 * **Snapshot isolation / time travel** — a reader pinned to snapshot S
   sees exactly S's file list regardless of later commits;
   ``scan(snapshot_id=...)`` is the time-travel read.
@@ -50,6 +52,7 @@ per-file Bloom sidecars (puffin-style) for point-lookup pruning.
 
 from __future__ import annotations
 
+import bisect
 import glob
 import json
 import math
@@ -336,9 +339,18 @@ class IceTable:
         return os.path.join(self.root, "metadata")
 
     def _current_version(self) -> int:
-        hint = os.path.join(self._meta_dir, "version-hint.text")
-        with open(hint) as f:
-            return int(f.read().strip())
+        """The highest N of a ``v<N>.metadata.json`` (dense from ``v0``),
+        by a galloping probe as in Iceberg's Hadoop tables; a
+        ``version-hint.text`` is ignored. -1 when there is no table."""
+        def missing(v: int) -> bool:
+            return not os.path.exists(
+                os.path.join(self._meta_dir, f"v{v}.metadata.json"))
+
+        hi = 1
+        while not missing(hi):
+            hi *= 2
+        # v<hi // 2> exists (or there is no table), v<hi> does not
+        return bisect.bisect_left(range(hi), True, lo=hi // 2, key=missing) - 1
 
     def _read_meta(self, version: int | None = None) -> dict:
         v = self._current_version() if version is None else version
@@ -369,33 +381,35 @@ class IceTable:
                 files.extend(json.load(f)["files"])
         return files
 
-    def _write_next_metadata(self, parent_meta: dict, meta: dict):
-        """Write the next metadata version under the O_EXCL lock and
-        swap the hint — the ONE commit-protocol implementation every
-        metadata mutation (commit, expiry) goes through."""
-        next_v = parent_meta["_version"] + 1
-        meta_path = os.path.join(self._meta_dir, f"v{next_v}.metadata.json")
+    def _publish(self, name: str, obj, indent: int | None = None) -> None:
+        """Write ``obj`` as the new metadata file ``name``, whole or not
+        at all: a temp file hard-linked to ``name`` (FileExistsError if
+        it exists). A crash leaves at most a ``*.tmp`` file."""
+        tmp = os.path.join(self._meta_dir, f"{name}.{uuid.uuid4().hex[:8]}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=indent)
         try:
-            fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.link(tmp, os.path.join(self._meta_dir, name))
+        finally:
+            os.unlink(tmp)
+
+    def _write_next_metadata(self, parent_meta: dict, meta: dict):
+        """Publish the next metadata version; the exclusive link is the
+        lock — the ONE commit-protocol implementation every metadata
+        mutation (commit, expiry) goes through."""
+        next_v = parent_meta["_version"] + 1
+        try:
+            self._publish(f"v{next_v}.metadata.json", meta, indent=1)
         except FileExistsError:
             raise CommitConflict(
                 f"version v{next_v} already committed by another writer")
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        tmp = os.path.join(self._meta_dir, f".hint-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(next_v))
-        os.replace(tmp, os.path.join(self._meta_dir, "version-hint.text"))
 
     def _write_manifest(self, snap_id: int, files: list[dict]) -> str:
         # manifest names carry a commit-attempt nonce: two racers on
         # the same parent NEVER collide on a manifest path, so a loser
         # can clean up its OWN manifests without touching the winner's
         name = f"snap-{snap_id}-{uuid.uuid4().hex[:8]}.manifest.json"
-        path = os.path.join(self._meta_dir, name)
-        with open(path + ".tmp", "w") as f:
-            json.dump({"snapshot_id": snap_id, "files": files}, f)
-        os.replace(path + ".tmp", path)
+        self._publish(name, {"snapshot_id": snap_id, "files": files})
         return name
 
     def _commit(self, parent_meta: dict, op: str, summary: dict,
@@ -413,7 +427,7 @@ class IceTable:
           untouched manifests are reused by name.
         * ``replace_all`` (compaction) starts from an empty list.
 
-        The O_EXCL create of the next metadata version remains the
+        The exclusive link of the next metadata version remains the
         atomic optimistic lock; each snapshot records the schema in
         force when it committed (time-travel reads see the schema of
         their era, the Iceberg schema-id contract)."""
@@ -485,12 +499,7 @@ class IceTable:
             "current_snapshot_id": None,
             "snapshots": [],
         }
-        path = os.path.join(t._meta_dir, "v0.metadata.json")
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        with open(os.path.join(t._meta_dir, "version-hint.text"), "w") as f:
-            f.write("0")
+        t._publish("v0.metadata.json", meta, indent=1)
         return t
 
     def _check_columns(self, df: DataFrame, meta: dict) -> None:
@@ -583,14 +592,16 @@ class IceTable:
             new_entries=new,
         )
 
-    def overwrite_partitions(self, df: DataFrame,
-                             partitions: Iterable = ()) -> int:
+    def overwrite_partitions(self, df: DataFrame, partitions: Iterable = (),
+                             summary: dict | None = None) -> int:
         """Dynamic-partition overwrite: replace exactly the partitions
         present in ``df`` plus those named in ``partitions`` (the
         MERGE-ish idempotent-redo primitive the runner's checkpoint
         resume needs). A named partition with no rows in ``df`` is
         dropped. Naming partitions needs a table with one partition
-        column; values compare as the strings the Hive paths hold."""
+        column; values compare as the strings the Hive paths hold.
+        ``summary`` adds caller keys to the snapshot summary, as in
+        :meth:`append`."""
         meta = self._read_meta()
         pcols = meta["partition_by"]
         if not pcols:
@@ -607,7 +618,8 @@ class IceTable:
         # rewritten (filtered); the rest are reused by name
         return self._commit(
             meta, "overwrite",
-            {"replaced_partitions": len(touched), "added_files": len(new)},
+            {"replaced_partitions": len(touched), "added_files": len(new),
+             **(summary or {})},
             new_entries=new,
             drop_pred=lambda e:
                 tuple(sorted(e["partition"].items())) in touched,
@@ -696,8 +708,8 @@ class IceTable:
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Drop all but the last ``keep_last`` snapshots and DELETE
         data files no kept snapshot references (the irreversible half
-        of compaction). Metadata rewrite takes the same O_EXCL version
-        lock as a commit; file deletion happens only after the new
+        of compaction). Metadata rewrite takes the same version lock as
+        a commit; file deletion happens only after the new
         metadata is current, so a crash mid-expiry leaves a readable
         table with some garbage, never a broken one."""
         if keep_last < 1:
@@ -777,7 +789,8 @@ class IceTable:
         """Delete data files and manifests referenced by NO snapshot in
         the current history — the debris of conflict-aborted or crashed
         commits (whose staged commit-<uuid> dirs are referenced by
-        nothing) and of expired eras. ``older_than_s`` is the safety
+        nothing, and whose unlinked ``*.tmp`` metadata writes count as
+        manifests here) and of expired eras. ``older_than_s`` is the safety
         grace: files younger than it may belong to an IN-FLIGHT commit
         that has staged but not yet taken the version lock, so they are
         left alone (the standard Iceberg remove_orphan_files posture)."""
@@ -801,7 +814,7 @@ class IceTable:
                     os.unlink(p + ".bloom.json")
                 except FileNotFoundError:
                     pass
-        for pat in ("snap-*.manifest.json", "snap-*.manifest.json.tmp"):
+        for pat in ("snap-*.manifest.json", "*.tmp"):
             for p in glob.glob(os.path.join(self._meta_dir, pat)):
                 if os.path.basename(p) not in manifests \
                         and os.path.getmtime(p) < cutoff:

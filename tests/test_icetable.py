@@ -23,6 +23,20 @@ def docs(spark):
 SCHEMA = "doc_id long, url string, lang string"
 
 
+def _racer_commits_first(t, commit) -> None:
+    """Make ``commit(other)``, on a second handle of ``t``'s table, claim
+    the next version while ``t``'s next write stages its files — after
+    that write has read its parent version."""
+    stage = t._stage
+
+    def racing_stage(*args, **kwargs):
+        t._stage = stage  # once
+        commit(IceTable(t.spark, t.root))
+        return stage(*args, **kwargs)
+
+    t._stage = racing_stage
+
+
 def test_append_scan_roundtrip(spark, tmp_path, docs):
     t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, ["lang"])
     t.append(docs)
@@ -120,23 +134,22 @@ def test_overwrite_partitions_drops_named_partition_without_rows(spark, tmp_path
 def test_commit_conflict_one_winner(spark, tmp_path, docs):
     t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, [])
     t.append(docs.where("doc_id < 10"))
-    # simulate a racing writer that already claimed the next version
-    v = t._current_version()
-    open(os.path.join(t._meta_dir, f"v{v + 1}.metadata.json"), "w").write("{}")
+    # a racing writer claims the next version (a commit of no rows)
+    _racer_commits_first(t, lambda other: other.evolve_schema(SCHEMA))
     with pytest.raises(CommitConflict):
         t.append(docs.where("doc_id >= 10"))
-    # loser retries after the conflict clears and wins cleanly
-    os.unlink(os.path.join(t._meta_dir, f"v{v + 1}.metadata.json"))
+    # loser retries on the new parent and wins cleanly
     t.append(docs.where("doc_id >= 10"))
     assert t.scan().count() == 100
 
 
-def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
+def test_runner_verdicts_through_icetable(spark, webpages, tmp_path, monkeypatch):
     """Resume with IceTable results: the snapshot log is the lineage
     history, a redone partition is REPLACED (overwrite) not duplicated,
-    and final verdicts equal an uninterrupted run's."""
+    and final verdicts and violations equal an uninterrupted run's."""
     from json_schema_spark.plans.runner import ValidationRunner
     from json_schema_spark.sources import tables as tb
+    from tests.test_commit_protocol import Crash, crash_verdict_commit
     from tests.test_compiler import WEB_SPEC
 
     pages = str(tmp_path / "pages")
@@ -144,12 +157,13 @@ def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
     df = spark.read.parquet(pages)
 
     r1 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1")
-    first = r1.run(df, max_partitions=2)
-    # interrupted mid-run: wipe the checkpoint mark of partition 1 to
-    # force a redo of an already-committed partition on resume
-    state = r1.manifest.load()
-    del state["completed"][first[1]]
-    r1.manifest.save(state)
+    r1.run(df, max_partitions=2)
+    # interrupted mid-run: the next call fails after its violations
+    # commit, so its partitions' violations are redone on resume
+    crash_verdict_commit(monkeypatch, "after_violations_commit")
+    with pytest.raises(Crash):
+        r1.run(df, max_partitions=2)
+    monkeypatch.undo()
 
     r1b = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "ice"), run_id="r1")
     r1b.run(df)
@@ -166,9 +180,11 @@ def test_runner_verdicts_through_icetable(spark, webpages, tmp_path):
     b = {(x["partition"], x["check"]): (x["pass"], x["n_rows"], x["n_violations"])
          for x in r2.verdicts().collect()}
     assert a == b
+    assert sorted(map(repr, r1b.violations().collect())) \
+        == sorted(map(repr, r2.violations().collect()))
 
-    # snapshot log: one commit per run() call (the interrupted call,
-    # then the resume of the redo + remaining 6)
+    # snapshot log: one verdict commit per completed run() call (the
+    # first call, then the resume of the redo + remaining 4)
     snaps = r1b._verdict_table.snapshots()
     assert len(snaps) == 2
     assert all(s["operation"] == "overwrite" for s in snaps)
@@ -313,13 +329,16 @@ def test_commit_conflict_leaves_winner_manifest_untouched(spark, tmp_path, docs)
     the winner's manifest — lock acquisition precedes manifest IO."""
     t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, [])
     t.append(docs.where("doc_id < 10"))
-    v = t._current_version()
-    winner_meta = os.path.join(t._meta_dir, f"v{v + 1}.metadata.json")
-    open(winner_meta, "w").write("{}")  # racer claimed the version
+    # racer claims the version with an append of its own
+    _racer_commits_first(t, lambda other: other.append(docs.where("doc_id >= 90")))
     man2 = os.path.join(t._meta_dir, "snap-2.manifest.json")
     with pytest.raises(CommitConflict):
         t.append(docs.where("doc_id >= 10"))
     assert not os.path.exists(man2)  # loser never touched snapshot 2's manifest
+    winner = t.snapshots()[-1]
+    assert all(os.path.exists(os.path.join(t._meta_dir, m))
+               for m in t._snap_manifests(winner))
+    assert t.scan().count() == 20
 
 
 def test_boolean_partition_pruning(spark, tmp_path):
@@ -420,11 +439,9 @@ def test_remove_orphan_files(spark, tmp_path, docs):
     touching referenced data."""
     t = IceTable.create(spark, str(tmp_path / "t"), SCHEMA, [])
     t.append(docs.where("doc_id < 50"))
-    v = t._current_version()
-    open(os.path.join(t._meta_dir, f"v{v + 1}.metadata.json"), "w").write("{}")
+    _racer_commits_first(t, lambda other: other.evolve_schema(SCHEMA))
     with pytest.raises(CommitConflict):
         t.append(docs.where("doc_id >= 50"))  # stages, then aborts
-    os.unlink(os.path.join(t._meta_dir, f"v{v + 1}.metadata.json"))
 
     import glob as _glob
     all_files = _glob.glob(str(tmp_path / "t" / "data" / "**" / "*.parquet"),

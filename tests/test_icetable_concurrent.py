@@ -1,9 +1,9 @@
 """IceTable multi-PROCESS commit soak (VERDICT r3 item 6).
 
-The O_EXCL commit protocol was only ever exercised by racing threads
-inside one process; POSIX O_CREAT|O_EXCL is the cross-process
-primitive, so the contract needs evidence with separate OS processes
-(own JVMs, own page caches). Two subprocess writers race appends —
+The exclusive-link commit protocol was only ever exercised by racing
+threads inside one process; POSIX link(), which fails on an existing
+name, is the cross-process primitive, so the contract needs evidence
+with separate OS processes (own JVMs, own page caches). Two subprocess writers race appends —
 one also compacts mid-run — and the parent asserts:
 
 * no lost commits: every (writer, seq) batch's rows are present in the
@@ -54,7 +54,7 @@ def test_concurrent_writers_no_lost_commits(spark, tmp_path):
     t = IceTable(spark, root)
     snaps = t.snapshots()
     # exactly one winner per version: snapshot ids strictly increasing,
-    # no duplicates (O_EXCL means a version file has a single author)
+    # no duplicates (the exclusive link gives a version one author)
     ids = [s["id"] for s in snaps]
     assert ids == sorted(set(ids))
     # all 12 appends + 1 compaction are in history

@@ -26,7 +26,7 @@ def test_resume_no_duplicates_identical_verdicts(spark, pages_parquet, tmp_path)
     r1 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res1"), run_id="r1")
     first = r1.run(df, max_partitions=3)  # simulated interruption
     assert len(first) == 3
-    assert r1.manifest.completed() == set(first)
+    assert r1.completed() == set(first)
 
     r1b = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res1"), run_id="r1")
     second = r1b.run(df)  # resume
@@ -223,15 +223,15 @@ def test_run_failure_does_not_leak_cached_slice(spark, pages_parquet, tmp_path):
         r.run(df, max_partitions=2)
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
     assert after == before
-    assert r.manifest.completed() == set()
+    assert r.completed() == set()
 
 
 def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
     """One call validates its whole pending set in one pass (grouped
     verdict agg + one violations commit) and must produce the same
     verdicts, lineage and violation rows as validating one partition
-    per call — with the manifest still per-partition, so an
-    interrupted multi-partition call resumes cleanly."""
+    per call — with completion still per partition, so an interrupted
+    multi-partition call resumes cleanly."""
     df = spark.read.parquet(pages_parquet)
 
     rs = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "single"), run_id="r")
@@ -241,7 +241,7 @@ def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
     rc = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "chunked"), run_id="r")
     # interruption after a 3-partition call, then a resume of the rest
     first = rc.run(df, max_partitions=3)
-    assert len(first) == 3 and rc.manifest.completed() == set(first)
+    assert len(first) == 3 and rc.completed() == set(first)
     rc2 = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "chunked"), run_id="r")
     second = rc2.run(df)
     assert set(first).isdisjoint(second)
@@ -402,17 +402,13 @@ def test_uri_results_dir_rejected(spark, tmp_path):
     assert not (tmp_path / "res").exists()
 
 
-@pytest.mark.parametrize("legacy", ["verdicts", "violations", "manifest"])
+@pytest.mark.parametrize("legacy", ["verdicts", "violations"])
 def test_legacy_results_dir_rejected(spark, tmp_path, legacy):
-    """A results dir of the older plain-parquet layout is refused:
-    resuming from its manifest would skip partitions whose results
-    no longer show in verdicts()/violations()."""
+    """A results dir of the older plain-parquet layout is refused: its
+    results would not show in verdicts()/violations()."""
     res = tmp_path / "res"
     res.mkdir()
-    if legacy == "manifest":
-        (res / "manifest.json").write_text('{"completed": {"d0": {}}}')
-    else:
-        (res / legacy / "part=d0").mkdir(parents=True)
+    (res / legacy / "part=d0").mkdir(parents=True)
     with pytest.raises(ValueError, match="fresh results directory"):
         ValidationRunner(spark, WEB_SPEC, str(res))
 

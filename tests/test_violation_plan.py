@@ -54,9 +54,9 @@ def test_runner_caches_ids_and_flags_only(spark, webpages, tmp_path, monkeypatch
     plans = []
     write = IceTable.overwrite_partitions
 
-    def spy(self, df, partitions):
+    def spy(self, df, *args, **kwargs):
         plans.append(df._jdf.queryExecution().optimizedPlan().toString())
-        return write(self, df, partitions)
+        return write(self, df, *args, **kwargs)
 
     monkeypatch.setattr(IceTable, "overwrite_partitions", spy)
     r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="c")
