@@ -49,7 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from json_schema_spark.functions.formats import format_check
+from json_schema_spark.functions.formats import char_length_cmp, format_check
 from json_schema_spark.spec import ConstraintSpec, SpecError, SpecRegistry, _id_key
 
 PredFn = Callable[[Column], Column]
@@ -136,6 +136,22 @@ def _lit_value(value: Any, dt: T.DataType) -> Column:
     if value is None:
         return F.lit(None).cast(dt)
     return F.lit(value)
+
+
+# sizes and lengths are Spark ints: every count lies in [0, _MAX_COUNT]
+_MAX_COUNT = 2 ** 31 - 1
+
+
+def _count_rule(op: Callable, val: Any, test: Callable[[Column, int], Column]) -> PredFn:
+    """A bound ``n = int(val)`` on a count (``op`` is ``operator.ge`` for
+    a minimum, ``operator.le`` for a maximum) as ``test(c, n)``. A bound
+    outside the count range decides every in-type value alone, so it
+    folds to a literal; that also keeps ``F.lit`` from raising on a
+    bound beyond a long."""
+    n = int(val)
+    if not 0 <= n <= _MAX_COUNT:
+        return lambda c: F.lit(op(0, n))
+    return lambda c: test(c, n)
 
 
 def _fits_long(n: int) -> bool:
@@ -255,8 +271,10 @@ class TypedAccess(Access):
     def string(self, c: Column) -> Column:
         return c
 
-    def length(self, c: Column) -> Column:
-        return F.char_length(c) if isinstance(self.dt, T.StringType) else F.length(c)
+    def length_cmp(self, c: Column, op: Callable, n: int) -> Column:
+        if isinstance(self.dt, T.StringType):
+            return char_length_cmp(c, op, n)
+        return op(F.length(c), F.lit(n))  # binary: the byte count, O(1)
 
     def regex(self, pattern: str) -> str:
         return translate_regex(pattern)
@@ -519,7 +537,7 @@ def _keyword_rule(kw: str, val: Any, schema: dict, a: Access) -> PredFn | None:
 
     if kw in ("minLength", "maxLength"):
         op = operator.ge if kw == "minLength" else operator.le
-        return lambda c: op(a.length(c), F.lit(int(val)))
+        return _count_rule(op, val, lambda c, n: a.length_cmp(c, op, n))
 
     if kw == "format":
         return lambda c: format_check(val, a.string(c), a.draft)
@@ -577,20 +595,22 @@ def _keyword_rule(kw: str, val: Any, schema: dict, a: Access) -> PredFn | None:
             # reference's table has no min/maxContains; see
             # pyvalidator._k_contains_2019). minContains=0 makes
             # contains vacuous, per spec.
-            lo = int(schema.get("minContains", 1))
-            hi = schema.get("maxContains")
+            bounds = [_count_rule(operator.ge, schema.get("minContains", 1),
+                                  lambda cnt, n: cnt >= F.lit(n))]
+            if schema.get("maxContains") is not None:
+                bounds.append(_count_rule(operator.le, schema["maxContains"],
+                                          lambda cnt, n: cnt <= F.lit(n)))
 
             def counted(c: Column) -> Column:
                 cnt = F.size(F.filter(a.array(c), p))
-                ok = cnt >= F.lit(lo)
-                return ok if hi is None else ok & (cnt <= F.lit(int(hi)))
+                return _and([b(cnt) for b in bounds])
 
             return counted
         return lambda c: F.exists(a.array(c), p)
 
     if kw in ("minItems", "maxItems"):
         op = operator.ge if kw == "minItems" else operator.le
-        return lambda c: op(F.size(a.array(c)), F.lit(int(val)))
+        return _count_rule(op, val, lambda c, n: op(F.size(a.array(c)), F.lit(n)))
 
     if kw == "uniqueItems":  # deep-distinct, :632-639
         return a.unique() if val is True else None
@@ -655,7 +675,7 @@ def _keyword_rule(kw: str, val: Any, schema: dict, a: Access) -> PredFn | None:
 
     if kw in ("minProperties", "maxProperties"):  # :485-498
         op = operator.ge if kw == "minProperties" else operator.le
-        return lambda c: op(a.prop_count(c), F.lit(int(val)))
+        return _count_rule(op, val, lambda c, n: op(a.prop_count(c), F.lit(n)))
 
     if kw in ("dependencies", "dependentRequired", "dependentSchemas"):
         # :313-337 + check-dependencies :142-186; array form needs the

@@ -70,6 +70,7 @@ from json_schema_spark.compiler import (
     TypedAccess, _compile_keyword, _compile_schema, _message, _or,
     translate_regex,
 )
+from json_schema_spark.functions.formats import char_length_cmp
 from json_schema_spark.spec import SpecError, SpecRegistry
 
 VPred = Callable[[Column], Column]  # variant Column -> TRUE-pass boolean
@@ -341,8 +342,8 @@ class VariantAccess(Access):
     def string(self, v: Column) -> Column:
         return _str(v)
 
-    def length(self, v: Column) -> Column:
-        return F.char_length(_str(v))
+    def length_cmp(self, v: Column, op: Callable, n: int) -> Column:
+        return char_length_cmp(_str(v), op, n)
 
     def regex(self, pattern: str) -> str:
         return _java_rx(pattern)

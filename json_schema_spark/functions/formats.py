@@ -27,8 +27,30 @@ JVM-side under whole-stage codegen; regexes are compiled once per task.
 
 from __future__ import annotations
 
+import operator
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def char_length_cmp(s: Column, op: Callable, n: int) -> Column:
+    """``op(char_length(s), n)`` for ``op`` ``operator.ge`` or
+    ``operator.le``, decided from the byte length where it can.
+
+    ``octet_length`` is O(1); ``char_length`` walks every byte. Spark
+    counts one code point per UTF-8 lead byte and a code point takes 1-4
+    bytes, also in invalid UTF-8, so ``ceil(bytes/4) <= chars <= bytes``
+    and only a byte length in ``[n, 4n)`` (for ``>=``) or ``(n, 4n]``
+    (for ``<=``) leaves the answer open. ``char_length`` sits in the
+    second operand of a short-circuit ``And``/``Or``, so generated code
+    evaluates it only there. NULL in, NULL out, as ``char_length``.
+    """
+    b = F.octet_length(s)
+    if op is operator.ge:
+        return (b >= F.lit(n)) & ((b >= F.lit(4 * n)) | (F.char_length(s) >= F.lit(n)))
+    return (b <= F.lit(n)) | ((b <= F.lit(4 * n)) & (F.char_length(s) <= F.lit(n)))
+
 
 # RFC-3339-ish component regexes (anchored; rlike is search, so anchor
 # explicitly — the *pattern* keyword stays unanchored, formats do not).
@@ -120,7 +142,7 @@ def fmt_hostname(col: Column) -> Column:
     """Regex + every dot-label < 64 chars + no trailing '-'
     (src/formats.lisp:48-53)."""
     labels_ok = F.forall(
-        F.split(col, r"\."), lambda s: F.char_length(s) < F.lit(64)
+        F.split(col, r"\."), lambda s: char_length_cmp(s, operator.le, 63)
     )
     return col.rlike(_HOSTNAME_RE) & labels_ok & ~col.endswith("-")
 

@@ -64,7 +64,11 @@ from json_schema_spark.compiler import (
     compile_spec,
 )
 from json_schema_spark.session import local_frame
-from json_schema_spark.sources.icetable import IceTable, require_local_path
+from json_schema_spark.sources.icetable import (
+    HIVE_DEFAULT_PARTITION,
+    IceTable,
+    require_local_path,
+)
 from json_schema_spark.spec import ConstraintSpec
 
 
@@ -73,8 +77,6 @@ from json_schema_spark.spec import ConstraintSpec
 # without per-row checks (so without verdict rows) completed
 _WATERMARK, _DIFF, _DIFF_DONE = "runner_watermark", "runner_diff", "runner_diff_done"
 _DONE = "runner_done"
-# the Hive path value Spark writes for a NULL or empty-string partition
-_HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -134,7 +136,7 @@ class ValidationRunner:
                 for e in self._verdict_table.plan_files(_meta=meta)}
         for snap in meta["snapshots"]:
             done.update(snap["summary"].get(_DONE, ()))
-        return {"" if p == _HIVE_DEFAULT else p for p in done}
+        return {"" if p == HIVE_DEFAULT_PARTITION else p for p in done}
 
     def pending_partitions(self, df: DataFrame, partition_col: str) -> list[str]:
         """All non-null partition values of ``df`` as strings (Spark's
@@ -306,7 +308,7 @@ class ValidationRunner:
             last = None
             added = source.files_added_since(None, _meta=meta)
         touched = sorted({e["partition"].get(partition_col) for e in added}
-                         - {None, _HIVE_DEFAULT})
+                         - {None, HIVE_DEFAULT_PARTITION})
 
         # every touched partition is pending, except those a budgeted
         # previous call of this SAME diff validated
@@ -399,12 +401,14 @@ class ValidationRunner:
         )
 
     # -- results ------------------------------------------------------------
+    # The runner writes no NULL partition, so the one its tables read as
+    # NULL (Hive's default partition) is the empty string.
     def verdicts(self) -> DataFrame:
-        return self._verdict_table.scan()
+        return self._verdict_table.scan().fillna("", ["partition"])
 
     def violations(self) -> DataFrame:
-        return IceTable(self.spark, os.path.join(self.results_dir,
-                                                 "violations_ice")).scan()
+        return IceTable(self.spark, os.path.join(self.results_dir, "violations_ice")
+                        ).scan().fillna("", ["partition"])
 
 
 # -- the dataset block's tasks ------------------------------------------------

@@ -75,6 +75,9 @@ class CommitConflict(RuntimeError):
     the same staged files."""
 
 
+# the Hive path value Spark writes for a NULL or empty-string partition
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
 _STATS_TYPES = ("INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY", "INT96")
 
 
@@ -232,6 +235,8 @@ def _entry_may_match(entry: dict, col: str, op: str, lit: Any) -> bool:
     if op == "in":
         return any(_entry_may_match(entry, col, "=", v) for v in lit)
     pv = entry["partition"].get(col)
+    if pv == HIVE_DEFAULT_PARTITION:
+        return False  # the file's value reads as NULL, which matches nothing
     if pv is not None:
         # partition values are exact (one value per file)
         v: Any = pv
@@ -895,7 +900,9 @@ class IceTable:
             # Hive-style dirs under differing commit roots: recover the
             # partition columns from the path (basePath varies per
             # commit, so Spark's auto-inference can't merge them),
-            # un-escape them, and cast to the DECLARED type.
+            # un-escape them, and cast to the DECLARED type. Hive's
+            # default partition reads as NULL, as in Spark's own
+            # partition discovery (an empty string included).
 
             # input_file_name() URI-encodes the path, which wraps the
             # Hive partition escaping -> decode TWICE; url_decode is
@@ -911,8 +918,8 @@ class IceTable:
                 raw = _dec(_dec(F.regexp_extract(
                     F.input_file_name(),
                     rf"(?:^|/){_re.escape(pcol)}=([^/]+)", 1)))
-                df = df.withColumn(
-                    pcol, raw.cast(declared_types.get(pcol, T.StringType())))
+                df = df.withColumn(pcol, F.nullif(raw, F.lit(HIVE_DEFAULT_PARTITION))
+                                   .cast(declared_types.get(pcol, T.StringType())))
         # project to the era's schema: stable column order
         df = df.select(*[f.name for f in declared.fields])
         for col, op, lit in (filters or []):

@@ -10,9 +10,10 @@ so the parent can assert no commit was lost.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from json_schema_spark.session import get_spark
 from json_schema_spark.sources.icetable import CommitConflict, IceTable

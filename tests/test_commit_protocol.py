@@ -303,3 +303,6 @@ def test_empty_string_partition_resumes(spark, tmp_path):
     assert r.run(df, partition_col="host", max_partitions=2) == ["h3"]
     assert r.run(df, partition_col="host") == []
     assert _tables(r) == _tables(whole)
+    # the results read back with the partition value the runner wrote
+    assert {x["partition"] for x in r.verdicts().collect()} == {"", "h0", "h1", "h2", "h3"}
+    assert "" in {x["partition"] for x in r.violations().collect()}

@@ -3,6 +3,7 @@ atomic optimistic commits, snapshot isolation / time travel, dynamic
 partition overwrite, and manifest-level stats pruning."""
 
 import os
+from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
@@ -215,6 +216,24 @@ def test_partition_column_keeps_declared_type(spark, tmp_path):
     got = t.scan()
     assert dict(got.dtypes)["bucket"] == "int"
     assert sorted(r["bucket"] for r in got.collect()) == [10, 20]
+
+
+@pytest.mark.parametrize("ddl,value", [("string", "h"), ("date", date(2024, 3, 1))])
+def test_hive_default_partition_reads_as_null(spark, tmp_path, ddl, value):
+    """Spark writes a NULL partition value, and an empty string, under
+    Hive's default-partition name. scan() reads that back as NULL, as
+    Spark's own partition discovery does, before the cast to the
+    declared type, and pruning drops it for every comparison."""
+    rows = [(1, None), (2, value)] + ([(3, "")] if ddl == "string" else [])
+    t = IceTable.create(spark, str(tmp_path / "t"), f"doc_id long, p {ddl}", ["p"])
+    t.append(spark.createDataFrame(rows, f"doc_id long, p {ddl}"))
+    got = t.scan()
+    assert dict(got.dtypes)["p"] == ddl
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (d, None if p == "" else p) for d, p in rows]
+    assert got.where("p is null").count() == len(rows) - 1
+    assert [tuple(r) for r in t.scan([("p", "=", value)]).collect()] == [(2, value)]
+    assert len(t.plan_files([("p", "=", value)])) == 1
 
 
 def test_schema_evolution_additive(spark, tmp_path):

@@ -52,6 +52,25 @@ CASES = [
     pytest.param("draft3", {"required": ["a"]}, {}, _MAP, id="draft3-required-list"),
 ]
 
+# Count keywords with a bound at and beyond the largest Spark size or
+# length (2^31 - 1): the compile folds a bound that decides alone, so no
+# literal past a long reaches Spark.
+_COUNT_DATA = [
+    ("minLength", "abc", "string"), ("maxLength", "abc", "string"),
+    ("minItems", [1, 2], "array<bigint>"), ("maxItems", [1, 2], "array<bigint>"),
+    ("minProperties", {"a": 1}, _MAP), ("maxProperties", {"a": 1}, _MAP),
+    ("minContains", [1, 2], "array<bigint>"), ("maxContains", [1, 2], "array<bigint>"),
+]
+CASES += [
+    pytest.param("draft2019-09" if kw.endswith("Contains") else "draft7",
+                 {kw: bound, **({"contains": {"type": "integer"}}
+                                if kw.endswith("Contains") else {})},
+                 data, ddl, id=f"{kw}-{label}")
+    for kw, data, ddl in _COUNT_DATA
+    for bound, label in ((2**31 - 1, "2^31-1"), (2**31, "2^31"), (2**63, "2^63"),
+                         (2**70, "2^70"))
+]
+
 
 @pytest.mark.parametrize("draft,schema,data,ddl", CASES)
 def test_typed_variant_and_oracle_agree(spark, draft, schema, data, ddl):
