@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from dataclasses import replace
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -86,8 +87,7 @@ def _compiled(spark: SparkSession, sf_dir: str):
     # `type` checks on physically-typed columns are static truths; drop
     # them from the emitted list so query output matches the oracle.
     compiled = compile_spec(DOC_SPEC, df)
-    compiled.checks = [c for c in compiled.checks if c.keyword != "type"]
-    return df, compiled
+    return df, replace(compiled, checks=[c for c in compiled.checks if c.keyword != "type"])
 
 
 # ---------------------------------------------------------------------------

@@ -42,7 +42,7 @@ import functools
 import operator
 import re
 import urllib.parse
-from dataclasses import dataclass, field, fields, replace
+from dataclasses import dataclass, fields, replace
 from typing import Any, Callable, ClassVar
 
 from pyspark.sql import Column, DataFrame
@@ -69,7 +69,7 @@ _MAX_DEPTH = 32
 _REF_UNROLL = 3
 
 
-@dataclass
+@dataclass(frozen=True, eq=False)
 class KeywordCheck:
     """One compiled keyword: TRUE-pass predicate + provenance.
 
@@ -84,13 +84,107 @@ class KeywordCheck:
     path: str = ""
 
 
-@dataclass
+@dataclass(frozen=True, eq=False)
 class CompiledSpec:
-    spec: ConstraintSpec
-    checks: list[KeywordCheck] = field(default_factory=list)
+    """The compiled checks, plus the Spark expressions that
+    :func:`verdict_df`, :func:`violations_df` and the runner build from
+    them (compile once, validate many: src/reference.lisp:103-119).
+
+    Each derived expression is built on first use and kept, so a
+    repeated call builds none of them again: building a Column is a
+    chain of py4j round trips, thousands for a spec of a dozen checks.
+    The spec is frozen, so what it keeps always matches ``checks``; a
+    different check list is a new spec,
+    ``dataclasses.replace(compiled, checks=...)``. Like the predicates,
+    the kept Columns belong to the JVM they were built in.
+    """
+
+    spec: ConstraintSpec | None
+    checks: tuple[KeywordCheck, ...] = ()
+
+    def __post_init__(self) -> None:
+        object.__setattr__(self, "checks", tuple(self.checks))
 
     def check_names(self) -> list[tuple[str, str]]:
         return [(c.column, c.keyword) for c in self.checks]
+
+    @functools.cached_property
+    def _failing(self) -> tuple[Column, ...]:
+        """Per check, TRUE where a row fails it (NULL where its
+        predicate is NULL, which is no failure)."""
+        return tuple(~c.predicate for c in self.checks)
+
+    @functools.cached_property
+    def failure_flags(self) -> tuple[Column, ...]:
+        """The flag projection of :func:`_failed`: check ``i``'s failure
+        flag, named :func:`_flag` ``(i)``."""
+        return tuple(f.alias(_flag(i)) for i, f in enumerate(self._failing))
+
+    @functools.cached_property
+    def flag_sums(self) -> tuple[Column, ...]:
+        """Per check ``i``, the sum of its flag in a :func:`_failed`
+        frame, named ``v{i}``."""
+        return tuple(F.sum(F.col(f"`{_flag(i)}`").cast("long")).alias(f"v{i}")
+                     for i in range(len(self.checks)))
+
+    @functools.cached_property
+    def verdict_parts(self) -> tuple[tuple[Column, ...], ...]:
+        """:func:`verdict_df`'s aggregates, its unpivot and its tail
+        projection."""
+        # positional agg aliases: (column, keyword) pairs are NOT unique —
+        # a $ref target can share a keyword with a sibling, which made
+        # name-derived aliases ambiguous (AnalysisException at resolve time)
+        aggs = (*[F.sum(f.cast("long")).alias(f"chk{i}")
+                  for i, f in enumerate(self._failing)],
+                F.count(F.lit(1)).alias("\x00rows"))
+        pairs = [F.struct(F.lit(c.column).alias("column"),
+                          F.lit(c.keyword).alias("keyword"),
+                          F.col(f"chk{i}").alias("n_violations"))
+                 for i, c in enumerate(self.checks)]
+        # typed when empty, as in violation_parts
+        arr = F.array(*pairs) if pairs else F.array().cast(
+            "array<struct<column:string,keyword:string,n_violations:bigint>>")
+        unpivot = (F.col("`\x00rows`").alias("n_rows"), F.explode(arr).alias("s"))
+        tail = (
+            F.col("s.column").alias("column"),
+            F.col("s.keyword").alias("keyword"),
+            F.col("s.n_violations").alias("n_violations"),
+            F.col("n_rows").alias("n_rows"),
+            (F.col("s.n_violations") == 0).alias("pass"),
+        )
+        return aggs, unpivot, tail
+
+    @functools.cached_property
+    def violation_parts(self) -> tuple[Column, Column, tuple[Column, ...]]:
+        """:func:`_violation_rows`' explode of the failed checks, its
+        filter and its tail projection (``run_id`` excepted)."""
+        entries = [
+            F.when(F.col(f"`{_flag(i)}`"), F.struct(
+                F.lit(c.keyword).alias("keyword"),
+                F.lit(c.column).alias("column"),
+                F.lit(c.path).alias("path"),
+                F.lit(c.message).alias("message"),
+            ))
+            for i, c in enumerate(self.checks)
+        ]
+        # a lambda-free array, so the Generate joins the codegen stage;
+        # typed when empty (a spec with no checks has no violations)
+        arr = F.array(*entries) if entries else F.array().cast(
+            "array<struct<keyword:string,column:string,path:string,message:string>>")
+        # sub_errors (FIXTURES.md §5): compiled Column checks are keyword-
+        # granular (combinator internals fuse), so the column path emits an
+        # empty nest; the dynamic-JSON path (pyvalidator UDF) fills it.
+        sub_errors = F.lit([]).cast(
+            "array<struct<keyword:string,path:string,message:string>>"
+        )
+        tail = (
+            F.col("v.keyword").alias("keyword"),
+            F.col("v.column").alias("column"),
+            F.col("v.path").alias("path"),
+            F.col("v.message").alias("message"),
+            sub_errors.alias("sub_errors"),
+        )
+        return F.explode(arr).alias("v"), F.col("v").isNotNull(), tail
 
 
 # ---------------------------------------------------------------------------
@@ -984,7 +1078,7 @@ def compile_spec(spec: ConstraintSpec | dict, df: DataFrame) -> CompiledSpec:
     if isinstance(spec, dict):
         spec = ConstraintSpec(spec)
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    out = CompiledSpec(spec=spec)
+    checks: list[KeywordCheck] = []
 
     for colname, schema in spec.columns.items():
         if colname not in dtypes:
@@ -997,7 +1091,7 @@ def compile_spec(spec: ConstraintSpec | dict, df: DataFrame) -> CompiledSpec:
         a = _typed_access(spec, dtypes[colname], spec.draft, colname)
         for kw, val, parent in _flatten_ref_items(schema, spec):
             if kw == "false-schema":  # the column schema or a $ref target
-                out.checks.append(KeywordCheck(
+                checks.append(KeywordCheck(
                     colname, kw, F.col(colname).isNull(),
                     f"{colname}: schema is false",
                 ))
@@ -1011,7 +1105,7 @@ def compile_spec(spec: ConstraintSpec | dict, df: DataFrame) -> CompiledSpec:
             # (the verdict aggregation evaluates ALL checks in one
             # projection; see the variant-path 5x for the countercase)
             pred = col.isNull() | fn(col)
-            out.checks.append(KeywordCheck(
+            checks.append(KeywordCheck(
                 colname, kw, pred,
                 _message(colname, kw, val),
                 path=f"/columns/{colname}/{kw}",
@@ -1021,12 +1115,12 @@ def compile_spec(spec: ConstraintSpec | dict, df: DataFrame) -> CompiledSpec:
     for colname in spec.required:
         if colname not in dtypes:
             raise SpecError(f"required references unknown column {colname!r}")
-        out.checks.append(KeywordCheck(
+        checks.append(KeywordCheck(
             colname, "required", F.col(colname).isNotNull(),
             f"required column {colname} is missing (NULL)",
             path=f"/required/{colname}",
         ))
-    return out
+    return CompiledSpec(spec, checks)
 
 
 def _message(column: str, keyword: str, val: Any) -> str:
@@ -1058,8 +1152,7 @@ def _failed(df: DataFrame, compiled: CompiledSpec, keep: list[Column]) -> DataFr
     each one on its own. Consumers read only the flags:
     :func:`violations_df` explodes them, the runner sums them.
     """
-    return df.select(*keep, *[(~c.predicate).alias(_flag(i))
-                              for i, c in enumerate(compiled.checks)])
+    return df.select(*keep, *compiled.failure_flags)
 
 
 def _violation_rows(flags: DataFrame, compiled: CompiledSpec, keep: list[str],
@@ -1067,36 +1160,10 @@ def _violation_rows(flags: DataFrame, compiled: CompiledSpec, keep: list[str],
     """Explode a :func:`_failed` frame into violation rows: the
     ``keep`` columns of ``flags``, then the failed checks' fields in
     check order."""
-    entries = [
-        F.when(F.col(f"`{_flag(i)}`"), F.struct(
-            F.lit(c.keyword).alias("keyword"),
-            F.lit(c.column).alias("column"),
-            F.lit(c.path).alias("path"),
-            F.lit(c.message).alias("message"),
-        ))
-        for i, c in enumerate(compiled.checks)
-    ]
-    # a lambda-free array, so the Generate joins the codegen stage;
-    # typed when empty (a spec with no checks has no violations)
-    arr = F.array(*entries) if entries else F.array().cast(
-        "array<struct<keyword:string,column:string,path:string,message:string>>")
-    out = (flags.select(*[F.col(f"`{k}`") for k in keep], F.explode(arr).alias("v"))
-           .where(F.col("v").isNotNull()))
-    # sub_errors (FIXTURES.md §5): compiled Column checks are keyword-
-    # granular (combinator internals fuse), so the column path emits an
-    # empty nest; the dynamic-JSON path (pyvalidator UDF) fills it.
-    sub_errors = F.lit([]).cast(
-        "array<struct<keyword:string,path:string,message:string>>"
-    )
-    return out.select(
-        *[F.col(f"`{k}`") for k in keep],
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.column").alias("column"),
-        F.col("v.path").alias("path"),
-        F.col("v.message").alias("message"),
-        sub_errors.alias("sub_errors"),
-        F.lit(run_id).alias("run_id"),
-    )
+    explode, failed, tail = compiled.violation_parts
+    ids = [F.col(f"`{k}`") for k in keep]
+    return (flags.select(*ids, explode).where(failed)
+            .select(*ids, *tail, F.lit(run_id).alias("run_id")))
 
 
 def violations_df(
@@ -1138,13 +1205,7 @@ def verdict_df(
     shape; the shuffle carries |partitions| pre-aggregated rows, never
     the table.
     """
-    # positional agg aliases: (column, keyword) pairs are NOT unique —
-    # a $ref target can share a keyword with a sibling, which made
-    # name-derived aliases ambiguous (AnalysisException at resolve time)
-    aggs = [
-        F.sum((~c.predicate).cast("long")).alias(f"chk{i}")
-        for i, c in enumerate(compiled.checks)
-    ] + [F.count(F.lit(1)).alias("\x00rows")]
+    aggs, unpivot, tail = compiled.verdict_parts
     keep: list[Column] = []
     if partition_col is not None:
         part = F.col(partition_col) if isinstance(partition_col, str) else partition_col
@@ -1153,21 +1214,4 @@ def verdict_df(
     else:
         row = df.agg(*aggs)
     # unpivot to (column, keyword, n_violations, n_rows, pass)
-    pairs = []
-    for i, c in enumerate(compiled.checks):
-        pairs.append(F.struct(
-            F.lit(c.column).alias("column"),
-            F.lit(c.keyword).alias("keyword"),
-            F.col(f"chk{i}").alias("n_violations"),
-        ))
-    return row.select(
-        *keep,
-        F.col("`\x00rows`").alias("n_rows"), F.explode(F.array(*pairs)).alias("s")
-    ).select(
-        *keep,
-        F.col("s.column").alias("column"),
-        F.col("s.keyword").alias("keyword"),
-        F.col("s.n_violations").alias("n_violations"),
-        F.col("n_rows").alias("n_rows"),
-        (F.col("s.n_violations") == 0).alias("pass"),
-    )
+    return row.select(*keep, *unpivot).select(*keep, *tail)

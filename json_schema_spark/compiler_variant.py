@@ -57,13 +57,18 @@ never a silent approximation.
 from __future__ import annotations
 
 import decimal
+import json
 import operator
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Any, Callable, ClassVar
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.utils import get_active_spark_context
 
 from json_schema_spark.compiler import (
     _MAX_DEPTH, _PCRE_FALLBACK, _REF_UNROLL, Access, CompiledSpec, KeywordCheck,
@@ -538,7 +543,47 @@ def variant_compiled_spec(json_col: str, schema: dict,
     a table engine instead marks the ROW, and only the parse check
     fails for a malformed document (keyword checks pass vacuously,
     exactly as typed-path keyword checks pass on NULL columns).
+
+    Compile once, validate many (src/reference.lisp:103-119): the spec
+    is kept, per Spark context, for the last :data:`_MEMO_SIZE`
+    distinct arguments, so the verdict and violation wrappers compile
+    a schema once and then reuse its Columns. A schema equal as JSON
+    is the same schema; a registry is the same one only while no
+    document was added to it. A schema that raises is not kept.
     """
+    key = (json_col, json.dumps(schema, sort_keys=True, default=repr), draft,
+           malformed_valid, registry, None if registry is None else registry.version)
+    scope = _jvm_scope()
+    with _memo_lock:
+        memo = _memo.setdefault(scope, OrderedDict())
+        if key in memo:
+            memo.move_to_end(key)
+            return memo[key]
+    out = _variant_compiled_spec(json_col, schema, draft, registry, malformed_valid)
+    with _memo_lock:
+        memo[key] = out
+        if len(memo) > _MEMO_SIZE:
+            memo.popitem(last=False)
+    return out
+
+
+# variant_compiled_spec's memo: Spark context -> arguments -> spec
+_MEMO_SIZE = 16
+_memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_memo_lock = threading.Lock()
+
+
+def _jvm_scope():
+    """What a compiled spec's Columns belong to: the active Spark
+    context. A new JVM always comes with a new context, and a Python
+    UDF Column (``format: regex``) is bound to the context that built
+    it, so a stopped context's Columns are never handed out again."""
+    return get_active_spark_context()
+
+
+def _variant_compiled_spec(json_col: str, schema: dict, draft: str,
+                           registry: SpecRegistry | None,
+                           malformed_valid: bool) -> CompiledSpec:
     v = F.col(_PARSED)
     raw = F.col(json_col)
     checks: list[KeywordCheck] = [KeywordCheck(
@@ -555,9 +600,7 @@ def variant_compiled_spec(json_col: str, schema: dict,
             _message(json_col, kw, schema[kw]),
             path=f"/{kw}",
         ))
-    out = CompiledSpec(None)
-    out.checks = checks
-    return out
+    return CompiledSpec(None, checks)
 
 
 def variant_verdict_df(df, json_col: str, schema: dict,

@@ -43,13 +43,19 @@ def char_length_cmp(s: Column, op: Callable, n: int) -> Column:
     bytes, also in invalid UTF-8, so ``ceil(bytes/4) <= chars <= bytes``
     and only a byte length in ``[n, 4n)`` (for ``>=``) or ``(n, 4n]``
     (for ``<=``) leaves the answer open. ``char_length`` sits in the
-    second operand of a short-circuit ``And``/``Or``, so generated code
-    evaluates it only there. NULL in, NULL out, as ``char_length``.
+    last branch of a ``CASE``, so generated code evaluates it only
+    there: subexpression elimination looks into a ``CASE``'s first
+    condition only, where it would hoist a ``char_length`` found in
+    both operands of an ``And``/``Or`` out of every row's evaluation
+    (as when one column has both bounds). NULL in, NULL out, as
+    ``char_length``.
     """
     b = F.octet_length(s)
     if op is operator.ge:
-        return (b >= F.lit(n)) & ((b >= F.lit(4 * n)) | (F.char_length(s) >= F.lit(n)))
-    return (b <= F.lit(n)) | ((b <= F.lit(4 * n)) & (F.char_length(s) <= F.lit(n)))
+        return (F.when(b < F.lit(n), F.lit(False)).when(b >= F.lit(4 * n), F.lit(True))
+                .otherwise(F.char_length(s) >= F.lit(n)))
+    return (F.when(b <= F.lit(n), F.lit(True)).when(b > F.lit(4 * n), F.lit(False))
+            .otherwise(F.char_length(s) <= F.lit(n)))
 
 
 # RFC-3339-ish component regexes (anchored; rlike is search, so anchor
@@ -180,10 +186,14 @@ def fmt_uri(col: Column) -> Column:
     `mailto:a@b`, `urn:x`, even `fe80::1%eth0` (scheme 'fe80') —
     while Spark's parse_url only handles `proto://` URLs, so the
     check is the scheme grammar plus urlsplit's single parse failure
-    (mismatched [ ] in the authority). Stays fully codegen'd."""
+    (mismatched [ ] in the authority). Stays fully codegen'd; the
+    authority is extracted only from a value holding a bracket (a
+    ``CASE`` branch, out of subexpression elimination's reach)."""
     scheme_ok = col.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
     auth = F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)
-    bad_bracket = auth.contains("[") != auth.contains("]")  # XOR
+    bad_bracket = F.when(col.contains("[") | col.contains("]"),
+                         auth.contains("[") != auth.contains("]")  # XOR
+                         ).otherwise(F.lit(False))
     return scheme_ok & ~bad_bracket
 
 

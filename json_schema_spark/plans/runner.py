@@ -59,7 +59,6 @@ from pyspark.sql import functions as F
 from json_schema_spark.compiler import (
     CompiledSpec,
     _failed,
-    _flag,
     _violation_rows,
     compile_spec,
 )
@@ -218,15 +217,9 @@ class ValidationRunner:
                 .overwrite_partitions(viol, pending)
 
             # single-pass verdict agg + lineage over the SAME flags
-            aggs = [
-                F.sum(F.col(f"`{_flag(i)}`").cast("long")).alias(f"v{i}")
-                for i in range(len(compiled.checks))
-            ] + [
-                F.count(F.lit(1)).alias("n_rows"),
-                F.collect_set(F.col("`\x00file`")).alias("files"),
-            ]
-            rows = {r["partition"]: r
-                    for r in flags.groupBy("partition").agg(*aggs).collect()}
+            rows = {r["partition"]: r for r in flags.groupBy("partition").agg(
+                *compiled.flag_sums, F.count(F.lit(1)).alias("n_rows"),
+                F.collect_set(F.col("`\x00file`")).alias("files")).collect()}
             wall_ms = int((time.monotonic() - t0) * 1000)
 
             verdicts = []

@@ -67,14 +67,16 @@ def _id_key(schema: dict, draft: str) -> str | None:
     return schema.get("$id") or schema.get("id")
 
 
-@dataclass
+@dataclass(eq=False)
 class SpecRegistry:
     """uri -> document and uri -> {anchor -> schema} caches
     (reference ``context``: src/reference.lisp:103-119).
 
     Reused across runs; building it once and compiling many partitions
     is the engine analogue of the reference's 245x cached-context
-    speedup (benchmark.lisp:13-47).
+    speedup (benchmark.lisp:13-47). A registry is equal only to itself,
+    and ``version`` counts the documents added to it, so that what was
+    compiled against it can be kept until it changes.
     """
 
     root: Any = None
@@ -82,6 +84,7 @@ class SpecRegistry:
     references: dict[str, Any] = field(default_factory=dict)
     named: dict[str, dict[str, Any]] = field(default_factory=dict)
     resolve_remote: bool = False  # src/reference.lisp:43-56 kill switch
+    version: int = field(default=0, init=False, repr=False)
 
     def __post_init__(self) -> None:
         if self.root is not None:
@@ -93,6 +96,7 @@ class SpecRegistry:
     # -- registry build (src/reference.lisp:475-530) -----------------
     def add_document(self, uri: str, doc: Any) -> None:
         uri = _strip_fragment(uri)
+        self.version += 1
         self.references[uri] = doc
         self.named.setdefault(uri, {})
         self._harvest(doc, uri)

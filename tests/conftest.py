@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 
 import pytest
 
@@ -34,6 +35,33 @@ def count_jobs(spark):
         # the status store is fed asynchronously by the listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count
+
+
+@pytest.fixture()
+def count_py4j(monkeypatch):
+    """``count_py4j(fn, *args, **kwargs)`` runs ``fn``; returns the
+    number of py4j round trips to the JVM it made on this thread and its
+    result. The py4j finalizer thread's object deletes are not counted."""
+    from py4j.java_gateway import GatewayClient
+
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+    n = 0
+
+    def counting(self, *args, **kwargs):
+        nonlocal n
+        n += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+
+    def count(fn, *args, **kwargs):
+        nonlocal n
+        n = 0
+        out = fn(*args, **kwargs)
+        return n, out
 
     return count
 

@@ -277,3 +277,18 @@ def test_bad_pcre_pattern_fails_at_compile_time(spark):
     with pytest.raises(Exception):
         compile_spec({"draft": "draft7",
                       "columns": {"s": {"pattern": r"(?P<broken"}}}, df)
+
+
+@pytest.mark.parametrize("partition_col", [None, "p"])
+def test_verdict_of_spec_without_checks_is_empty(spark, partition_col):
+    """An off-type keyword compiles to no check; the verdict frame is
+    then empty but keeps the verdict schema, with or without
+    partitions (the unpivot array is typed even when empty)."""
+    df = spark.createDataFrame([("a", "x"), ("b", "y")], "t string, p string")
+    compiled = compile_spec({"columns": {"t": {"minItems": 3}}}, df)
+    assert compiled.checks == ()
+    got = verdict_df(df, compiled, partition_col)
+    assert got.collect() == []
+    with_check = compile_spec({"columns": {"t": {"minLength": 3}}}, df)
+    want = verdict_df(df, with_check, partition_col).schema
+    assert got.schema.simpleString() == want.simpleString()

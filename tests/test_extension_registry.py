@@ -28,4 +28,4 @@ def test_register_custom_keyword(spark):
     # after unregistering, the keyword is unknown again -> skipped
     df = spark.range(4).select(F.col("id").alias("n"))
     compiled = compile_spec({"columns": {"n": {"x-even": True}}}, df)
-    assert compiled.checks == []
+    assert compiled.checks == ()

@@ -52,6 +52,14 @@ CASES = [
     pytest.param("draft3", {"required": ["a"]}, {}, _MAP, id="draft3-required-list"),
 ]
 
+# format: uri fails only a bracket left open in the authority, which
+# urlsplit rejects; the typed and VARIANT paths extract the authority
+# only from values that hold a bracket
+_URIS = {"ipv6-host": "http://[::1]/", "unclosed-bracket": "http://[::1/",
+         "stray-bracket": "http://a]b/", "no-authority": "mailto:x"}
+CASES += [pytest.param("draft7", {"format": "uri"}, uri, "string", id=f"uri-{label}")
+          for label, uri in _URIS.items()]
+
 # Count keywords with a bound at and beyond the largest Spark size or
 # length (2^31 - 1): the compile folds a bound that decides alone, so no
 # literal past a long reaches Spark.
@@ -85,6 +93,16 @@ def test_typed_variant_and_oracle_agree(spark, draft, schema, data, ddl):
         cols.append(_schema_pred(schema, dt, draft, spec)(F.col("v")).alias("typed"))
     got = df.select(*cols).collect()[0].asDict()
     assert got == {k: want for k in got}
+
+
+def test_uri_null_passes_on_both_paths(spark):
+    """A NULL cell and a JSON null are no strings: ``format`` passes
+    vacuously, as in the oracle."""
+    assert Validator({"format": "uri"}, draft="draft7").is_valid(None)
+    df = local_frame(spark, [("null", None)], "j string, v string")
+    typed = compile_spec({"columns": {"v": {"format": "uri"}}}, df).checks[0].predicate
+    variant = compile_variant({"format": "uri"})(F.try_parse_json(F.col("j")))
+    assert df.select(typed, variant).collect()[0] == (True, True)
 
 
 @pytest.mark.parametrize("schema", [
