@@ -39,15 +39,20 @@ from __future__ import annotations
 
 import decimal
 import functools
+import json
 import operator
 import re
+import threading
 import urllib.parse
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass, fields, replace
 from typing import Any, Callable, ClassVar
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.utils import get_active_spark_context
 
 from json_schema_spark.functions.formats import char_length_cmp, format_check
 from json_schema_spark.spec import ConstraintSpec, SpecError, SpecRegistry, _id_key
@@ -554,14 +559,56 @@ _BOUNDS = {"minimum": operator.ge, "maximum": operator.le,
 # receives (value, schema, dtype, draft, spec) and returns a PredFn;
 # it applies to typed columns.
 _CUSTOM_KEYWORDS: dict[tuple[str, str], Callable] = {}
+# bumped by every (un)registration, so that no spec compiled before it
+# is handed out again (:func:`compile_spec`'s memo)
+_keywords_version = 0
 
 
 def register_keyword(name: str, fn: Callable, draft: str = "*") -> None:
+    global _keywords_version
     _CUSTOM_KEYWORDS[(draft, name)] = fn
+    _keywords_version += 1
 
 
 def unregister_keyword(name: str, draft: str = "*") -> None:
+    global _keywords_version
     _CUSTOM_KEYWORDS.pop((draft, name), None)
+    _keywords_version += 1
+
+
+# -- compile once, validate many ---------------------------------------------
+# Both compilers keep their last _MEMO_SIZE compiled specs per Spark
+# context: Spark context -> key -> spec. A spec's Columns belong to the
+# context (and JVM) that built them.
+_MEMO_SIZE = 16
+_memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_memo_lock = threading.Lock()
+
+
+def _jvm_scope():
+    """What a compiled spec's Columns belong to: the active Spark
+    context. A new JVM always comes with a new context, and a Python
+    UDF Column (``format: regex``) is bound to the context that built
+    it, so a stopped context's Columns are never handed out again."""
+    return get_active_spark_context()
+
+
+def _memoized(key: tuple, build: Callable[[], "CompiledSpec"]) -> "CompiledSpec":
+    """The spec kept under ``key`` in the active context, else
+    ``build()``, kept unless it raises; the least recently used spec
+    beyond :data:`_MEMO_SIZE` is dropped."""
+    scope = _jvm_scope()
+    with _memo_lock:
+        memo = _memo.setdefault(scope, OrderedDict())
+        if key in memo:
+            memo.move_to_end(key)
+            return memo[key]
+    out = build()
+    with _memo_lock:
+        memo[key] = out
+        if len(memo) > _MEMO_SIZE:
+            memo.popitem(last=False)
+    return out
 
 
 def _and(cols: list[Column]) -> Column:
@@ -1074,10 +1121,29 @@ def compile_spec(spec: ConstraintSpec | dict, df: DataFrame) -> CompiledSpec:
     Produces one KeywordCheck per (column, top-level keyword) so error
     accumulation matches the reference (src/validators.lisp:105-108):
     all keywords evaluated, failures collected individually.
+
+    Compile once, validate many (src/reference.lisp:103-119): the
+    compiled spec is kept, per Spark context, for the last
+    :data:`_MEMO_SIZE` distinct arguments, so a new runner of the same
+    spec over the same schema reuses its Columns. A spec equal as JSON
+    over a schema equal as JSON is the same key; a ``ConstraintSpec``'s
+    registry is the same one only while no document was added to it,
+    and a keyword (un)registration starts every key afresh.
     """
+    registry = None if isinstance(spec, dict) else spec.registry
+    key = ("typed",
+           json.dumps(spec if isinstance(spec, dict) else [spec.raw, spec.draft],
+                      sort_keys=True, default=repr),
+           df.schema.json(), registry, None if registry is None else registry.version,
+           _keywords_version)
+    return _memoized(key, lambda: _compile_spec(
+        spec, {f.name: f.dataType for f in df.schema.fields}))
+
+
+def _compile_spec(spec: ConstraintSpec | dict,
+                  dtypes: dict[str, T.DataType]) -> CompiledSpec:
     if isinstance(spec, dict):
         spec = ConstraintSpec(spec)
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
     checks: list[KeywordCheck] = []
 
     for colname, schema in spec.columns.items():

@@ -146,18 +146,39 @@ def cardinality_profile(df: DataFrame, columns: list[str]) -> DataFrame:
     HLL approx distincts (the 10^12-row path — mergeable, fixed
     memory), null count, row count.
 
-    At true scale use only the `approx` column (exact count(DISTINCT)
-    over several columns multiplies the shuffle); the exact figure is
-    here for the oracle gate and for small dims.
+    The pass counts the rows of every value of every column, one
+    grouping set per column, and one global aggregate over those cells
+    gives each column's figures: its non-NULL cells are its exact
+    distincts, ``approx_count_distinct`` over them is the same HLL
+    estimate as over the rows (registers ignore multiplicity), its
+    NULL cell holds its null count, and any one set's counts sum to the
+    rows. A ``countDistinct`` beside ``approx_count_distinct`` would
+    instead carry an HLL buffer through every group of Spark's distinct
+    rewrite, outside generated code.
+
+    At true scale use only the `approx` column (the cells of a
+    high-cardinality column are as many as its values); the exact
+    figure is here for the oracle gate and for small dims.
     """
+    cols = list(dict.fromkeys(columns))
+    full = (1 << len(cols)) - 1
+    # grouping_id() of c's set: every bit set but c's (first column = top bit)
+    gid = {c: full ^ (1 << (len(cols) - 1 - i)) for i, c in enumerate(cols)}
+    cells = df.groupingSets([[c] for c in cols], *cols).agg(
+        F.grouping_id().alias("__gid"), F.count(F.lit(1)).alias("__n"))
     aggs = []
-    for c in columns:
+    for c in cols:
+        mine = F.col("__gid") == F.lit(gid[c])
+        value = F.when(mine, F.col(c))
         aggs += [
-            F.countDistinct(F.col(c)).alias(f"{c}__exact"),
-            F.approx_count_distinct(F.col(c)).alias(f"{c}__approx"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
+            F.count(value).alias(f"{c}__exact"),
+            F.approx_count_distinct(value).alias(f"{c}__approx"),
+            # NULL over no cells, as a sum over no rows
+            F.sum(F.when(mine, F.when(F.col(c).isNull(), F.col("__n"))
+                         .otherwise(F.lit(0)))).alias(f"{c}__nulls"),
         ]
-    row = df.agg(*aggs, F.count(F.lit(1)).alias("__rows"))
+    rows = F.sum(F.when(F.col("__gid") == F.lit(gid[cols[0]]), F.col("__n")))
+    row = cells.agg(*aggs, F.coalesce(rows, F.lit(0)).alias("__rows"))
     pairs = [
         F.struct(
             F.lit(c).alias("col_name"),

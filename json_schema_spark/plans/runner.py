@@ -6,16 +6,19 @@ compile the spec ONCE, then validate every pending partition in one
 pass over a cached projection of its failure flags — a fixed handful
 of Spark jobs per call, not per partition — recording a
 verdict/metrics/lineage row per (partition, check) in a results
-table. A run interrupted after K partitions resumes by skipping the
-partitions that already have verdicts — no duplicated results,
-identical final verdicts.
+table. Two actions read that projection at once, from two driver
+threads: the violations write and the verdict aggregate. The verdict
+rows, a few per partition, are then written by the driver itself. A
+run interrupted after K partitions resumes by skipping the partitions
+that already have verdicts — no duplicated results, identical final
+verdicts.
 
 Two entry points share that pass (``_validate``): ``run()`` takes a
 plain DataFrame and finds its pending partitions with a ``distinct``
 over it; ``run_snapshot_increment()`` takes an IceTable source and reads
 the partitions touched since its watermark snapshot from the source's
-manifests, so a call runs only the violations write, the verdict
-aggregate and the verdict write.
+manifests, so a call runs only the violations write and the verdict
+aggregate.
 
 The spec's table-level block (``run_dataset_checks``) is separate: its
 checks are independent tasks, submitted together from a pool of driver
@@ -55,6 +58,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from json_schema_spark.compiler import (
     CompiledSpec,
@@ -62,7 +66,7 @@ from json_schema_spark.compiler import (
     _violation_rows,
     compile_spec,
 )
-from json_schema_spark.session import local_frame
+from json_schema_spark.session import arrow_table, local_frame
 from json_schema_spark.sources.icetable import (
     HIVE_DEFAULT_PARTITION,
     IceTable,
@@ -111,6 +115,7 @@ class ValidationRunner:
                 f"{self.results_dir!r} holds results in the older plain-parquet "
                 f"layout ({', '.join(legacy)}); start a fresh results directory")
         self._verdict_table = self._table("verdicts_ice", self._VERDICT_DDL)
+        self._verdict_schema = T._parse_datatype_string(self._VERDICT_DDL)
 
     def _table(self, name: str, ddl: str) -> IceTable:
         """Open the results IceTable ``name``, creating it from ``ddl``
@@ -182,13 +187,20 @@ class ValidationRunner:
 
         Every check's predicate runs once per row, in one projection
         of the id columns and failure flags (``compiler._failed``),
-        which is cached: the violations write explodes it, one grouped
-        aggregate sums its flags into every partition's verdicts, and
-        one IceTable commit per results table lands every violation and
-        verdict row. A call thus runs the same few Spark jobs whether it
-        validates one partition or a thousand. The cache grows with the
-        partitions taken, by the id columns and one boolean per check
-        per row."""
+        which is cached. Two actions read it, submitted together from
+        two driver threads so that the call waits for Spark once: the
+        violations write explodes it and commits, and one grouped
+        aggregate sums its flags into every partition's verdicts.
+        Spark's block lock lets one action compute each cached block
+        while the other waits and then reads it. The call waits for
+        both, raises the violations error before the aggregate's, and
+        drops the cache only then. The verdict rows, a few per
+        partition, go to the verdict table as parquet files written by
+        the driver (no Spark job), and their commit comes last: it is
+        the checkpoint. A call thus runs the same few Spark jobs
+        whether it validates one partition or a thousand. The cache
+        grows with the partitions taken, by the id columns and one
+        boolean per check per row."""
         compiled = self._compile(slice_df)
         if not compiled.checks:
             summary = {**(summary or {}), _DONE: pending}
@@ -205,41 +217,44 @@ class ValidationRunner:
             F.col(partition_col).cast("string").alias("partition"),
             F.input_file_name().alias("\x00file"),
         ]).cache()
-        # unpersist in finally: a failure (commit conflict, write error)
-        # must not leak the cached flags — retries would otherwise
-        # accumulate cached DataFrames in executor memory for the rest
-        # of the session
+        # unpersist in finally, once both actions have ended: a failure
+        # (commit conflict, write error) must not leak the cached flags —
+        # retries would otherwise accumulate cached DataFrames in
+        # executor memory for the rest of the session
         try:
             viol = _violation_rows(flags, compiled, keep, self.run_id)
-            # naming the pending set replaces its partitions' rows,
-            # including those of a partition that is now clean
-            self._table("violations_ice", viol.schema.toDDL()) \
-                .overwrite_partitions(viol, pending)
-
-            # single-pass verdict agg + lineage over the SAME flags
-            rows = {r["partition"]: r for r in flags.groupBy("partition").agg(
+            violations = self._table("violations_ice", viol.schema.toDDL())
+            agg = flags.groupBy("partition").agg(
                 *compiled.flag_sums, F.count(F.lit(1)).alias("n_rows"),
-                F.collect_set(F.col("`\x00file`")).alias("files")).collect()}
-            wall_ms = int((time.monotonic() - t0) * 1000)
-
-            verdicts = []
-            for part in pending:
-                row = rows.get(part)
-                n = row["n_rows"] if row else 0
-                files = [f for f in (row["files"] if row else []) if f]
-                for i, c in enumerate(compiled.checks):
-                    nv = row[f"v{i}"] if row else 0
-                    verdicts.append((
-                        self.run_id, part, f"{c.column}/{c.keyword}",
-                        nv == 0, n, nv,
-                        {"violation_rate": (nv / n) if n else 0.0},
-                        files, wall_ms,
-                    ))
-            vdf = local_frame(self.spark, verdicts, self._VERDICT_DDL)
-            self._verdict_table.overwrite_partitions(vdf.coalesce(1), pending,
-                                                     summary=summary)
+                F.collect_set(F.col("`\x00file`")).alias("files"))
+            # the violations write and the verdict aggregate run at once,
+            # from two driver threads: whichever computes a cached block
+            # first, the other reads it. Naming the pending set replaces
+            # its partitions' rows, including those of a now-clean one.
+            _, sums = _run_together(self.spark, [
+                partial(violations.overwrite_partitions, viol, pending),
+                agg.collect])
         finally:
             flags.unpersist()
+        rows = {r["partition"]: r for r in sums}
+        wall_ms = int((time.monotonic() - t0) * 1000)
+
+        verdicts = []
+        for part in pending:
+            row = rows.get(part)
+            n = row["n_rows"] if row else 0
+            files = [f for f in (row["files"] if row else []) if f]
+            for i, c in enumerate(compiled.checks):
+                nv = row[f"v{i}"] if row else 0
+                verdicts.append((
+                    self.run_id, part, f"{c.column}/{c.keyword}",
+                    nv == 0, n, nv,
+                    {"violation_rate": (nv / n) if n else 0.0},
+                    files, wall_ms,
+                ))
+        # a few rows per partition, written by the driver: no Spark job
+        self._verdict_table.overwrite_partitions(
+            arrow_table(verdicts, self._verdict_schema), pending, summary=summary)
 
     # -- snapshot-incremental pass (source is an IceTable) ------------------
     def run_snapshot_increment(
@@ -365,29 +380,16 @@ class ValidationRunner:
         after the tasks before it in block order have finished, the
         first in block order winning.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
         spec = self.spec if isinstance(self.spec, ConstraintSpec) else ConstraintSpec(self.spec)
         entries = [(kind, e) for kind in _BLOCK_ORDER
                    for e in spec.dataset.get(kind, [])]
         dims = dims or {}
         _check_dataset_block(entries, dims)
 
-        tasks = _dataset_tasks(self.spark, df, entries, dims)
         results: list[tuple | None] = [None] * len(entries)
-        with ThreadPoolExecutor(
-                max_workers=max(1, min(len(tasks), _MAX_TASK_THREADS))) as pool:
-            futures = [pool.submit(inheritable_thread_target(self.spark)(t))
-                       for t in tasks]
-            try:
-                for f in futures:
-                    for pos, row in f.result():
-                        results[pos] = row
-            except BaseException:
-                pool.shutdown(cancel_futures=True)
-                raise
+        for rows in _run_together(self.spark, _dataset_tasks(self.spark, df, entries, dims)):
+            for pos, row in rows:
+                results[pos] = row
         return local_frame(
             self.spark, results,
             "check string, pass boolean, n_violations long, metric double",
@@ -402,6 +404,27 @@ class ValidationRunner:
     def violations(self) -> DataFrame:
         return IceTable(self.spark, os.path.join(self.results_dir, "violations_ice")
                         ).scan().fillna("", ["partition"])
+
+
+def _run_together(spark: SparkSession, tasks: list) -> list:
+    """Run each no-argument task on its own driver thread (at most
+    ``_MAX_TASK_THREADS`` at once), so that their Spark jobs overlap,
+    and return their results in task order. Each thread inherits the
+    caller's job group and other local properties. A task's error is
+    raised once every started task has ended, the first in task order
+    winning; tasks not yet started are cancelled."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(
+            max_workers=max(1, min(len(tasks), _MAX_TASK_THREADS))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+        try:
+            return [f.result() for f in futures]
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
 
 
 # -- the dataset block's tasks ------------------------------------------------

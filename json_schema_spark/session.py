@@ -13,6 +13,7 @@ import os
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -44,24 +45,31 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def arrow_table(rows: Iterable[tuple], schema: StructType):
+    """A driver-side list of row tuples as a ``pyarrow.Table`` of
+    ``to_arrow_schema(schema)``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+
+
 def local_frame(spark: SparkSession, rows: Iterable[tuple],
                 ddl: str) -> DataFrame:
     """A driver-side list of row tuples as a DataFrame of schema ``ddl``.
 
-    The rows go in as a ``pyarrow.Table``, which Spark turns into a
-    local relation whatever ``spark.sql.execution.arrow.pyspark.enabled``
-    says: reading it starts no Python worker, and an empty list gives a
-    relation with no partitions. ``createDataFrame(list, ddl)``
-    instead parallelizes the rows through a PythonRDD, whose tasks a
-    later ``coalesce(1)`` runs one after another."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    The rows go in as a ``pyarrow.Table`` (:func:`arrow_table`), which
+    Spark turns into a local relation whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says: reading it
+    starts no Python worker, and an empty list gives a relation with no
+    partitions. ``createDataFrame(list, ddl)`` instead parallelizes the
+    rows through a PythonRDD, whose tasks a later ``coalesce(1)`` runs
+    one after another."""
     from pyspark.sql.types import _parse_datatype_string
 
     schema = _parse_datatype_string(ddl)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow)
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -64,6 +64,7 @@ from datetime import date, datetime, timezone
 from decimal import Decimal
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from json_schema_spark.session import local_frame
@@ -507,12 +508,15 @@ class IceTable:
         t._publish("v0.metadata.json", meta, indent=1)
         return t
 
-    def _check_columns(self, df: DataFrame, meta: dict) -> None:
+    def _check_columns(self, df: DataFrame | pa.Table, meta: dict) -> None:
         from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         declared = {f.name: f.dataType.simpleString() for f in
                     T._parse_datatype_string(meta["schema"]).fields}
-        extra = set(df.columns) - set(declared)
+        schema = (df.schema if isinstance(df, DataFrame)
+                  else from_arrow_schema(df.schema))
+        extra = set(schema.names) - set(declared)
         if extra:
             raise ValueError(
                 f"columns {sorted(extra)} not in table schema — run "
@@ -521,20 +525,27 @@ class IceTable:
         # written with another type could not be decoded
         retyped = sorted(
             f"{f.name} {f.dataType.simpleString()} (table: {declared[f.name]})"
-            for f in df.schema.fields
+            for f in schema.fields
             if f.dataType.simpleString() != declared[f.name])
         if retyped:
             raise ValueError(
                 f"columns {retyped} do not match the table schema types — "
                 "cast them to the declared types first")
 
-    def _stage(self, df: DataFrame, partition_by: list[str],
+    def _stage(self, df: DataFrame | pa.Table, partition_by: list[str],
                bloom_cols: list[str] | None = None) -> list[dict]:
+        """Write ``df`` as new data files under a fresh commit dir and
+        return their manifest entries. A DataFrame is written by a Spark
+        job; a ``pyarrow.Table`` (a few driver-side rows) is written by
+        the driver, in the same Hive layout (:meth:`_write_arrow`)."""
         stage = os.path.join(self.root, "data", f"commit-{uuid.uuid4().hex}")
-        w = df.write.mode("error")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(stage)
+        if isinstance(df, DataFrame):
+            w = df.write.mode("error")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(stage)
+        else:
+            self._write_arrow(df, stage, partition_by)
         files = sorted(glob.glob(os.path.join(stage, "**", "*.parquet"),
                                  recursive=True))
         entries = [_file_entry(p, tuple(partition_by)) for p in files]
@@ -574,6 +585,36 @@ class IceTable:
                 e["bloom_ref"] = side
         return entries
 
+    def _write_arrow(self, table: pa.Table, stage: str,
+                     partition_by: list[str]) -> None:
+        """One parquet file per partition value, under the directory
+        Spark's partitioned write would give it: names and values
+        escaped by Spark's own ``ExternalCatalogUtils.escapePathName``,
+        NULL and ``""`` written as Hive's default partition. Partition
+        columns must be strings, whose path form is the value itself."""
+        import pyarrow.parquet as pq
+
+        for c in partition_by:
+            if not pa.types.is_string(table.schema.field(c).type):
+                raise ValueError(f"partition column {c!r} of a driver-side "
+                                 "write must be a string column")
+        escape = (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+                  .ExternalCatalogUtils.escapePathName)
+        keys = (zip(*(table[c].to_pylist() for c in partition_by)) if partition_by
+                else [()] * table.num_rows)
+        rows: dict[tuple, list[int]] = {}
+        for i, key in enumerate(keys):
+            rows.setdefault(tuple(v or None for v in key), []).append(i)
+        data = table.drop_columns(partition_by)
+        names = [escape(c) for c in partition_by]
+        for key, idx in rows.items():
+            part = os.path.join(stage, *(
+                f"{c}={HIVE_DEFAULT_PARTITION if v is None else escape(v)}"
+                for c, v in zip(names, key)))
+            os.makedirs(part)
+            pq.write_table(data.take(idx), os.path.join(
+                part, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"))
+
     def append(self, df: DataFrame, summary: dict | None = None) -> int:
         """Stage ``df`` as immutable data files, then commit a new
         snapshot = parent's files + the new ones. Returns snapshot id.
@@ -597,7 +638,8 @@ class IceTable:
             new_entries=new,
         )
 
-    def overwrite_partitions(self, df: DataFrame, partitions: Iterable = (),
+    def overwrite_partitions(self, df: DataFrame | pa.Table,
+                             partitions: Iterable = (),
                              summary: dict | None = None) -> int:
         """Dynamic-partition overwrite: replace exactly the partitions
         present in ``df`` plus those named in ``partitions`` (the
@@ -605,8 +647,9 @@ class IceTable:
         resume needs). A named partition with no rows in ``df`` is
         dropped. Naming partitions needs a table with one partition
         column; values compare as the strings the Hive paths hold.
-        ``summary`` adds caller keys to the snapshot summary, as in
-        :meth:`append`."""
+        ``df`` may be a ``pyarrow.Table`` of driver-side rows, written
+        without a Spark job (:meth:`_stage`). ``summary`` adds caller
+        keys to the snapshot summary, as in :meth:`append`."""
         meta = self._read_meta()
         pcols = meta["partition_by"]
         if not pcols:

@@ -42,18 +42,24 @@ def count_jobs(spark):
 @pytest.fixture()
 def count_py4j(monkeypatch):
     """``count_py4j(fn, *args, **kwargs)`` runs ``fn``; returns the
-    number of py4j round trips to the JVM it made on this thread and its
-    result. The py4j finalizer thread's object deletes are not counted."""
+    number of py4j round trips to the JVM made meanwhile, on every
+    thread (``fn`` may submit work to driver threads), and its result.
+    Object deletes are not counted: they follow Python's garbage
+    collection, not the work ``fn`` does."""
+    from py4j import protocol
     from py4j.java_gateway import GatewayClient
 
     send = GatewayClient.send_command
-    me = threading.get_ident()
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    lock = threading.Lock()
     n = 0
 
-    def counting(self, *args, **kwargs):
+    def counting(self, command, *args, **kwargs):
         nonlocal n
-        n += threading.get_ident() == me
-        return send(self, *args, **kwargs)
+        if not command.startswith(delete):
+            with lock:
+                n += 1
+        return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(GatewayClient, "send_command", counting)
 

@@ -323,6 +323,27 @@ def test_cardinality_profile_and_heavy_hitters(spark):
     for c in prof:
         exact, approx = prof[c]["n_distinct"], prof[c]["n_distinct_approx"]
         assert abs(approx - exact) <= max(1, 0.05 * exact), (c, exact, approx)
+
+    # every figure equals its own per-column query, NULLs included: the
+    # approx one is the same HLL estimate as over the raw column
+    with_nulls = docs.select(
+        F.when(F.col("doc_id") % 50 != 0, F.col("text")).alias("text"),
+        F.when(F.col("doc_id") % 70 != 3, F.col("lang")).alias("lang"),
+        "n_chars")
+    cols = ["text", "lang", "n_chars"]
+    for df in (docs.select(*cols), with_nulls):
+        n = df.count()
+        want = [(c, df.select(c).where(F.col(c).isNotNull()).distinct().count(),
+                 df.agg(F.approx_count_distinct(c)).first()[0],
+                 df.where(F.col(c).isNull()).count(), n) for c in cols]
+        assert [tuple(r) for r in cardinality_profile(df, cols).collect()] == want
+    assert any(nulls for *_, nulls, _ in want)
+    # an empty frame: no distincts, no rows, and (a sum over no rows) NULL nulls
+    empty = cardinality_profile(with_nulls.limit(0), cols)
+    assert [tuple(r) for r in empty.collect()] == [(c, 0, 0, None, 0) for c in cols]
+    assert empty.dtypes == [("col_name", "string"), ("n_distinct", "bigint"),
+                            ("n_distinct_approx", "bigint"), ("n_nulls", "bigint"),
+                            ("n_rows", "bigint")]
     hh = heavy_hitters(docs, "lang", k=2).collect()
     assert len(hh) == 2 and hh[0]["n"] >= hh[1]["n"]
 

@@ -208,6 +208,75 @@ def test_special_char_partition_values(spark, tmp_path):
     assert len(t.plan_files([("pcol", "=", "a+b")])) == 1
 
 
+def test_driver_written_rows_equal_spark_written(spark, tmp_path, count_jobs):
+    """Rows staged from a ``pyarrow.Table`` are written by the driver,
+    without a Spark job. They land in the directories Spark's
+    partitioned write gives the same rows, with the same manifest
+    entries, and read back as the same rows of the same types: a NULL
+    and an empty-string partition (Hive's default) and a value holding
+    '/ : % = #' and a space included."""
+    from pyspark.sql import types as T
+
+    from json_schema_spark.plans.runner import ValidationRunner
+    from json_schema_spark.session import arrow_table, local_frame
+
+    ddl = ValidationRunner._VERDICT_DDL
+    odd = "a/b: c%d=e#f g"
+    rows = [("r", p, f"c/{k}", k == "x", 10, 1 - (k == "x"),
+             {"violation_rate": 0.1, "other": None} if p else {},
+             [f"file:/d/{p}/f{k}.parquet", "file:/d/g.parquet"] if p != odd else [],
+             7)
+            for p in ("", odd, "2024-03-01") for k in ("x", "y")]
+    nulls = [("r", None, "c/z", True, 1, 0, {}, [], 7),
+             ("r", "", "c/z", True, 2, 0, {}, [], 7)]
+    parts = ["", odd, "2024-03-01", "gone"]
+
+    def write(name, frame):
+        t = IceTable.create(spark, str(tmp_path / name), ddl, ["partition"])
+        t.overwrite_partitions(frame([rows[0]]), ["gone"])
+        t.overwrite_partitions(frame(rows), parts)
+        entries = sorted(t.plan_files(), key=lambda e: e["path"])
+        t.overwrite_partitions(frame(nulls))
+        for e in entries:
+            # the path below the commit dir, which is named by a uuid
+            e["path"] = os.path.dirname(e["path"].split("/data/", 1)[1].split("/", 1)[1])
+            e.pop("bytes")
+        return t, entries
+
+    schema = T._parse_datatype_string(ddl)
+    spark_jobs, (by_spark, spark_entries) = count_jobs(
+        "spark-written", write, "spark",
+        lambda r: local_frame(spark, r, ddl).coalesce(1))
+    driver_jobs, (by_driver, driver_entries) = count_jobs(
+        "driver-written", write, "driver", lambda r: arrow_table(r, schema))
+    assert spark_jobs == 3 and driver_jobs == 0
+    assert driver_entries == spark_entries
+    assert sorted(e["path"] for e in driver_entries) == [
+        "partition=2024-03-01", "partition=__HIVE_DEFAULT_PARTITION__",
+        "partition=a%2Fb%3A c%25d%3De%23f g"]
+    assert by_driver.scan().dtypes == by_spark.scan().dtypes
+    got = sorted(map(repr, by_driver.scan().collect()))
+    assert got == sorted(map(repr, by_spark.scan().collect()))
+    # the NULL and "" rows replaced the default partition's, and read
+    # back as NULL, as in Spark's own partition discovery
+    assert len(got) == len(rows)
+    assert by_driver.scan().where("partition is null").count() == len(nulls)
+    assert len(by_driver.plan_files([("partition", "=", odd)])) == 1
+    assert [s["summary"] for s in by_driver.snapshots()] \
+        == [s["summary"] for s in by_spark.snapshots()]
+
+
+def test_driver_written_rows_need_string_partitions(spark, tmp_path):
+    import pyarrow as pa
+
+    t = IceTable.create(spark, str(tmp_path / "t"), "doc_id long, bucket int",
+                        ["bucket"])
+    with pytest.raises(ValueError, match="string column"):
+        t.overwrite_partitions(pa.table({"doc_id": pa.array([1], pa.int64()),
+                                         "bucket": pa.array([2], pa.int32())}))
+    assert t.snapshots() == []
+
+
 def test_partition_column_keeps_declared_type(spark, tmp_path):
     df = spark.createDataFrame([(1, 10), (2, 20)], "doc_id long, bucket int")
     t = IceTable.create(spark, str(tmp_path / "t"),

@@ -1,14 +1,16 @@
 """Compile once, validate many (src/reference.lisp:103-119): a compiled
-spec keeps the Spark expressions derived from its checks, and the
-VARIANT wrappers keep the spec they compile, so a repeated verdict or
-violation call builds a few dozen py4j round trips' worth of Columns,
-not thousands. The budgets below are the counts measured for these
-specs; a change that rebuilds the derived Columns per call exceeds
-them several times over.
+spec keeps the Spark expressions derived from its checks, and
+``compile_spec`` and the VARIANT wrappers keep the specs they compile,
+so a repeated verdict or violation call, or a new runner's first call,
+builds a few dozen py4j round trips' worth of Columns, not thousands.
+The budgets below are the counts measured for these specs; a change
+that rebuilds the derived Columns per call exceeds them several times
+over.
 
 The kept Columns must never outlive what they were built for: a new
-check list, a registry that gained a document, another Spark context,
-a schema that failed to compile."""
+check list, a registry that gained a document, a frame of another
+schema, a keyword (un)registration, another Spark context, a schema
+that failed to compile."""
 
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json_schema_spark import compile_spec, verdict_df, violations_df
+from json_schema_spark import compiler as memo
 from json_schema_spark import compiler_variant as cv
 from json_schema_spark.compiler_variant import (
     VariantUnsupported,
@@ -60,15 +63,17 @@ JSON_SCHEMA = {
     "additionalProperties": False,
 }
 
-# py4j round trips of a repeated call on this test's frames, as
-# measured; the code before the derived Columns were kept made 1,546,
-# 1,668, 3,987, 4,053 and 2,376
+# py4j round trips of a repeated call on this test's frames, on every
+# thread, as measured; the code before the derived Columns were kept
+# made 1,546, 1,668, 3,987, 4,053 and 2,376. A runner's call is also
+# the budget of a new runner's first call, which made 3,192 before
+# compile_spec kept its specs.
 BUDGET = {
     "verdict_df": 40,
     "violations_df": 81,
     "variant_verdict_df": 49,
     "variant_violations_df": 90,
-    "runner_validate": 282,
+    "runner_validate": 279,
 }
 
 
@@ -117,6 +122,54 @@ def test_second_runner_pass_stays_within_budget(spark, web, tmp_path, count_py4j
     n, _ = count_py4j(runner._validate, slice_df, "warc_day", days)
     assert n <= BUDGET["runner_validate"], n
     assert sorted(map(tuple, runner.verdicts().drop("wall_ms").collect())) == before
+
+
+def test_new_runner_of_the_same_spec_stays_within_budget(spark, web, tmp_path,
+                                                          count_py4j):
+    """Each cycle of a caller may build a new runner: its first call
+    finds the spec compiled by an earlier runner of the same spec over
+    the same schema, and builds none of its Columns again."""
+    days = sorted(r[0] for r in web.select(F.col("warc_day").cast("string"))
+                  .distinct().collect())
+    slice_df = web.where(F.col("warc_day").cast("string").isin(days))
+    first = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "first"))
+    first._validate(slice_df, "warc_day", days)
+    runner = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "second"))
+    n, _ = count_py4j(runner._validate, slice_df, "warc_day", days)
+    assert runner.compiled is first.compiled
+    assert n <= BUDGET["runner_validate"], n
+    assert sorted(map(tuple, runner.verdicts().drop("wall_ms").collect())) \
+        == sorted(map(tuple, first.verdicts().drop("wall_ms").collect()))
+
+
+def test_typed_spec_is_compiled_again_for_another_schema(spark):
+    spec = {"columns": {"n": {"minimum": 0}}}
+    ints = local_frame(spark, [(-1,), (2,)], "n int")
+    strings = local_frame(spark, [("-1",), ("2",)], "n string")
+    compiled = compile_spec(spec, ints)
+    assert compile_spec(spec, local_frame(spark, [(5,)], "n int")) is compiled
+    assert compile_spec(ConstraintSpec(spec), ints) is not compiled
+    # minimum is off-type on a string column: no check there
+    assert compile_spec(spec, strings).check_names() == []
+    assert compiled.check_names() == [("n", "minimum")]
+    assert [r["n_violations"] for r in verdict_df(ints, compiled).collect()] == [1]
+
+
+def test_typed_spec_is_compiled_again_after_a_keyword_registration(spark):
+    from json_schema_spark.compiler import register_keyword, unregister_keyword
+
+    spec = {"columns": {"n": {"x-odd": True}}}
+    df = local_frame(spark, [(1,), (2,), (4,)], "n int")
+    assert compile_spec(spec, df).checks == ()
+    register_keyword("x-odd", lambda val, schema, dt, draft, s:
+                     lambda c: F.pmod(c, F.lit(2)) == F.lit(1))
+    try:
+        compiled = compile_spec(spec, df)
+        assert compiled.check_names() == [("n", "x-odd")]
+        assert [r["n_violations"] for r in verdict_df(df, compiled).collect()] == [2]
+    finally:
+        unregister_keyword("x-odd")
+    assert compile_spec(spec, df).checks == ()
 
 
 def test_replaced_checks_get_their_own_columns(web):
@@ -187,22 +240,22 @@ def test_another_spark_context_compiles_again(spark, monkeypatch):
     another one the memo starts empty. A JVM restart is faked by
     swapping the scope object, not performed."""
     compiled = variant_compiled_spec("doc", JSON_SCHEMA)
-    scopes = len(cv._memo)
+    scopes = len(memo._memo)
 
     class OtherContext:
         pass
 
     other = OtherContext()
-    monkeypatch.setattr(cv, "_jvm_scope", lambda: other)
+    monkeypatch.setattr(memo, "_jvm_scope", lambda: other)
     in_other = variant_compiled_spec("doc", JSON_SCHEMA)
     assert in_other is not compiled
     assert variant_compiled_spec("doc", JSON_SCHEMA) is in_other
-    assert len(cv._memo) == scopes + 1
+    assert len(memo._memo) == scopes + 1
     monkeypatch.undo()
     assert variant_compiled_spec("doc", JSON_SCHEMA) is compiled
     # the memo holds its scope weakly: a dropped context drops its specs
     del other
-    assert len(cv._memo) == scopes
+    assert len(memo._memo) == scopes
 
 
 def test_raising_compile_is_not_cached(spark, monkeypatch):
@@ -218,13 +271,13 @@ def test_raising_compile_is_not_cached(spark, monkeypatch):
 
 
 def test_memo_is_bounded(spark):
-    size = cv._MEMO_SIZE
+    size = memo._MEMO_SIZE
     specs = [variant_compiled_spec("doc", {"maxLength": n}) for n in range(size)]
-    assert len(cv._memo[cv._jvm_scope()]) == size
+    assert len(memo._memo[memo._jvm_scope()]) == size
     # the least recently used spec goes first
     assert variant_compiled_spec("doc", {"maxLength": 0}) is specs[0]
     variant_compiled_spec("doc", {"maxLength": size})
-    assert len(cv._memo[cv._jvm_scope()]) == size
+    assert len(memo._memo[memo._jvm_scope()]) == size
     assert variant_compiled_spec("doc", {"maxLength": 0}) is specs[0]
     assert variant_compiled_spec("doc", {"maxLength": 1}) is not specs[1]
 
@@ -232,7 +285,7 @@ def test_memo_is_bounded(spark):
 def test_memo_under_concurrent_callers(spark):
     """More threads than cores compile and evict concurrently: every
     caller gets the spec of its own schema and the memo stays bounded."""
-    size = cv._MEMO_SIZE
+    size = memo._MEMO_SIZE
     errors = []
 
     def work(t):
@@ -256,7 +309,7 @@ def test_memo_under_concurrent_callers(spark):
         sys.setswitchinterval(old)
     assert not any(th.is_alive() for th in threads)
     assert errors == []
-    assert len(cv._memo[cv._jvm_scope()]) == size
+    assert len(memo._memo[memo._jvm_scope()]) == size
 
 
 def test_typed_spec_derives_columns_once(web):

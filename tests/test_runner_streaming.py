@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -226,6 +228,92 @@ def test_run_failure_does_not_leak_cached_slice(spark, pages_parquet, tmp_path):
     assert r.completed() == set()
 
 
+def test_violations_write_failure_on_its_thread(spark, pages_parquet, tmp_path,
+                                                monkeypatch):
+    """The violations write runs on a driver thread beside the verdict
+    aggregate. Its failure is raised in the caller once both have
+    ended; the verdict table stays at its prior snapshot, no cached
+    flags are left, and the next call redoes the partitions."""
+    import threading
+
+    from json_schema_spark.sources.icetable import IceTable
+    from tests.test_commit_protocol import Crash
+
+    df = spark.read.parquet(pages_parquet)
+    r = ValidationRunner(spark, WEB_SPEC, str(tmp_path / "res"), run_id="vf")
+    r.run(df, max_partitions=2)
+    snapshots = r._verdict_table.snapshots()
+    verdicts = sorted(map(repr, r.verdicts().collect()))
+    sc = spark.sparkContext
+    cached = set(sc._jsc.getPersistentRDDs().keys())
+
+    threads = []
+    stage = IceTable._stage
+
+    def failing_stage(self, *a, **k):
+        out = stage(self, *a, **k)  # the Spark write job runs
+        if os.path.basename(self.root) == "violations_ice":
+            threads.append(threading.get_ident())
+            raise Crash("violations write")
+        return out
+
+    monkeypatch.setattr(IceTable, "_stage", failing_stage)
+    with pytest.raises(Crash, match="violations write"):
+        r.run(df)
+    monkeypatch.undo()
+    assert threads and threading.get_ident() not in threads
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert set(sc._jsc.getPersistentRDDs().keys()) == cached
+    assert r._verdict_table.snapshots() == snapshots
+    assert sorted(map(repr, r.verdicts().collect())) == verdicts
+
+    assert len(r.run(df)) == tb.N_DAYS - 2
+    assert r.completed() == {x[0] for x in df.select(
+        F.col("warc_day").cast("string")).distinct().collect()}
+
+
+def test_verdict_rows_written_by_the_driver(spark, tmp_path):
+    """A call's verdict rows are written by the driver, one file per
+    partition, and read back as the declared types with their counts,
+    rates and input files: an empty-string partition and one holding
+    '/ : % = #' and a space included."""
+    odd = "a/b: c%d=e#f g"
+    spec = {"columns": {"n": {"type": "integer", "minimum": 0}}}
+    hosts = ["", odd, "h"]
+    rows = [(f"u{i}", hosts[i % 3], i % 4 - 1) for i in range(30)]
+    path = str(tmp_path / "src")
+    spark.createDataFrame(rows, "url string, host string, n int") \
+        .coalesce(1).write.parquet(path)
+    src = spark.read.parquet(path)
+    [src_file] = [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+    r = ValidationRunner(spark, spec, str(tmp_path / "res"), run_id="d")
+    assert sorted(r.run(src, partition_col="host")) == sorted(hosts)
+    assert r.completed() == set(hosts)
+    got = r.verdicts()
+    assert got.dtypes == [
+        ("run_id", "string"), ("partition", "string"), ("check", "string"),
+        ("pass", "boolean"), ("n_rows", "bigint"), ("n_violations", "bigint"),
+        ("metrics", "map<string,double>"), ("input_files", "array<string>"),
+        ("wall_ms", "bigint")]
+    want = set()
+    for h in hosts:
+        ns = [n for _, host, n in rows if host == h]
+        bad = sum(n < 0 for n in ns)
+        for check, nv in (("n/type", 0), ("n/minimum", bad)):
+            want.add(("d", h, check, nv == 0, len(ns), nv, nv / len(ns)))
+    assert {(x["run_id"], x["partition"], x["check"], x["pass"], x["n_rows"],
+             x["n_violations"], x["metrics"]["violation_rate"])
+            for x in got.collect()} == want
+    assert all(len(x["input_files"]) == 1 and x["input_files"][0].endswith(src_file)
+               for x in got.collect())
+    files = [e["path"] for e in r._verdict_table.plan_files()]
+    assert len(files) == len(hosts)
+    assert {os.path.basename(os.path.dirname(f)) for f in files} == {
+        "partition=__HIVE_DEFAULT_PARTITION__", "partition=h",
+        "partition=a%2Fb%3A c%25d%3De%23f g"}
+
+
 def test_chunked_run_identical_to_one_at_a_time(spark, pages_parquet, tmp_path):
     """One call validates its whole pending set in one pass (grouped
     verdict agg + one violations commit) and must produce the same
@@ -285,8 +373,10 @@ def test_snapshot_increment_job_count_independent_of_partitions(
         spark, pages_parquet, tmp_path, count_jobs):
     """A snapshot-incremental call answers its partition set from the
     source's manifests and reads under the declared schema, so it runs
-    only its real work — the violations write, the verdict aggregate
-    and the verdict write — for one partition or for three."""
+    only its real work for one partition or for three: the violations
+    write and, beside it, the verdict aggregate, whose adaptive plan
+    builds the cached flags in a job of its own before its map and
+    result jobs. The verdict rows are written without a job."""
     from json_schema_spark.sources.icetable import IceTable
 
     df = spark.read.parquet(pages_parquet)
