@@ -527,8 +527,8 @@ def q_drift_psi_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_drift_ks_by_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact KS of n_chars: EVERY source partition vs the rest of the
-    table, one query over the observed (source, n_chars) cells, with
-    no per-partition Python loop."""
+    table, from one aggregate down to the observed (source, n_chars)
+    cells, which the driver sweeps once in value order."""
     df = _docs(spark, sf_dir)
     return ks_by_partition(df, "n_chars", "source").select(
         F.col("partition").alias("part"),

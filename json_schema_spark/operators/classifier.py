@@ -192,8 +192,7 @@ def calibration_sweep(
     grid_index lambda (idx = |{t in grid: t <= score}|) runs on the
     bounded distinct-score histogram, never the corpus, and the
     per-threshold suffix sums run on the even smaller (grid_index,
-    label) rollup crossed with the bounded grid (the drift.py
-    broadcast-grid precedent).
+    label) rollup crossed with the bounded grid.
 
     The projection gets a LAZY localCheckpoint barrier before the
     groupBy (the pipeline_web_curation precedent).  Measured at sf0.1

@@ -5,25 +5,36 @@ validator's ``src/validators.lisp:339-341,402-408``) over time: does
 partition P's distribution of a column differ from the rest of the
 table?
 
-Three statistics, all in pure DataFrame ops (no UDF, no Python loop):
+Each statistic is one Spark aggregate down to the observed
+``(partition, value)`` cells, ``groupBy(partition, value).count()``,
+which the driver collects (at most :data:`MAX_CELLS`) and finishes in
+plain Python; the result comes back as a local DataFrame.
 
-* **chi-square** for categoricals (e.g. ``lang``): contingency counts
-  via ONE ``groupBy(partition, category)`` pass, expected counts from
-  the pooled marginals by window, statistic = sum((obs-exp)^2/exp).
+* **chi-square** for categoricals (e.g. ``lang``): expected counts
+  from the pooled marginals, statistic = sum((obs-exp)^2/exp).
 * **KS** for numerics (e.g. ``char_length(text)``): exact two-sample
-  Kolmogorov-Smirnov of every partition vs the rest over the observed
-  ``(partition, value)`` cells (:func:`ks_by_partition`);
-  :func:`ks_stat` is its two-group case. The windows run over
-  aggregated cells, never over rows. For continuous/unbounded columns
-  pass ``n_bins`` to bucket first (histogram CDF). The storable,
-  mergeable sketch path is KLL, in :mod:`.tdigest`.
+  Kolmogorov-Smirnov of every partition vs the rest
+  (:func:`ks_by_partition`); :func:`ks_stat` is its two-group case.
+  For continuous/unbounded columns pass ``n_bins`` to bucket the
+  values in Spark first (histogram CDF, at most partitions x n_bins
+  cells). The storable, mergeable sketch path is KLL, in :mod:`.tdigest`.
 * **PSI** for categoricals, partition vs rest.
 """
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
+from itertools import groupby
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from json_schema_spark.session import local_frame
+
+# the most (partition, value) cells a call collects; above it, it raises ValueError
+MAX_CELLS = 1_000_000
 
 
 def _bin(value: Column, lo: Column, hi: Column, n_bins: int) -> Column:
@@ -36,53 +47,106 @@ def _bin(value: Column, lo: Column, hi: Column, n_bins: int) -> Column:
     )
 
 
-def chi2_by_partition(df: DataFrame, category: str, partition: str | Column) -> DataFrame:
+def _cells(df: DataFrame, value: str | Column, partition: str | Column,
+           n_bins: int | None = None) -> tuple[list, str]:
+    """The ``(partition, value, count)`` cells of the rows where both
+    are non-NULL, collected, and the partition column's type. With
+    ``n_bins`` the values are bucketed between their min and max and the
+    cells re-aggregated. Raises ``ValueError`` above :data:`MAX_CELLS`."""
+    val = F.col(value) if isinstance(value, str) else value
+    part = F.col(partition) if isinstance(partition, str) else partition
+    cells = df.where(val.isNotNull() & part.isNotNull()).groupBy(
+        part.alias("partition"), val.alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
+    if n_bins is not None:
+        everything = Window.partitionBy()
+        lo, hi = F.min("v").over(everything), F.max("v").over(everything)
+        cells = cells.select("partition", _bin(F.col("v"), lo, hi, n_bins).alias("v"), "cnt") \
+            .groupBy("partition", "v").agg(F.sum("cnt").alias("cnt"))
+    rows = cells.limit(MAX_CELLS + 1).collect()
+    if len(rows) > MAX_CELLS:
+        raise ValueError(
+            f"drift over more than {MAX_CELLS:,} (partition, value) cells: "
+            "pass n_bins to ks_by_partition, or use the tdigest test")
+    return ([(_one_nan(p), _one_nan(v), cnt) for p, v, cnt in rows],
+            cells.schema["partition"].dataType.simpleString())
+
+
+def _one_nan(x):
+    """Each NaN as the one ``math.nan``: Spark groups NaNs together."""
+    return math.nan if isinstance(x, float) and x != x else x
+
+
+def _marginals(cells: list) -> tuple[Counter, Counter, int]:
+    """The cells' counts per partition and per value, and their total."""
+    n_part, n_val = Counter(), Counter()
+    for p, v, cnt in cells:
+        n_part[p] += cnt
+        n_val[v] += cnt
+    return n_part, n_val, sum(n_part.values())
+
+
+def _round(x: float, places: int) -> float:
+    """Spark's round(x, places) on a double: HALF_UP on its decimal repr
+    (+ 0.0 turns a rounded tiny negative's -0.0 into Spark's 0.0)."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)) + 0.0
+
+
+def chi2_by_partition(df: DataFrame, category: str | Column,
+                      partition: str | Column) -> DataFrame:
     """Per-partition chi-square statistic of ``category`` distribution
     vs the pooled (all-partitions) distribution.
 
-    Returns (partition, chi2, dof, n_rows). One wide shuffle
-    (groupBy(partition, category)); everything downstream is
-    aggregate-sized and broadcast.
+    Returns (partition, chi2, dof, n_rows); dof counts the pooled
+    categories. A pooled category absent from a partition (the strongest
+    drift signal) adds (0-exp)^2/exp = exp, and exp = n_cat * n_part /
+    n_total sums to n_part over every pooled category, so the absent
+    cells add n_part minus the observed cells' exp: no grid is built.
     """
-    part = F.col(partition) if isinstance(partition, str) else partition
-    cells = (
-        df.where(F.col(category).isNotNull() & part.isNotNull())
-        .groupBy(part.alias("partition"), F.col(category).alias("cat"))
-        .agg(F.count(F.lit(1)).alias("obs"))
-    )
-    # marginals via WINDOWS over the aggregated cells, not re-joins:
-    # deriving them with separate groupBys re-scanned the SOURCE four
-    # times (Catalyst does not share the subtree across actions of one
-    # plan). The windows shuffle only |partitions| x |categories| rows.
-    w_part = Window.partitionBy("partition")
-    w_cat = Window.partitionBy("cat")
-    w_all = Window.partitionBy()
-    with_exp = cells.select(
-        "partition", "obs",
-        (F.sum("obs").over(w_part)).alias("n_part"),
-        (F.sum("obs").over(w_cat) * F.sum("obs").over(w_part)
-         / F.sum("obs").over(w_all)).alias("exp"),
-        F.size(F.collect_set("cat").over(w_all)).alias("n_cats_pooled"),
-    )
-    # Zero-obs cells (a pooled category absent from a partition — the
-    # strongest drift signal) must still contribute: for obs=0 the term
-    # (0-exp)^2/exp = exp, and sum(exp) over ALL pooled categories in a
-    # partition is exactly n_part.  So instead of materializing the full
-    # partition x category grid we add the closed-form remainder
-    # (n_part - sum(exp over observed cells)), which equals the sum of
-    # the missing cells' terms.  dof uses the pooled category count.
-    return (
-        with_exp.groupBy("partition")
-        .agg(
-            F.round(
-                F.sum((F.col("obs") - F.col("exp")) ** 2 / F.col("exp"))
-                + (F.max("n_part") - F.sum("exp")),
-                4,
-            ).alias("chi2"),
-            (F.max("n_cats_pooled") - 1).cast("long").alias("dof"),
-            F.max("n_part").alias("n_rows"),
-        )
-    )
+    cells, ptype = _cells(df, category, partition)
+    n_part, n_cat, n_total = _marginals(cells)
+    terms = {p: [n] for p, n in n_part.items()}
+    for p, c, obs in cells:
+        exp = n_cat[c] * n_part[p] / n_total
+        terms[p] += [(obs - exp) ** 2 / exp, -exp]
+    return local_frame(
+        df.sparkSession,
+        [(p, _round(math.fsum(terms[p]), 4), len(n_cat) - 1, n) for p, n in n_part.items()],
+        f"partition {ptype}, chi2 double, dof long, n_rows long")
+
+
+def _by_value(cell: tuple):
+    """A cell's place in Spark's order of values: NaN sorts last."""
+    return cell[1] is math.nan, cell[1]
+
+
+def _ks(cells: list) -> list[tuple]:
+    """``(partition, n_rows, ks)`` of every partition against the rest
+    of the cells (ks None for a lone partition). One sweep over the
+    cells in value order keeps the pooled count ``cum_all`` and each
+    partition's count ``cum_in`` up to the value. The rest's count is
+    ``cum_all - cum_in`` at v and ``cum_all - n_v - (cum_in - cnt)`` at
+    the pooled value just before v. Both CDFs step only at pooled
+    values, and between two values of the partition its CDF is flat
+    while the rest's rises, so the sup over those two points per cell
+    is the sup over every pooled value."""
+    n_part, _, n_total = _marginals(cells)
+    cum_in, sup = Counter(), dict.fromkeys(n_part, 0.0)
+    cum_all = 0
+    for _, run in groupby(sorted(cells, key=_by_value), key=_by_value):
+        run = list(run)
+        n_v = sum(cnt for _, _, cnt in run)
+        cum_all += n_v
+        for p, _, cnt in run:
+            cum_in[p] += cnt
+            n_rest = n_total - n_part[p]
+            if n_rest:
+                before = cum_in[p] - cnt
+                sup[p] = max(
+                    sup[p],
+                    abs(cum_in[p] / n_part[p] - (cum_all - cum_in[p]) / n_rest),
+                    abs(before / n_part[p] - (cum_all - n_v - before) / n_rest))
+    return [(p, n, _round(sup[p], 6) if n < n_total else None)
+            for p, n in n_part.items()]
 
 
 def ks_by_partition(
@@ -90,60 +154,17 @@ def ks_by_partition(
     n_bins: int | None = None,
 ) -> DataFrame:
     """Two-sample KS of EVERY partition against the rest of the table,
-    in one query (no per-partition Python loop).
+    from one aggregate down to the ``(partition, value)`` cells, which
+    the driver sweeps in value order.
 
     Returns (partition, n_rows, ks); ks is NULL for a lone partition,
     which has no rest. Pass ``n_bins`` to bucket values first for
     continuous/unbounded domains (histogram CDF, error bounded by
-    1/n_bins); leave None for exact KS.
-
-    Shape: ONE groupBy(partition, value) over the table gives the
-    observed cells; no partition x value grid is built. With
-    ``n_bins`` the cells are binned, between the min and max over the
-    cells, and re-aggregated: the input is read once. A running sum
-    per partition gives the partition's count ``cum_in`` at each of its
-    values; a running sum over the per-value marginal (|distinct
-    values| rows, joined back on the value) gives the pooled count
-    ``cum_all``. The rest's count is ``cum_all - cum_in`` at v and
-    ``cum_all - n_v - (cum_in - cnt)`` at the pooled value just before
-    v. Both CDFs step only at pooled values, and between two values of
-    the partition its CDF is flat while the rest's rises, so the sup
-    over those two points per cell is the sup over every pooled value.
+    1/n_bins, at most partitions x n_bins cells); leave None for exact KS.
     """
-    val = F.col(value) if isinstance(value, str) else value
-    part = F.col(partition) if isinstance(partition, str) else partition
-    cells = df.where(val.isNotNull() & part.isNotNull()).groupBy(
-        part.alias("partition"), val.alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
-    if n_bins is not None:
-        # the bounds over the cells are those over the rows; one task
-        # reads every cell, as the pooled running sum below reads
-        # every pooled value
-        everything = Window.partitionBy()
-        lo, hi = F.min("v").over(everything), F.max("v").over(everything)
-        cells = cells.select("partition", _bin(F.col("v"), lo, hi, n_bins).alias("v"), "cnt") \
-            .groupBy("partition", "v").agg(F.sum("cnt").alias("cnt"))
-
-    running = Window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pooled = cells.groupBy("v").agg(F.sum("cnt").alias("n_v")).select(
-        "v", "n_v",
-        F.sum("n_v").over(running.orderBy("v")).alias("cum_all"),
-        F.sum("n_v").over(Window.partitionBy()).alias("n_total"),
-    )
-    cdf = cells.join(pooled, "v").select(
-        "partition", "cnt", "n_v", "cum_all", "n_total",
-        F.sum("cnt").over(running.partitionBy("partition").orderBy("v")).alias("cum_in"),
-        F.sum("cnt").over(Window.partitionBy("partition")).alias("n_part"),
-    )
-    cnt, n_v, cum_all, cum_in, n_part = (
-        F.col(c) for c in ("cnt", "n_v", "cum_all", "cum_in", "n_part"))
-    n_rest = F.nullif(F.col("n_total") - n_part, F.lit(0))
-    gap_at = F.abs(cum_in / n_part - (cum_all - cum_in) / n_rest)
-    gap_before = F.abs((cum_in - cnt) / n_part
-                       - (cum_all - n_v - (cum_in - cnt)) / n_rest)
-    return cdf.groupBy("partition").agg(
-        F.max(n_part).alias("n_rows"),
-        F.round(F.max(F.greatest(gap_at, gap_before)), 6).alias("ks"),
-    )
+    cells, ptype = _cells(df, value, partition, n_bins)
+    return local_frame(df.sparkSession, _ks(cells),
+                       f"partition {ptype}, n_rows long, ks double")
 
 
 def ks_stat(
@@ -156,19 +177,16 @@ def ks_stat(
     Returns a single row (n_a, n_b, ks); a group with no rows has a
     NULL count, and then ks is NULL.
     """
-    val = F.col(value) if isinstance(value, str) else value
     grp = F.col(group) if isinstance(group, str) else group
-    two = df.where(grp.isin([group_a, group_b])).select(
-        val.alias("v"), (grp == group_a).alias("is_a"))
-    return ks_by_partition(two, "v", "is_a").agg(
-        F.max(F.when(F.col("partition"), F.col("n_rows"))).alias("n_a"),
-        F.max(F.when(~F.col("partition"), F.col("n_rows"))).alias("n_b"),
-        F.max("ks").alias("ks"),
-    )
+    cells, _ = _cells(df.where(grp.isin([group_a, group_b])), value, grp == group_a)
+    got = {is_a: (n, ks) for is_a, n, ks in _ks(cells)}
+    (n_a, ks), (n_b, _) = got.get(True, (None, None)), got.get(False, (None, None))
+    return local_frame(df.sparkSession, [(n_a, n_b, ks)],
+                       "n_a long, n_b long, ks double")
 
 
 def psi_by_partition(
-    df: DataFrame, category: str, partition: str | Column,
+    df: DataFrame, category: str | Column, partition: str | Column,
     epsilon: float = 1e-6,
 ) -> DataFrame:
     """Population Stability Index of `category` per partition vs the
@@ -178,43 +196,24 @@ def psi_by_partition(
     term (the production-standard drift score; >0.2 is the usual
     "significant shift" rule of thumb).
 
-    One groupBy(partition, category) shuffle, then the full
-    partition x category grid from the two aggregate-sized marginals:
-    unlike chi-square and KS, every pooled category absent from a
-    partition adds its own (eps - p_rest) * ln(eps / p_rest) term.
+    Returns (partition, psi, n_rows); psi is NULL for a lone partition,
+    which has no rest. The sum runs over every pooled category: unlike
+    chi-square, each one absent from a partition adds its own
+    (eps - p_rest) * ln(eps / p_rest) term.
     """
-    part = F.col(partition) if isinstance(partition, str) else partition
-    cells = (
-        df.where(F.col(category).isNotNull() & part.isNotNull())
-        .groupBy(part.alias("partition"), F.col(category).alias("cat"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        # lazy reuse barrier: cells has FOUR consumers (three marginals
-        # + the grid join); without it the source groupBy executes once
-        # per consumer. partition x category rows, aggregate-sized.
-        .localCheckpoint(eager=False)
-    )
-    parts = cells.groupBy("partition").agg(F.sum("cnt").alias("n_part"))
-    cats = cells.groupBy("cat").agg(F.sum("cnt").alias("n_cat"))
-    tot = cells.agg(F.sum("cnt").alias("n_total"))
-    grid = (
-        parts.crossJoin(F.broadcast(cats))
-        .join(cells, ["partition", "cat"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select("partition", "n_part",
-                (F.col("n_total") - F.col("n_part")).alias("n_rest"),
-                F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"), "n_cat")
-    )
-    p_in = F.greatest(F.col("cnt") / F.col("n_part"), F.lit(epsilon))
-    # n_rest = 0 (single-partition table): there IS no rest — PSI must
-    # be NULL, not the epsilon-smoothed ~13+ that greatest() over the
-    # null division produced (greatest skips NULLs)
-    p_out = F.when(
-        F.col("n_rest") > 0,
-        F.greatest((F.col("n_cat") - F.col("cnt")) / F.col("n_rest"), F.lit(epsilon)))
-    return (
-        grid.groupBy("partition")
-        .agg(
-            F.round(F.sum((p_in - p_out) * F.log(p_in / p_out)), 6).alias("psi"),
-            F.max("n_part").alias("n_rows"),
-        )
-    )
+    cells, ptype = _cells(df, category, partition)
+    n_part, n_cat, n_total = _marginals(cells)
+    cnt = {(p, c): k for p, c, k in cells}
+
+    def psi(p, n: int) -> float:
+        terms = []
+        for c, m in n_cat.items():
+            k = cnt.get((p, c), 0)
+            p_in, p_out = max(k / n, epsilon), max((m - k) / (n_total - n), epsilon)
+            terms.append((p_in - p_out) * math.log(p_in / p_out))
+        return _round(math.fsum(terms), 6)
+
+    return local_frame(
+        df.sparkSession,
+        [(p, psi(p, n) if n < n_total else None, n) for p, n in n_part.items()],
+        f"partition {ptype}, psi double, n_rows long")

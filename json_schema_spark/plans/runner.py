@@ -542,10 +542,7 @@ def _drift_row(df: DataFrame, d: dict) -> tuple:
     col = d["column"]
     col_expr = F.expr(col) if "(" in col else F.col(col)
     if d.get("test") == "chi2":
-        # project the (possibly expression-valued) column first:
-        # chi2_by_partition takes a column NAME
-        tagged = df.withColumn("__cat", col_expr)
-        rows = [r for r in chi2_by_partition(tagged, "__cat", by_col).collect()
+        rows = [r for r in chi2_by_partition(df, col_expr, by_col).collect()
                 if r["chi2"] is not None]
         if not rows:
             # all-null column/partition: nothing to test -> pass
@@ -556,7 +553,6 @@ def _drift_row(df: DataFrame, d: dict) -> tuple:
         drifted = worst["chi2"] > 5 * max(med, 1e-9)
         return (f"drift_chi2({col} by {by})", not drifted,
                 int(drifted), float(worst["chi2"]))
-    tagged = df.withColumn("__by", by_col).withColumn("__v", col_expr)
     if d.get("test") == "tdigest":
         # sketch path: rows fold into per-partition KLL sketches
         # before the shuffle; sketches are storable for incremental
@@ -566,13 +562,14 @@ def _drift_row(df: DataFrame, d: dict) -> tuple:
             ks_by_partition_tdigest,
         )
 
-        ks_rows = ks_by_partition_tdigest(digest_by_partition(tagged, "__v", "__by"))
+        ks_rows = ks_by_partition_tdigest(digest_by_partition(df, col_expr, by_col))
         worst_ks = max((ks for _, _, ks in ks_rows if ks == ks),
                        default=0.0)  # ks==ks drops NaN (no rest)
         return (f"drift_tdigest({col} by {by})", worst_ks < 0.2,
                 int(worst_ks >= 0.2), float(worst_ks))
-    # ks: every partition vs rest in one query (no driver loop)
-    rows = ks_by_partition(tagged, "__v", "__by", n_bins=256).collect()
+    # ks: every partition vs rest from one aggregate down to binned
+    # cells, finished on the driver
+    rows = ks_by_partition(df, col_expr, by_col, n_bins=256).collect()
     worst_ks = max((r["ks"] or 0.0) for r in rows) if rows else 0.0
     return (f"drift_ks({col} by {by})", worst_ks < 0.2,
             int(worst_ks >= 0.2), float(worst_ks))

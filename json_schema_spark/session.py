@@ -10,6 +10,7 @@ rely on AQE coalescing from a high initial value).
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,15 +48,22 @@ def get_spark(
 
 def arrow_table(rows: Iterable[tuple], schema: StructType):
     """A driver-side list of row tuples as a ``pyarrow.Table`` of
-    ``to_arrow_schema(schema)``."""
+    ``to_arrow_schema(schema)``. A ``datetime`` in a timestamp column
+    goes in as ``createDataFrame`` takes it, a naive one as local time:
+    pyarrow would store its wall-clock time as UTC."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    def array(values: tuple, typ):
+        if pa.types.is_timestamp(typ) and typ.tz is not None:
+            values = [v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+                      for v in values]
+        return pa.array(list(values), type=typ)
 
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     return pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow)
+        [array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
 
 
 def local_frame(spark: SparkSession, rows: Iterable[tuple],

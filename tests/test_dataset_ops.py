@@ -5,13 +5,21 @@ from __future__ import annotations
 
 from bisect import bisect_right
 from decimal import ROUND_HALF_UP, Decimal
-from math import floor
+from fractions import Fraction
+from math import floor, log
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from json_schema_spark.operators.drift import chi2_by_partition, ks_by_partition, ks_stat
+from json_schema_spark.operators import drift
+from json_schema_spark.operators.drift import (
+    chi2_by_partition,
+    ks_by_partition,
+    ks_stat,
+    psi_by_partition,
+)
 from json_schema_spark.operators.referential import (
     referential_verdict,
     referential_violations,
@@ -131,25 +139,117 @@ def test_ks_matches_pure_python(spark, rows):
     assert tuple(stat) == (len(a) or None, len(b) or None, _ks(a, b))
 
 
+def _chi2_psi_ref(rows, eps=1e-6):
+    """chi2 and PSI of every partition over the full partition x
+    category grid, unrounded: chi2 exactly (rationals), PSI in floats."""
+    rows = [(p, c) for p, c in rows if p is not None and c is not None]
+    parts, cats = sorted({p for p, _ in rows}), sorted({c for _, c in rows})
+    n = {(p, c): sum(r == (p, c) for r in rows) for p in parts for c in cats}
+    n_part = {p: sum(n[p, c] for c in cats) for p in parts}
+    n_cat = {c: sum(n[p, c] for p in parts) for c in cats}
+    chi2, psi = {}, {}
+    for p in parts:
+        exp = {c: Fraction(n_cat[c] * n_part[p], len(rows)) for c in cats}
+        chi2[p] = float(sum((n[p, c] - exp[c]) ** 2 / exp[c] for c in cats))
+        n_rest = len(rows) - n_part[p]
+        psi[p] = None
+        if n_rest:
+            shares = [(max(n[p, c] / n_part[p], eps), max((n_cat[c] - n[p, c]) / n_rest, eps))
+                      for c in cats]
+            psi[p] = sum((a - b) * log(a / b) for a, b in shares)
+    return ({p: (chi2[p], len(cats) - 1, n_part[p]) for p in parts},
+            {p: (psi[p], n_part[p]) for p in parts})
+
+
+def _close(got, want, places):
+    """Equal up to one unit of the place ``got`` is rounded to."""
+    return (got is None) == (want is None) and (
+        got is None or abs(got - want) <= 1.000001 * 10.0 ** -places)
+
+
+@settings(max_examples=25, deadline=None, derandomize=True)
+@given(rows=st.lists(st.tuples(st.sampled_from([None, "a", "b", "c"]),
+                               st.sampled_from([None, "x", "y", "z", "w"])),
+                     max_size=40))
+@example(rows=[])
+@example(rows=[("a", "x"), ("a", "y"), ("a", "y"), (None, "z"), ("b", None)])  # lone partition
+@example(rows=[("a", "x")] * 3 + [("b", "x"), ("b", "y"), ("c", "z"), ("c", "z")])
+def test_chi2_and_psi_match_pure_python(spark, rows):
+    """chi2_by_partition and psi_by_partition equal a plain full-grid
+    computation on frames with ties, NULL categories and partitions,
+    categories absent from a partition and lone partitions."""
+    _check_chi2_psi(local_frame(spark, rows, "p string, c string"), rows)
+
+
+def _check_chi2_psi(df, ref_rows):
+    """chi2 and PSI of category ``c`` by partition ``p`` (passed once as
+    a name and once as a Column) against :func:`_chi2_psi_ref`."""
+    want_chi2, want_psi = _chi2_psi_ref(ref_rows)
+    chi2 = {r["partition"]: r for r in chi2_by_partition(df, "c", F.col("p")).collect()}
+    assert set(chi2) == set(want_chi2)
+    for p, (stat, dof, n) in want_chi2.items():
+        assert (chi2[p]["dof"], chi2[p]["n_rows"]) == (dof, n)
+        assert _close(chi2[p]["chi2"], stat, 4), (p, chi2[p], stat)
+    psi = {r["partition"]: r for r in psi_by_partition(df, F.col("c"), "p").collect()}
+    assert set(psi) == set(want_psi)
+    for p, (stat, n) in want_psi.items():
+        assert psi[p]["n_rows"] == n
+        assert _close(psi[p]["psi"], stat, 6), (p, psi[p], stat)
+
+
+def test_drift_takes_nan_as_one_value(spark):
+    """NaN is one category and one value, above every number, as Spark
+    groups and orders it: the statistics equal the references with NaN
+    spelled as one string category, and as +inf."""
+    nan = float("nan")
+    rows = [("a", 1.0), ("a", nan), ("a", 3.0), ("b", nan), ("b", nan), ("c", 1.0), ("c", 2.0)]
+    df = local_frame(spark, rows, "p string, c double")
+    _check_chi2_psi(df, [(p, repr(c)) for p, c in rows])
+    got = {tuple(r) for r in ks_by_partition(df, "c", "p").collect()}
+    assert got == _ks_by_partition_ref([(p, float("inf") if c != c else c) for p, c in rows])
+
+
 def _days(spark):
     return spark.range(0, 20_000, numPartitions=4).select(
         F.pmod(F.col("id"), F.lit(8)).cast("string").alias("day"),
         F.pmod(F.abs(F.xxhash64("id")), F.lit(3000)).alias("v"))
 
 
-def test_ks_by_partition_job_budget(spark, count_jobs):
-    """Every partition's KS over the observed cells only: one aggregate
-    over the table, a per-partition running sum and a running sum over
-    the per-value marginal, with no partition x value grid. Binning
-    re-aggregates the cells: no second pass over the input."""
+@pytest.mark.parametrize("persisted", [False, True], ids=["plain", "persisted"])
+def test_ks_by_partition_job_budget(spark, count_jobs, persisted):
+    """Every statistic is one aggregate down to cells, collected: the
+    input is read once, also when it is cached. Binning buckets the
+    cells between their bounds, one more exchange over the cells."""
     df = _days(spark)
-    binned, rows = count_jobs("ks-binned", lambda: ks_by_partition(
-        df, "v", "day", n_bins=256).collect())
-    assert len(rows) == 8
-    assert binned <= 4
-    exact, rows = count_jobs("ks-exact", lambda: ks_by_partition(df, "v", "day").collect())
-    assert len(rows) == 8
-    assert exact <= 5
+    if persisted:
+        df = df.persist()
+        df.count()  # the cache is built before any statistic is counted
+    try:
+        for name, stat, budget in [
+            ("ks-binned", lambda: ks_by_partition(df, "v", "day", n_bins=256), 3),
+            ("ks-exact", lambda: ks_by_partition(df, "v", "day"), 2),
+            ("chi2", lambda: chi2_by_partition(df, "v", "day"), 2),
+            ("psi", lambda: psi_by_partition(df, "v", "day"), 2),
+        ]:
+            n_jobs, rows = count_jobs(f"{name}-{persisted}", lambda: stat().collect())
+            assert len(rows) == 8, name
+            assert n_jobs <= budget, (name, n_jobs)
+    finally:
+        df.unpersist()
+
+
+def test_drift_cell_bound(spark, monkeypatch):
+    """Above MAX_CELLS cells an exact KS raises before it finishes any
+    row; binned, the same frame stays within the bound and gives the
+    reference rows."""
+    df = _days(spark)  # ~2,900 distinct values per day
+    monkeypatch.setattr(drift, "MAX_CELLS", 8 * 16)
+    with monkeypatch.context() as m:
+        m.setattr(drift, "_ks", lambda cells: pytest.fail("finished past the bound"))
+        with pytest.raises(ValueError, match=r"more than 128 .*n_bins"):
+            ks_by_partition(df, "v", "day")
+    got = {tuple(r) for r in ks_by_partition(df, "v", "day", n_bins=16).collect()}
+    assert got == _ks_by_partition_ref([tuple(r) for r in df.collect()], 16)
 
 
 def test_single_pass_stats(webpages):

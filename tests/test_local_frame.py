@@ -1,7 +1,8 @@
 """``session.local_frame``: driver-side rows as an Arrow-built local
 relation."""
 
-from datetime import date
+import time
+from datetime import date, datetime
 
 from json_schema_spark.session import local_frame
 
@@ -30,3 +31,18 @@ def test_local_frame_empty_has_no_partitions(spark):
     assert empty.schema == spark.createDataFrame([], DDL).schema
     assert empty._jdf.rdd().getNumPartitions() == 0
     assert empty.collect() == []
+
+
+def test_local_frame_naive_timestamp_is_local_time(spark, monkeypatch):
+    """A naive datetime means local time, as in ``createDataFrame`` and
+    in what ``collect`` returns, also when local time is not UTC."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        rows = [(datetime(2024, 3, 1, 12, 30),), (None,)]
+        got = local_frame(spark, rows, "t timestamp")
+        assert got.collect() == spark.createDataFrame(rows, "t timestamp").collect()
+        assert got.collect()[0]["t"] == rows[0][0]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
