@@ -106,13 +106,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return text_groups(df, id_col, text_col).where(F.col("n_dups") > 1)
 
 
-def fingerprint_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Near-exact dup groups on the normalized-text fingerprint:
-    (fp, n_dups, keep_id) with n_dups > 1."""
-    return text_groups(df, id_col, text_col, normalized=True) \
-        .where(F.col("n_dups") > 1)
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------

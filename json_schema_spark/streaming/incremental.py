@@ -82,9 +82,10 @@ def run_incremental(
     checkpoint_dir: str,
     id_cols: tuple[str, ...] = ("url",),
 ) -> None:
-    """One availableNow pass: validate every unseen file, append
-    violation rows to ``output_dir``, exactly-once via the streaming
-    checkpoint (the streaming twin of the batch runner's manifest)."""
+    """One availableNow pass: validate every unseen file and append
+    violation rows to ``output_dir``, exactly-once through the
+    streaming checkpoint (the batch runner gets the same from its
+    verdict commit)."""
     from json_schema_spark.compiler import compile_spec
 
     probe = spark.createDataFrame([], schema)

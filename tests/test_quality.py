@@ -218,12 +218,12 @@ def test_pack_assignments_greedy_boundaries(spark):
 
 @pytest.mark.parametrize(
     "name", ["repetition_profile", "dup_span_coverage", "pii_scan",
-             "contamination_check", "sequence_packing", "line_dedup",
-             "dup_span_removal"])
+             "contamination_check", "sequence_packing"])
 def test_past_window_queries_match_duckdb_oracle(spark, name):
-    """The exact sf0.01 driver comparison, run in-tree: these queries
-    sit past the driver's 50-entry sample window
-    (tests/test_driver_contract.PAST_WINDOW_ORACLED)."""
+    """The driver's sf0.01 comparison, run in-tree for the five quality
+    queries in its 50-entry sample window, so a mismatch fails here
+    before the driver sees it. line_dedup and dup_span_removal sit past
+    the window; test_driver_contract compares them, dtypes included."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.01"

@@ -2,7 +2,8 @@
 __spark_entry__.queries() entry on Spark and its oracle_sql() twin on
 DuckDB at sf0.01; compare row count, column names, order-insensitive
 values (columns sorted by name, rows sorted by all columns) AND pandas
-dtypes.
+dtypes. A query without a twin prints its ``rows_only`` reason from
+``__spark_entry__.QUERIES``.
 
 The dtype check is STRICT (VERDICT r5 #2): the driver's result hash is
 dtype-sensitive, so an int64 Spark column against a DuckDB
@@ -89,6 +90,7 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    rows_only = {q.name: q.rows_only for q in entrymod.QUERIES}
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -101,7 +103,7 @@ def main() -> int:
             failures += 1
             continue
         if sql is None:
-            print(f"ROWS-ONLY {name}: {len(sdf)} rows")
+            print(f"ROWS-ONLY {name}: {len(sdf)} rows; {rows_only[name]}")
             continue
         try:
             ddf = con.execute(sql).fetchdf()
